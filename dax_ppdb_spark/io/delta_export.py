@@ -122,7 +122,7 @@ def export_delta_log(table: ParquetTable, spark: SparkSession) -> int:
         raise FileNotFoundError(f"table has no committed version: {table.path}")
     version_name = os.path.basename(data_dir)
     files = _list_data_files(data_dir)
-    schema_json = spark.read.parquet(data_dir).schema.json()
+    schema_json = table.read(spark).schema.json()
     part_cols: list[str] = []
     if files:
         part_cols = list(_partition_values(files[0]).keys())

@@ -13,15 +13,73 @@ pointer-commit idea as Delta's ``_delta_log``, minus the log).  On a
 real object store the pointer write is the only operation that needs
 read-after-write consistency.  Chunk-partitioned tables write with
 ``partitionBy`` so DELETE-by-chunk is partition pruning, not a rewrite.
+
+Footer schemas: :meth:`ParquetTable.read` takes the data columns'
+schema from ONE data file's footer, read on the driver, and hands it
+to ``spark.read.schema(...)``.  Spark's writer stores the file's exact
+``StructType`` in the footer (key
+``org.apache.spark.sql.parquet.row.metadata``), and Spark's own
+non-merging inference reads exactly that from one footer — but in a
+one-task job, which on the replication path was one job per table
+read, per chunk.  Partition columns are still discovered from the
+directory names (driver-side, no job), with the same types inference
+gives.  A version with no data files, or whose file carries no Spark
+schema (written by pyarrow), reads through inference, so an empty
+version still raises exactly as before.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# Footer key under which Spark's parquet writer records the file's
+# Catalyst schema (ParquetReadSupport.SPARK_METADATA_KEY).
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_file(version_dir: str) -> str | None:
+    """The first file Spark's reader would list (it skips ``_``/``.``
+    names, directories included), in sorted walk order."""
+    for root, dirs, files in os.walk(version_dir):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if not f.startswith(("_", ".")):
+                return os.path.join(root, f)
+    return None
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark schema recorded in a data file's footer, if any."""
+    import pyarrow.parquet as pq
+
+    meta = pq.read_schema(path).metadata or {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        return None
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+
+
+def _write_files(df, dest: str, partition_by: tuple[str, ...], mode: str) -> None:
+    """Write ``df`` into directory ``dest``: a Spark DataFrame through
+    its writer, a ``pyarrow.Table`` as one driver-local file (no Spark
+    job; unpartitioned only)."""
+    if hasattr(df, "write"):
+        writer = df.write.mode(mode)
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(dest)
+        return
+    if partition_by:
+        raise ValueError("a pyarrow.Table is written unpartitioned")
+    import pyarrow.parquet as pq
+
+    os.makedirs(dest, exist_ok=True)
+    pq.write_table(df, os.path.join(dest, f"part-{uuid.uuid4().hex}.parquet"))
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -91,7 +149,7 @@ class ParquetTable:
             raise FileNotFoundError(
                 f"version {version!r} is not retained in {self.path}"
             )
-        return spark.read.parquet(d)
+        return self._read_dir(spark, d)
 
     def _retire(self, old: str | None) -> None:
         """Post-commit handling of the superseded version: delete it
@@ -164,17 +222,27 @@ class ParquetTable:
         d = self.data_dir()
         if d is None:
             raise FileNotFoundError(f"table has no committed version: {self.path}")
-        return spark.read.parquet(d)
+        return self._read_dir(spark, d)
+
+    @staticmethod
+    def _read_dir(spark: SparkSession, d: str) -> DataFrame:
+        """Read one version directory with the data schema of its first
+        file's footer (no inference job); inference when it has no data
+        files or that footer carries no Spark schema."""
+        first = _first_data_file(d)
+        schema = _footer_schema(first) if first is not None else None
+        if schema is None:
+            return spark.read.parquet(d)
+        return spark.read.schema(schema).parquet(d)
 
     def _write_version(
         self, df: DataFrame, partition_by: tuple[str, ...] = ()
     ) -> str:
+        """Write ``df`` (a DataFrame, or an unpartitioned
+        ``pyarrow.Table``) as a new, uncommitted version directory."""
         os.makedirs(self.path, exist_ok=True)
         version = f"_v{uuid.uuid4().hex}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(self.path, version))
+        _write_files(df, os.path.join(self.path, version), partition_by, "overwrite")
         return version
 
     def overwrite(
@@ -190,6 +258,7 @@ class ParquetTable:
         CAS flip, so readers can never pair the main relation of one
         generation with a sidecar of another (the two-table-commit
         race an IVF index's codes+centroids would otherwise have).
+        ``df`` itself may also be an (unpartitioned) ``pyarrow.Table``.
         Sidecar names must start with ``_`` — Spark's reader ignores
         underscore-prefixed paths, so ``read()`` of the main relation
         is unaffected; fetch one with :meth:`read_sidecar`.  A sidecar
@@ -206,14 +275,7 @@ class ParquetTable:
                     f"sidecar name must start with '_' (got {name!r}) so the "
                     "main relation's parquet reader ignores it"
                 )
-            dest = os.path.join(self.path, version, name)
-            if hasattr(sdf, "write"):
-                sdf.write.mode("overwrite").parquet(dest)
-            else:
-                import pyarrow.parquet as pq
-
-                os.makedirs(dest, exist_ok=True)
-                pq.write_table(sdf, os.path.join(dest, "part-00000.parquet"))
+            _write_files(sdf, os.path.join(self.path, version, name), (), "overwrite")
         self._commit(version, expected=old)
         self._retire(old)
 
@@ -236,17 +298,17 @@ class ParquetTable:
         if d is None:
             self.overwrite(df, partition_by)
             return
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(d)
+        _write_files(df, d, partition_by, "append")
 
     def append_commit(self, df: DataFrame, partition_by: tuple[str, ...] = ()) -> None:
         """Atomic append: copy-on-write the current version (hardlinks
         — O(file count), zero bytes copied; sidecars ride along), write
         the new batch into the NEW version dir, CAS the pointer.
         Readers see the old generation or old+batch, never a partial
-        batch; a racing writer loses the CAS loudly."""
+        batch; a racing writer loses the CAS loudly.  ``df`` may be a
+        ``pyarrow.Table`` (unpartitioned): it is written driver-locally
+        with no Spark job — the lane for the small control tables the
+        driver already holds (the ledger)."""
         old = self.current_version()
         if old is None:
             self.overwrite(df, partition_by)
@@ -255,10 +317,7 @@ class ParquetTable:
         version = f"_v{uuid.uuid4().hex}"
         dst = os.path.join(self.path, version)
         shutil.copytree(src, dst, copy_function=os.link)
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(dst)
+        _write_files(df, dst, partition_by, "append")
         self._commit(version, expected=old)
         self._retire(old)
 
@@ -380,7 +439,7 @@ class ParquetTable:
             return []
         from pyspark.sql import functions as F
 
-        df = spark.read.parquet(d)
+        df = self.read(spark)
         # Cast the directory-name VALUES to the column's inferred type
         # (never the column to string — a cast on the partition column
         # would defeat partition pruning and scan the whole table to

@@ -133,14 +133,21 @@ def plan_metrics(df) -> dict:
     return totals
 
 
-def log_plan_metrics(df, stage: str, **tags) -> dict:
-    """Log :func:`plan_metrics` as a ``kind="job"`` entry."""
-    vals = plan_metrics(df)
-    entry = {"kind": "job", "stage": stage, **vals, **tags}
+def log_job(stage: str, **vals) -> dict:
+    """Record one job's cost numbers as a ``kind="job"`` entry."""
+    entry = {"kind": "job", "stage": stage, **vals}
     _RECENT.append(entry)
-    tag_s = " ".join(f"{k}={v}" for k, v in {**vals, **tags}.items())
-    _LOG.info("%s job %s", stage, tag_s)
+    _LOG.info("%s job %s", stage, " ".join(f"{k}={v}" for k, v in vals.items()))
     return dict(entry)
+
+
+def log_plan_metrics(df, stage: str, **tags) -> dict:
+    """Log :func:`plan_metrics` as a ``kind="job"`` entry.  Only for a
+    DataFrame the caller has collected: one that was only written
+    (``df.write``) has no executed plan of its own, and asking for one
+    re-plans it — running jobs over input files a commit may already
+    have retired."""
+    return log_job(stage, **plan_metrics(df), **tags)
 
 
 def drop_pending() -> int:

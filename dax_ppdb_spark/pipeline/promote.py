@@ -39,8 +39,14 @@ Scale notes — every step is O(batch), never O(table):
   promotion tables, no shared state beyond the Spark scheduler) and
   are submitted concurrently from a thread pool (each thread tagged
   with its own scheduler pool, honored under FAIR mode and harmless
-  under FIFO) — a cluster promotes DiaObject/DiaSource/DiaForcedSource
-  in parallel instead of serializing three half-idle jobs.
+  under FIFO, and carrying the caller's job group) — a cluster
+  promotes DiaObject/DiaSource/DiaForcedSource in parallel instead of
+  serializing three half-idle jobs;
+- every promote decision costs at most one driver round trip: which
+  chunks have staged rows comes from the ``apdb_replica_chunk=<id>``
+  partition directories (no job), the bucket collect of a MERGE is
+  also its emptiness probe, and steps 2-3 hand step 5 the buckets and
+  the checkpointed latest updates they already computed.
 
 The public snapshot is range-partitioned + sorted on ``geo_point`` so
 row-group min/max stats prune sky-region queries (the BigQuery
@@ -50,6 +56,7 @@ reference's CTAS does too).
 
 from __future__ import annotations
 
+import glob
 import logging
 import os
 
@@ -58,7 +65,7 @@ from pyspark.sql import functions as F
 
 from ..io.table import ParquetTable
 from ..ledger import Ledger
-from ..metrics import flush_observations, log_plan_metrics, timer
+from ..metrics import flush_observations, log_job, observe, timer
 from ..ops.merge import merge_patch
 from ..ops.spatial import with_geo_point
 from ..ops.updates import TABLE_PATCHES, expand_updates, latest_updates, table_patch
@@ -115,8 +122,7 @@ class Promoter:
         # Publish a Delta-protocol _delta_log over the public snapshot
         # after every promotion, so external engines can query it (the
         # reference's public dataset is externally queryable;
-        # io/delta_export.py).  Off by default: pure metadata, but one
-        # extra schema-read job per promotion.
+        # io/delta_export.py).  Off by default; pure metadata.
         self.delta_export = delta_export
         self.staging = {t: ParquetTable(os.path.join(root, "staging", t)) for t in DIA_TABLES}
         self.staging_updates = ParquetTable(os.path.join(root, "staging", "updates"))
@@ -144,7 +150,8 @@ class Promoter:
 
     def _buckets_of(self, keys: DataFrame, key_col: str) -> list[int]:
         """Distinct buckets hit by a batch's keys — driver-side control
-        data, one long per touched id range."""
+        data, one long per touched id range.  Also the batch's
+        emptiness probe: no keys, no buckets."""
         rows = (
             keys.select(self._bucket_expr(F.col(key_col)).alias("b"))
             .distinct()
@@ -189,15 +196,18 @@ class Promoter:
         )
 
     def _staged(self, table: str, chunk_ids: list[int]) -> DataFrame | None:
-        t = self.staging[table]
-        if not t.exists():
+        return self._staged_rows(self.staging[table], chunk_ids)
+
+    def _staged_rows(self, t: ParquetTable, chunk_ids: list[int]) -> DataFrame | None:
+        """The rows staged in ``t`` for ``chunk_ids``; None, with no
+        Spark job, when none of their ``apdb_replica_chunk=<id>``
+        partition directories exist."""
+        d = t.data_dir()
+        if d is None or not any(
+            os.path.isdir(os.path.join(d, f"{CHUNK_COLUMN}={c}")) for c in chunk_ids
+        ):
             return None
-        try:
-            df = t.read(self.spark)
-        except Exception:
-            # All partitions dropped -> empty directory, nothing staged.
-            return None
-        return df.filter(F.col(CHUNK_COLUMN).isin(chunk_ids))
+        return t.read(self.spark).filter(F.col(CHUNK_COLUMN).isin(chunk_ids))
 
     def _validate_constraints(self, chunk_ids: list[int]) -> None:
         """Audit each configured table's STAGED slice of this batch;
@@ -208,12 +218,7 @@ class Promoter:
 
         for table, rules in self.constraints.items():
             if table == "updates":
-                t = self.staging_updates
-                df = (
-                    t.read(self.spark).filter(F.col(CHUNK_COLUMN).isin(chunk_ids))
-                    if t.exists()
-                    else None
-                )
+                df = self._staged_rows(self.staging_updates, chunk_ids)
             else:
                 df = self._staged(table, chunk_ids)
             if df is None:
@@ -241,18 +246,20 @@ class Promoter:
                 # _cleanup to roll back).
                 with timer("validate_constraints", chunks=chunk_ids):
                     self._validate_constraints(chunk_ids)
-            steps = (
-                ("copy_staging_to_promotion", self._copy_staging_to_promotion),
-                ("fill_validity_end", self._fill_validity_end),
-                ("apply_updates", self._apply_updates),
-            )
-            for name, step in steps:
-                with timer(name, chunks=chunk_ids):
-                    step(chunk_ids)
+            with timer("copy_staging_to_promotion", chunks=chunk_ids):
+                self._copy_staging_to_promotion(chunk_ids)
+            with timer("fill_validity_end", chunks=chunk_ids):
+                filled = self._fill_validity_end(chunk_ids)
+            with timer("apply_updates", chunks=chunk_ids):
+                latest, patched = self._apply_updates(chunk_ids)
             with timer("swap_promotion_to_internal", chunks=chunk_ids):
                 self._swap_promotion_to_internal()
             with timer("create_public_snapshot", chunks=chunk_ids):
-                self._update_public_snapshot(chunk_ids)
+                self._update_public_snapshot(
+                    chunk_ids,
+                    latest,
+                    sorted(set(filled) | set(patched.get("DiaObject", []))),
+                )
             if self.delta_export and self.public_diaobject.exists():
                 from ..io.delta_export import export_delta_log
 
@@ -278,39 +285,48 @@ class Promoter:
         finally:
             self._cleanup()
 
-    @staticmethod
-    def _concurrent(thunks) -> None:
+    def _concurrent(self, thunks) -> None:
         """Run independent per-table Spark thunks concurrently.
 
         Spark job submission is thread-safe; each thread names its own
         scheduler pool so a FAIR-mode cluster interleaves the jobs
         (FIFO ignores the property — the threads still overlap wherever
-        task slots are free).  The first failure propagates after all
-        threads finish, so a crashed table never leaves a sibling
-        mid-write."""
+        task slots are free), and inherits the caller's local properties
+        (job group, description, job tags) and session tags, so
+        ``cancelJobGroup`` and ``cancelJobsWithTag`` reach its jobs.
+        The first failure propagates after all threads finish, so a
+        crashed table never leaves a sibling mid-write."""
         thunks = list(thunks)
         if len(thunks) <= 1:
             for t in thunks:
                 t()
             return
-        from concurrent.futures import ThreadPoolExecutor
+        from pyspark import InheritableThread
+
+        sc = self.spark.sparkContext
+        errs: list[BaseException | None] = [None] * len(thunks)
 
         def pooled(i, t):
             def run():
-                from pyspark.sql import SparkSession
-
-                sess = SparkSession.getActiveSession()
-                if sess is not None:
-                    sess.sparkContext.setLocalProperty(
-                        "spark.scheduler.pool", f"promote-{i}"
-                    )
-                t()
+                sc.setLocalProperty("spark.scheduler.pool", f"promote-{i}")
+                try:
+                    t()
+                except BaseException as e:  # re-raised by the caller below
+                    errs[i] = e
 
             return run
 
-        with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-            futures = [ex.submit(pooled(i, t)) for i, t in enumerate(thunks)]
-            errs = [f.exception() for f in futures]
+        # an InheritableThread copies the starting thread's local
+        # properties and session tags (pinned-thread mode; a plain
+        # thread otherwise)
+        threads = [
+            InheritableThread(pooled(i, t), session=self.spark)
+            for i, t in enumerate(thunks)
+        ]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
         for e in errs:
             if e is not None:
                 raise e
@@ -357,20 +373,23 @@ class Promoter:
                 self._id_sorted(add, t), partition_by=(OBJ_BUCKET,)
             )
 
-    def _fill_validity_end(self, chunk_ids: list[int]) -> None:
+    def _fill_validity_end(self, chunk_ids: list[int]) -> list[int]:
         """Step 2: close open DiaObject intervals — touched buckets only.
 
         The staged id set names a handful of id-range buckets; only
         those partitions are read (partition-pruned scan) and
         rewritten (``replace_partitions`` hardlinks the rest), matching
         the reference MERGE's touched-rows-only IO
-        (``fill_diaobject_validity_end.sql:25-40``).
+        (``fill_diaobject_validity_end.sql:25-40``).  Returns the
+        buckets (step 5 rewrites the public cells of the same objects).
         """
         staged = self._staged("DiaObject", chunk_ids)
         if staged is None or not self.promotion["DiaObject"].exists():
-            return
+            return []
         ids = staged.select("diaObjectId").distinct()
         buckets = self._buckets_of(ids, "diaObjectId")
+        if not buckets:
+            return []
         target = self.promotion["DiaObject"].read(self.spark)
         start_col, end_col = validity_columns(target.columns)
         touched = target.filter(F.col(OBJ_BUCKET).isin(buckets))
@@ -385,39 +404,48 @@ class Promoter:
             self._id_sorted(filled, "DiaObject"), OBJ_BUCKET, buckets
         )
         self.last_dml.extend(flush_observations())
+        return buckets
 
-    def _apply_updates(self, chunk_ids: list[int]) -> None:
+    def _apply_updates(
+        self, chunk_ids: list[int]
+    ) -> tuple[DataFrame | None, dict[str, list[int]]]:
         """Step 3: expand -> latest-only -> per-table bucket-pruned merge.
 
         Each table's patch keys map to a handful of id-range buckets; the
-        MERGE reads and rewrites only those partitions.
+        MERGE reads and rewrites only those partitions.  Returns the
+        checkpointed latest updates (None when nothing is staged) and
+        each merged table's buckets, for step 5.
         """
-        if not self.staging_updates.exists():
-            return
-        raw = self.staging_updates.read(self.spark).filter(
-            F.col(CHUNK_COLUMN).isin(chunk_ids)
-        )
-        if not raw.limit(1).count():
-            return
+        raw = self._staged_rows(self.staging_updates, chunk_ids)
+        if raw is None:
+            return None, {}
         latest = latest_updates(expand_updates(raw)).localCheckpoint()
         # The per-table merges are independent (distinct promotion
         # tables, patch slices of the shared checkpointed `latest`) —
         # submit them concurrently; observations resolve after the pool
         # joins (each entry is stage-tagged, so attribution survives
         # the interleave).
+        buckets: dict[str, list[int]] = {}
+
+        def merge(t, key_cols):
+            buckets[t] = self._merge_one_table(t, key_cols, latest)
+
         self._concurrent(
-            (lambda t=t, kc=key_cols: self._merge_one_table(t, kc, latest))
+            (lambda t=t, kc=key_cols: merge(t, kc))
             for t, (key_cols, _fields) in TABLE_PATCHES.items()
         )
         self.last_dml.extend(flush_observations())
+        return latest, buckets
 
-    def _merge_one_table(self, t: str, key_cols, latest: DataFrame) -> None:
+    def _merge_one_table(self, t: str, key_cols, latest: DataFrame) -> list[int]:
+        """Merge ``t``'s patch; returns the rewritten buckets (none
+        when the patch is empty — the bucket collect is the probe)."""
         if not self.promotion[t].exists():
-            return
+            return []
         patch = table_patch(latest, t)
-        if not patch.limit(1).count():
-            return
         buckets = self._buckets_of(patch, key_cols[0])
+        if not buckets:
+            return []
         target = self.promotion[t].read(self.spark)
         touched = target.filter(F.col(OBJ_BUCKET).isin(buckets))
         # observe_as rides the write job below: per-MERGE scanned/
@@ -427,6 +455,7 @@ class Promoter:
         self.promotion[t].replace_partitions(
             self._id_sorted(merged, t), OBJ_BUCKET, buckets
         )
+        return buckets
 
     def _swap_promotion_to_internal(self) -> None:
         """Step 4: atomic truncate-swap (zero-copy clone + pointer flip)."""
@@ -436,7 +465,9 @@ class Promoter:
 
     GEO_LEVEL = 4  # coarse cell for partitioning: at most 256 directories
 
-    def _update_public_snapshot(self, chunk_ids: list[int]) -> None:
+    def _update_public_snapshot(
+        self, chunk_ids: list[int], latest: DataFrame | None, buckets: list[int]
+    ) -> None:
         """Step 5: public DiaObject = current rows only, without
         validityEndMjdTai, clustered by geo_point (D10/P3/P4).
 
@@ -455,16 +486,20 @@ class Promoter:
         hardlinked.  First promotion (no public table yet) falls back
         to the full build.  Equivalence with the full recompute is
         pinned by test_pipeline.
+
+        ``latest`` and ``buckets`` come from steps 2-3: the checkpointed
+        latest updates and the DiaObject buckets the batch touched.
         """
         if not self.internal["DiaObject"].exists():
             return
         if not self.public_diaobject.exists():
             self._create_public_snapshot_full()
             return
-        touched = self._touched_object_ids(chunk_ids)
-        if touched is None:
+        if not buckets:
             return
-        self._update_public_snapshot_incremental(touched)
+        self._update_public_snapshot_incremental(
+            self._touched_object_ids(chunk_ids, latest), buckets
+        )
 
     def _create_public_snapshot_full(self) -> None:
         from ..ops.spatial import zorder_cell
@@ -481,40 +516,36 @@ class Promoter:
         )
         self.public_diaobject.overwrite(clustered, partition_by=("geo_cell",))
 
-    def _touched_object_ids(self, chunk_ids: list[int]) -> DataFrame | None:
+    def _touched_object_ids(
+        self, chunk_ids: list[int], latest: DataFrame | None
+    ) -> DataFrame:
         """DiaObject ids this batch inserted or patched (batch-sized)."""
         parts = []
         staged = self._staged("DiaObject", chunk_ids)
         if staged is not None:
             parts.append(staged.select("diaObjectId"))
-        if self.staging_updates.exists():
-            raw = self.staging_updates.read(self.spark).filter(
-                F.col(CHUNK_COLUMN).isin(chunk_ids)
-            )
-            if raw.limit(1).count():
-                patch = table_patch(latest_updates(expand_updates(raw)), "DiaObject")
-                parts.append(patch.select("diaObjectId"))
-        if not parts:
-            return None
+        if latest is not None:
+            parts.append(table_patch(latest, "DiaObject").select("diaObjectId"))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out.distinct()
 
-    def _update_public_snapshot_incremental(self, touched_ids: DataFrame) -> None:
+    def _update_public_snapshot_incremental(
+        self, touched_ids: DataFrame, buckets: list[int]
+    ) -> None:
         """Rewrite only the geo cells touched objects can occupy.
 
         Every version of a touched object lives in its id-range
-        bucket, so the candidate cell set (old position and new) comes
-        from a bucket-pruned read of internal — the public table is
-        never scanned by id, only its touched cell partitions are read
-        back.
+        bucket (``buckets``), so the candidate cell set (old position
+        and new) comes from a bucket-pruned read of internal — the
+        public table is never scanned by id, only its touched cell
+        partitions are read back.
         """
         from ..ops.spatial import zorder_cell
 
         internal = self.internal["DiaObject"].read(self.spark)
-        buckets = self._buckets_of(touched_ids, "diaObjectId")
-        ids = F.broadcast(touched_ids.distinct())
+        ids = F.broadcast(touched_ids)
         versions = internal.filter(F.col(OBJ_BUCKET).isin(buckets)).join(
             ids, "diaObjectId", "left_semi"
         )
@@ -543,10 +574,24 @@ class Promoter:
             .repartitionByRange(F.col("geo_point"))
             .sortWithinPartitions("geo_point")
         )
+        # rows and bytes the incremental rewrite wrote — the per-job
+        # cost line the reference logs (query_runner.py:63-100): the
+        # row count rides the write job, the bytes are its cell files
+        replacement = observe(
+            replacement, "public_snapshot", {"rows": F.count(F.lit(1))}, cells=len(cells)
+        )
         self.public_diaobject.replace_partitions(replacement, "geo_cell", cells)
-        # bytes/rows actually touched by the incremental rewrite — the
-        # per-job cost line the reference logs (query_runner.py:63-100)
-        log_plan_metrics(replacement, "public_snapshot", cells=len(cells))
+        flush_observations()
+        d = self.public_diaobject.data_dir()
+        files = [
+            f for c in cells for f in glob.glob(os.path.join(d, f"geo_cell={c}", "*.parquet"))
+        ]
+        log_job(
+            "public_snapshot",
+            cells=len(cells),
+            files_written=len(files),
+            bytes_written=sum(os.path.getsize(f) for f in files),
+        )
 
     def _delete_staged(self, chunk_ids: list[int]) -> None:
         """Step 6: partition drops on staging tables (D11)."""

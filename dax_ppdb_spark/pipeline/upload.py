@@ -50,17 +50,7 @@ class ChunkUploader:
 
     def pending(self) -> list[int]:
         """EXPORTED chunks in increasing id order (S3 scan)."""
-        from pyspark.sql import functions as F
-
-        rows = (
-            self.ledger.query_chunks(
-                F.col("status") == ChunkStatus.EXPORTED.value,
-                order_by="apdb_replica_chunk",
-            )
-            .select("apdb_replica_chunk")
-            .collect()
-        )
-        return [r.apdb_replica_chunk for r in rows]
+        return self.ledger.chunks_with_status(ChunkStatus.EXPORTED)
 
     def run_once(self) -> list[int]:
         """One poll iteration: upload every EXPORTED chunk.

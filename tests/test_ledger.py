@@ -120,28 +120,72 @@ def test_update_chunks_batch_one_commit(ledger):
     ledger.update_chunks([], status=ChunkStatus.STAGED)  # no-op
 
 
-def test_compact_log_preserves_logical_table(ledger):
-    ledger.insert_chunks([{"apdb_replica_chunk": i} for i in (1, 2, 3)])
+def _spark_lane_copy(spark, src, path, cut):
+    """``src``'s event log as the earlier Spark lane left one that it
+    compacted at seq ``cut`` and appended to since: Spark-written
+    ``part-*`` event files with INT96 timestamps, holding the active
+    winners at ``cut`` and every later event, and the terminal winners
+    at ``cut`` frozen into an ``archive-*`` run."""
+    import os
+    import shutil
+    import uuid
+
+    from dax_ppdb_spark.io.table import ParquetTable
+    from dax_ppdb_spark.ledger import EVENT_SEQ, LEDGER_LOG_SCHEMA, TERMINAL_STATUSES
+
+    events = src.read_log().collect()
+    last = {}
+    for r in events:
+        if cut >= r[EVENT_SEQ] >= last.get(r.apdb_replica_chunk, (-1,))[0]:
+            last[r.apdb_replica_chunk] = (r[EVENT_SEQ], r)
+    winners = [r for _, r in last.values()]
+    archived = [r for r in winners if r.status in TERMINAL_STATUSES]
+    parts = [r for r in winners if r.status not in TERMINAL_STATUSES]
+    parts += [r for r in events if r[EVENT_SEQ] > cut]
+    version = f"_v{uuid.uuid4().hex}"
+    dst = os.path.join(path, version)
+    spark.createDataFrame(parts, LEDGER_LOG_SCHEMA).write.parquet(dst)
+    tmp = os.path.join(path, "_archive_tmp")
+    spark.createDataFrame(archived, LEDGER_LOG_SCHEMA).coalesce(1).write.parquet(tmp)
+    (run,) = [n for n in os.listdir(tmp) if n.startswith("part-")]
+    os.rename(os.path.join(tmp, run), os.path.join(dst, f"archive-{uuid.uuid4().hex}.parquet"))
+    shutil.rmtree(tmp)
+    ParquetTable(path)._commit(version, expected=None)
+    led = type(src)(spark, path)
+    assert any(n.startswith("part-") for n in os.listdir(dst))
+    assert len(led._archive_files()) == 1
+    return led
+
+
+def test_compact_log_preserves_logical_table(spark, ledger, tmp_path):
+    ledger.insert_chunks([{"apdb_replica_chunk": i} for i in (1, 2, 3, 4)])
     ledger.update_chunks([1, 2], status=ChunkStatus.UPLOADED)
     ledger.update_chunks([1], status=ChunkStatus.STAGED)
+    ledger.update_chunks([4], status=ChunkStatus.SKIPPED)
     ledger.upsert_chunk({"apdb_replica_chunk": 3, "unique_id": "re"})
-    before = sorted(
-        (r.apdb_replica_chunk, r.status, r.unique_id)
-        for r in ledger.read().collect()
-    )
-    assert ledger.read_log().count() > 3
-    ledger.compact_log()
-    assert ledger.read_log().count() == 3
-    after = sorted(
-        (r.apdb_replica_chunk, r.status, r.unique_id)
-        for r in ledger.read().collect()
-    )
-    assert before == after
-    # log stays mutable after compaction
-    ledger.update_chunks([2], status=ChunkStatus.PROMOTED)
-    assert {
-        r.status for r in ledger.read().filter("apdb_replica_chunk = 2").collect()
-    } == {"PROMOTED"}
+    # a log the earlier Spark lane wrote reads back to the same table
+    spark_lane = _spark_lane_copy(spark, ledger, str(tmp_path / "spark_lane"), cut=3)
+    assert spark_lane.read().collect() == ledger.read().collect()
+    assert spark_lane.read_log().count() == 5
+    for led in (ledger, spark_lane):
+        before = sorted(
+            (r.apdb_replica_chunk, r.status, r.unique_id)
+            for r in led.read().collect()
+        )
+        assert led.promotable_chunks() == [1]
+        assert led.read_log().count() > 4
+        led.compact_log()
+        assert led.read_log().count() == 4
+        after = sorted(
+            (r.apdb_replica_chunk, r.status, r.unique_id)
+            for r in led.read().collect()
+        )
+        assert before == after
+        # log stays mutable after compaction
+        led.update_chunks([2], status=ChunkStatus.PROMOTED)
+        assert {
+            r.status for r in led.read().filter("apdb_replica_chunk = 2").collect()
+        } == {"PROMOTED"}
 
 
 def test_auto_compact_bounds_log_file_count(spark, tmp_path):
@@ -214,6 +258,42 @@ def test_archived_chunk_reopen_wins_at_read(spark, tmp_path):
     led.compact_log()
     row = led.read().collect()[0]
     assert (row.status, row.unique_id) == ("EXPORTED", "re-replicated")
+
+
+def test_event_file_reads_match_full_log(spark, tmp_path):
+    """promotable_chunks, chunks_with_status and update_chunks read the
+    event files alone for active chunks (their cost follows the active
+    chunks, not the archive); they agree with the logical table built
+    from every file: archived, reopened-after-archive, terminal but not
+    yet archived, and a field update of an archived chunk."""
+    led = Ledger(spark, str(tmp_path / "ledger"))
+    led.insert_chunks([{"apdb_replica_chunk": i} for i in range(1, 9)])
+    led.update_chunks([1, 2, 3], status=ChunkStatus.PROMOTED)
+    led.update_chunks([4], status=ChunkStatus.SKIPPED)
+    led.update_chunks([5, 6], status=ChunkStatus.STAGED)
+    led.compact_log()
+    assert len(led._archive_files()) == 1
+    led.upsert_chunk({"apdb_replica_chunk": 2, "unique_id": "re"})
+    led.update_chunks([2], status=ChunkStatus.STAGED)
+    led.update_chunks([5], status=ChunkStatus.PROMOTED)
+    led.update_chunks([3], gcs_uri="file:///late")
+
+    def check():
+        table = {r.apdb_replica_chunk: r for r in led.read().collect()}
+        assert (table[3].status, table[3].gcs_uri) == ("PROMOTED", "file:///late")
+        assert (table[2].status, table[2].unique_id) == ("STAGED", "re")
+        for status in ChunkStatus:
+            assert led.chunks_with_status(status) == sorted(
+                c for c, r in table.items() if r.status == status.value
+            ), status
+        assert led.chunks_with_status(ChunkStatus.EXPORTED) == [7, 8]
+        assert led.promotable_chunks() == [2, 6]
+
+    check()
+    led.compact_log()
+    check()
+    with pytest.raises(LookupError):
+        led.update_chunks([99], status=ChunkStatus.STAGED)
 
 
 def test_archive_runs_merge_size_tiered(spark, tmp_path):

@@ -564,3 +564,128 @@ def test_promotion_constraint_gate_blocks_bad_batch(spark, tmp_path):
     )
     assert ok.promote() == [1]
     assert ok.internal["DiaObject"].read(spark).count() == 2
+
+
+def _last_job_id(spark) -> int:
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return max((int(jobs.apply(i).jobId()) for i in range(jobs.size())), default=-1)
+
+
+def _jobs_after(spark, job_id: int) -> list[tuple[int, str, str, frozenset]]:
+    """(id, status, job group, job tags) of every job newer than
+    ``job_id``."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    out = []
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if int(j.jobId()) > job_id:
+            group = j.jobGroup().get() if j.jobGroup().isDefined() else ""
+            tags = j.jobTags()
+            tags = frozenset(tags.apply(k) for k in range(tags.size()))
+            out.append((int(j.jobId()), j.status().toString(), group, tags))
+    return out
+
+
+# Spark jobs one incremental chunk of the fixture below may launch
+# (store -> upload -> stage -> promote).  It runs exactly this many;
+# with the ledger on Spark, emptiness probes and schema-inference
+# reads it ran 122.  Any job added back to the lifecycle trips it.
+CHUNK_JOB_CEILING = 45
+
+
+def test_one_chunk_job_budget(spark, promoted, monkeypatch):
+    """Replicating one incremental chunk stays under a fixed Spark job
+    budget, no job fails (a swallowed failing job once hid in every
+    incremental promotion), every job — those promote submits from its
+    thread pool too — carries the caller's job group and job tag, and
+    the ledger's bookkeeping runs no Spark job at all: it is
+    driver-local."""
+    from dax_ppdb_spark import metrics
+    from dax_ppdb_spark.ledger import Ledger
+    from dax_ppdb_spark.pipeline.upload import ChunkUploader
+
+    promoter = promoted
+    root = promoter.root
+    ledger_jobs: dict[str, int] = {}
+
+    def counted(name, fn):
+        def wrapper(*args, **kwargs):
+            before = _last_job_id(spark)
+            out = fn(*args, **kwargs)
+            ledger_jobs[name] = ledger_jobs.get(name, 0) + len(_jobs_after(spark, before))
+            return out
+
+        return wrapper
+
+    for name in ("insert_chunks", "update_chunks", "promotable_chunks"):
+        monkeypatch.setattr(Ledger, name, counted(name, getattr(Ledger, name)))
+    # pending() is the S3 scan (Ledger.chunks_with_status)
+    monkeypatch.setattr(
+        ChunkUploader, "pending", counted("pending", ChunkUploader.pending)
+    )
+    uploader = ChunkUploader(
+        promoter.ledger,
+        root + "/export",
+        root + "/bucket",
+        stage_trigger=promoter.stage_chunk_dir,
+        exit_on_error=True,
+    )
+    metrics.clear()
+    start = _last_job_id(spark)
+    spark.sparkContext.setJobGroup("chunk-3", "replicate chunk 3")
+    spark.sparkContext.addJobTag("replicate")
+    try:
+        _replicate_chunk_3(spark, promoter, uploader)
+    finally:
+        spark.sparkContext.removeJobTag("replicate")
+        spark.sparkContext._jsc.clearJobGroup()
+    jobs = _jobs_after(spark, start)
+
+    assert ledger_jobs and set(ledger_jobs.values()) == {0}, ledger_jobs
+    assert [j for j in jobs if j[1] == "FAILED"] == []
+    assert {j[2] for j in jobs} == {"chunk-3"}
+    assert all("replicate" in j[3] for j in jobs)
+    assert len(jobs) <= CHUNK_JOB_CEILING, len(jobs)
+    # the chunk really went through every step
+    pub = {r.diaObjectId: r.nDiaSources for r in promoter.public_diaobject.read(spark).collect()}
+    assert pub == {10: 9, 20: 2, 30: 1}
+    # the incremental snapshot reports its rows (an Observation on the
+    # write) and the bytes of the cell files it wrote
+    (snap,) = metrics.recent("public_snapshot", kind="dml")
+    assert snap["rows"] >= 3 and snap["cells"] >= 1
+    (cost,) = metrics.recent("public_snapshot", kind="job")
+    assert cost["files_written"] >= 1 and cost["bytes_written"] > 0
+
+
+def _replicate_chunk_3(spark, promoter, uploader):
+    root = promoter.root
+    store_chunk(
+        spark,
+        root + "/export",
+        3,
+        {
+            "DiaObject": _obj(
+                spark,
+                [(20, 130.0, None, 46.0, -31.0, 2), (30, 200.0, None, 12.0, 5.0, 1)],
+            ),
+            "DiaSource": _src(spark, [(1003, 30, None, 12.0, 5.0, 200.0, None, None)]),
+            "DiaForcedSource": spark.createDataFrame(
+                [(5001, 30, 200.0, 1, 2, 12.0, 5.0)],
+                "diaForcedSourceId LONG, diaObjectId LONG, midpointMjdTai DOUBLE, "
+                "visit LONG, detector INT, ra DOUBLE, dec DOUBLE",
+            ),
+        },
+        updates=_updates(
+            spark,
+            [
+                (T0 + 10, 0, "update_ndiasources",
+                 json.dumps({"diaObjectId": 10, "nDiaSources": 9})),
+                (T0 + 10, 1, "withdraw_diasource",
+                 json.dumps({"diaSourceId": 1001, "timeWithdrawnMjdTai": 140.0})),
+            ],
+        ),
+        ledger=promoter.ledger,
+    )
+    assert uploader.run_once() == [3]
+    assert promoter.ledger.promotable_chunks() == [3]
+    assert promoter.promote() == [3]

@@ -282,3 +282,90 @@ def test_delta_export_skips_sidecars(spark, tmp_path):
     t.overwrite(main, partition_by=("k",), sidecars={"_meta": side})
     export_delta_log(t, spark)
     assert all("_meta" not in p for p in delta_live_files(root))
+
+
+def _jobs_run(spark) -> int:
+    return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
+
+
+def _assert_footer_read_matches_inferred(spark, t):
+    """``read()`` (footer schema, no inference job) returns the same
+    column names, types, order and rows as Spark's schema inference."""
+    from collections import Counter
+
+    before = _jobs_run(spark)
+    got = t.read(spark)
+    assert _jobs_run(spark) == before
+    want = spark.read.parquet(t.data_dir())
+    assert got.schema == want.schema
+    assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
+    return got
+
+
+def test_footer_schema_read_equals_inferred_read(spark, tmp_path):
+    """Every ParquetTable write path leaves files whose footer schema
+    ``read()`` can use without an inference job, and the read matches
+    inference.  Partition columns keep their inferred type (``int``
+    from directory names, though the writer's column was ``long``)."""
+    import pyarrow as pa
+    from pyspark.sql.types import IntegerType
+
+    rows = "k LONG, v STRING, x DOUBLE"
+    plain = ParquetTable(str(tmp_path / "plain"))
+    plain.overwrite(spark.createDataFrame([(1, "a", 1.5), (2, None, None)], rows))
+    _assert_footer_read_matches_inferred(spark, plain)
+
+    plain.append_commit(spark.createDataFrame([(3, "c", 3.0)], rows))
+    _assert_footer_read_matches_inferred(spark, plain)
+
+    t = ParquetTable(str(tmp_path / "parted"))
+    t.overwrite(
+        spark.createDataFrame([(0, "a", 1.0), (1, "b", 2.0)], rows),
+        partition_by=("k",),
+    )
+    got = _assert_footer_read_matches_inferred(spark, t)
+    assert got.columns == ["v", "x", "k"]  # partition columns last
+    assert got.schema["k"].dataType == IntegerType()
+
+    t.append(spark.createDataFrame([(1, "b2", 2.5)], rows), partition_by=("k",))
+    _assert_footer_read_matches_inferred(spark, t)
+    t.append_commit(spark.createDataFrame([(2, "c", 3.0)], rows), partition_by=("k",))
+    _assert_footer_read_matches_inferred(spark, t)
+    t.replace_partitions(spark.createDataFrame([(1, "B", 9.0)], rows), "k", [1])
+    _assert_footer_read_matches_inferred(spark, t)
+    for i in range(5):
+        t.append(spark.createDataFrame([(2, f"c{i}", 0.0)], rows), partition_by=("k",))
+    assert t.compact(spark, "k", max_files_per_partition=4) == ["2"]
+    _assert_footer_read_matches_inferred(spark, t)
+
+    clone = ParquetTable(str(tmp_path / "clone"))
+    clone.clone_from(t)
+    _assert_footer_read_matches_inferred(spark, clone)
+
+    # a pyarrow-written version carries no Spark schema: inference
+    arrow = ParquetTable(str(tmp_path / "arrow"))
+    arrow.append_commit(pa.table({"k": pa.array([4], pa.int64()), "v": ["d"]}))
+    arrow.append_commit(pa.table({"k": pa.array([5], pa.int64()), "v": ["e"]}))
+    assert arrow.read(spark).schema == spark.read.parquet(arrow.data_dir()).schema
+    assert sorted(arrow.read(spark).collect()) == [(4, "d"), (5, "e")]
+
+
+def test_version_without_data_files_still_raises(spark, tmp_path):
+    """A committed version with no data files (every partition
+    dropped, or an empty partitioned write) raises on read as schema
+    inference does — ``Promoter`` treats that as "nothing staged"."""
+    import pytest
+
+    t = ParquetTable(str(tmp_path / "t"))
+    t.overwrite(
+        spark.createDataFrame([(0, "a")], "k LONG, v STRING"), partition_by=("k",)
+    )
+    t.delete_partitions("k", [0])
+    with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
+        t.read(spark)
+    empty = ParquetTable(str(tmp_path / "empty"))
+    empty.overwrite(
+        spark.createDataFrame([], "k LONG, v STRING"), partition_by=("k",)
+    )
+    with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
+        empty.read(spark)

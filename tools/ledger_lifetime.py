@@ -19,12 +19,15 @@ catch:
 
 Method: simulate poll cycles of BATCH chunks, each cycle running the
 real lifecycle commits (insert EXPORTED -> UPLOADED -> STAGED ->
-PROMOTED = 4 commits/cycle) against a throwaway Ledger.  Around every
+PROMOTED = 4 commits/cycle) and the daemons' two polls (the uploader's
+EXPORTED scan after the insert, the promoter's promotable_chunks after
+STAGED) against a throwaway Ledger.  Around every
 commit, snapshot the version dir's inodes: bytes attributed to the
 commit are the sizes of files whose inode did not exist before it —
 hardlinked carry-forward files cost zero, exactly like the kernel
-accounts them.  Report windowed means of commit latency, new bytes,
-and file count; exit non-zero under --check if either curve grows.
+accounts them.  Report windowed means of commit and poll latency, new bytes and
+file count, and the Spark jobs the whole run launched (the ledger is
+driver-local: 0); exit non-zero under --check if a curve grows.
 
 Usage:
     python tools/ledger_lifetime.py [N_CHUNKS] [BATCH] [AUTO_COMPACT]
@@ -73,6 +76,14 @@ def run(
     spark.sparkContext.setLogLevel("ERROR")
     led = Ledger(spark, ledger_path, auto_compact_files=auto_compact)
     commits: list[tuple[float, int, int]] = []  # (sec, new_bytes, files)
+    polls: list[float] = []  # seconds per poll call
+    jobs = spark.sparkContext._jsc.sc().statusStore()
+    jobs_before = jobs.jobsList(None).size()
+
+    def _poll(fn) -> None:
+        t0 = time.time()
+        fn()
+        polls.append(time.time() - t0)
 
     def _timed(fn) -> None:
         before = _inode_sizes(led.table.data_dir())
@@ -90,20 +101,27 @@ def run(
         _timed(lambda: led.insert_chunks(
             [{"apdb_replica_chunk": i} for i in ids]
         ))
+        _poll(lambda: led.chunks_with_status(ChunkStatus.EXPORTED))
         for status in (
             ChunkStatus.UPLOADED, ChunkStatus.STAGED, ChunkStatus.PROMOTED
         ):
             _timed(lambda s=status: led.update_chunks(ids, status=s))
+            if status == ChunkStatus.STAGED:
+                _poll(led.promotable_chunks)
+    spark_jobs = jobs.jobsList(None).size() - jobs_before
 
     n = len(commits)
     windows = []
     w = max(1, n // 10)
     for i in range(0, n - n % w, w):
         chunk = commits[i : i + w]
+        # two polls per cycle of four commits
+        window_polls = polls[i // 2 : (i + w) // 2]
         windows.append(
             {
                 "commits": f"{i + 1}-{i + len(chunk)}",
                 "mean_commit_s": round(sum(c[0] for c in chunk) / len(chunk), 3),
+                "mean_poll_s": round(sum(window_polls) / max(1, len(window_polls)), 4),
                 "new_mb": round(sum(c[1] for c in chunk) / 1e6, 3),
                 "max_files": max(c[2] for c in chunk),
             }
@@ -116,6 +134,7 @@ def run(
         "batch": batch,
         "auto_compact_files": auto_compact,
         "n_commits": n,
+        "spark_jobs": spark_jobs,
         "total_new_mb": round(total_mb, 3),
         "mb_per_1k_events": round(total_mb / (4 * n_chunks) * 1000, 3),
         "windows": windows,
@@ -137,6 +156,7 @@ def main() -> int:
     for w in s["windows"]:
         print(
             f"{w['commits']:>12s}  {w['mean_commit_s']:7.3f} s/commit  "
+            f"{w['mean_poll_s']:7.4f} s/poll  "
             f"{w['new_mb']:8.3f} MB new  files<={w['max_files']}"
         )
     print(json.dumps({k: v for k, v in s.items() if k != "windows"}))
@@ -147,6 +167,12 @@ def main() -> int:
         ok = True
         if late["mean_commit_s"] > 3 * early["mean_commit_s"]:
             print("FAIL: commit latency grows with lifetime", file=sys.stderr)
+            ok = False
+        if late["mean_poll_s"] > 3 * early["mean_poll_s"]:
+            print("FAIL: poll latency grows with lifetime", file=sys.stderr)
+            ok = False
+        if s["spark_jobs"]:
+            print("FAIL: the ledger ran Spark jobs", file=sys.stderr)
             ok = False
         if late["new_mb"] > 3 * max(early["new_mb"], 1e-6):
             print("FAIL: per-window write bytes grow with lifetime",
