@@ -14,115 +14,67 @@ last-ulp engine differences cannot flip the oracle hash.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+# Module globals on purpose: applyInArrow picks the streamed iterator
+# form from the pair function's type hints, and under postponed
+# annotations those resolve only against this module's namespace.
+from typing import Iterator
+
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import assign_cells, cosine_similarity, dot, kmeans_centroids
-
-
-# Below this many ASSIGNED rows (corpus rows x fine probes) the pair
-# stages share ONE explicit hash exchange on the cell id: the
-# assignment relation feeds THREE consumers (the over-occupancy cell
-# filter and both self-join sides), and in the re-scan shape Spark
-# re-executes the whole assignment pipeline — scan, coarse argmin,
-# residual, multi-probe fine argmin, all interpreted higher-order
-# folds — once per consumer (measured: 4 identical subtrees / 4
-# parquet scans in the semdedup physical plan).  A repartition("cid")
-# ahead of the consumers makes the self-join sides canonically equal,
-# so the exchange is planned once and REUSED, the assignment runs
-# once, and the vectors cross the network once instead of twice; the
-# occupancy cap becomes a window count over the same shuffle instead
-# of a second assignment pass feeding a broadcast.
-#
-# Why gated and not unconditional: in this shape a degenerate hot cell
-# (all-zero embeddings) crosses the exchange BEFORE the count filter
-# drops it — a linear single-task read of that cell's rows.  The
-# re-scan shape filters over-occupied cells map-side (partial-agg'd
-# counts, broadcast semi-join BELOW the join exchanges), so hot-cell
-# rows never shuffle at all.  Known-bounded corpora take the
-# one-exchange shape; unknown or 100-TB-scale corpora keep the
-# skew-proof shape — the same metadata-gated rule as
-# llm_queries._AUDIT_CHECKPOINT_ROWS and similarity.LOCAL_TRAIN_ROWS.
-PAIR_ONE_EXCHANGE_ROWS = 50_000_000
-
-# Vectorized (mapInArrow + NumPy) lane for the pair stages' full-corpus
-# assignment.  The interpreted higher-order argmin/residual chain costs
-# ~25k interpreted ops per row at 64 dims (HOFs never enter codegen and
-# see no CSE); the Arrow lane replays the identical IEEE arithmetic on
-# whole batches (similarity.two_level_assign_arrow's proof note) and
-# emits bit-identical rows — pinned by the lane-equivalence test, which
-# flips this flag to compare both lanes.  True at every scale: the
-# centroid model is closure-captured (model-sized), the stage is
-# map-side (no exchange), and only (cid, id, v) crosses the boundary.
-ARROW_ASSIGN = True
-
-# Vectorized per-cell pair scoring (groupBy(cid).applyInArrow): each
-# cell's vectors cross the Python boundary ONCE and the quadratic
-# cosine work runs in NumPy, replacing the cell self-join that shipped
-# every vector once per pair plus an interpreted ~130-op fold per pair.
-# Applies only under the one-exchange metadata gate (bounded corpora):
-# the re-scan shape's map-side hot-cell filtering — the 100-TB skew
-# story — keeps the JVM join pipeline unchanged.  Row-identical to the
-# join lane (sequential per-dimension IEEE accumulation for dots and
-# norms, exact decimal HALF_UP rounding; see _pair_cells_arrow) —
-# pinned by the lane-equivalence test, which flips this flag.
-ARROW_PAIRS = True
+from .similarity import kmeans_centroids
 
 
 def _pair_cells_arrow(
-    assigned: DataFrame,
-    threshold: float,
-    max_cell: int | None,
-    with_cid: bool = False,
+    assigned: DataFrame, threshold: float, max_cell: int
 ) -> DataFrame:
     """In-cell pair mining as ONE grouped Arrow stage over the
     ``(cid, id, v)`` assignment relation: per cell, enforce the
     occupancy cap, order members by id, score all ``id_a < id_b``
-    pairs, and emit those with round-6 cosine >= ``threshold``.
+    pairs, and emit ``(cid, vec_a, vec_b, cosine)`` for those with
+    round-6 cosine >= ``threshold``.  Cells are independent, so the
+    only exchange is the hash partitioning on ``cid`` and no pair ever
+    crosses a cell (partition-local work, as in REPOSE).
 
-    Bit-replay against the join lane, step by step: the pair dot and
-    both squared norms accumulate per DIMENSION in the zip_with fold's
-    exact IEEE order (``acc += x_d * y_d`` for d = 0..dim-1 — the
-    :func:`~.similarity._assign_local` pattern, identical per pair to
-    the fold); ``dot / sqrt(n2a * n2b)`` is exact IEEE division/sqrt;
-    the raw-value prefilter keeps every pair with ``raw >= threshold -
-    1e-6`` (round-6 moves a value by at most 0.5e-6 + one double ulp,
-    so no pair whose ROUNDED cosine reaches the threshold is dropped);
-    survivors are rounded with the exact decimal HALF_UP
-    (:func:`~.similarity._round6_half_up` — java BigDecimal bit for
-    bit) and re-filtered on the rounded value, exactly the JVM's
-    ``round(...) >= threshold``.  The occupancy cap drops
-    over-occupied cells exactly like the window count (the group IS
-    the probe-expanded cell).  One divergence on OUT-OF-CONTRACT
-    input: a zero-NORM embedding makes the join lane raise ANSI
-    divide-by-zero, while this lane yields NaN (comparisons False) and
-    drops the pair — embeddings are non-degenerate by the table
-    contract, so neither behavior is reachable in production.
+    The cell streams in as record batches: rows are counted as they
+    arrive, and once a cell exceeds ``max_cell`` the held batches are
+    dropped and the rest is drained unread.  A hot cell (all-zero or
+    duplicated embeddings) therefore costs one linear read in one task
+    and never holds more than ``max_cell`` rows in the worker.
+
+    Arithmetic, step by step: the pair dot and both squared norms
+    accumulate per DIMENSION in sequential IEEE order (``acc += x_d *
+    y_d`` for d = 0..dim-1, the :func:`~.similarity.dot` fold's
+    order); ``dot / sqrt(n2a * n2b)`` is
+    exact IEEE division/sqrt; the raw-value prefilter keeps every pair
+    with ``raw >= threshold - 1e-6`` (round-6 moves a value by at most
+    0.5e-6 + one double ulp, so no pair whose ROUNDED cosine reaches
+    the threshold is dropped); survivors are rounded with
+    :func:`~.similarity._round6_half_up` (Spark's ``round(x, 6)``) and
+    re-filtered on the rounded value.  A zero-NORM embedding (outside
+    the embedding-table contract) yields NaN and never pairs.
     """
     import numpy as np
 
     from .similarity import _list_matrix, _round6_half_up
 
     id_t = assigned.schema["id"].dataType.simpleString()
-    out_schema = ("cid int, " if with_cid else "") + (
-        f"vec_a {id_t}, vec_b {id_t}, cosine double"
-    )
 
-    def fn(key, tbl):
-        import pyarrow as pa
-
-        m = tbl.num_rows
-        empty = pa.table(
-            ([pa.array([], "int32")] if with_cid else [])
-            + [
-                pa.array([], tbl.column("id").type),
-                pa.array([], tbl.column("id").type),
-                pa.array([], "float64"),
-            ],
-            names=(["cid"] if with_cid else []) + ["vec_a", "vec_b", "cosine"],
-        )
-        if m < 2 or (max_cell is not None and m > max_cell):
-            return empty
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        held, m = [], 0
+        for b in batches:
+            m += b.num_rows
+            if m > max_cell:
+                held.clear()
+                for _ in batches:
+                    pass
+                return
+            held.append(b)
+        if m < 2:
+            return
+        tbl = pa.Table.from_batches(held)
+        cid = tbl.column("cid")[0].as_py()
         ids_col = tbl.column("id").combine_chunks()
         order = np.argsort(ids_col.to_numpy(zero_copy_only=False), kind="stable")
         ids_col = ids_col.take(pa.array(order))
@@ -137,33 +89,47 @@ def _pair_cells_arrow(
         with np.errstate(invalid="ignore", divide="ignore"):
             raw = G[ia, ib] / np.sqrt(n2[ia] * n2[ib])
         keep = np.flatnonzero(raw >= threshold - 1e-6)
-        if len(keep) == 0:
-            return empty
-        cos = np.array([_round6_half_up(x) for x in raw[keep]])
-        ok = np.flatnonzero(cos >= threshold)
-        if len(ok) == 0:
-            return empty
+        cos = np.array([_round6_half_up(x) for x in raw[keep]], dtype=np.float64)
+        ok = cos >= threshold
         final, cos = keep[ok], cos[ok]
-        cols = [
-            ids_col.take(pa.array(ia[final])),
-            ids_col.take(pa.array(ib[final])),
-            pa.array(cos, "float64"),
-        ]
-        names = ["vec_a", "vec_b", "cosine"]
-        if with_cid:
-            kv = key[0].as_py() if hasattr(key[0], "as_py") else key[0]
-            cols.insert(0, pa.array(np.full(len(final), kv, dtype=np.int32)))
-            names.insert(0, "cid")
-        return pa.table(cols, names=names)
+        if len(final):
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.full(len(final), cid, np.int32)),
+                    ids_col.take(pa.array(ia[final])),
+                    ids_col.take(pa.array(ib[final])),
+                    pa.array(cos),
+                ],
+                ["cid", "vec_a", "vec_b", "cosine"],
+            )
 
-    # null cell ids (possible only via the interpreted lane on an
-    # empty centroid model) never pair in the join lane (null equi-join
-    # keys match nothing) — drop them so the group lane agrees.
-    return (
-        assigned.filter(F.col("cid").isNotNull())
-        .groupBy("cid")
-        .applyInArrow(fn, out_schema)
+    return assigned.groupBy("cid").applyInArrow(
+        fn, f"cid int, vec_a {id_t}, vec_b {id_t}, cosine double"
     )
+
+
+def _id_vec(emb: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """The ``(id, v)`` relation the Arrow assignment stages take."""
+    return emb.select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    )
+
+
+def _no_pairs(emb: DataFrame, id_col: str) -> DataFrame:
+    """The pair stage's empty result, typed like a real one: an empty
+    centroid model (empty training sample) assigns no cells."""
+    id_t = emb.schema[id_col].dataType.simpleString()
+    return emb.sparkSession.createDataFrame(
+        [], f"cid int, vec_a {id_t}, vec_b {id_t}, cosine double"
+    )
+
+
+def _check_max_cell(max_cell: int) -> None:
+    """The cell cap is the pair stage's only bound on per-task memory
+    and quadratic work, so it is required: an uncapped hot cell would
+    be unbounded."""
+    if max_cell is None or max_cell < 1:
+        raise ValueError(f"max_cell must be a positive int, got {max_cell!r}")
 
 
 def _half_up(x: Column) -> Column:
@@ -281,11 +247,10 @@ def semdedup_pairs_two_level(
     threshold: float = 0.3,
     iters: int = 3,
     sample_mod: int | None = None,
-    max_cell: int | None = 1000,
+    max_cell: int = 1000,
     probes: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    corpus_count: int | None = None,
 ) -> DataFrame:
     """SemDeDup with a TWO-LEVEL (coarse x residual) quantizer — the
     O(N^(4/3)) scale tier that replaces the flat k~sqrt(N) Lloyd
@@ -294,8 +259,8 @@ def semdedup_pairs_two_level(
 
     Standard IVF+RQ bucketing: train ``n_coarse`` Lloyd centroids on
     the (sampled) corpus as usual, then train ``n_fine`` centroids on
-    the RESIDUALS ``v - c1[cid1]`` of the same sample; the pair-join
-    key is the product cell ``cid = cid1 * n_fine + cid2``.  Two
+    the RESIDUALS ``v - c1[cid1]`` of the same sample; the pair key
+    is the product cell ``cid = cid1 * n_fine + cid2``.  Two
     near-identical vectors share both the coarse cell and the
     residual cell, so near-dup recall concentrates exactly as in the
     flat quantizer, but with ``k1*k2`` effective cells for only
@@ -307,28 +272,28 @@ def semdedup_pairs_two_level(
     lifts diffuse-pair recall ABOVE the flat tier (254 vs 211 of 990
     cosine>=0.3 pairs; single-probe found 97) for probes x the
     assignment rows and a bounded pair fan-out (``max_cell`` applies
-    to the probe-expanded cells).
+    to the probe-expanded cells; it is required, and ``None`` or a
+    value below 1 raises ``ValueError``).
 
     Every step reuses the deterministic machinery the oracle already
     replays: lowest-id init, first-wins argmin (multi-probe = the
     same distance fold ranked, ``rn <= probes`` in SQL), round-6
-    means, broadcast-data centroids (never literal expression trees),
-    and residuals are exact IEEE subtractions so the DuckDB replay is
-    bit-identical.  ``n_coarse``/``n_fine`` are required — derive
-    them with :func:`auto_semdedup_levels` from a corpus count the
-    caller already has (no hidden eager ``count()`` action here).
+    means, and residuals are exact IEEE subtractions so the DuckDB
+    replay is bit-identical.  Assignment is one vectorized map stage
+    (:func:`~.similarity.two_level_assign_arrow`) and pair scoring one
+    grouped Arrow stage per product cell (:func:`_pair_cells_arrow`).
+    ``n_coarse``/``n_fine`` are required — derive them with
+    :func:`auto_semdedup_levels` from a corpus count the caller
+    already has (no hidden eager ``count()`` action here).
 
     Output: DISTINCT (vec_a, vec_b, cosine round 6) with ``vec_a <
     vec_b`` and cosine >= ``threshold`` (a pair can meet in several
     probed cells; the cell id is an implementation detail and is not
     exposed).
     """
-    from .similarity import two_level_centroids
+    from .similarity import two_level_assign_arrow, two_level_centroids
 
-    e = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
+    _check_max_cell(max_cell)
     # Both quantizer levels train off ONE persisted (and, under the
     # LOCAL_TRAIN_ROWS threshold, ONE collected) hash sample; the md5
     # sample rule is the same one the oracle replays as a WHERE over
@@ -336,96 +301,17 @@ def semdedup_pairs_two_level(
     cents1, cents2 = two_level_centroids(
         emb, n_coarse, n_fine, iters, vec_col, id_col, sample_mod
     )
-    # Full-corpus assignment: the Arrow lane fuses coarse argmin,
-    # exact-IEEE residual, sign canonicalization and multi-probe fine
-    # argmin into ONE vectorized map stage (bit-replay proof at
-    # similarity.two_level_assign_arrow); the interpreted lane below is
-    # the same pipeline as four higher-order projections, kept for the
-    # lane-equivalence pin (and as the no-numpy fallback).
-    if ARROW_ASSIGN and cents1 and cents2:
-        from .similarity import two_level_assign_arrow
-
-        assigned = two_level_assign_arrow(e, cents1, cents2, probes, n_fine)
-    else:
-        # Coarse assignment of the full corpus, then residuals via a
-        # broadcast hash join on the k1-row centroid table (the
-        # centroid ARRAYS ride as data — the literal-tree cost
-        # documented in similarity.assign_cells applies just as much
-        # here).
-        a1 = assign_cells(e, cents1, vec_col="v", out_col="cid1")
-        c1df = emb.sparkSession.createDataFrame(
-            [(i, c) for i, c in enumerate(cents1)],
-            "cid1 INT, __c1 array<double>",
-        )
-        from .similarity import with_canonical_residual
-
-        res = with_canonical_residual(
-            a1.join(F.broadcast(c1df), "cid1"),
-            F.zip_with("v", "__c1", lambda a, b: a - b),
-            "r",
-        ).drop("__c1")
-        from .similarity import assign_cells_multi
-
-        assigned = (
-            assign_cells_multi(res, cents2, probes, vec_col="r", out_col="cid2")
-            .withColumn("cid", F.col("cid1") * n_fine + F.col("cid2"))
-            .select("cid", "id", "v")
-        )
-    # One-exchange shape under the metadata gate (see
-    # PAIR_ONE_EXCHANGE_ROWS): hash-partition by cell once, count the
-    # cell occupancy as a window over that same shuffle, and let both
-    # self-join sides reuse the exchange — identical rows either way.
-    one_exchange = (
-        corpus_count is not None
-        and corpus_count * max(probes, 1) <= PAIR_ONE_EXCHANGE_ROWS
-    )
-    if one_exchange and ARROW_PAIRS:
-        # Per-cell Arrow pair lane: the assignment relation has ONE
-        # consumer (the grouped pair stage subsumes the occupancy
-        # window AND the self-join), each vector crosses the exchange
-        # and the Python boundary once, and the quadratic scoring runs
-        # vectorized.  Row-identical to the join lane below
-        # (_pair_cells_arrow's bit-replay note).
-        return _pair_cells_arrow(assigned, threshold, max_cell).distinct()
-    if one_exchange:
-        assigned = assigned.repartition("cid")
-        if max_cell is not None:
-            w = Window.partitionBy("cid")
-            assigned = (
-                assigned.withColumn("__cell_n", F.count(F.lit(1)).over(w))
-                .filter(F.col("__cell_n") <= max_cell)
-                .drop("__cell_n")
-            )
-    elif max_cell is not None:
-        ok = (
-            assigned.groupBy("cid")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") <= max_cell)
-            .select("cid")
-        )
-        assigned = assigned.join(F.broadcast(ok), "cid")
-    # Squared norm per VECTOR, not per pair (round-6 convention —
-    # see similarity._pair_cosine for the measured rationale).
-    from .similarity import _pair_cosine
-
-    scored = assigned.withColumn("n2", dot(F.col("v"), F.col("v")))
-    a = scored.select(
-        "cid",
-        F.col("id").alias("vec_a"),
-        F.col("v").alias("va"),
-        F.col("n2").alias("n2a"),
-    )
-    b = scored.select(
-        "cid",
-        F.col("id").alias("vec_b"),
-        F.col("v").alias("vb"),
-        F.col("n2").alias("n2b"),
+    if not cents1:
+        return _no_pairs(emb, id_col).drop("cid")
+    # Full-corpus assignment fuses coarse argmin, exact-IEEE residual,
+    # sign canonicalization and multi-probe fine argmin into ONE
+    # vectorized map stage (similarity.two_level_assign_arrow); a pair
+    # can meet in several probed cells, hence the distinct.
+    assigned = two_level_assign_arrow(
+        _id_vec(emb, vec_col, id_col), cents1, cents2, probes, n_fine
     )
     return (
-        a.join(b, "cid")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cosine", _pair_cosine("va", "vb", "n2a", "n2b"))
-        .filter(F.col("cosine") >= threshold)
+        _pair_cells_arrow(assigned, threshold, max_cell)
         .select("vec_a", "vec_b", "cosine")
         .distinct()
     )
@@ -437,7 +323,7 @@ def semdedup_pairs(
     n_clusters: int | None = None,
     iters: int = 3,
     sample_mod: int | None = None,
-    max_cell: int | None = 1000,
+    max_cell: int = 1000,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     corpus_count: int | None = None,
@@ -457,84 +343,30 @@ def semdedup_pairs(
     default — NOTE that this default triggers an EAGER ``emb.count()``
     Spark action at plan-construction time; callers that already know
     the corpus size (as ``q_semdedup`` does) should pass ``n_clusters``
-    explicitly; ``max_cell`` is the usual default-on skew guard (a
+    explicitly.  ``max_cell`` is the required skew guard (a
     degenerate cell — all-zero embeddings — is capped out rather than
-    detonating one task).  The cell self-join shuffles ids+vectors
-    once on ``cid`` — never an all-pairs cross join (pinned by tests).
+    detonating one task; ``None`` or a value below 1 raises
+    ``ValueError``).  Assignment is one vectorized map stage
+    (:func:`~.similarity.flat_assign_arrow`); the pair stage shuffles
+    ids+vectors once on ``cid`` and scores each cell in one grouped
+    Arrow task (:func:`_pair_cells_arrow`) — never an all-pairs cross
+    join (pinned by tests).
 
     Output: (cid, vec_a, vec_b, cosine round 6) with ``vec_a <
     vec_b`` and cosine >= ``threshold``.
     """
+    from .similarity import flat_assign_arrow
+
+    _check_max_cell(max_cell)
     if n_clusters is None:
         if corpus_count is None:
             corpus_count = emb.count()
         n_clusters = auto_semdedup_clusters(corpus_count)
     cents = kmeans_centroids(emb, n_clusters, iters, vec_col, id_col, sample_mod)
-    e = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    # Arrow vs interpreted assignment lane: see ARROW_ASSIGN and the
-    # bit-replay note at similarity.flat_assign_arrow.
-    if ARROW_ASSIGN and cents:
-        from .similarity import flat_assign_arrow
-
-        assigned = flat_assign_arrow(e, cents)
-    else:
-        assigned = assign_cells(e, cents)
-    # Same one-exchange shape as the two-level tier (see
-    # PAIR_ONE_EXCHANGE_ROWS): the occupancy filter and both join
-    # sides otherwise each re-run the full assignment pass.
-    one_exchange = corpus_count is not None and corpus_count <= PAIR_ONE_EXCHANGE_ROWS
-    if one_exchange and ARROW_PAIRS:
-        # Per-cell Arrow pair lane (see the two-level tier): one
-        # consumer, one boundary crossing per vector, vectorized
-        # scoring; flat tier keeps the cell id in its output and has
-        # no probe-duplicate pairs to dedup.
-        return _pair_cells_arrow(assigned, threshold, max_cell, with_cid=True).select(
-            "cid", "vec_a", "vec_b", "cosine"
-        )
-    if one_exchange:
-        assigned = assigned.repartition("cid")
-        if max_cell is not None:
-            w = Window.partitionBy("cid")
-            assigned = (
-                assigned.withColumn("__cell_n", F.count(F.lit(1)).over(w))
-                .filter(F.col("__cell_n") <= max_cell)
-                .drop("__cell_n")
-            )
-    elif max_cell is not None:
-        ok = (
-            assigned.groupBy("cid")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") <= max_cell)
-            .select("cid")
-        )
-        assigned = assigned.join(F.broadcast(ok), "cid")
-    # Squared norm per VECTOR, not per pair (round-6 convention —
-    # see similarity._pair_cosine for the measured rationale).
-    from .similarity import _pair_cosine
-
-    scored = assigned.withColumn("n2", dot(F.col("v"), F.col("v")))
-    a = scored.select(
-        "cid",
-        F.col("id").alias("vec_a"),
-        F.col("v").alias("va"),
-        F.col("n2").alias("n2a"),
-    )
-    b = scored.select(
-        "cid",
-        F.col("id").alias("vec_b"),
-        F.col("v").alias("vb"),
-        F.col("n2").alias("n2b"),
-    )
-    return (
-        a.join(b, "cid")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cosine", _pair_cosine("va", "vb", "n2a", "n2b"))
-        .filter(F.col("cosine") >= threshold)
-        .select("cid", "vec_a", "vec_b", "cosine")
-    )
+    if not cents:
+        return _no_pairs(emb, id_col)
+    assigned = flat_assign_arrow(_id_vec(emb, vec_col, id_col), cents)
+    return _pair_cells_arrow(assigned, threshold, max_cell)
 
 
 def embedding_covariance(

@@ -532,14 +532,21 @@ def assign_cells(
 
 
 def _round6_half_up(x: float) -> float:
-    """Exact decimal HALF_UP to 6 places — Spark's ``F.round``
-    (java BigDecimal HALF_UP) and DuckDB's ``round`` bit for bit.
-    ``decimal.Decimal(float)`` converts the binary double exactly, so
-    there is no double-rounding hazard (``floor(x*1e6 + 0.5)`` has
-    one: the ``*1e6`` itself rounds)."""
+    """Spark's ``F.round(x, 6)`` on a double: HALF_UP on the decimal
+    STRING of ``x`` (``BigDecimal.valueOf``, i.e. ``Double.toString``),
+    not on its exact binary value — 0.7071065 is stored as
+    0.70710649999..., yet rounds to 0.707107.  Python's ``repr`` is the
+    shortest round-trip string, which JDK 17's ``Double.toString`` is
+    not always; the property test against ``F.round`` pins that the
+    two round alike on 7-decimal midpoints and their ulp neighbours.
+    DuckDB's ``round`` follows neither rule (0.5000005 -> 0.5, 5e-07 ->
+    1e-06), so the oracle can differ from the engine on a value that
+    sits exactly on a 7-decimal midpoint."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    return float(Decimal(x).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+    return float(
+        Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
+    )
 
 
 def _assign_local(X: "np.ndarray", cents: "np.ndarray") -> "np.ndarray":
@@ -783,7 +790,7 @@ def _list_matrix(col) -> "np.ndarray":
     zero-copy over the flattened child buffer.  The vectorized
     assignment lane requires DENSE, uniform-dimension vectors (the
     embedding-table contract); anything else fails LOUDLY rather than
-    silently diverging from the interpreted lane."""
+    silently diverging from the interpreted :func:`assign_cells`."""
     import numpy as np
 
     if col.null_count:
@@ -807,15 +814,17 @@ def two_level_assign_arrow(
     probes: int,
     n_fine: int,
 ) -> DataFrame:
-    """Vectorized (mapInArrow + NumPy) twin of the two-level
-    assignment pipeline in ``semdedup_pairs_two_level``: coarse argmin,
+    """Vectorized (mapInArrow + NumPy) two-level assignment for
+    ``semdedup_pairs_two_level``: coarse argmin,
     exact-IEEE residual, sign canonicalization, multi-probe fine
     argmin, ``cid = cid1 * n_fine + cid2`` — ONE Python-boundary
     crossing instead of four interpreted higher-order projections
     (guide §4.2; HOFs never enter codegen and cost ~25k interpreted
     ops/row at 64 dims).
 
-    Bit-replay proof, step by step against the interpreted lane:
+    Bit-replay proof, step by step against the interpreted primitives
+    (:func:`assign_cells`, :func:`with_canonical_residual`,
+    :func:`assign_cells_multi`):
     distances accumulate per dimension in the zip_with fold's exact
     IEEE order (:func:`_assign_local` — the established `_lloyd_local`
     replay, which the TRAINING path already uses for this exact
@@ -827,7 +836,7 @@ def two_level_assign_arrow(
     argsort == the (d, i) struct sort's first-index tie-break).  Only
     integer cell ids leave the stage — ``v`` passes through as the
     untouched input buffer — so the emitted rows are bit-identical to
-    the interpreted lane's (pinned by the lane-equivalence test).
+    the primitives' (pinned by the SemDeDup reference test).
 
     ``e`` must be exactly ``(id, v)``; output is ``(cid, id, v)`` with
     ``probes`` rows per input row (like ``assign_cells_multi``).
@@ -865,7 +874,7 @@ def two_level_assign_arrow(
 
 def flat_assign_arrow(e: DataFrame, cents: list[list[float]]) -> DataFrame:
     """Vectorized twin of :func:`assign_cells` for the flat-quantizer
-    pair lane — same bit-replay argument as
+    SemDeDup tier — same bit-replay argument as
     :func:`two_level_assign_arrow`, single probe, no residual.
     ``e`` must be exactly ``(id, v)``; output is ``(cid, id, v)``."""
     import numpy as np

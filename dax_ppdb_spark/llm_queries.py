@@ -3036,6 +3036,10 @@ def q_url_block_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle-bit-exact at driver scales), large corpora get the
 # O(N^(4/3)) tier — and the lazily-resolved ORACLE switches on the
 # same row count, so both lanes stay oracle-green.
+# The sweep passes no corpus_count, so these timings were taken on the
+# since-deleted re-scan pair shape (a broadcast cell-count filter
+# feeding a cell self-join), not on today's grouped Arrow pair stage;
+# the crossover has not been re-measured on the current shape.
 SEMDEDUP_FLAT_MAX_ROWS = 10_000
 
 
@@ -3088,9 +3092,7 @@ def q_semdedup_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _read_spread(spark, sf_dir, "embeddings")
     if n > SEMDEDUP_FLAT_MAX_ROWS:
         k1, k2 = auto_semdedup_levels(n)
-        return semdedup_pairs_two_level(
-            emb, k1, k2, threshold=0.3, sample_mod=2, corpus_count=n
-        )
+        return semdedup_pairs_two_level(emb, k1, k2, threshold=0.3, sample_mod=2)
     return semdedup_pairs(
         emb,
         threshold=0.3,
@@ -3175,7 +3177,6 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_fine=k2,
         threshold=0.3,
         sample_mod=2,
-        corpus_count=n,
     )
 
 

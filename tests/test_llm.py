@@ -845,6 +845,18 @@ def test_semdedup_finds_in_cell_pairs_and_caps_cells(spark):
     assert (
         semdedup_pairs(emb, threshold=0.9, n_clusters=4, max_cell=1).count() == 0
     )
+    # the cap is a required bound: an uncapped cell would be unbounded
+    for bad in (None, 0, -5):
+        with pytest.raises(ValueError, match="max_cell"):
+            semdedup_pairs(emb, threshold=0.9, n_clusters=4, max_cell=bad)
+    # an empty training sample (no centroids) yields a typed empty result
+    one_row = emb.filter("vec_id = 0")
+    empty = semdedup_pairs(one_row, n_clusters=4, sample_mod=1000003)
+    assert empty.columns == ["cid", "vec_a", "vec_b", "cosine"]
+    assert [f.dataType.simpleString() for f in empty.schema] == [
+        "int", "bigint", "bigint", "double"
+    ]
+    assert empty.count() == 0
     # the corpus-derived cluster-count rule
     assert auto_semdedup_clusters(500) == 23
     assert auto_semdedup_clusters(4) == 8
@@ -1080,6 +1092,16 @@ def test_semdedup_two_level_pairs_and_rule(spark):
         ).count()
         == 0
     )
+    for bad in (None, 0, -5):
+        with pytest.raises(ValueError, match="max_cell"):
+            semdedup_pairs_two_level(emb, 4, 4, threshold=0.9, max_cell=bad)
+    one_row = emb.filter("vec_id = 0")
+    empty = semdedup_pairs_two_level(one_row, 4, 4, sample_mod=1000003)
+    assert empty.columns == ["vec_a", "vec_b", "cosine"]
+    assert [f.dataType.simpleString() for f in empty.schema] == [
+        "bigint", "bigint", "double"
+    ]
+    assert empty.count() == 0
     # the corpus-derived two-level rule: k1 = k2 = max(4, N^(1/4))
     assert auto_semdedup_levels(2000) == (7, 7)
     assert auto_semdedup_levels(4) == (4, 4)

@@ -1140,67 +1140,164 @@ def test_exactsubstr_cutoff_straddle(spark, seed):
     assert got_clean == exp_clean
 
 
-def test_semdedup_arrow_and_interpreted_lanes_equal(spark, monkeypatch):
-    """The vectorized (mapInArrow/applyInArrow) assignment and pair
-    lanes must be row-identical to the interpreted HOF + self-join
-    pipeline — both tiers, on data with abs-ties, duplicate vectors
-    (cosine exactly 1), sign-flipped twins (canonicalization), and
-    near-threshold pairs.  (A zero-NORM vector is outside the
-    embedding-table contract: the interpreted lane raises ANSI
-    divide-by-zero on its pairs, so there is no reachable common
-    behavior to pin for it.)"""
-    import itertools
+def _semdedup_reference(emb, tier, threshold, max_cell, **kw):
+    """SemDeDup rebuilt from the interpreted primitives: centroid
+    training, :func:`assign_cells` (flat) or :func:`assign_cells` +
+    :func:`with_canonical_residual` + :func:`assign_cells_multi`
+    (two-level), a groupBy-count occupancy cap, and a ``_pair_cosine``
+    self-join on the cell id."""
+    from pyspark.sql import functions as F
 
+    from dax_ppdb_spark.llm.similarity import (
+        _pair_cosine,
+        assign_cells,
+        assign_cells_multi,
+        dot,
+        kmeans_centroids,
+        two_level_centroids,
+        with_canonical_residual,
+    )
+
+    v = F.col("embedding").cast("array<double>")
+    e = emb.select(F.col("vec_id").alias("id"), v.alias("v"))
+    if tier == "flat":
+        cents = kmeans_centroids(emb, kw["n_clusters"], 3)
+        assigned = assign_cells(e, cents)
+    else:
+        cents1, cents2 = two_level_centroids(emb, kw["n_coarse"], kw["n_fine"], 3)
+        c1df = emb.sparkSession.createDataFrame(
+            list(enumerate(cents1)), "cid1 INT, __c1 array<double>"
+        )
+        res = with_canonical_residual(
+            assign_cells(e, cents1, out_col="cid1").join(F.broadcast(c1df), "cid1"),
+            F.zip_with("v", "__c1", lambda a, b: a - b),
+            "r",
+        )
+        assigned = assign_cells_multi(
+            res, cents2, kw["probes"], vec_col="r", out_col="cid2"
+        ).withColumn("cid", F.col("cid1") * kw["n_fine"] + F.col("cid2"))
+    ok = assigned.groupBy("cid").count().filter(F.col("count") <= max_cell)
+    scored = (
+        assigned.join(ok.select("cid"), "cid")
+        .select("cid", "id", "v")
+        .withColumn("n2", dot(F.col("v"), F.col("v")))
+    )
+    a = scored.toDF("cid", "vec_a", "va", "n2a")
+    b = scored.toDF("cid", "vec_b", "vb", "n2b")
+    pairs = (
+        a.join(b, "cid")
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .withColumn("cosine", _pair_cosine("va", "vb", "n2a", "n2b"))
+        .filter(F.col("cosine") >= threshold)
+    )
+    if tier == "flat":
+        return pairs.select("cid", "vec_a", "vec_b", "cosine")
+    return pairs.select("vec_a", "vec_b", "cosine").distinct()
+
+
+def _semdedup_against_reference(spark, cases):
+    """Run both SemDeDup tiers on each ``(rows, threshold, max_cell,
+    flat_kw, two_kw)`` case at 50-row Arrow batches and assert each is
+    non-empty and row-identical to :func:`_semdedup_reference`;
+    returns the sorted rows keyed by ``(case index, tier)``."""
     from dax_ppdb_spark.llm import embeddings as E
 
-    rows = []
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "50")
+    try:
+        got = {}
+        for n, (rows, t, cap, flat_kw, two_kw) in enumerate(cases):
+            emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
+            two_kw = dict(two_kw, probes=2)
+            runs = {
+                "flat": E.semdedup_pairs(emb, t, max_cell=cap, **flat_kw),
+                "two": E.semdedup_pairs_two_level(
+                    emb, threshold=t, max_cell=cap, **two_kw
+                ),
+            }
+            for tier, df in runs.items():
+                ref = _semdedup_reference(emb, tier, t, cap, **flat_kw, **two_kw)
+                want = sorted(tuple(r) for r in ref.collect())
+                got[n, tier] = sorted(tuple(r) for r in df.collect())
+                assert got[n, tier], (n, tier)  # non-degenerate: pairs found
+                assert got[n, tier] == want, (n, tier)
+        return got
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def test_semdedup_arrow_and_interpreted_lanes_equal(spark):
+    """The one SemDeDup shape (Arrow assignment + streamed grouped
+    Arrow pair stage) must be row-identical to the same pipeline built
+    from the interpreted primitives — both tiers, on data with
+    abs-ties, duplicate vectors (cosine exactly 1), sign-flipped twins
+    (canonicalization) and near-threshold pairs.  (A zero-NORM vector
+    is outside the embedding-table contract: the reference raises ANSI
+    divide-by-zero on its pairs.)"""
+    adversarial = []
     for i in range(40):
         base = [((i * 7 + d * 3) % 11) - 5.0 for d in range(8)]
-        rows.append((i, [float(x) for x in base]))
-    rows.append((101, rows[3][1][:]))        # exact duplicate of id 3
-    rows.append((102, [-x for x in rows[5][1]]))  # sign-flipped twin
-    emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-
-    outs_flat, outs_two = {}, {}
-    for aa, ap in itertools.product((True, False), repeat=2):
-        monkeypatch.setattr(E, "ARROW_ASSIGN", aa)
-        monkeypatch.setattr(E, "ARROW_PAIRS", ap)
-        outs_flat[(aa, ap)] = sorted(
-            tuple(r)
-            for r in E.semdedup_pairs(
-                emb, threshold=0.2, n_clusters=5, corpus_count=len(rows)
-            ).collect()
-        )
-        outs_two[(aa, ap)] = sorted(
-            tuple(r)
-            for r in E.semdedup_pairs_two_level(
-                emb, 4, 4, threshold=0.2, probes=2, corpus_count=len(rows)
-            ).collect()
-        )
-    ref_flat, ref_two = outs_flat[(False, False)], outs_two[(False, False)]
-    assert ref_flat and ref_two  # non-degenerate: pairs actually found
-    assert all(v == ref_flat for v in outs_flat.values())
-    assert all(v == ref_two for v in outs_two.values())
-    # the duplicate pair survives with cosine exactly 1.0 in every lane
-    assert any(r[1] == 3 and r[2] == 101 and r[3] == 1.0 for r in ref_flat)
+        adversarial.append((i, [float(x) for x in base]))
+    adversarial.append((101, adversarial[3][1][:]))  # exact duplicate of id 3
+    adversarial.append((102, [-x for x in adversarial[5][1]]))  # sign-flipped
+    got = _semdedup_against_reference(
+        spark,
+        [(adversarial, 0.2, 1000, dict(n_clusters=5), dict(n_coarse=4, n_fine=4))],
+    )
+    # the duplicate pair survives with cosine exactly 1.0
+    assert any(r[1:] == (3, 101, 1.0) for r in got[0, "flat"])
 
 
-def test_semdedup_arrow_pair_lane_respects_cell_cap(spark, monkeypatch):
-    """The grouped Arrow pair stage must drop over-occupied cells
-    exactly like the occupancy window: identical rows under a binding
-    max_cell in both lanes."""
+def test_semdedup_arrow_pair_lane_respects_cell_cap(spark):
+    """The Arrow pair stage must drop every cell over ``max_cell`` and
+    keep the rest, equal to the interpreted reference's groupBy-count
+    cap, both tiers: on 30 rows under a binding ``max_cell=8``, and on
+    a hot cell of 300 identical vectors streamed in 50-row batches,
+    which must be capped out while the pair outside it survives."""
     from dax_ppdb_spark.llm import embeddings as E
 
-    rows = [(i, [float((i * 5 + d) % 7) for d in range(4)]) for i in range(30)]
-    emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    got = {}
-    for ap in (True, False):
-        monkeypatch.setattr(E, "ARROW_PAIRS", ap)
-        got[ap] = sorted(
-            tuple(r)
-            for r in E.semdedup_pairs(
-                emb, threshold=0.0, n_clusters=3, max_cell=8,
-                corpus_count=len(rows),
-            ).collect()
-        )
-    assert got[True] == got[False]
+    capped = [(i, [float((i * 5 + d) % 7) for d in range(4)]) for i in range(30)]
+    # ids 0-2 seed the Lloyd init; (0, 1) is the only pair outside the
+    # hot cell, whose 300 members would give 44,850 pairs uncapped
+    hot = [(0, [0.0, 0.0, 5.0, -1.0]), (1, [0.0, 0.0, 5.0, -1.1])]
+    hot += [(2, [-3.0, 1.0, 0.0, 0.0])]
+    hot += [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(3, 303)]
+    got = _semdedup_against_reference(
+        spark,
+        [
+            (capped, 0.0, 8, dict(n_clusters=3), dict(n_coarse=3, n_fine=3)),
+            (hot, 0.9, 100, dict(n_clusters=3), dict(n_coarse=2, n_fine=2)),
+        ],
+    )
+    # the hot cell is capped out; only the pair outside it is left
+    for tier in ("flat", "two"):
+        assert [r[-3:-1] for r in got[1, tier]] == [(0, 1)], tier
+    emb = spark.createDataFrame(hot, "vec_id LONG, embedding ARRAY<DOUBLE>")
+    assert E.semdedup_pairs(emb, 0.9, n_clusters=3).count() == 44851
+
+
+def test_round6_half_up_matches_spark_round(spark):
+    """The pair stage's rounding must equal Spark's ``round(x, 6)`` on
+    doubles bit for bit: the three inputs where exact-binary rounding
+    differs from Spark's, 5e-07, and random 7-decimal midpoints with
+    their one-ulp neighbours (where a non-shortest JVM
+    ``Double.toString`` would show up)."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from dax_ppdb_spark.llm.similarity import _round6_half_up
+
+    rng = random.Random(7)
+    xs = [0.7071065, 0.1234565, 0.5000005, 5e-07]
+    for _ in range(3000):
+        k = rng.randrange(10**7)
+        sign = -1.0 if rng.random() < 0.2 else 1.0
+        mid = sign * float(f"{k // 10**6}.{k % 10**6:06d}5")
+        xs += [mid, math.nextafter(mid, math.inf), math.nextafter(mid, -math.inf)]
+    df = spark.createDataFrame(list(enumerate(xs)), "i INT, x DOUBLE")
+    got = dict(df.select("i", F.round("x", 6)).collect())
+    bad = [(x, got[i]) for i, x in enumerate(xs) if got[i] != _round6_half_up(x)]
+    assert not bad, bad[:5]
+    assert [got[i] for i in range(4)] == [0.707107, 0.123457, 0.500001, 1e-06]

@@ -73,10 +73,10 @@ def test_no_row_python_udfs_anywhere(spark, sf_dir, registry):
             # connected-components local fast path (single-task
             # union-find, fires only under the measured size
             # threshold; the distributed star rounds are pure SQL) —
-            # which both cluster-consuming queries inherit — and the
-            # semdedup assignment/pair vectorized lane (bit-replayed
-            # NumPy over whole batches; the r15 ARROW_ASSIGN /
-            # ARROW_PAIRS gates, lane-equivalence-pinned).
+            # which both cluster-consuming queries inherit — and
+            # semdedup's Arrow assignment and grouped Arrow pair stage
+            # (bit-replayed NumPy over whole batches, pinned against a
+            # reference built from the interpreted primitives).
             assert name.startswith("multimodal") or name in (
                 "dedup_clusters",
                 "dedup_keep_best",
@@ -296,9 +296,10 @@ def test_neardup_verify_joins_broadcast_pair_side(spark, sf_dir, registry):
 
 @pytest.mark.parametrize("qname", ["semdedup", "semdedup_flat"])
 def test_semdedup_is_equi_join_on_cell(spark, sf_dir, registry, qname):
-    """SemDeDup's pair stage must hash-join on the cluster id — the
-    pair fan-out is bounded by cell occupancy (corpus-derived level
-    sizes + default-on cell cap), never an all-pairs scan."""
+    """SemDeDup's pair stage must be ONE grouped Arrow stage keyed by
+    the cluster id — the pair fan-out is bounded by cell occupancy
+    (corpus-derived level sizes + required cell cap), never an
+    all-pairs scan, and no cell self-join shape comes back."""
     plan = plan_of(registry[qname](spark, sf_dir))
     assert "CartesianProduct" not in plan
     # The ONLY nested-loop joins allowed are the one-row broadcast
@@ -332,17 +333,17 @@ def test_semdedup_is_equi_join_on_cell(spark, sf_dir, registry, qname):
             assert "__cents" in b or "Join condition: None" in b, (
                 f"nested loop without centroid attach:\n{b}"
             )
-    # The O(N) pair stage itself must be KEYED BY THE CELL ID: either
-    # the equi self-join (interpreted lane) or the grouped Arrow pair
-    # stage clustered on cid (vectorized lane) — both bound the pair
-    # fan-out by cell occupancy; an all-pairs scan has neither shape.
-    if "FlatMapGroupsInArrow" in plan:
-        assert "hashpartitioning(cid" in plan
-    else:
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or (
-            "BroadcastHashJoin" in plan
-        )
-        assert "hashpartitioning(cid" in plan or "Left keys [1]: [cid" in plan
+    # The pair stage itself is the grouped Arrow stage on cid, fed by
+    # one hash exchange on cid; no shuffled join on cid (the deleted
+    # cell self-join shapes) may appear.
+    groups = [b for b in blocks if "FlatMapGroupsInArrow" in b.splitlines()[0]]
+    assert len(groups) == 1, groups
+    assert "Arguments: [cid#" in groups[0], groups[0]
+    assert "Arguments: hashpartitioning(cid#" in plan
+    for b in blocks:
+        head = b.splitlines()[0]
+        if "SortMergeJoin" in head or "ShuffledHashJoin" in head:
+            assert "keys [1]: [cid#" not in b, b
 
 
 def test_dup_spans_no_cartesian_single_gram_shuffle(spark, sf_dir, registry):
