@@ -115,7 +115,7 @@ def export_delta_log(table: ParquetTable, spark: SparkSession) -> int:
     Idempotent per table version: exporting twice without an
     intervening pointer flip emits a commit whose remove/add diff is
     empty metadata churn, so callers hook it right after
-    ``overwrite``/``replace_partitions``/``clone_from``.
+    ``overwrite``/``replace_partitions``/``append_commit``.
     """
     data_dir = table.data_dir()
     if data_dir is None:

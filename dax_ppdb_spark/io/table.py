@@ -1,9 +1,9 @@
-"""Managed parquet tables with atomic-swap and clone semantics.
+"""Managed parquet tables with uncommitted versions and atomic commits.
 
 The reference relies on BigQuery primitives we must rebuild on a
 filesystem: zero-copy CLONE (``bigquery/chunk_promoter.py:199-203``),
-atomic WRITE_TRUNCATE swap (``:261-284``), DROP IF EXISTS (``:336-342``)
-and DELETE-by-chunk (``:306-329``).
+atomic WRITE_TRUNCATE swap (``:261-284``) and DELETE-by-chunk
+(``:306-329``).
 
 Design for scale: a table is a directory; every rewrite lands in a
 fresh ``_v<uuid>`` subdirectory and a single ``_CURRENT`` pointer file
@@ -14,16 +14,25 @@ real object store the pointer write is the only operation that needs
 read-after-write consistency.  Chunk-partitioned tables write with
 ``partitionBy`` so DELETE-by-chunk is partition pruning, not a rewrite.
 
-Footer schemas: :meth:`ParquetTable.read` takes the data columns'
-schema from ONE data file's footer, read on the driver, and hands it
-to ``spark.read.schema(...)``.  Spark's writer stores the file's exact
+Every versioned write goes through one lifecycle: :meth:`ParquetTable.
+draft` opens an uncommitted version (a :class:`Draft`: hardlinks of
+the current version's files, zero bytes copied — the CLONE — or an
+empty directory) and records the version it was based on; the writer
+reads, appends to and replaces partitions of the draft, then
+:meth:`Draft.commit` flips the pointer if it still names that base.
+A draft that is not committed is aborted and its directory removed,
+so a failed write leaves no orphan version behind.
+
+Footer schemas: :func:`read_dir` takes the data columns' schema from
+ONE data file's footer, read on the driver, and hands it to
+``spark.read.schema(...)``.  Spark's writer stores the file's exact
 ``StructType`` in the footer (key
 ``org.apache.spark.sql.parquet.row.metadata``), and Spark's own
 non-merging inference reads exactly that from one footer — but in a
 one-task job, which on the replication path was one job per table
 read, per chunk.  Partition columns are still discovered from the
 directory names (driver-side, no job), with the same types inference
-gives.  A version with no data files, or whose file carries no Spark
+gives.  A directory with no data files, or whose file carries no Spark
 schema (written by pyarrow), reads through inference, so an empty
 version still raises exactly as before.
 """
@@ -82,26 +91,129 @@ def _write_files(df, dest: str, partition_by: tuple[str, ...], mode: str) -> Non
     pq.write_table(df, os.path.join(dest, f"part-{uuid.uuid4().hex}.parquet"))
 
 
+def read_dir(spark: SparkSession, d: str) -> DataFrame:
+    """Read a parquet directory with the data schema of its first
+    file's footer (no inference job); inference when it has no data
+    files or that footer carries no Spark schema."""
+    first = _first_data_file(d)
+    schema = _footer_schema(first) if first is not None else None
+    if schema is None:
+        return spark.read.parquet(d)
+    return spark.read.schema(schema).parquet(d)
+
+
 class ConcurrentWriteError(RuntimeError):
     """A second writer committed between this writer's snapshot of the
     pointer and its own commit; the losing write was discarded."""
 
 
+class Draft:
+    """An uncommitted version of a :class:`ParquetTable`: a
+    ``_v<uuid>`` directory at ``path`` that no reader of the table
+    sees until :meth:`commit`, and the version ``base`` it was opened
+    on (None for a table with no version yet).
+
+    Used as a context manager it commits on a clean exit and aborts on
+    an exception; a writer holding it longer (``Promoter`` across its
+    steps 1-4) calls :meth:`commit` and, in ``finally``, :meth:`abort`,
+    which is a no-op once committed.
+    """
+
+    def __init__(self, table: ParquetTable, base: str | None, path: str) -> None:
+        self.table = table
+        self.base = base
+        self.path = path
+        self.committed = False
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        return read_dir(spark, self.path)
+
+    def append(self, df, partition_by: tuple[str, ...] = ()) -> None:
+        """Add ``df``'s rows (a DataFrame, or an unpartitioned
+        ``pyarrow.Table`` written with no Spark job)."""
+        _write_files(df, self.path, partition_by, "append")
+
+    def replace_partitions(self, df: DataFrame, partition_col: str, values: list) -> None:
+        """Replace the partitions named in ``values`` (and any that
+        ``df`` writes) with ``df``'s rows; every other partition keeps
+        its files.  ``df`` must contain only rows whose
+        ``partition_col`` falls in ``values``, and may read this draft:
+        it is written in full before any partition is removed."""
+        tmp = os.path.join(self.path, f"_tmp{uuid.uuid4().hex}")
+        df.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
+        written = {n for n in os.listdir(tmp) if n.startswith(f"{partition_col}=")}
+        for name in written | {f"{partition_col}={v}" for v in values}:
+            shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+        for name in written:
+            os.rename(os.path.join(tmp, name), os.path.join(self.path, name))
+        shutil.rmtree(tmp)
+
+    def commit(self) -> None:
+        """CAS pointer flip: publish this version iff the pointer still
+        names ``base`` (checked under the table's exclusive lock), and
+        record it in the commit journal; on a lost race abort and raise
+        :class:`ConcurrentWriteError`.  The superseded version is then
+        deleted, or retained within the table's ``keep_versions``."""
+        import fcntl
+
+        t = self.table
+        with open(os.path.join(t.path, t.LOCK), "w") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            current = t.current_version()
+            if current != self.base:
+                self.abort()
+                raise ConcurrentWriteError(
+                    f"{t.path}: pointer moved {self.base!r} -> {current!r} "
+                    "during this write; a concurrent promoter committed first"
+                )
+            tmp = t._pointer() + f".tmp-{uuid.uuid4().hex}"
+            with open(tmp, "w") as f:
+                f.write(os.path.basename(self.path))
+            os.replace(tmp, t._pointer())  # atomic on POSIX
+            self.committed = True
+            # ordered commit history (still under the lock): the
+            # retention/vacuum/time-travel machinery needs version
+            # ORDER, which uuid names don't carry
+            with open(t._journal(), "a") as j:
+                j.write(os.path.basename(self.path) + "\n")
+        if self.base is None:
+            return
+        if t.keep_versions <= 0:
+            shutil.rmtree(os.path.join(t.path, self.base), ignore_errors=True)
+        else:
+            t.vacuum(t.keep_versions)
+
+    def abort(self) -> None:
+        """Remove the draft's directory unless it was committed."""
+        if not self.committed:
+            shutil.rmtree(self.path, ignore_errors=True)
+
+    def __enter__(self) -> Draft:
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc_type is None:
+            self.commit()
+        else:
+            self.abort()
+
+
 class ParquetTable:
     """A versioned parquet table rooted at ``path``.
 
-    Writer model: the pointer commit is a compare-and-swap — each
-    mutating operation snapshots the current version BEFORE writing
-    its new version directory and commits only if the pointer is still
-    that snapshot (checked under an exclusive file lock).  A second
-    promoter racing the same table therefore fails LOUDLY with
-    :class:`ConcurrentWriteError` (its orphan version directory is
-    removed) instead of silently overwriting the winner's commit.
-    The lock is ``flock`` on a sibling file — right for the local/
-    POSIX filesystems this runs on; an object-store deployment swaps
-    the CAS for a conditional PUT (same contract, the pointer write is
-    the only operation needing it).  ``append`` writes into the
-    current version in place and remains single-writer by contract.
+    Writer model: every versioned write is a :class:`Draft` whose
+    commit is a compare-and-swap — the draft snapshots the current
+    version when it is opened, BEFORE anything is written, and commits
+    only if the pointer is still that snapshot (checked under an
+    exclusive file lock).  A second promoter racing the same table
+    therefore fails LOUDLY with :class:`ConcurrentWriteError` (its
+    draft is removed) instead of silently overwriting the winner's
+    commit.  The lock is ``flock`` on a sibling file — right for the
+    local/POSIX filesystems this runs on; an object-store deployment
+    swaps the CAS for a conditional PUT (same contract, the pointer
+    write is the only operation needing it).  ``append`` and
+    ``delete_partitions`` change the current version in place: the
+    single-writer staging lane, outside the draft lifecycle.
     """
 
     CURRENT = "_CURRENT"
@@ -149,18 +261,7 @@ class ParquetTable:
             raise FileNotFoundError(
                 f"version {version!r} is not retained in {self.path}"
             )
-        return self._read_dir(spark, d)
-
-    def _retire(self, old: str | None) -> None:
-        """Post-commit handling of the superseded version: delete it
-        (keep_versions=0) or retain it and prune the tail beyond the
-        retention window."""
-        if old is None:
-            return
-        if self.keep_versions <= 0:
-            shutil.rmtree(os.path.join(self.path, old), ignore_errors=True)
-            return
-        self.vacuum(self.keep_versions)
+        return read_dir(spark, d)
 
     def vacuum(self, keep: int | None = None) -> list[str]:
         """Drop superseded version directories beyond the newest
@@ -190,31 +291,33 @@ class ParquetTable:
     def exists(self) -> bool:
         return self.current_version() is not None
 
-    def _commit(self, version: str, expected: str | None) -> None:
-        """CAS pointer flip: commit ``version`` iff the pointer still
-        names ``expected``; on a lost race, drop the orphan version
-        and raise."""
-        import fcntl
-
-        os.makedirs(self.path, exist_ok=True)
-        with open(os.path.join(self.path, self.LOCK), "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            current = self.current_version()
-            if current != expected:
-                shutil.rmtree(os.path.join(self.path, version), ignore_errors=True)
+    def draft(self, empty: bool = False) -> Draft:
+        """Open an uncommitted version based on the current one: its
+        files hardlinked into a fresh ``_v<uuid>`` directory
+        (O(file count), zero bytes copied; sidecars ride along), or an
+        empty directory when ``empty`` or the table has no version."""
+        base = self.current_version()
+        path = os.path.join(self.path, f"_v{uuid.uuid4().hex}")
+        if base is None or empty:
+            os.makedirs(path)
+            return Draft(self, base, path)
+        try:
+            shutil.copytree(os.path.join(self.path, base), path, copy_function=os.link)
+        except OSError as e:
+            shutil.rmtree(path, ignore_errors=True)
+            if self.current_version() != base:
+                # The base vanished mid-copy: a concurrent writer
+                # committed and retired it.  Surface the documented
+                # loser contract instead of a raw FileNotFoundError.
                 raise ConcurrentWriteError(
-                    f"{self.path}: pointer moved {expected!r} -> {current!r} "
-                    "during this write; a concurrent promoter committed first"
-                )
-            tmp = self._pointer() + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                f.write(version)
-            os.replace(tmp, self._pointer())  # atomic on POSIX
-            # ordered commit history (still under the lock): the
-            # retention/vacuum/time-travel machinery needs version
-            # ORDER, which uuid names don't carry
-            with open(self._journal(), "a") as j:
-                j.write(version + "\n")
+                    f"{self.path}: version {base!r} was replaced while a "
+                    "draft was opened on it; a concurrent promoter committed first"
+                ) from e
+            # Persistent local faults (ENOSPC, EACCES, EMLINK, ...) are
+            # NOT a lost race — re-raise as-is so callers treating
+            # ConcurrentWriteError as retryable don't loop on them.
+            raise
+        return Draft(self, base, path)
 
     # -- operations ---------------------------------------------------------
 
@@ -222,28 +325,7 @@ class ParquetTable:
         d = self.data_dir()
         if d is None:
             raise FileNotFoundError(f"table has no committed version: {self.path}")
-        return self._read_dir(spark, d)
-
-    @staticmethod
-    def _read_dir(spark: SparkSession, d: str) -> DataFrame:
-        """Read one version directory with the data schema of its first
-        file's footer (no inference job); inference when it has no data
-        files or that footer carries no Spark schema."""
-        first = _first_data_file(d)
-        schema = _footer_schema(first) if first is not None else None
-        if schema is None:
-            return spark.read.parquet(d)
-        return spark.read.schema(schema).parquet(d)
-
-    def _write_version(
-        self, df: DataFrame, partition_by: tuple[str, ...] = ()
-    ) -> str:
-        """Write ``df`` (a DataFrame, or an unpartitioned
-        ``pyarrow.Table``) as a new, uncommitted version directory."""
-        os.makedirs(self.path, exist_ok=True)
-        version = f"_v{uuid.uuid4().hex}"
-        _write_files(df, os.path.join(self.path, version), partition_by, "overwrite")
-        return version
+        return read_dir(spark, d)
 
     def overwrite(
         self,
@@ -251,7 +333,7 @@ class ParquetTable:
         partition_by: tuple[str, ...] = (),
         sidecars: dict[str, DataFrame] | None = None,
     ) -> None:
-        """D9: atomic truncate-swap — write new version, CAS the pointer.
+        """D9: atomic truncate-swap — write an empty draft, commit it.
 
         ``sidecars`` commits auxiliary relations UNDER THE SAME
         POINTER: each is written to ``<version>/<name>/`` before the
@@ -267,17 +349,15 @@ class ParquetTable:
         lane for model-sized metadata the driver already holds
         (centroids, codebooks).
         """
-        old = self.current_version()
-        version = self._write_version(df, partition_by)
-        for name, sdf in (sidecars or {}).items():
-            if not name.startswith("_"):
-                raise ValueError(
-                    f"sidecar name must start with '_' (got {name!r}) so the "
-                    "main relation's parquet reader ignores it"
-                )
-            _write_files(sdf, os.path.join(self.path, version, name), (), "overwrite")
-        self._commit(version, expected=old)
-        self._retire(old)
+        with self.draft(empty=True) as d:
+            d.append(df, partition_by)
+            for name, sdf in (sidecars or {}).items():
+                if not name.startswith("_"):
+                    raise ValueError(
+                        f"sidecar name must start with '_' (got {name!r}) so the "
+                        "main relation's parquet reader ignores it"
+                    )
+                _write_files(sdf, os.path.join(d.path, name), (), "overwrite")
 
     def read_sidecar(self, spark: SparkSession, name: str) -> DataFrame:
         """Read a sidecar relation committed with the current version."""
@@ -301,38 +381,15 @@ class ParquetTable:
         _write_files(df, d, partition_by, "append")
 
     def append_commit(self, df: DataFrame, partition_by: tuple[str, ...] = ()) -> None:
-        """Atomic append: copy-on-write the current version (hardlinks
-        — O(file count), zero bytes copied; sidecars ride along), write
-        the new batch into the NEW version dir, CAS the pointer.
-        Readers see the old generation or old+batch, never a partial
-        batch; a racing writer loses the CAS loudly.  ``df`` may be a
-        ``pyarrow.Table`` (unpartitioned): it is written driver-locally
-        with no Spark job — the lane for the small control tables the
-        driver already holds (the ledger)."""
-        old = self.current_version()
-        if old is None:
-            self.overwrite(df, partition_by)
-            return
-        src = os.path.join(self.path, old)
-        version = f"_v{uuid.uuid4().hex}"
-        dst = os.path.join(self.path, version)
-        shutil.copytree(src, dst, copy_function=os.link)
-        _write_files(df, dst, partition_by, "append")
-        self._commit(version, expected=old)
-        self._retire(old)
-
-    def clone_from(self, other: ParquetTable) -> None:
-        """D7: zero-copy CLONE via hardlinks into a new version."""
-        src = other.data_dir()
-        if src is None:
-            raise FileNotFoundError(f"clone source empty: {other.path}")
-        os.makedirs(self.path, exist_ok=True)
-        old = self.current_version()
-        version = f"_v{uuid.uuid4().hex}"
-        dst = os.path.join(self.path, version)
-        shutil.copytree(src, dst, copy_function=os.link)
-        self._commit(version, expected=old)
-        self._retire(old)
+        """Atomic append: the batch lands in a draft of the current
+        version and commits with it.  Readers see the old generation
+        or old+batch, never a partial batch; a racing writer loses the
+        CAS loudly.  ``df`` may be a ``pyarrow.Table``
+        (unpartitioned): it is written driver-locally with no Spark
+        job — the lane for the small control tables the driver already
+        holds (the ledger)."""
+        with self.draft() as d:
+            d.append(df, partition_by)
 
     def replace_partitions(
         self, df: DataFrame, partition_col: str, values: list
@@ -350,52 +407,8 @@ class ParquetTable:
         touched slice, never the table.  ``df`` must contain only rows
         whose ``partition_col`` falls in ``values``.
         """
-        old = self.current_version()
-        d = os.path.join(self.path, old) if old else None
-        if d is None:
-            self.overwrite(df, (partition_col,))
-            return
-        os.makedirs(self.path, exist_ok=True)
-        version = f"_v{uuid.uuid4().hex}"
-        dst = os.path.join(self.path, version)
-        tmp = os.path.join(self.path, f"_tmp{uuid.uuid4().hex}")
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
-        written = {
-            name for name in os.listdir(tmp) if name.startswith(f"{partition_col}=")
-        }
-        skip = written | {f"{partition_col}={v}" for v in values}
-        os.makedirs(dst)
-        try:
-            for name in os.listdir(d):
-                src = os.path.join(d, name)
-                if name in skip:
-                    continue
-                if os.path.isdir(src):
-                    shutil.copytree(src, os.path.join(dst, name), copy_function=os.link)
-                else:
-                    os.link(src, os.path.join(dst, name))
-        except OSError as e:
-            shutil.rmtree(dst, ignore_errors=True)
-            shutil.rmtree(tmp, ignore_errors=True)
-            if isinstance(e, FileNotFoundError):
-                # The snapshot version vanished mid-copy: a concurrent
-                # writer committed and removed it.  Surface the
-                # documented loser contract (cleaned up, loud) instead
-                # of a raw FileNotFoundError with orphans left behind.
-                raise ConcurrentWriteError(
-                    f"{self.path}: version {old!r} disappeared during "
-                    "replace_partitions; a concurrent promoter committed first"
-                ) from e
-            # Persistent local faults (ENOSPC, EACCES, EMLINK, ...) are
-            # NOT a lost race — re-raise as-is (cleaned up) so callers
-            # treating ConcurrentWriteError as retryable don't loop on
-            # a permissions error.
-            raise
-        for name in written:
-            shutil.move(os.path.join(tmp, name), os.path.join(dst, name))
-        shutil.rmtree(tmp, ignore_errors=True)
-        self._commit(version, expected=old)
-        self._retire(old)
+        with self.draft() as d:
+            d.replace_partitions(df, partition_col, values)
 
     def compact(
         self,
@@ -407,11 +420,10 @@ class ParquetTable:
         """Small-file compaction (the OPTIMIZE analog a streaming
         ingest table needs): partitions whose data-file count exceeds
         ``max_files_per_partition`` are read back and rewritten as
-        ``target_files`` files each; untouched partitions hardlink
-        through :meth:`replace_partitions`' copy-on-write commit, so
-        compaction IO — like every other commit here — is proportional
-        to the fragmented slice, never the table.  Returns the list of
-        compacted partition values.
+        ``target_files`` files each; untouched partitions stay
+        hardlinked in the draft, so compaction IO — like every other
+        commit here — is proportional to the fragmented slice, never
+        the table.  Returns the list of compacted partition values.
 
         Micro-batch appenders (the replication loop writes one file
         set per chunk poll) fragment partitions over time; at 100 TB
@@ -439,22 +451,21 @@ class ParquetTable:
             return []
         from pyspark.sql import functions as F
 
-        df = self.read(spark)
-        # Cast the directory-name VALUES to the column's inferred type
-        # (never the column to string — a cast on the partition column
-        # would defeat partition pruning and scan the whole table to
-        # compact one slice).
-        dt = df.schema[partition_col].dataType
-        lits = [F.lit(v).cast(dt) for v in fragmented]
-        sub = df.filter(F.col(partition_col).isin(*lits)).repartition(
-            target_files * len(fragmented), partition_col
-        )
-        self.replace_partitions(sub, partition_col, fragmented)
+        with self.draft() as draft:
+            # read the draft, not the pointer: the rows rewritten are
+            # those of the version the commit's CAS is based on
+            df = draft.read(spark)
+            # Cast the directory-name VALUES to the column's inferred
+            # type (never the column to string — a cast on the
+            # partition column would defeat partition pruning and scan
+            # the whole table to compact one slice).
+            dt = df.schema[partition_col].dataType
+            lits = [F.lit(v).cast(dt) for v in fragmented]
+            sub = df.filter(F.col(partition_col).isin(*lits)).repartition(
+                target_files * len(fragmented), partition_col
+            )
+            draft.replace_partitions(sub, partition_col, fragmented)
         return fragmented
-
-    def drop(self) -> None:
-        """D8: DROP TABLE IF EXISTS."""
-        shutil.rmtree(self.path, ignore_errors=True)
 
     def delete_partitions(self, partition_col: str, values: list) -> None:
         """D11: DELETE WHERE partition_col IN (...) as partition drops.

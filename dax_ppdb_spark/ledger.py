@@ -302,8 +302,8 @@ class Ledger:
     @staticmethod
     def _write_archive_run(rows: pa.Table, dst: str) -> None:
         """Write ``rows`` as ONE parquet file named as an archive run
-        inside the assembled version dir ``dst`` (nothing when empty —
-        no zero-row runs accumulate)."""
+        inside the draft directory ``dst`` (nothing when empty — no
+        zero-row runs accumulate)."""
         if rows.num_rows:
             pq.write_table(
                 rows, os.path.join(dst, f"{_ARCHIVE_PREFIX}{uuid_mod.uuid4().hex}.parquet")
@@ -320,35 +320,30 @@ class Ledger:
         over the deployment's lifetime — not O(every chunk ever seen),
         which is what rewriting terminal history each compaction would
         cost (measured: tools/ledger_lifetime.py)."""
-        tbl = self.table
-        old = tbl.current_version()
-        arch_files = self._archive_files()
-        # winners among the event files: every active chunk's, and the
-        # terminal rows not archived yet (see _active)
-        winners = _winners(_read_files(self._event_files()))
-        term = _is_in(winners["status"], TERMINAL_STATUSES)
-        new_arch = winners.filter(term)
-        if arch_files:
-            # already-archived winners stay where they are; only the
-            # newly-terminal delta is written
-            key = ["apdb_replica_chunk", EVENT_SEQ]
-            new_arch = new_arch.join(
-                _read_files(arch_files, key), key, join_type="left anti"
-            ).select(LEDGER_LOG_ARROW.names)
-        payload = pa.concat_tables([winners.filter(pc.invert(term)), events])
-        version = tbl._write_version(payload)
-        dst = os.path.join(tbl.path, version)
-        link = arch_files
-        if len(arch_files) >= self.archive_merge_runs:
-            by_size = sorted(arch_files, key=os.path.getsize)
-            merge = by_size[: len(by_size) // 2 + 1]
-            link = [f for f in arch_files if f not in merge]
-            self._write_archive_run(_read_files(merge), dst)
-        for f in link:
-            os.link(f, os.path.join(dst, os.path.basename(f)))
-        self._write_archive_run(new_arch, dst)
-        tbl._commit(version, expected=old)
-        tbl._retire(old)
+        with self.table.draft(empty=True) as d:
+            arch_files = self._archive_files()
+            # winners among the event files: every active chunk's, and
+            # the terminal rows not archived yet (see _active)
+            winners = _winners(_read_files(self._event_files()))
+            term = _is_in(winners["status"], TERMINAL_STATUSES)
+            new_arch = winners.filter(term)
+            if arch_files:
+                # already-archived winners stay where they are; only the
+                # newly-terminal delta is written
+                key = ["apdb_replica_chunk", EVENT_SEQ]
+                new_arch = new_arch.join(
+                    _read_files(arch_files, key), key, join_type="left anti"
+                ).select(LEDGER_LOG_ARROW.names)
+            d.append(pa.concat_tables([winners.filter(pc.invert(term)), events]))
+            link = arch_files
+            if len(arch_files) >= self.archive_merge_runs:
+                by_size = sorted(arch_files, key=os.path.getsize)
+                merge = by_size[: len(by_size) // 2 + 1]
+                link = [f for f in arch_files if f not in merge]
+                self._write_archive_run(_read_files(merge), d.path)
+            for f in link:
+                os.link(f, os.path.join(d.path, os.path.basename(f)))
+            self._write_archive_run(new_arch, d.path)
 
     def insert_chunks(self, rows: Iterable[dict]) -> None:
         """D6: batch insert; duplicate chunk ids raise (IntegrityError

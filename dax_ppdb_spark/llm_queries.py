@@ -4066,7 +4066,8 @@ def q_audit_quarantine_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concurrent job cannot leak into the caller's.
     import os
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
+    import uuid
+    from concurrent.futures import ThreadPoolExecutor, wait
 
     from .llm.similarity import ensure_centroid_model
 
@@ -4075,87 +4076,109 @@ def q_audit_quarantine_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dax_ppdb_spark_audit_quantizer",
         os.path.basename(os.path.normpath(sf_dir)),
     )
-    pool = ThreadPoolExecutor(max_workers=1)
-    cents_fut = pool.submit(
-        ensure_centroid_model,
-        emb,
-        model_root,
-        n_clusters=auto_semdedup_clusters(n_emb),
-        iters=3,
-        sample_mod=2,
-    )
+    # Every job the pool thread launches carries ``tag``: an error
+    # path cancels them until the thread is idle, then joins it, so no
+    # pool thread or Spark job outlives the call.
+    sc = spark.sparkContext
+    tag = f"audit-quarantine-{uuid.uuid4().hex}"
 
-    rules = [
-        AcceptedValues("lang", ("en", "zh", "es")),
-        InRange("n_chars", 1, 500),
-        Check("n_chars_consistent", "length(text) = n_chars"),
-        NotNull("text"),
-    ]
-    viol = (
-        constraint_violations(docs, rules, ["doc_id"])
-        .select("doc_id", F.lit("constraint").alias("reason"))
-        .distinct()
-    )
-    noise = (
-        knn_label_agreement(emb, k=5, corpus_count=n_emb, probes=2)
-        .filter((F.col("n_neighbors") >= 3) & (F.col("agreement") <= 0.2))
-        .select(F.col("vec_id").alias("doc_id"), F.lit("label_noise").alias("reason"))
-    )
-    cents = cents_fut.result()
-    outl = (
-        embedding_outlier_ranks(emb, sample_mod=2, centroids=cents)
-        .filter(F.col("cell_rank") == 1)
-        .select(F.col("vec_id").alias("doc_id"), F.lit("outlier").alias("reason"))
-    )
-    # The quarantine relation feeds TWO consumers — the broadcast
-    # anti-join under the curation chain AND the 'quarantined' side of
-    # the final union.  Without a checkpoint the whole audit subtree
-    # (kNN cell exchange, Lloyd assignment, constraint scan) re-runs
-    # once per consumer; the checkpoint is audit-sized (flagged ids
-    # only), so it stays O(flagged) at any corpus scale.  The
-    # checkpoint call truncates the plan to a leaf the moment it is
-    # built (a LogicalRDD, eager or not — without it the audit DAG
-    # rides inside the logical plan of every one of the ~10 downstream
-    # curation steps and per-transformation analysis re-walks it each
-    # time, measured 3.5 s/call at sf0.1), and the audit JOB — the
-    # second rung of the call's serial job ladder — runs on the pool
-    # thread WHILE those downstream plans build (guide §2.6), joined
-    # before the DataFrame is handed back so the caller never races
-    # the materialization.
-    quar = (
-        viol.unionByName(noise)
-        .unionByName(outl)
-        .groupBy("doc_id")
-        .agg(
-            F.concat_ws(",", F.array_sort(F.collect_set("reason"))).alias("reason")
+    def tagged(fn, *args, **kwargs):
+        sc.addJobTag(tag)
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            sc.removeJobTag(tag)
+
+    pool = ThreadPoolExecutor(max_workers=1)
+    cents_fut = quar_fut = None
+    try:
+        cents_fut = pool.submit(
+            tagged,
+            ensure_centroid_model,
+            emb,
+            model_root,
+            n_clusters=auto_semdedup_clusters(n_emb),
+            iters=3,
+            sample_mod=2,
         )
-        .localCheckpoint(eager=False)
-    )
-    quar_fut = pool.submit(quar.count)
-    clean = docs.join(F.broadcast(quar.select("doc_id")), "doc_id", "left_anti")
-    quality = clean.withColumn(
-        "quality_score", quality_metrics(F.col("text"))["quality_score"]
-    ).filter(F.col("quality_score") >= 0.4)
-    w = Window.partitionBy(F.md5("text"))
-    deduped = (
-        quality.withColumn("__keep", F.min("doc_id").over(w) == F.col("doc_id"))
-        .filter(F.col("__keep"))
-        .drop("__keep")
-    )
-    kept = hash_split(deduped).select(
-        "doc_id",
-        F.lit("kept").alias("disposition"),
-        F.lit(None).cast("string").alias("reason"),
-        F.round("quality_score", 6).alias("quality_score"),
-        "split",
-    )
-    quarantined = quar.select(
-        "doc_id",
-        F.lit("quarantined").alias("disposition"),
-        "reason",
-        F.lit(None).cast("double").alias("quality_score"),
-        F.lit(None).cast("string").alias("split"),
-    )
-    quar_fut.result()
-    pool.shutdown(wait=True)
+
+        rules = [
+            AcceptedValues("lang", ("en", "zh", "es")),
+            InRange("n_chars", 1, 500),
+            Check("n_chars_consistent", "length(text) = n_chars"),
+            NotNull("text"),
+        ]
+        viol = (
+            constraint_violations(docs, rules, ["doc_id"])
+            .select("doc_id", F.lit("constraint").alias("reason"))
+            .distinct()
+        )
+        noise = (
+            knn_label_agreement(emb, k=5, corpus_count=n_emb, probes=2)
+            .filter((F.col("n_neighbors") >= 3) & (F.col("agreement") <= 0.2))
+            .select(F.col("vec_id").alias("doc_id"), F.lit("label_noise").alias("reason"))
+        )
+        cents = cents_fut.result()
+        outl = (
+            embedding_outlier_ranks(emb, sample_mod=2, centroids=cents)
+            .filter(F.col("cell_rank") == 1)
+            .select(F.col("vec_id").alias("doc_id"), F.lit("outlier").alias("reason"))
+        )
+        # The quarantine relation feeds TWO consumers — the broadcast
+        # anti-join under the curation chain AND the 'quarantined' side of
+        # the final union.  Without a checkpoint the whole audit subtree
+        # (kNN cell exchange, Lloyd assignment, constraint scan) re-runs
+        # once per consumer; the checkpoint is audit-sized (flagged ids
+        # only), so it stays O(flagged) at any corpus scale.  The
+        # checkpoint call truncates the plan to a leaf the moment it is
+        # built (a LogicalRDD, eager or not — without it the audit DAG
+        # rides inside the logical plan of every one of the ~10 downstream
+        # curation steps and per-transformation analysis re-walks it each
+        # time, measured 3.5 s/call at sf0.1), and the audit JOB — the
+        # second rung of the call's serial job ladder — runs on the pool
+        # thread WHILE those downstream plans build (guide §2.6), joined
+        # before the DataFrame is handed back so the caller never races
+        # the materialization.
+        quar = (
+            viol.unionByName(noise)
+            .unionByName(outl)
+            .groupBy("doc_id")
+            .agg(
+                F.concat_ws(",", F.array_sort(F.collect_set("reason"))).alias("reason")
+            )
+            .localCheckpoint(eager=False)
+        )
+        quar_fut = pool.submit(tagged, quar.count)
+        clean = docs.join(F.broadcast(quar.select("doc_id")), "doc_id", "left_anti")
+        quality = clean.withColumn(
+            "quality_score", quality_metrics(F.col("text"))["quality_score"]
+        ).filter(F.col("quality_score") >= 0.4)
+        w = Window.partitionBy(F.md5("text"))
+        deduped = (
+            quality.withColumn("__keep", F.min("doc_id").over(w) == F.col("doc_id"))
+            .filter(F.col("__keep"))
+            .drop("__keep")
+        )
+        kept = hash_split(deduped).select(
+            "doc_id",
+            F.lit("kept").alias("disposition"),
+            F.lit(None).cast("string").alias("reason"),
+            F.round("quality_score", 6).alias("quality_score"),
+            "split",
+        )
+        quarantined = quar.select(
+            "doc_id",
+            F.lit("quarantined").alias("disposition"),
+            "reason",
+            F.lit(None).cast("double").alias("quality_score"),
+            F.lit(None).cast("string").alias("split"),
+        )
+        quar_fut.result()
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)
+        pending = [f for f in (cents_fut, quar_fut) if f is not None and not f.done()]
+        while pending:
+            sc.cancelJobsWithTag(tag)
+            pending = wait(pending, timeout=1).not_done
+        pool.shutdown(wait=True)
     return quarantined.unionByName(kept)

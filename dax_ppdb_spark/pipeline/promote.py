@@ -1,15 +1,17 @@
-"""Chunk promotion: staging -> promotion -> internal -> public.
+"""Chunk promotion: staging -> uncommitted internal versions -> internal
+-> public.
 
 Reference orchestration (``bigquery/chunk_promoter.py:117-177``), seven
 ordered steps with cleanup in ``finally``:
 
-1. copy staging rows for the chunk ids into promotion workspace tables
-   cloned from internal, computing ``geo_point`` (S10/P10),
+1. open one draft per internal table (an uncommitted version,
+   ``ParquetTable.draft``) and append the staging rows for the chunk
+   ids to it, computing ``geo_point`` (S10/P10),
 2. fill DiaObject validity ends, semi-join-pruned to staged objects
    (W2/P8/J4),
 3. apply retroactive updates (expand -> latest-only -> per-table MERGE,
    ``bigquery/updates/updates_manager.py:106-150``),
-4. atomically swap promotion into internal (D9),
+4. commit the drafts: one CAS pointer flip per internal table (D9),
 5. re-materialize the public latest snapshot, clustered by geo_point
    (D10),
 6. delete the staged chunk partitions (D11 — partition drops, no
@@ -24,19 +26,26 @@ Scale notes — every step is O(batch), never O(table):
 - staging tables are partitioned by ``apdb_replica_chunk`` so step 1
   reads only the promoted chunks (partition pruning) and step 6 is a
   metadata-only partition drop;
-- step 1 clones internal into promotion by hardlink (zero bytes
+- step 1's draft hardlinks internal's current version (zero bytes
   copied) and appends just the staged rows, like the reference's
-  CLONE + INSERT-SELECT (``chunk_promoter.py:199-227``);
+  CLONE + INSERT-SELECT (``chunk_promoter.py:199-227``).  The
+  reference clones into a separate ``promotion`` dataset and swaps it
+  back because BigQuery has no uncommitted table version; a draft is
+  one, so steps 1-3 write into it and step 4 publishes it.  Each draft
+  records its base version at step 1: a promoter overtaken by another
+  one loses its step-4 CAS with ``ConcurrentWriteError`` and its
+  drafts are removed, leaving internal as the winner committed
+  (the commits of the three tables are still separate);
 - internal tables are range-bucketed on their MERGE key (the BigQuery
   id-clustering analog — range, so one batch's roughly-contiguous ids
   land in a handful of buckets), and steps 2-3 read and rewrite only
-  the buckets a batch touches (``ParquetTable.replace_partitions``
-  hardlinks the rest) — the touched-rows-only IO of the reference's
+  the buckets a batch touches (``Draft.replace_partitions`` keeps
+  the rest's hardlinks) — the touched-rows-only IO of the reference's
   MERGE statements;
 - update patch sets are one batch's worth — broadcast merges, no
   target-side shuffle;
 - within steps 1 and 3 the per-table jobs are INDEPENDENT (distinct
-  promotion tables, no shared state beyond the Spark scheduler) and
+  drafts, no shared state beyond the Spark scheduler) and
   are submitted concurrently from a thread pool (each thread tagged
   with its own scheduler pool, honored under FAIR mode and harmless
   under FIFO, and carrying the caller's job group) — a cluster
@@ -63,7 +72,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io.table import ParquetTable
+from ..io.table import Draft, ParquetTable, read_dir
 from ..ledger import Ledger
 from ..metrics import flush_observations, log_job, observe, timer
 from ..ops.merge import merge_patch
@@ -76,7 +85,7 @@ _LOG = logging.getLogger("dax_ppdb_spark.promote")
 
 DIA_TABLES = ("DiaObject", "DiaSource", "DiaForcedSource")
 
-# Internal/promotion tables are RANGE-bucketed on the column their
+# Internal tables are RANGE-bucketed on the column their
 # point-MERGEs key on — the analog of the reference's BigQuery
 # clustering + search index on ``diaObjectId``
 # (``bigquery/schema/dataset_builder.py:250-265``), which is itself
@@ -127,7 +136,9 @@ class Promoter:
         self.staging = {t: ParquetTable(os.path.join(root, "staging", t)) for t in DIA_TABLES}
         self.staging_updates = ParquetTable(os.path.join(root, "staging", "updates"))
         self.internal = {t: ParquetTable(os.path.join(root, "internal", t)) for t in DIA_TABLES}
-        self.promotion = {t: ParquetTable(os.path.join(root, "promotion", t)) for t in DIA_TABLES}
+        # The uncommitted internal versions of the running promote(),
+        # by table: opened in step 1, committed in step 4.
+        self._drafts: dict[str, Draft] = {}
         self.public_diaobject = ParquetTable(os.path.join(root, "public", "DiaObject"))
         self.ledger = Ledger(spark, os.path.join(root, "ledger"))
 
@@ -175,7 +186,9 @@ class Promoter:
         their ledger rows to STAGED in ONE event-log commit
         (``ledger.update_chunks``) — the same batching rule promotion
         applies at its PROMOTED transition; per-chunk commits in a
-        loop were the one remaining O(k)-commit stager path."""
+        loop were the one remaining O(k)-commit stager path.  Each
+        exported table is read with its footer schema (no inference
+        job)."""
         if not chunks:
             return
         for chunk_dir, _ in chunks:
@@ -183,13 +196,12 @@ class Promoter:
                 path = os.path.join(chunk_dir, t)
                 if os.path.exists(path):
                     self.staging[t].append(
-                        self.spark.read.parquet(path),
-                        partition_by=(CHUNK_COLUMN,),
+                        read_dir(self.spark, path), partition_by=(CHUNK_COLUMN,)
                     )
             upd = os.path.join(chunk_dir, "updates")
             if os.path.exists(upd):
                 self.staging_updates.append(
-                    self.spark.read.parquet(upd), partition_by=(CHUNK_COLUMN,)
+                    read_dir(self.spark, upd), partition_by=(CHUNK_COLUMN,)
                 )
         self.ledger.update_chunks(
             [cid for _, cid in chunks], status=ChunkStatus.STAGED
@@ -246,14 +258,18 @@ class Promoter:
                 # _cleanup to roll back).
                 with timer("validate_constraints", chunks=chunk_ids):
                     self._validate_constraints(chunk_ids)
+            # (steps 1 and 4 keep their historical stage names, which
+            # perfbench's per-layer metrics read)
             with timer("copy_staging_to_promotion", chunks=chunk_ids):
-                self._copy_staging_to_promotion(chunk_ids)
+                self._copy_staging_to_drafts(chunk_ids)
             with timer("fill_validity_end", chunks=chunk_ids):
                 filled = self._fill_validity_end(chunk_ids)
             with timer("apply_updates", chunks=chunk_ids):
                 latest, patched = self._apply_updates(chunk_ids)
             with timer("swap_promotion_to_internal", chunks=chunk_ids):
-                self._swap_promotion_to_internal()
+                for t in DIA_TABLES:
+                    if t in self._drafts:
+                        self._drafts[t].commit()
             with timer("create_public_snapshot", chunks=chunk_ids):
                 self._update_public_snapshot(
                     chunk_ids,
@@ -331,12 +347,12 @@ class Promoter:
             if e is not None:
                 raise e
 
-    def _copy_staging_to_promotion(self, chunk_ids: list[int]) -> None:
-        """Step 1: promo := zero-copy clone(internal) + append of the
-        staged rows only, with geo_point and bucket computed.
+    def _copy_staging_to_drafts(self, chunk_ids: list[int]) -> None:
+        """Step 1: draft := hardlinked internal + append of the staged
+        rows only, with geo_point and bucket computed.
 
         Matches ``bigquery/chunk_promoter.py:199-227`` (CLONE + INSERT
-        INTO ... SELECT): the clone is hardlinks (O(files)), the insert
+        INTO ... SELECT): the draft is hardlinks (O(files)), the insert
         writes one batch — promotion IO is O(batch), never O(table).
         The three tables' copies are independent jobs, submitted
         concurrently (:meth:`_concurrent`)."""
@@ -346,32 +362,24 @@ class Promoter:
 
     def _copy_one_table(self, t: str, chunk_ids: list[int]) -> None:
         staged = self._staged(t, chunk_ids)
-        add = (
-            self._with_bucket(with_geo_point(staged.drop(CHUNK_COLUMN)), t)
-            if staged is not None
-            else None
-        )
-        if self.internal[t].exists():
-            self.promotion[t].clone_from(self.internal[t])
-            if add is not None:
-                cur_cols = set(self.promotion[t].read(self.spark).columns)
-                if set(add.columns) == cur_cols:
-                    self.promotion[t].append(
-                        self._id_sorted(add, t), partition_by=(OBJ_BUCKET,)
-                    )
-                else:
-                    # Schema drift (new/dropped columns in a batch):
-                    # fall back to a full rewrite — rare by design.
-                    combined = self.promotion[t].read(self.spark).unionByName(
-                        add, allowMissingColumns=True
-                    )
-                    self.promotion[t].overwrite(
-                        self._id_sorted(combined, t), partition_by=(OBJ_BUCKET,)
-                    )
-        elif add is not None:
-            self.promotion[t].overwrite(
-                self._id_sorted(add, t), partition_by=(OBJ_BUCKET,)
-            )
+        if staged is None and not self.internal[t].exists():
+            return
+        d = self._drafts[t] = self.internal[t].draft()
+        if staged is None:
+            return
+        add = self._with_bucket(with_geo_point(staged.drop(CHUNK_COLUMN)), t)
+        if d.base is None or set(add.columns) == set(d.read(self.spark).columns):
+            d.append(self._id_sorted(add, t), partition_by=(OBJ_BUCKET,))
+        else:
+            # Schema drift (new/dropped columns in a batch): rewrite
+            # every bucket with the union schema — rare by design.
+            combined = d.read(self.spark).unionByName(add, allowMissingColumns=True)
+            buckets = [
+                n.split("=", 1)[1]
+                for n in os.listdir(d.path)
+                if n.startswith(f"{OBJ_BUCKET}=")
+            ]
+            d.replace_partitions(self._id_sorted(combined, t), OBJ_BUCKET, buckets)
 
     def _fill_validity_end(self, chunk_ids: list[int]) -> list[int]:
         """Step 2: close open DiaObject intervals — touched buckets only.
@@ -384,13 +392,14 @@ class Promoter:
         buckets (step 5 rewrites the public cells of the same objects).
         """
         staged = self._staged("DiaObject", chunk_ids)
-        if staged is None or not self.promotion["DiaObject"].exists():
+        if staged is None:
             return []
         ids = staged.select("diaObjectId").distinct()
         buckets = self._buckets_of(ids, "diaObjectId")
         if not buckets:
             return []
-        target = self.promotion["DiaObject"].read(self.spark)
+        draft = self._drafts["DiaObject"]
+        target = draft.read(self.spark)
         start_col, end_col = validity_columns(target.columns)
         touched = target.filter(F.col(OBJ_BUCKET).isin(buckets))
         filled = fill_validity_end(
@@ -400,7 +409,7 @@ class Promoter:
             end_col=end_col,
             observe_as="fill_validity_end_DiaObject",
         )
-        self.promotion["DiaObject"].replace_partitions(
+        draft.replace_partitions(
             self._id_sorted(filled, "DiaObject"), OBJ_BUCKET, buckets
         )
         self.last_dml.extend(flush_observations())
@@ -420,11 +429,11 @@ class Promoter:
         if raw is None:
             return None, {}
         latest = latest_updates(expand_updates(raw)).localCheckpoint()
-        # The per-table merges are independent (distinct promotion
-        # tables, patch slices of the shared checkpointed `latest`) —
-        # submit them concurrently; observations resolve after the pool
-        # joins (each entry is stage-tagged, so attribution survives
-        # the interleave).
+        # The per-table merges are independent (distinct drafts, patch
+        # slices of the shared checkpointed `latest`) — submit them
+        # concurrently; observations resolve after the pool joins (each
+        # entry is stage-tagged, so attribution survives the
+        # interleave).
         buckets: dict[str, list[int]] = {}
 
         def merge(t, key_cols):
@@ -440,28 +449,21 @@ class Promoter:
     def _merge_one_table(self, t: str, key_cols, latest: DataFrame) -> list[int]:
         """Merge ``t``'s patch; returns the rewritten buckets (none
         when the patch is empty — the bucket collect is the probe)."""
-        if not self.promotion[t].exists():
+        draft = self._drafts.get(t)
+        if draft is None:
             return []
         patch = table_patch(latest, t)
         buckets = self._buckets_of(patch, key_cols[0])
         if not buckets:
             return []
-        target = self.promotion[t].read(self.spark)
+        target = draft.read(self.spark)
         touched = target.filter(F.col(OBJ_BUCKET).isin(buckets))
         # observe_as rides the write job below: per-MERGE scanned/
         # updated row counts land in the metrics log, the analog of
         # the reference's DML stats (updates_manager.py:242-271).
         merged = merge_patch(touched, patch, key_cols, observe_as=f"merge_{t}")
-        self.promotion[t].replace_partitions(
-            self._id_sorted(merged, t), OBJ_BUCKET, buckets
-        )
+        draft.replace_partitions(self._id_sorted(merged, t), OBJ_BUCKET, buckets)
         return buckets
-
-    def _swap_promotion_to_internal(self) -> None:
-        """Step 4: atomic truncate-swap (zero-copy clone + pointer flip)."""
-        for t in DIA_TABLES:
-            if self.promotion[t].exists():
-                self.internal[t].clone_from(self.promotion[t])
 
     GEO_LEVEL = 4  # coarse cell for partitioning: at most 256 directories
 
@@ -484,8 +486,9 @@ class Promoter:
         versions can occupy are rewritten (old current rows of touched
         ids removed, new current rows inserted), every other cell is
         hardlinked.  First promotion (no public table yet) falls back
-        to the full build.  Equivalence with the full recompute is
-        pinned by test_pipeline.
+        to the full build, as does a batch that changed DiaObject's
+        columns (step 1's schema-drift rewrite).  Equivalence with the
+        full recompute is pinned by test_pipeline.
 
         ``latest`` and ``buckets`` come from steps 2-3: the checkpointed
         latest updates and the DiaObject buckets the batch touched.
@@ -501,16 +504,21 @@ class Promoter:
             self._touched_object_ids(chunk_ids, latest), buckets
         )
 
-    def _create_public_snapshot_full(self) -> None:
+    def _public_rows(self, versions: DataFrame) -> DataFrame:
+        """The public rows of internal DiaObject ``versions``: the open
+        ones, without the validity end and the bucket, with their
+        coarse geo cell."""
         from ..ops.spatial import zorder_cell
 
-        src = self.internal["DiaObject"].read(self.spark)
-        _, end_col = validity_columns(src.columns)
-        cur = (
-            src.filter(F.col(end_col).isNull())
+        _, end_col = validity_columns(versions.columns)
+        return (
+            versions.filter(F.col(end_col).isNull())
             .drop(end_col, OBJ_BUCKET)
             .withColumn("geo_cell", zorder_cell(F.col("geo_point"), self.GEO_LEVEL))
         )
+
+    def _create_public_snapshot_full(self) -> None:
+        cur = self._public_rows(self.internal["DiaObject"].read(self.spark))
         clustered = cur.repartitionByRange(F.col("geo_point")).sortWithinPartitions(
             "geo_point"
         )
@@ -545,6 +553,10 @@ class Promoter:
         from ..ops.spatial import zorder_cell
 
         internal = self.internal["DiaObject"].read(self.spark)
+        pub = self.public_diaobject.read(self.spark)
+        if set(self._public_rows(internal).columns) != set(pub.columns):
+            self._create_public_snapshot_full()
+            return
         ids = F.broadcast(touched_ids)
         versions = internal.filter(F.col(OBJ_BUCKET).isin(buckets)).join(
             ids, "diaObjectId", "left_semi"
@@ -559,13 +571,7 @@ class Promoter:
         ]
         if not cells:
             return
-        _, end_col = validity_columns(internal.columns)
-        new_rows = (
-            versions.filter(F.col(end_col).isNull())
-            .drop(end_col, OBJ_BUCKET)
-            .withColumn("geo_cell", zorder_cell(F.col("geo_point"), self.GEO_LEVEL))
-        )
-        pub = self.public_diaobject.read(self.spark)
+        new_rows = self._public_rows(versions)
         kept = pub.filter(F.col("geo_cell").isin(cells)).join(
             ids, "diaObjectId", "left_anti"
         )
@@ -600,11 +606,13 @@ class Promoter:
         self.staging_updates.delete_partitions(CHUNK_COLUMN, chunk_ids)
 
     def _cleanup(self) -> None:
-        """Finally: drop promotion workspace (chunk_promoter.py:336-348)
-        and any DML observations whose write never completed (flushing
-        those would block forever)."""
+        """Finally (``chunk_promoter.py:336-348``): abort the drafts step
+        4 did not commit (their version directories go) and drop any
+        DML observations whose write never completed (flushing those
+        would block forever)."""
         from ..metrics import drop_pending
 
-        for t in DIA_TABLES:
-            self.promotion[t].drop()
+        for d in self._drafts.values():
+            d.abort()
+        self._drafts = {}
         drop_pending()

@@ -142,15 +142,15 @@ def _spark_lane_copy(spark, src, path, cut):
     archived = [r for r in winners if r.status in TERMINAL_STATUSES]
     parts = [r for r in winners if r.status not in TERMINAL_STATUSES]
     parts += [r for r in events if r[EVENT_SEQ] > cut]
-    version = f"_v{uuid.uuid4().hex}"
-    dst = os.path.join(path, version)
-    spark.createDataFrame(parts, LEDGER_LOG_SCHEMA).write.parquet(dst)
+    draft = ParquetTable(path).draft()
+    dst = draft.path
+    spark.createDataFrame(parts, LEDGER_LOG_SCHEMA).write.mode("append").parquet(dst)
     tmp = os.path.join(path, "_archive_tmp")
     spark.createDataFrame(archived, LEDGER_LOG_SCHEMA).coalesce(1).write.parquet(tmp)
     (run,) = [n for n in os.listdir(tmp) if n.startswith("part-")]
     os.rename(os.path.join(tmp, run), os.path.join(dst, f"archive-{uuid.uuid4().hex}.parquet"))
     shutil.rmtree(tmp)
-    ParquetTable(path)._commit(version, expected=None)
+    draft.commit()
     led = type(src)(spark, path)
     assert any(n.startswith("part-") for n in os.listdir(dst))
     assert len(led._archive_files()) == 1

@@ -2392,3 +2392,43 @@ def test_embedding_outlier_ranks_deterministic(spark):
     a = sorted(map(tuple, embedding_outlier_ranks(emb, n_clusters=3).collect()))
     b = sorted(map(tuple, embedding_outlier_ranks(emb, n_clusters=3).collect()))
     assert a == b
+
+
+def test_audit_quarantine_error_stops_pool(spark, sf_dir, monkeypatch):
+    """A failure while the audit capstone builds its plans, with the
+    pool thread inside a Spark job, leaves no pool thread and no Spark
+    job running: the error path cancels the pool's tagged jobs and
+    joins its thread before the error reaches the caller."""
+    import threading
+    import time
+
+    from dax_ppdb_spark import llm_queries
+    from dax_ppdb_spark.llm import similarity
+
+    sc = spark.sparkContext
+
+    def slow_model(*args, **kwargs):
+        return sc.parallelize([0], 1).map(lambda x: time.sleep(600) or x).collect()
+
+    def failing_knn(*args, **kwargs):
+        deadline = time.monotonic() + 60
+        while not sc.statusTracker().getActiveJobsIds() and time.monotonic() < deadline:
+            time.sleep(0.05)
+        raise RuntimeError("injected audit failure")
+
+    def running():
+        threads = [t for t in threading.enumerate() if t not in before and t.is_alive()]
+        return threads, list(sc.statusTracker().getActiveJobsIds())
+
+    monkeypatch.setattr(similarity, "ensure_centroid_model", slow_model)
+    monkeypatch.setattr(similarity, "knn_label_agreement", failing_knn)
+    before = set(threading.enumerate())
+    try:
+        with pytest.raises(RuntimeError, match="injected audit failure"):
+            llm_queries.q_audit_quarantine_curate(spark, sf_dir)
+        deadline = time.monotonic() + 60
+        while running() != ([], []) and time.monotonic() < deadline:
+            time.sleep(0.2)
+        assert running() == ([], [])
+    finally:
+        sc.cancelAllJobs()

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dax_ppdb_spark.io.parquet_io import validate_manifest
+from dax_ppdb_spark.io.table import ConcurrentWriteError, ParquetTable
 from dax_ppdb_spark.pipeline.promote import Promoter
 from dax_ppdb_spark.pipeline.store import store_chunk
 from dax_ppdb_spark.schema.registry import ChunkStatus
@@ -44,6 +45,26 @@ def _updates(spark, rows):
         rows,
         "update_time_ns LONG, update_order LONG, update_type STRING, json_payload STRING",
     )
+
+
+def _orphan_versions(root):
+    """``_v*``/``_tmp*`` directories under ``root`` that no ``_CURRENT``
+    pointer names: drafts a write left uncommitted, or a promotion
+    workspace."""
+    out = []
+    for d, subdirs, _ in os.walk(root):
+        current = ParquetTable(d).current_version()
+        out += [
+            os.path.join(d, s)
+            for s in subdirs
+            if s.startswith(("_v", "_tmp")) and s != current
+        ]
+    return out
+
+
+def _assert_no_workspace(root):
+    assert not os.path.exists(os.path.join(root, "promotion"))
+    assert _orphan_versions(os.path.join(root, "internal")) == []
 
 
 @pytest.fixture()
@@ -143,8 +164,8 @@ def test_ledger_and_cleanup(spark, promoted):
         f for _r, _d, fs in os.walk(staged_dir) for f in fs if f.endswith(".parquet")
     ]
     assert leftover == []
-    # Promotion workspace cleaned.
-    assert not promoted.promotion["DiaObject"].exists()
+    # No promotion workspace and no uncommitted internal version.
+    _assert_no_workspace(promoted.root)
 
 
 def test_promote_idempotent_when_nothing_staged(spark, promoted):
@@ -152,9 +173,9 @@ def test_promote_idempotent_when_nothing_staged(spark, promoted):
 
 
 def test_promotion_failure_cleans_workspace_and_keeps_ledger(spark, tmp_path, monkeypatch):
-    """D14: a failing step must drop the promotion workspace (cleanup
-    in finally) and leave the ledger un-promoted so a retry can rerun
-    the chunk."""
+    """D14: a failing step must abort the uncommitted internal versions
+    (cleanup in finally) and leave the ledger un-promoted so a retry
+    can rerun the chunk."""
     root = str(tmp_path)
     promoter = Promoter(spark, root)
     ledger = promoter.ledger
@@ -171,14 +192,59 @@ def test_promotion_failure_cleans_workspace_and_keeps_ledger(spark, tmp_path, mo
     monkeypatch.setattr(promoter, "_apply_updates", boom)
     with pytest.raises(RuntimeError, match="swap failed"):
         promoter.promote()
-    # workspace dropped, ledger still STAGED, staged data intact
-    assert not promoter.promotion["DiaObject"].exists()
+    # drafts aborted, internal never written, ledger still STAGED,
+    # staged data intact
+    _assert_no_workspace(root)
+    assert not promoter.internal["DiaObject"].exists()
     row = ledger.read().first()
     assert row.status == ChunkStatus.STAGED.value
     assert promoter.staging["DiaObject"].read(spark).count() == 1
     # retry succeeds
     monkeypatch.undo()
     assert promoter.promote() == [1]
+
+
+def test_racing_promoters_loser_raises_and_retries(spark, tmp_path, monkeypatch):
+    """Two promoters on one root: B promotes chunk 3 while A is between
+    its steps 1 and 4 for chunk 2.  A's drafts are based on the
+    versions step 1 saw, so A loses the step-4 CAS loudly; internal
+    holds what B committed, chunk 2 stays STAGED, no draft is left
+    behind, and A's retry promotes chunk 2 on top of B's commit."""
+    root = str(tmp_path)
+    a = Promoter(spark, root)
+    b = Promoter(spark, root)
+    for cid, oid, ra in ((1, 10, 45.0), (2, 20, 46.0), (3, 30, 12.0)):
+        d = store_chunk(
+            spark, root + "/export", cid,
+            {"DiaObject": _obj(spark, [(oid, 100.0, None, ra, -30.0, 1)])},
+            ledger=a.ledger,
+        )
+        a.stage_chunk_dir(d, cid)
+        if cid == 1:
+            assert a.promote() == [1]
+
+    def ids(table):
+        return sorted(r.diaObjectId for r in table.read(spark).collect())
+
+    step_1 = a._copy_staging_to_drafts
+
+    def step_1_then_b(chunk_ids):
+        step_1(chunk_ids)
+        assert b.promote([3]) == [3]
+
+    monkeypatch.setattr(a, "_copy_staging_to_drafts", step_1_then_b)
+    with pytest.raises(ConcurrentWriteError):
+        a.promote([2])
+    assert ids(a.internal["DiaObject"]) == [10, 30]
+    statuses = {r.apdb_replica_chunk: r.status for r in a.ledger.read().collect()}
+    assert statuses == {1: "PROMOTED", 2: "STAGED", 3: "PROMOTED"}
+    assert _orphan_versions(root) == []
+
+    monkeypatch.undo()
+    assert a.promote([2]) == [2]
+    assert ids(a.internal["DiaObject"]) == [10, 20, 30]
+    assert ids(a.public_diaobject) == [10, 20, 30]
+    assert a.ledger.promotable_chunks() == []
 
 
 def test_incremental_snapshot_matches_full_recompute(spark, promoted):
@@ -590,7 +656,7 @@ def _jobs_after(spark, job_id: int) -> list[tuple[int, str, str, frozenset]]:
 # (store -> upload -> stage -> promote).  It runs exactly this many;
 # with the ledger on Spark, emptiness probes and schema-inference
 # reads it ran 122.  Any job added back to the lifecycle trips it.
-CHUNK_JOB_CEILING = 45
+CHUNK_JOB_CEILING = 41
 
 
 def test_one_chunk_job_budget(spark, promoted, monkeypatch):
@@ -689,3 +755,48 @@ def _replicate_chunk_3(spark, promoter, uploader):
     assert uploader.run_once() == [3]
     assert promoter.ledger.promotable_chunks() == [3]
     assert promoter.promote() == [3]
+
+
+def test_schema_drift_in_step_1_rewrites_with_union_schema(spark, tmp_path):
+    """A staged batch whose DiaObject columns differ from internal's
+    takes step 1's union-by-name rewrite: older rows read the new
+    column as null, and the validity chain and the public snapshot
+    come out as without the drift."""
+    root = str(tmp_path)
+    promoter = Promoter(spark, root)
+    c1 = store_chunk(
+        spark, root + "/export", 1,
+        {"DiaObject": _obj(spark, [(10, 100.0, None, 45.0, -30.0, 1),
+                                   (20, 100.0, None, 46.0, -31.0, 1)])},
+        ledger=promoter.ledger,
+    )
+    promoter.stage_chunk_dir(c1, 1)
+    assert promoter.promote() == [1]
+    drifted = spark.createDataFrame(
+        [(10, 120.0, None, 45.0, -30.0, 3, 7)],
+        "diaObjectId LONG, validityStartMjdTai DOUBLE, validityEndMjdTai DOUBLE, "
+        "ra DOUBLE, dec DOUBLE, nDiaSources INT, flags INT",
+    )
+    c2 = store_chunk(
+        spark, root + "/export", 2, {"DiaObject": drifted}, ledger=promoter.ledger
+    )
+    promoter.stage_chunk_dir(c2, 2)
+    assert promoter.promote() == [2]
+
+    objs = promoter.internal["DiaObject"].read(spark)
+    assert "flags" in objs.columns
+    rows = {
+        (r.diaObjectId, r.validityStartMjdTai): (r.validityEndMjdTai, r.flags)
+        for r in objs.collect()
+    }
+    assert rows == {
+        (10, 100.0): (120.0, None),
+        (10, 120.0): (None, 7),
+        (20, 100.0): (None, None),
+    }
+    pub = promoter.public_diaobject.read(spark)
+    assert sorted((r.diaObjectId, r.validityStartMjdTai, r.flags) for r in pub.collect()) == [
+        (10, 120.0, 7),
+        (20, 100.0, None),
+    ]
+    assert _orphan_versions(root) == []

@@ -93,27 +93,79 @@ def test_interleaved_promoters_loser_raises(spark, tmp_path):
     df_a = spark.createDataFrame([(1, "from_a")], "k INT, v STRING")
     df_b = spark.createDataFrame([(2, "from_b")], "k INT, v STRING")
 
-    # Interleave: while A is writing its new version (after snapshotting
-    # the pointer), B completes a full overwrite and wins the commit.
-    orig_write = ParquetTable._write_version
+    # Interleave: once A has opened its draft (snapshotting the
+    # pointer), B completes a full overwrite and wins the commit.
+    orig_draft = ParquetTable.draft
 
-    def write_with_intruder(self, df, partition_by=()):
-        version = orig_write(self, df, partition_by)
+    def draft_with_intruder(self, *args, **kwargs):
+        draft = orig_draft(self, *args, **kwargs)
         if self is t_a:  # the intruder (t_b) writes un-intruded
             t_b.overwrite(df_b)
-        return version
+        return draft
 
-    ParquetTable._write_version = write_with_intruder
+    ParquetTable.draft = draft_with_intruder
     try:
         with pytest.raises(ConcurrentWriteError, match="concurrent promoter"):
             t_a.overwrite(df_a)
     finally:
-        ParquetTable._write_version = orig_write
+        ParquetTable.draft = orig_draft
 
     # B's commit survives; A's orphan version directory was removed.
     assert _content(spark, t_a) == {(2, "from_b")}
     versions = [d for d in os.listdir(t_a.path) if d.startswith("_v")]
     assert versions == [t_a.current_version()]
+
+
+def test_failed_writes_leave_no_orphans(spark, tmp_path, monkeypatch):
+    """A versioned write whose job fails aborts its draft: the pointer
+    stays where it was and no ``_v*``/``_tmp*`` directory is left
+    besides the current version — for ``overwrite``,
+    ``append_commit``, ``replace_partitions`` and the ledger's
+    compaction commit."""
+    import pytest
+
+    from dax_ppdb_spark.ledger import Ledger
+
+    def assert_clean(t, version):
+        assert t.current_version() == version
+        assert [
+            n for n in os.listdir(t.path) if n.startswith(("_v", "_tmp"))
+        ] == [version]
+
+    t = _mk(spark, tmp_path, [(0, "a"), (1, "b")])
+    v = t.current_version()
+    bad = spark.createDataFrame([(1, "x")], "k INT, v STRING").withColumn(
+        "v", F.raise_error(F.lit("injected write failure")).cast("string")
+    )
+    for write in (
+        lambda: t.overwrite(bad, partition_by=("k",)),
+        lambda: t.append_commit(bad, partition_by=("k",)),
+        lambda: t.replace_partitions(bad, "k", [1]),
+    ):
+        with pytest.raises(Exception, match="injected write failure"):
+            write()
+        assert_clean(t, v)
+    assert _content(spark, t) == {(0, "a"), (1, "b")}
+
+    ledger = Ledger(spark, str(tmp_path / "ledger"), auto_compact_files=1)
+    ledger.insert_chunks([{"apdb_replica_chunk": 1}])
+    ledger.insert_chunks([{"apdb_replica_chunk": 2}])
+    v = ledger.table.current_version()
+
+    def fail(rows, dst):
+        raise RuntimeError("injected write failure")
+
+    monkeypatch.setattr(Ledger, "_write_archive_run", staticmethod(fail))
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        ledger.update_chunks([1], status="STAGED")
+    assert_clean(ledger.table, v)
+    monkeypatch.undo()
+    ledger.update_chunks([1], status="STAGED")
+    assert ledger.table.current_version() != v
+    assert {r.apdb_replica_chunk: r.status for r in ledger.read().collect()} == {
+        1: "STAGED",
+        2: "EXPORTED",
+    }
 
 
 def test_compact_rewrites_only_fragmented_partitions(spark, tmp_path):
@@ -337,10 +389,6 @@ def test_footer_schema_read_equals_inferred_read(spark, tmp_path):
         t.append(spark.createDataFrame([(2, f"c{i}", 0.0)], rows), partition_by=("k",))
     assert t.compact(spark, "k", max_files_per_partition=4) == ["2"]
     _assert_footer_read_matches_inferred(spark, t)
-
-    clone = ParquetTable(str(tmp_path / "clone"))
-    clone.clone_from(t)
-    _assert_footer_read_matches_inferred(spark, clone)
 
     # a pyarrow-written version carries no Spark schema: inference
     arrow = ParquetTable(str(tmp_path / "arrow"))
