@@ -91,14 +91,28 @@ def _write_files(df, dest: str, partition_by: tuple[str, ...], mode: str) -> Non
     pq.write_table(df, os.path.join(dest, f"part-{uuid.uuid4().hex}.parquet"))
 
 
-def read_dir(spark: SparkSession, d: str) -> DataFrame:
+def read_dir(spark: SparkSession, d: str, parts: list[str] | None = None) -> DataFrame:
     """Read a parquet directory with the data schema of its first
     file's footer (no inference job); inference when it has no data
-    files or that footer carries no Spark schema."""
-    first = _first_data_file(d)
-    schema = _footer_schema(first) if first is not None else None
-    if schema is None:
-        return spark.read.parquet(d)
+    files or that footer carries no Spark schema.
+
+    ``parts`` names partition subdirectories (``col=value``) whose
+    rows the caller will select: the schema is then the union, by
+    field name in first-seen order, of each one's first footer, so a
+    column that only a later partition carries is read (as null in the
+    others) instead of dropped."""
+    schema = None
+    for sub in [os.path.join(d, p) for p in parts] if parts else [d]:
+        first = _first_data_file(sub)
+        s = _footer_schema(first) if first is not None else None
+        if s is None:
+            return spark.read.parquet(d)
+        if schema is None:
+            schema = s
+        else:
+            for f in s.fields:
+                if f.name not in schema.fieldNames():
+                    schema = schema.add(f)
     return spark.read.schema(schema).parquet(d)
 
 

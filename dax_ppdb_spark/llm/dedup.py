@@ -1918,11 +1918,11 @@ def _dedup_index_meta(index_root: str) -> dict:
     index); driver-local read, zero Spark jobs."""
     from .similarity import (
         _BUILD_META_SIDECAR,
-        _ivf_index_table,
+        _index_table,
         _read_sidecar_local,
     )
 
-    tbl = _ivf_index_table(index_root)
+    tbl = _index_table(index_root)
     rows = _read_sidecar_local(tbl, _BUILD_META_SIDECAR).to_pylist()
     if not rows:
         raise FileNotFoundError(f"no build meta under {index_root}")
@@ -1948,14 +1948,14 @@ def build_dedup_index(
     per corpus instead of once per probe."""
     import pyarrow as pa
 
-    from .similarity import _ivf_index_table
+    from .similarity import _index_table
 
     meta = {"k": int(k), "bands": int(bands), "n": int(n)}
     meta.update(_meta or {})
     rows = banded_minhash_keys(docs, k, bands, n, text_col, id_col).select(
         "band", "key", "doc_id"
     )
-    tbl = _ivf_index_table(index_root)
+    tbl = _index_table(index_root)
     tbl.overwrite(
         rows,
         partition_by=("band",),
@@ -1998,14 +1998,14 @@ def probe_dedup_index(
     """
     from pyspark.sql import Window
 
-    from .similarity import _ivf_index_table
+    from .similarity import _index_table
 
     meta = _dedup_index_meta(index_root)
     k, bands, n = int(meta["k"]), int(meta["bands"]), int(meta["n"])
     bn = banded_minhash_keys(new_docs, k, bands, n, text_col, id_col).select(
         F.col("doc_id").alias("new_id"), "band", "key"
     )
-    idx = _ivf_index_table(index_root).read(spark)
+    idx = _index_table(index_root).read(spark)
     keys = bn.select("band", "key").distinct()
     matched = idx.join(F.broadcast(keys), ["band", "key"])
     if max_bucket is not None:
@@ -2037,14 +2037,14 @@ def append_to_dedup_index(
     The original build's corpus fingerprint stays in the meta, so a
     later :func:`ensure_dedup_index` against the grown corpus
     correctly sees it as stale."""
-    from .similarity import _ivf_index_table
+    from .similarity import _index_table
 
     meta = _dedup_index_meta(index_root)
     k, bands, n = int(meta["k"]), int(meta["bands"]), int(meta["n"])
     rows = banded_minhash_keys(new_docs, k, bands, n, text_col, id_col).select(
         "band", "key", "doc_id"
     )
-    _ivf_index_table(index_root).append_commit(rows, partition_by=("band",))
+    _index_table(index_root).append_commit(rows, partition_by=("band",))
 
 
 def ensure_dedup_index(

@@ -46,6 +46,32 @@ def _pair_cosine(qv: str, cv: str, n2q: str = "n2q", n2c: str = "n2c") -> Column
     )
 
 
+def _vectors(
+    df: DataFrame, id_col: str, vec_col: str, id_as: str, vec_as: str
+) -> DataFrame:
+    """``(id_as, vec_as)``: the id and the vector cast to
+    ``array<double>`` — the projection every top-k side, trainer and
+    index writer starts from."""
+    return df.select(
+        F.col(id_col).alias(id_as), F.col(vec_col).cast("array<double>").alias(vec_as)
+    )
+
+
+def _topk(joined: DataFrame, sim: Column, k: int) -> DataFrame:
+    """The one top-k tail: score each (query, neighbor) pair with
+    ``sim``, rank per query by (cosine desc, neighbor id asc) and keep
+    ranks ``<= k`` as ``(query_id, rank, neighbor_id, cosine)``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        joined.withColumn("cosine", sim)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "cosine")
+    )
+
+
 def topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -70,13 +96,8 @@ def topk_bruteforce(
     row twice — costlier than the per-pair folds it saves whenever the
     query set is small (measured +0.8 s on ann_topk_pq at sf0.1).
     """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv")
     if precompute_n2:
         c = c.withColumn("n2c", dot(F.col("cv"), F.col("cv")))
         q = q.withColumn("n2q", dot(F.col("qv"), F.col("qv")))
@@ -84,15 +105,7 @@ def topk_bruteforce(
     else:
         sim = F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6)
     joined = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        joined.withColumn("cosine", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _topk(joined, sim, k)
 
 
 def pq_codebooks(
@@ -117,40 +130,17 @@ def pq_codebooks(
     hash sample once per subspace — at 100 TB each pass reads the
     same sampled GBs (the :func:`kmeans_centroids` contract).
     """
-    from .text import md5_long
-
-    first = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-    if first is None:
-        raise ValueError("pq_codebooks: empty corpus")
-    d = first["d"]
-    if d % m:
-        raise ValueError(f"pq_codebooks: dim {d} not divisible by m={m}")
-    sub = d // m
     # Every subspace trains on the SAME hash-sampled id set (the md5
     # filter does not depend on the subspace), so when the sample fits
     # the driver one collect of the FULL vectors funds all m Lloyd
-    # chains: slice the matrix per subspace and run the bit-replayed
-    # local loop (``_lloyd_local`` on a column slice sees exactly the
-    # rows the old per-subspace collect saw, in the same id order).
-    # The previous shape paid m sequential (count + collect) job pairs
-    # — 2m driver-scheduled jobs re-reading the same sample.
-    c = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    if sample_mod is not None:
-        c = c.filter(md5_long(F.col("id").cast("string")) % sample_mod == 0)
-    X = _collect_id_sorted_sample(c)
+    # chains (:func:`_pq_books_local`).
+    X = _collect_id_sorted_sample(_sample(corpus, vec_col, id_col, sample_mod))
     if X is not None:
-        import numpy as np
-
-        if len(X) == 0:
-            raise ValueError("pq_codebooks: empty training sample")
-        return [
-            _lloyd_local(
-                np.ascontiguousarray(X[:, s * sub : (s + 1) * sub]), k_cb, iters
-            )
-            for s in range(m)
-        ]
+        return _pq_books_local(X, m, k_cb, iters)
+    first = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
+    if first is None:
+        raise ValueError("pq_codebooks: empty corpus")
+    sub = _pq_sub(first["d"], m)
     books = []
     for s in range(m):
         sliced = corpus.select(
@@ -166,6 +156,51 @@ def pq_codebooks(
             raise ValueError("pq_codebooks: empty training sample")
         books.append(book)
     return books
+
+
+def _pq_sub(d: int, m: int) -> int:
+    """Subspace width of ``d`` dimensions split into ``m`` codebooks."""
+    if d % m:
+        raise ValueError(f"pq_codebooks: dim {d} not divisible by m={m}")
+    return d // m
+
+
+def _pq_books_local(X: "np.ndarray", m: int, k_cb: int, iters: int) -> list:
+    """Driver-local :func:`pq_codebooks` on an id-sorted sample matrix:
+    the bit-replayed :func:`_lloyd_local` on each subspace's column
+    slice (the rows a per-subspace collect would see, in the same id
+    order)."""
+    import numpy as np
+
+    if len(X) == 0:
+        raise ValueError("pq_codebooks: empty training sample")
+    sub = _pq_sub(X.shape[1], m)
+    return [
+        _lloyd_local(np.ascontiguousarray(X[:, s * sub : (s + 1) * sub]), k_cb, iters)
+        for s in range(m)
+    ]
+
+
+def _pq_code(vec: Column, s: Column, sub: int) -> Column:
+    """Code of subspace ``s`` (a 0-based index column): the nearest
+    ``__books[s]`` centroid to ``vec``'s ``s``-th slice of ``sub``
+    dims."""
+    return _argmin_dist(
+        F.slice(vec, s * sub + 1, sub), F.element_at(F.col("__books"), s + 1)
+    )
+
+
+def _pq_concat(m: int, code) -> Column:
+    """Concatenation of ``__books[s][code(s)]`` over the ``m``
+    subspaces: the reconstruction a PQ scorer compares against, from
+    codes computed in place (:func:`pq_reconstruct`) or stored
+    (:func:`topk_ivf_pq_index`)."""
+    return F.flatten(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(m - 1)),
+            lambda s: F.element_at(F.element_at(F.col("__books"), s + 1), code(s) + 1),
+        )
+    )
 
 
 def pq_reconstruct(
@@ -184,28 +219,11 @@ def pq_reconstruct(
     size in ``m * k_cb``); arithmetic is the same sequential fold +
     first-wins struct-min, so the oracle replays it value-for-value.
     """
-    m = len(books)
     sub = len(books[0][0])
-    bdf = emb.sparkSession.createDataFrame(
-        [([[list(map(float, c)) for c in b] for b in books],)],
-        "__books: array<array<array<double>>>",
-    )
     v = F.col(vec_col).cast("array<double>")
-    rv = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda s: F.element_at(
-                F.element_at(F.col("__books"), s + 1),
-                _argmin_dist(
-                    F.slice(v, s * sub + 1, sub),
-                    F.element_at(F.col("__books"), s + 1),
-                )
-                + 1,
-            ),
-        )
-    )
+    rv = _pq_concat(len(books), lambda s: _pq_code(v, s, sub))
     return (
-        emb.crossJoin(F.broadcast(bdf))
+        emb.crossJoin(F.broadcast(_model_row(emb.sparkSession, books=books)))
         .withColumn(out_col, rv)
         .drop("__books")
     )
@@ -241,6 +259,51 @@ def topk_pq(
     return topk_bruteforce(rec, queries, k, vec_col, id_col, precompute_n2=False)
 
 
+def _train_ivfpq(
+    corpus: DataFrame,
+    n_clusters: int,
+    m: int,
+    k_cb: int,
+    iters: int,
+    pq_iters: int,
+    vec_col: str,
+    id_col: str,
+    sample_mod: int | None,
+):
+    """The one IVF-PQ trainer, for :func:`topk_ivfpq` and
+    :func:`build_ivf_pq_index`: coarse Lloyd centroids, then per-
+    subspace codebooks of the RESIDUALS against them.  Returns
+    ``(cents, books, t)``, ``t`` being the corpus assigned to its cells
+    with residuals (:func:`_coarse_residual`) for the caller to encode.
+
+    BOTH quantizer levels train on the same hash-sampled id set (the
+    md5 filter is subspace- and level-independent), so when the sample
+    fits the driver ONE collect funds the whole cascade: coarse Lloyd,
+    coarse assignment, exact-IEEE residual subtraction and the m
+    residual-subspace Lloyd chains, all bit-replayed.  Above
+    :data:`LOCAL_TRAIN_ROWS` both levels train distributed, and ``t``
+    is checkpointed: the m subspace trainings, the dim probe and the
+    caller's encode then share one assignment pass.
+    """
+    import numpy as np
+
+    c = _vectors(corpus, id_col, vec_col, "nid", "v")
+    X = _collect_id_sorted_sample(_sample(c, "v", "nid", sample_mod))
+    if X is not None:
+        if len(X) == 0:
+            raise ValueError(_EMPTY_TRAINING)
+        cents = _lloyd_local(X, n_clusters, iters)
+        C = np.array(cents, dtype=np.float64)
+        books = _pq_books_local(X - C[_assign_local(X, C)], m, k_cb, pq_iters)
+        return cents, books, _coarse_residual(c, cents)
+    cents = kmeans_centroids(c, n_clusters, iters, "v", "nid", sample_mod)
+    if not cents:
+        raise ValueError(_EMPTY_TRAINING)
+    t = _coarse_residual(c, cents).localCheckpoint(eager=False)
+    books = pq_codebooks(t, m, k_cb, pq_iters, "r", "nid", sample_mod)
+    return cents, books, t
+
+
 def topk_ivfpq(
     corpus: DataFrame,
     queries: DataFrame,
@@ -267,85 +330,15 @@ def topk_ivfpq(
     construction, all m subspace chains, and the add-back
     reconstruction value-for-value.
 
-    Scale shape: coarse training scans a hash sample; assignment,
-    residuals, PQ encode and reconstruction are ONE map-side pass with
-    both codebook levels shipped as broadcast data; scoring joins the
-    broadcast queries to their cell only (the IVF prune), never the
-    full corpus.
+    Scale shape: training scans a hash sample (:func:`_train_ivfpq`);
+    assignment, residuals, PQ encode and reconstruction are ONE
+    map-side pass with both codebook levels shipped as broadcast data;
+    scoring joins the broadcast queries to their cell only (the IVF
+    prune), never the full corpus.
     """
-    from .text import md5_long
-
-    c = corpus.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).cast("array<double>").alias("v")
+    cents, books, t = _train_ivfpq(
+        corpus, n_clusters, m, k_cb, iters, pq_iters, vec_col, id_col, sample_mod
     )
-    # BOTH quantizer levels train on the same hash-sampled id set (the
-    # md5 filter is subspace- and level-independent), so when the
-    # sample fits the driver, ONE collect funds the whole training
-    # cascade: coarse Lloyd, coarse assignment, exact-IEEE residual
-    # subtraction, and all m residual-subspace Lloyd chains — the
-    # two_level_centroids pattern extended to PQ.  The previous shape
-    # was ~12 sequential driver jobs (coarse count+collect, dim probe,
-    # m x (count + collect) over the checkpointed residual relation).
-    # Distributed fallback (big samples) keeps the old job cascade.
-    tr = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    if sample_mod is not None:
-        tr = tr.filter(md5_long(F.col("id").cast("string")) % sample_mod == 0)
-    X = _collect_id_sorted_sample(tr)
-    books = None
-    if X is not None:
-        import numpy as np
-
-        if len(X) == 0:
-            raise ValueError("topk_ivfpq: empty corpus")
-        d = X.shape[1]
-        if d % m:
-            raise ValueError(f"pq_codebooks: dim {d} not divisible by m={m}")
-        sub = d // m
-        cents = _lloyd_local(X, n_clusters, iters)
-        C = np.array(cents, dtype=np.float64)
-        R = X - C[_assign_local(X, C)]
-        books = [
-            _lloyd_local(
-                np.ascontiguousarray(R[:, s * sub : (s + 1) * sub]), k_cb, pq_iters
-            )
-            for s in range(m)
-        ]
-    else:
-        cents = kmeans_centroids(
-            corpus, n_clusters, iters, vec_col, id_col, sample_mod
-        )
-        if not cents:
-            raise ValueError("topk_ivfpq: empty corpus")
-    cdf = corpus.sparkSession.createDataFrame(
-        [([[float(x) for x in cc] for cc in cents],)],
-        "__cents: array<array<double>>",
-    )
-    t = (
-        c.crossJoin(F.broadcast(cdf))
-        .withColumn("cid", _argmin_dist(F.col("v"), F.col("__cents")))
-        .withColumn("cc", F.element_at(F.col("__cents"), F.col("cid") + 1))
-        .drop("__cents")
-        .withColumn("r", F.zip_with("v", "cc", lambda a, b: a - b))
-    )
-    if books is None:
-        # Distributed training consumes t m+2 times (m subspace
-        # trainings, the dim probe, the scoring plan) — localCheckpoint
-        # so the argmin assignment pass runs once per consumer set.
-        # On the fused local path t has exactly ONE consumer (the
-        # reconstruction below), so a checkpoint would be a pure extra
-        # materialization pass.
-        t = t.localCheckpoint(eager=False)
-        books = pq_codebooks(
-            t.select(F.col("nid"), F.col("r")),
-            m,
-            k_cb,
-            pq_iters,
-            vec_col="r",
-            id_col="nid",
-            sample_mod=sample_mod,
-        )
     rec = pq_reconstruct(t, books, vec_col="r", id_col="nid", out_col="rres")
     # cv is DERIVED (coarse + residual reconstruction): no norm
     # precompute — CollapseProject would inline the reconstruction
@@ -356,30 +349,15 @@ def topk_ivfpq(
         "cid",
         F.zip_with("cc", "rres", lambda a, b: a + b).alias("cv"),
     )
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("qv"),
-        )
-        .crossJoin(F.broadcast(cdf))
-        .withColumn("cid", _argmin_dist(F.col("qv"), F.col("__cents")))
-        .drop("__cents")
+    q = assign_cells(
+        _vectors(queries, id_col, vec_col, "query_id", "qv"), cents, vec_col="qv"
     )
     joined = corpus_side.join(
         F.broadcast(q),
         (F.col("neighbor_id") != F.col("query_id"))
         & (corpus_side["cid"] == q["cid"]),
     )
-    sim = F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        joined.withColumn("cosine", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _topk(joined, F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6), k)
 
 
 def sign_bucket(vec: Column, dims: tuple[int, ...] = (1, 17, 33, 49)) -> Column:
@@ -389,35 +367,15 @@ def sign_bucket(vec: Column, dims: tuple[int, ...] = (1, 17, 33, 49)) -> Column:
     )
 
 
-def nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
-    """0-based index of the closest centroid (first wins on ties) with
-    the centroid table inlined as an expression-tree literal.
-
-    Use :func:`assign_cells` on any corpus-derived k: PySpark
-    desugars a nested-list literal into a ``CreateArray`` tree of
-    k*dim nodes, and EVERY job that includes it pays O(nodes x
-    analyzer/optimizer rules) of plan processing — measured 1.4 s per
-    job at k=45, dim=64 on a SINGLE ROW, i.e. pure plan-time cost
-    that scales with k and dwarfs the actual execution.  This
-    expression variant remains for tiny fixed k (unit tests, probe
-    expressions) where a join is heavier than the tree.
-
-    The argmin is a ONE-PASS struct-min: zip each distance with its
-    index and take ``array_min`` of the (d, i) structs — struct
-    ordering compares d first, then i, so equal distances resolve to
-    the FIRST index, exactly ``array_position(d, array_min(d))``'s
-    tie-break — but the distance array is evaluated once instead of
-    twice (higher-order folds see no common-subexpression
-    elimination; the two-reference shape measured 1.5x slower).
-    """
-    cents = F.lit([[float(x) for x in c] for c in centroids])
-    return _argmin_dist(vec, cents)
-
-
-def _argmin_dist(vec: Column, cents: Column) -> Column:
-    """Struct-min argmin of squared distance: sequential zip_with fold
-    per centroid (deterministic summation order — the DuckDB oracles
-    replay it term for term), first index wins ties.
+def _dist_tags(vec: Column, cents: Column) -> Column:
+    """``(d, i)`` structs of the squared distance from ``vec`` to each
+    centroid ``i``: a sequential zip_with fold per centroid
+    (deterministic summation order — the DuckDB oracles replay it term
+    for term).  Struct ordering compares ``d`` first, then ``i``, so
+    equal distances resolve to the FIRST index in both a min and a
+    sort; the distance array is evaluated once (higher-order folds see
+    no common-subexpression elimination; a two-reference
+    ``array_position(d, array_min(d))`` measured 1.5x slower).
 
     The index sequence bound comes from ``size(cents)``, NOT an
     inlined ``lit(k-1)``: integer literals are pasted into the
@@ -434,36 +392,44 @@ def _argmin_dist(vec: Column, cents: Column) -> Column:
             lambda acc, v: acc + v,
         ),
     )
-    tagged = F.zip_with(
+    return F.zip_with(
         dists,
         F.sequence(F.lit(0), F.size(cents) - 1),
         lambda d, i: F.struct(d.alias("d"), i.alias("i")),
     )
-    return F.array_min(tagged)["i"].cast("int")
+
+
+def _argmin_dist(vec: Column, cents: Column) -> Column:
+    """0-based index of the nearest centroid, first index wins ties
+    (struct-min of :func:`_dist_tags`)."""
+    return F.array_min(_dist_tags(vec, cents))["i"].cast("int")
 
 
 def _argmin_multi(vec: Column, cents: Column, probes: int) -> Column:
     """Indices of the ``probes`` nearest centroids, nearest first —
-    the multi-probe generalization of :func:`_argmin_dist` (identical
-    distance fold; ``array_sort`` on (d, i) structs gives the same
-    first-index tie-break as the struct-min, and the SQL oracle
-    replays it as ``ROW_NUMBER() ... WHERE rn <= probes``)."""
-    dists = F.transform(
-        cents,
-        lambda c: F.aggregate(
-            F.zip_with(vec, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    tagged = F.zip_with(
-        dists,
-        F.sequence(F.lit(0), F.size(cents) - 1),
-        lambda d, i: F.struct(d.alias("d"), i.alias("i")),
-    )
+    ``array_sort`` of :func:`_dist_tags` (same first-index tie-break;
+    the SQL oracle replays it as ``ROW_NUMBER() ... WHERE rn <=
+    probes``)."""
     return F.transform(
-        F.slice(F.array_sort(tagged), 1, probes), lambda s: s["i"].cast("int")
+        F.slice(F.array_sort(_dist_tags(vec, cents)), 1, probes),
+        lambda s: s["i"].cast("int"),
     )
+
+
+def _model_row(spark, cents=None, books=None) -> DataFrame:
+    """One-row DataFrame carrying a quantizer as DATA — ``__cents``
+    (centroids) and/or ``__books`` (per-subspace PQ codebooks) — for a
+    broadcast cross join.  The row is k*dim doubles, bytes reused by
+    every task, where a literal would be O(k*dim) expression nodes
+    every job re-analyzes (1.4 s per job at k=45, dim=64)."""
+    fields, vals = [], []
+    if cents is not None:
+        fields.append("__cents: array<array<double>>")
+        vals.append([[float(x) for x in c] for c in cents])
+    if books is not None:
+        fields.append("__books: array<array<array<double>>>")
+        vals.append([[[float(x) for x in c] for c in b] for b in books])
+    return spark.createDataFrame([tuple(vals)], ", ".join(fields))
 
 
 def assign_cells_multi(
@@ -479,12 +445,8 @@ def assign_cells_multi(
     pair near a fine-cell boundary meets in the neighbor's cell).
     Same broadcast-data centroid shipping as the single-probe path.
     """
-    cents = [[float(x) for x in c] for c in centroids]
-    cdf = df.sparkSession.createDataFrame(
-        [(cents,)], "__cents: array<array<double>>"
-    )
     return (
-        df.crossJoin(F.broadcast(cdf))
+        df.crossJoin(F.broadcast(_model_row(df.sparkSession, centroids)))
         .withColumn(
             out_col,
             F.explode(_argmin_multi(F.col(vec_col), F.col("__cents"), probes)),
@@ -500,34 +462,36 @@ def assign_cells(
     out_col: str = "cid",
 ) -> DataFrame:
     """Attach ``out_col`` = nearest-centroid index to every row, with
-    the centroid table shipped as DATA, not expression nodes.
+    the centroid table shipped as DATA (:func:`_model_row`), so the
+    assignment expression is O(1) plan nodes regardless of k.
+    Measured: 0.6 s per Lloyd iteration at k=45 AND k=90, flat in k
+    (the literal-tree form cost 1.4 s per job at k=45).
 
-    The centroids ride in a broadcast ONE-ROW DataFrame cross-joined
-    onto the input, so the assignment expression is O(1) plan nodes
-    regardless of k: plan analysis stays constant-time where the
-    literal-tree variant cost O(k*dim) per job (1.4 s at k=45 — it
-    made the Lloyd loop ~2 s/iteration on a 1000-row sample), and the
-    broadcast is k*dim doubles — bytes, reused by every task.
-    Measured: 0.6 s/iteration at k=45 AND k=90, flat in k.
-    Arithmetic is the same sequential fold + first-wins struct-min as
-    :func:`nearest_centroid`, so assignments are bit-identical and
-    every existing oracle replay still holds.
+    The crossJoin materializes as a BroadcastNestedLoopJoin whose
+    build side is this ONE ROW of constant bytes — the benign kind
+    (an equi-key dodge does not survive Catalyst anyway: any
+    single-valued key gets constant-propagated into a build-side
+    filter and the join degenerates back to condition-free).  The
+    plan tests distinguish it from a real all-pairs loop by its
+    ``__cents`` build column.
     """
-    cents = [[float(x) for x in c] for c in centroids]
-    cdf = df.sparkSession.createDataFrame(
-        [(cents,)], "__cents: array<array<double>>"
-    )
-    # The crossJoin materializes as a BroadcastNestedLoopJoin whose
-    # build side is this ONE ROW of constant bytes — the benign kind
-    # (an equi-key dodge does not survive Catalyst anyway: any
-    # single-valued key gets constant-propagated into a build-side
-    # filter and the join degenerates back to condition-free).  The
-    # plan tests distinguish it from a real all-pairs loop by its
-    # __cents build column.
     return (
-        df.crossJoin(F.broadcast(cdf))
+        df.crossJoin(F.broadcast(_model_row(df.sparkSession, centroids)))
         .withColumn(out_col, _argmin_dist(F.col(vec_col), F.col("__cents")))
         .drop("__cents")
+    )
+
+
+def _coarse_residual(c: DataFrame, cents: list[list[float]]) -> DataFrame:
+    """``c`` = ``(nid, v)`` assigned to its coarse cell ``cid``, with
+    the cell centroid ``cc`` and the exact-IEEE residual ``r = v - cc``
+    — the input of IVF-PQ training and encoding."""
+    return (
+        c.crossJoin(F.broadcast(_model_row(c.sparkSession, cents)))
+        .withColumn("cid", _argmin_dist(F.col("v"), F.col("__cents")))
+        .withColumn("cc", F.element_at(F.col("__cents"), F.col("cid") + 1))
+        .drop("__cents")
+        .withColumn("r", F.zip_with("v", "cc", lambda a, b: a - b))
     )
 
 
@@ -549,20 +513,26 @@ def _round6_half_up(x: float) -> float:
     )
 
 
-def _assign_local(X: "np.ndarray", cents: "np.ndarray") -> "np.ndarray":
-    """Driver-local twin of :func:`_argmin_dist`: squared distances
-    accumulated SEQUENTIALLY over dimensions (``acc += (x_d - c_d)^2``
-    for d = 0..dim-1 — the same IEEE addition order as the zip_with
-    fold, so distances are bit-identical), first index wins ties
-    (``np.argmin`` returns the first occurrence, matching the
-    struct-min)."""
+def _sq_dists_local(X: "np.ndarray", cents: "np.ndarray") -> "np.ndarray":
+    """Driver-local twin of :func:`_dist_tags`' distances: squared
+    distances accumulated SEQUENTIALLY over dimensions (``acc += (x_d -
+    c_d)^2`` for d = 0..dim-1 — the same IEEE addition order as the
+    zip_with fold, so distances are bit-identical)."""
     import numpy as np
 
     acc = np.zeros((X.shape[0], cents.shape[0]))
     for d in range(X.shape[1]):
         diff = X[:, d][:, None] - cents[:, d][None, :]
         acc += diff * diff
-    return np.argmin(acc, axis=1)
+    return acc
+
+
+def _assign_local(X: "np.ndarray", cents: "np.ndarray") -> "np.ndarray":
+    """Driver-local twin of :func:`_argmin_dist` (``np.argmin``
+    returns the first occurrence, matching the struct-min)."""
+    import numpy as np
+
+    return np.argmin(_sq_dists_local(X, cents), axis=1)
 
 
 def _lloyd_local(X: "np.ndarray", n_clusters: int, iters: int) -> list[list[float]]:
@@ -626,6 +596,25 @@ def _collect_id_sorted_sample(c: DataFrame):
     return np.array([r[1] for r in rows], dtype=np.float64)
 
 
+def _sample(
+    corpus: DataFrame, vec_col: str, id_col: str, sample_mod: int | None
+) -> DataFrame:
+    """The training sample ``(id, v)``: rows with ``md5_long(id) %
+    sample_mod == 0`` (every row when ``sample_mod`` is None)."""
+    from .text import md5_long
+
+    c = _vectors(corpus, id_col, vec_col, "id", "v")
+    if sample_mod is not None:
+        c = c.filter(md5_long(F.col("id").cast("string")) % sample_mod == 0)
+    return c
+
+
+_EMPTY_TRAINING = (
+    "corpus (or its sample_mod sample) is empty — nothing to train the "
+    "quantizer on"
+)
+
+
 def kmeans_centroids(
     corpus: DataFrame,
     n_clusters: int = 8,
@@ -655,13 +644,7 @@ def kmeans_centroids(
     mean (posexplode + groupBy over n_clusters*dim cells).  Only
     ``n_clusters * dim`` floats ever reach the driver.
     """
-    from .text import md5_long
-
-    c = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    if sample_mod is not None:
-        c = c.filter(md5_long(F.col("id").cast("string")) % sample_mod == 0)
+    c = _sample(corpus, vec_col, id_col, sample_mod)
     # Driver-local fast path: ONE limit-probe job both measures the
     # gate and collects the whole sample when it fits
     # (:func:`_collect_id_sorted_sample`) — vs the previous
@@ -771,18 +754,14 @@ def _canonical_residual_local(R: "np.ndarray") -> "np.ndarray":
 def _assign_multi_local(
     X: "np.ndarray", cents: "np.ndarray", probes: int
 ) -> "np.ndarray":
-    """Vectorized twin of :func:`_argmin_multi`: the same sequential
-    per-dimension distance accumulation as :func:`_assign_local`
-    (bit-identical IEEE order), then the ``probes`` nearest per row —
+    """Vectorized twin of :func:`_argmin_multi`: the ``probes``
+    nearest per row of :func:`_sq_dists_local` —
     ``np.argsort(kind="stable")`` keeps equal distances in index order,
     exactly the (d, i) struct sort's first-index tie-break."""
     import numpy as np
 
-    acc = np.zeros((X.shape[0], cents.shape[0]))
-    for d in range(X.shape[1]):
-        diff = X[:, d][:, None] - cents[:, d][None, :]
-        acc += diff * diff
-    return np.argsort(acc, axis=1, kind="stable")[:, : min(probes, len(cents))]
+    order = np.argsort(_sq_dists_local(X, cents), axis=1, kind="stable")
+    return order[:, : min(probes, len(cents))]
 
 
 def _list_matrix(col) -> "np.ndarray":
@@ -925,13 +904,7 @@ def two_level_centroids(
     :func:`_assign_local`); above it, both run as distributed
     DataFrame loops sharing one persisted sample.
     """
-    from .text import md5_long
-
-    c = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    if sample_mod is not None:
-        c = c.filter(md5_long(F.col("id").cast("string")) % sample_mod == 0)
+    c = _sample(corpus, vec_col, id_col, sample_mod)
     # ONE limit-probe job gates AND collects (see
     # :func:`_collect_id_sorted_sample`); both trainings run local.
     X = _collect_id_sorted_sample(c)
@@ -984,60 +957,57 @@ def topk_kmeans(
     """
     cents = kmeans_centroids(corpus, n_clusters, iters, vec_col, id_col, sample_mod)
     c = assign_cells(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        ),
-        cents,
-        vec_col="cv",
+        _vectors(corpus, id_col, vec_col, "neighbor_id", "cv"), cents, vec_col="cv"
     ).withColumn("n2c", dot(F.col("cv"), F.col("cv")))
     q = assign_cells(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("qv"),
-        ),
-        cents,
-        vec_col="qv",
+        _vectors(queries, id_col, vec_col, "query_id", "qv"), cents, vec_col="qv"
     ).withColumn("n2q", dot(F.col("qv"), F.col("qv")))
     joined = c.join(F.broadcast(q), "cid").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    sim = _pair_cosine("qv", "cv")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    return _topk(joined, _pair_cosine("qv", "cv"), k)
+
+
+def _sq8_codes(vec: Column) -> tuple[Column, Column]:
+    """Symmetric per-vector int8 quantizer: ``(scale, codes)`` with
+    ``scale = max|x|/127`` and ``codes = clamp(half-up(x/scale))`` as
+    ``array<tinyint>`` (0 for a zero vector, without dividing by its
+    zero scale).  ``|x/scale| <= 127`` by construction, so the tinyint
+    cast never overflows.  The one SQ8 encoder: the per-call tier
+    dequantizes it in place (:func:`sq8_reconstructed`), the persisted
+    tier stores it (:func:`build_ivf_sq8_index`)."""
+    scale = F.array_max(F.transform(vec, lambda x: F.abs(x))) / F.lit(127.0)
+    codes = F.transform(
+        vec,
+        lambda x: F.when(scale == 0, F.lit(0).cast("tinyint")).otherwise(
+            F.greatest(
+                F.lit(-127).cast("tinyint"),
+                F.least(
+                    F.lit(127).cast("tinyint"),
+                    F.floor(x / scale + F.lit(0.5)).cast("tinyint"),
+                ),
+            )
+        ),
     )
-    return (
-        joined.withColumn("cosine", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return scale, codes
+
+
+def _sq8_decode(codes: Column, scale: Column) -> Column:
+    return F.transform(codes, lambda q: q.cast("double") * scale)
 
 
 def sq8_reconstructed(vec: Column) -> Column:
     """Symmetric per-vector int8 quantize-dequantize — the corpus-side
-    code path of an IVF-SQ8 index: ``scale = max|x|/127``, codes =
-    clamp(half-up(x/scale)), reconstructed value = ``code * scale``.
+    code path of an IVF-SQ8 index (:func:`_sq8_codes`), reconstructed
+    value = ``code * scale``.
 
     Same rule as :func:`..embeddings.quantize_int8` (which emits the
     summary scalars; this emits the reconstructed vector the probe
     scores against).  Every step is exact IEEE arithmetic on
     deterministic inputs, so the DuckDB oracle replays the codes and
     the reconstruction bit for bit."""
-    scale = F.array_max(F.transform(vec, lambda x: F.abs(x))) / F.lit(127.0)
-    codes = F.transform(
-        vec,
-        lambda x: F.when(scale == 0, F.lit(0).cast("long")).otherwise(
-            F.greatest(
-                F.lit(-127).cast("long"),
-                F.least(
-                    F.lit(127).cast("long"),
-                    F.floor(x / scale + F.lit(0.5)).cast("long"),
-                ),
-            )
-        ),
-    )
-    return F.transform(codes, lambda q: q.cast("double") * scale)
+    scale, codes = _sq8_codes(vec)
+    return _sq8_decode(codes, scale)
 
 
 def topk_ivf_sq8(
@@ -1067,38 +1037,17 @@ def topk_ivf_sq8(
     """
     cents = kmeans_centroids(corpus, n_clusters, iters, vec_col, id_col, sample_mod)
     c = assign_cells(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        ),
-        cents,
-        vec_col="cv",
-    ).select(
-        "cid", "neighbor_id", sq8_reconstructed(F.col("cv")).alias("rv")
-    )
+        _vectors(corpus, id_col, vec_col, "neighbor_id", "cv"), cents, vec_col="cv"
+    ).select("cid", "neighbor_id", sq8_reconstructed(F.col("cv")).alias("rv"))
     # rv is DERIVED: no norm precompute (see topk_bruteforce's
     # precompute_n2 note — inlining would re-quantize twice per row).
     q = assign_cells(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("qv"),
-        ),
-        cents,
-        vec_col="qv",
+        _vectors(queries, id_col, vec_col, "query_id", "qv"), cents, vec_col="qv"
     )
     joined = c.join(F.broadcast(q), "cid").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    sim = F.round(cosine_similarity(F.col("qv"), F.col("rv")), 6)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        joined.withColumn("cosine", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _topk(joined, F.round(cosine_similarity(F.col("qv"), F.col("rv")), 6), k)
 
 
 def probe_buckets(vec: Column, dims: tuple[int, ...] = (1, 17, 33, 49)) -> Column:
@@ -1134,34 +1083,9 @@ def topk_multiprobe(
     one probe: no post-dedup needed.  The probe fan-out lives on the
     broadcast (query) side; the corpus still never shuffles.
     """
-    c = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
-        .withColumn("bucket", sign_bucket(F.col("cv"), dims))
-        .withColumn("n2c", dot(F.col("cv"), F.col("cv")))
-    )
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("qv"),
-        )
-        .withColumn("n2q", dot(F.col("qv"), F.col("qv")))
-        .withColumn("bucket", F.explode(probe_buckets(F.col("qv"), dims)))
-    )
-    joined = c.join(F.broadcast(q), "bucket").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    sim = _pair_cosine("qv", "cv")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        joined.withColumn("cosine", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    return _topk_sign_buckets(
+        corpus, queries, k, vec_col, id_col, dims,
+        lambda qv: F.explode(probe_buckets(qv, dims)),
     )
 
 
@@ -1179,35 +1103,38 @@ def topk_bucketed(
     the quantizer gives (single-probe).  At scale, write the corpus
     bucketed/partitioned by this key so a probe is a partition-pruned
     read instead of a shuffle."""
+    return _topk_sign_buckets(
+        corpus, queries, k, vec_col, id_col, dims, lambda qv: sign_bucket(qv, dims)
+    )
+
+
+def _topk_sign_buckets(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    vec_col: str,
+    id_col: str,
+    dims: tuple[int, ...],
+    probe,
+) -> DataFrame:
+    """The sign-bucket tiers: each corpus row in its one
+    :func:`sign_bucket`, equi-joined to the broadcast queries in the
+    bucket(s) ``probe(qv)`` names.  The query norm is taken before a
+    multi-probe explode, once per query."""
     c = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
+        _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
         .withColumn("bucket", sign_bucket(F.col("cv"), dims))
         .withColumn("n2c", dot(F.col("cv"), F.col("cv")))
     )
     q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("qv"),
-        )
-        .withColumn("bucket", sign_bucket(F.col("qv"), dims))
+        _vectors(queries, id_col, vec_col, "query_id", "qv")
         .withColumn("n2q", dot(F.col("qv"), F.col("qv")))
+        .withColumn("bucket", probe(F.col("qv")))
     )
     joined = c.join(F.broadcast(q), "bucket").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    sim = _pair_cosine("qv", "cv")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        joined.withColumn("cosine", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _topk(joined, _pair_cosine("qv", "cv"), k)
 
 
 def knn_label_agreement(
@@ -1457,24 +1384,28 @@ def knn_label_agreement(
     return merged.select("vec_id", "label", n_nb, agree)
 
 
-# Session cache of persisted-index centroids keyed by index root.
-# Entries carry the committed version they were read under, so any
-# rebuild or append (both flip the version pointer) invalidates
-# naturally; a cache hit makes the probe path's centroid load ZERO
-# Spark jobs (build primes it, so build→query in one session never
-# re-reads what the driver just computed).
-_CENTROID_CACHE: dict[str, tuple[str, list[list[float]]]] = {}
+# Session cache of persisted-index models keyed by index root:
+# ``(version, centroids, codebooks or None)``.  Entries carry the
+# committed version they were read under, so any rebuild or append
+# (both flip the version pointer) invalidates naturally; a cache hit
+# makes the probe path's model load ZERO Spark jobs (build primes it,
+# so build→query in one session never re-reads what the driver just
+# computed).
+_MODEL_CACHE: dict[str, tuple[str, list, list | None]] = {}
 
-# Sidecar name for the centroid relation inside the index table's
-# version dir (underscore prefix = invisible to the codes scan).
+# Sidecars inside the index table's version dir (underscore prefix =
+# invisible to the main relation's scan): the coarse centroids
+# ``(cid, centroid)``, the per-subspace PQ codebooks ``(s, cid,
+# centroid)``, and what corpus/parameters a generation was built from
+# (the staleness witness for the ensure-if-stale builders).
 _CENTROIDS_SIDECAR = "_centroids"
-
-# Sidecar recording what corpus/parameters a generation was built
-# from — the staleness witness for ensure_ivf_sq8_index.
+_PQ_CODEBOOKS_SIDECAR = "_codebooks"
 _BUILD_META_SIDECAR = "_build_meta"
 
 
-def _ivf_index_table(index_root: str):
+def _index_table(index_root: str):
+    """The single-pointer table of a persisted index (ANN cells, a
+    centroid model, or the dedup band index)."""
     import os
 
     from ..io.table import ParquetTable
@@ -1495,58 +1426,163 @@ def _read_sidecar_local(tbl, name: str):
     return pq.read_table(os.path.join(d, name))
 
 
-def _load_index_centroids(
-    spark: "SparkSession", index_root: str
-) -> list[list[float]]:
-    """Centroids of the CURRENT index generation, cache-first; a cold
-    cache reads the sidecar parquet driver-locally (still zero Spark
-    jobs)."""
-    tbl = _ivf_index_table(index_root)
+def _model_table(vecs, **ints):
+    """A model sidecar: int32 key columns ``ints`` plus the
+    ``centroid`` vectors as ``list<double>``."""
+    import pyarrow as pa
+
+    cols = {k: pa.array(list(v), type=pa.int32()) for k, v in ints.items()}
+    cols["centroid"] = pa.array(
+        [[float(x) for x in c] for c in vecs], type=pa.list_(pa.float64())
+    )
+    return pa.table(cols)
+
+
+def _load_model(index_root: str):
+    """``(centroids, codebooks or None)`` of the CURRENT index
+    generation, cache-first; a cold cache reads the sidecars
+    driver-locally (still zero Spark jobs)."""
+    import os
+
+    tbl = _index_table(index_root)
     ver = tbl.current_version()
     if ver is None:
         raise FileNotFoundError(f"no committed index under {index_root}")
-    hit = _CENTROID_CACHE.get(index_root)
+    hit = _MODEL_CACHE.get(index_root)
     if hit is not None and hit[0] == ver:
-        return hit[1]
+        return hit[1], hit[2]
     t = _read_sidecar_local(tbl, _CENTROIDS_SIDECAR).to_pylist()
     cents = [list(r["centroid"]) for r in sorted(t, key=lambda r: r["cid"])]
-    _CENTROID_CACHE[index_root] = (ver, cents)
-    return cents
+    books = None
+    if os.path.exists(os.path.join(tbl.data_dir(), _PQ_CODEBOOKS_SIDECAR)):
+        t = _read_sidecar_local(tbl, _PQ_CODEBOOKS_SIDECAR).to_pylist()
+        books = [[] for _ in range(1 + max(r["s"] for r in t))]
+        for r in sorted(t, key=lambda r: (r["s"], r["cid"])):
+            books[r["s"]].append(list(r["centroid"]))
+    _MODEL_CACHE[index_root] = (ver, cents, books)
+    return cents, books
 
 
-def _guarded_query_side(
-    spark: "SparkSession", q: DataFrame, max_collect_queries: int | None
-):
+def _commit_index(
+    index_root: str,
+    rows,
+    cents: list[list[float]],
+    books: list | None = None,
+    meta: dict | None = None,
+) -> None:
+    """Commit a persisted index generation: ``rows`` partitioned by
+    ``cid`` with the model as sidecars UNDER THE SAME POINTER — no
+    reader can pair one generation's codes with another's centroids
+    (two separately-committed tables had exactly that race between
+    their commits).  The sidecars are pyarrow tables, written with
+    zero Spark jobs.  ``rows=None`` commits a model-only generation
+    whose main relation is the centroid table itself
+    (:func:`ensure_centroid_model`)."""
+    import pyarrow as pa
+
+    sidecars = {_CENTROIDS_SIDECAR: _model_table(cents, cid=range(len(cents)))}
+    if books is not None:
+        sidecars[_PQ_CODEBOOKS_SIDECAR] = _model_table(
+            [c for b in books for c in b],
+            s=[s for s, b in enumerate(books) for _ in b],
+            cid=[i for b in books for i in range(len(b))],
+        )
+    if meta is not None:
+        sidecars[_BUILD_META_SIDECAR] = pa.table({k: [v] for k, v in meta.items()})
+    tbl = _index_table(index_root)
+    if rows is None:
+        tbl.overwrite(sidecars[_CENTROIDS_SIDECAR], sidecars=sidecars)
+    else:
+        tbl.overwrite(rows, partition_by=("cid",), sidecars=sidecars)
+    _cache_model(index_root, tbl, cents, books)
+
+
+def _cache_model(index_root: str, tbl, cents, books=None) -> None:
+    """Prime :data:`_MODEL_CACHE` with the model a write just
+    committed (a build's, or the unchanged one of an append)."""
+    ver = tbl.current_version()
+    if ver is not None:
+        _MODEL_CACHE[index_root] = (
+            ver,
+            [list(c) for c in cents],
+            None if books is None else [[list(c) for c in b] for b in books],
+        )
+
+
+# Assigned query rows up to this count are collected to the driver by
+# the persisted-index probes (see :func:`_guarded_query_side`); a
+# bigger batch takes the distributed lane.
+MAX_COLLECT_QUERIES = 8192
+
+
+def _guarded_query_side(spark: "SparkSession", q: DataFrame):
     """Size-guarded query side for the persisted-index probes.
 
     Interactive top-k batches (queries ≪ corpus) take the collect fast
-    path: one ``limit(guard+1)`` job whose rows serve both the probed-
-    cell literal (parquet partition pruning needs literals) and the
-    scoring join's broadcast side — the historical plan, bit-identical
+    path: one ``limit(MAX_COLLECT_QUERIES + 1)`` job whose rows serve
+    both the probed-cell literal (parquet partition pruning needs
+    literals) and the scoring join's broadcast side — bit-identical
     results.  A batch-scoring call whose assigned query rows EXCEED
     the guard never serializes through the driver: the assignment is
-    persisted once, the prune literal comes from ``distinct cid``
-    (bounded by the CENTROID count — model-sized — regardless of query
-    rows), and the scoring join runs as a regular distributed equi-join
-    on ``cid`` (AQE picks the strategy).  Both lanes read only the
-    probed cells' partitions.
+    local-checkpointed (computed once, and never pinned in the
+    session's cache manager), the prune literal comes from ``distinct
+    cid`` (bounded by the CENTROID count — model-sized — regardless of
+    query rows), and the scoring join runs as a regular distributed
+    equi-join on ``cid`` (AQE picks the strategy).  Both lanes read
+    only the probed cells' partitions.
 
-    Returns ``(query_side_df, probed_cells, big)``.
+    Returns ``(query_side_df, probed_cells)``.
     """
-    if max_collect_queries is not None:
-        qrows = q.limit(max_collect_queries + 1).collect()
-        if len(qrows) <= max_collect_queries:
-            probed = sorted({r.cid for r in qrows})
-            # qv doubles round-trip bit-exactly through collect
-            # (Python floats ARE IEEE doubles)
-            return (
-                F.broadcast(spark.createDataFrame(qrows, schema=q.schema)),
-                probed,
-                False,
-            )
-    big = q.persist()
-    probed = sorted(r.cid for r in big.select("cid").distinct().collect())
-    return big, probed, True
+    qrows = q.limit(MAX_COLLECT_QUERIES + 1).collect()
+    if len(qrows) <= MAX_COLLECT_QUERIES:
+        # qv doubles round-trip bit-exactly through collect (Python
+        # floats ARE IEEE doubles)
+        return (
+            F.broadcast(spark.createDataFrame(qrows, schema=q.schema)),
+            sorted({r.cid for r in qrows}),
+        )
+    big = q.localCheckpoint(eager=False)
+    return big, sorted(r.cid for r in big.select("cid").distinct().collect())
+
+
+def _probe_index(
+    spark: "SparkSession",
+    index_root: str,
+    queries: DataFrame,
+    k: int,
+    vec_col: str,
+    id_col: str,
+    probes: int,
+    decode,
+) -> DataFrame:
+    """The persisted-index probe: assign each query to its nearest
+    persisted centroid(s) (``probes > 1`` explodes it over its nearest
+    cells — :func:`assign_cells_multi`), read ONLY the probed cells'
+    partitions (the cid list is a literal ``isin``, so pruning happens
+    at parquet metadata — plan-pinned), reconstruct each stored vector
+    as ``cv`` in the scan (``decode(idx, cents, books)``), and window
+    the asymmetric cosine to the top ``k``.
+
+    Driver round trips: the model load is cache-first (ZERO jobs when
+    this session built or already probed this generation —
+    :data:`_MODEL_CACHE`), then :func:`_guarded_query_side`: one small
+    assignment job + the scoring job."""
+    cents, books = _load_model(index_root)
+    qsel = _vectors(queries, id_col, vec_col, "query_id", "qv")
+    if probes > 1:
+        q = assign_cells_multi(qsel, cents, probes, vec_col="qv")
+    else:
+        q = assign_cells(qsel, cents, vec_col="qv")
+    qside, probed_cells = _guarded_query_side(spark, q)
+    idx = _index_table(index_root).read(spark).filter(F.col("cid").isin(probed_cells))
+    # cv is DERIVED (decoded in the scan): no norm precompute — see
+    # topk_bruteforce's precompute_n2 note.
+    joined = (
+        decode(idx, cents, books)
+        .join(qside, "cid")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+    )
+    return _topk(joined, F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6), k)
 
 
 def corpus_fingerprint(
@@ -1594,7 +1630,7 @@ def _ensure_index(
     n, h = corpus_fingerprint(corpus, vec_col, id_col)
     # corpus_hash stringified: the summed 64-bit hashes exceed int64
     meta = {"n_rows": n, "corpus_hash": str(h), **params}
-    tbl = _ivf_index_table(index_root)
+    tbl = _index_table(index_root)
     if tbl.current_version() is not None:
         try:
             got = _read_sidecar_local(tbl, _BUILD_META_SIDECAR).to_pylist()
@@ -1655,13 +1691,13 @@ def ensure_centroid_model(
     ``audit_quarantine_curate`` capstone) need only the CENTROIDS —
     assignment happens inline against the live corpus — so persisting
     codes would be pure write amplification.  This tier commits just
-    the model-sized centroid relation (rows AND the standard
-    ``_centroids`` sidecar, so :func:`_load_index_centroids` and
-    :data:`_CENTROID_CACHE` serve warm calls with zero Spark jobs)
-    under the usual ``_build_meta`` fingerprint; the warm path costs
-    one :func:`corpus_fingerprint` aggregate instead of the full
-    sampled-Lloyd training, and a changed corpus retrains exactly as
-    the serving contract requires.  Training is deterministic
+    the model-sized centroid table (as the main relation AND the
+    standard ``_centroids`` sidecar, both pyarrow writes with zero
+    Spark jobs, so :func:`_load_model` serves warm calls with zero
+    Spark jobs) under the usual ``_build_meta`` fingerprint; the warm
+    path costs one :func:`corpus_fingerprint` aggregate instead of the
+    full sampled-Lloyd training, and a changed corpus retrains exactly
+    as the serving contract requires.  Training is deterministic
     (:func:`kmeans_centroids`), so a cold build, a warm load, and an
     oracle replaying the training from SQL all yield bit-identical
     centroids."""
@@ -1673,45 +1709,28 @@ def ensure_centroid_model(
     }
 
     def _build(meta: dict) -> None:
-        import pyarrow as pa
-
         cents = kmeans_centroids(
             corpus, n_clusters, iters, vec_col, id_col, sample_mod
         )
         if not cents:
-            raise ValueError(
-                "ensure_centroid_model: corpus (or its sample_mod "
-                "sample) is empty — nothing to train the quantizer on"
-            )
-        rows = corpus.sparkSession.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-            "cid INT, centroid array<double>",
-        ).coalesce(1)
-        cdf = pa.table(
-            {
-                "cid": pa.array(range(len(cents)), type=pa.int32()),
-                "centroid": pa.array(
-                    [[float(x) for x in c] for c in cents],
-                    type=pa.list_(pa.float64()),
-                ),
-            }
-        )
-        tbl = _ivf_index_table(model_root)
-        tbl.overwrite(
-            rows,
-            sidecars={
-                _CENTROIDS_SIDECAR: cdf,
-                _BUILD_META_SIDECAR: pa.table(
-                    {k: [v] for k, v in meta.items()}
-                ),
-            },
-        )
-        ver = tbl.current_version()
-        if ver is not None:
-            _CENTROID_CACHE[model_root] = (ver, [list(c) for c in cents])
+            raise ValueError(f"ensure_centroid_model: {_EMPTY_TRAINING}")
+        _commit_index(model_root, None, cents, meta=meta)
 
     _ensure_index(corpus, model_root, vec_col, id_col, params, _build)
-    return _load_index_centroids(corpus.sparkSession, model_root)
+    return _load_model(model_root)[0]
+
+
+def _sq8_rows(vectors: DataFrame, cents, vec_col: str, id_col: str) -> DataFrame:
+    """``(cid, neighbor_id, scale, codes)`` rows of an IVF-SQ8 index:
+    each vector assigned to its cell and int8-encoded
+    (:func:`_sq8_codes`)."""
+    assigned = assign_cells(
+        _vectors(vectors, id_col, vec_col, "neighbor_id", "cv"), cents, vec_col="cv"
+    )
+    scale, codes = _sq8_codes(F.col("cv"))
+    return assigned.select(
+        "cid", "neighbor_id", scale.alias("scale"), codes.alias("codes")
+    )
 
 
 def build_ivf_sq8_index(
@@ -1736,12 +1755,9 @@ def build_ivf_sq8_index(
     ``index`` holding ``(cid, neighbor_id, scale, codes
     array<tinyint>)`` partitioned by ``cid``, with the centroid
     relation ``(cid, centroid array<double>)`` committed as a SIDECAR
-    inside the same version directory — a single CAS pointer governs
-    both, so no reader can ever pair one generation's codes with
-    another's centroids (two separately-committed tables had exactly
-    that race between their commits).  Rebuilds are atomic swaps;
-    retention/vacuum/time travel apply to index generations like any
-    other managed table.
+    inside the same version directory (:func:`_commit_index`).
+    Rebuilds are atomic swaps; retention/vacuum/time travel apply to
+    index generations like any other managed table.
 
     The int8 tier stores ~4x less than raw doubles; a probe reads one
     cell's partition (pruned at the parquet-metadata level — pinned by
@@ -1751,65 +1767,14 @@ def build_ivf_sq8_index(
     if not cents:
         # an empty quantizer would "build" an index every later query
         # crashes on — fail at build time with the actionable message
-        raise ValueError(
-            "build_ivf_sq8_index: corpus (or its sample_mod sample) is "
-            "empty — nothing to train the quantizer on"
-        )
-    assigned = assign_cells(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        ),
-        cents,
-        vec_col="cv",
-    )
-    scale = F.array_max(F.transform(F.col("cv"), lambda x: F.abs(x))) / F.lit(127.0)
-    codes = F.transform(
-        F.col("cv"),
-        lambda x: F.when(scale == 0, F.lit(0).cast("tinyint")).otherwise(
-            F.greatest(
-                F.lit(-127).cast("tinyint"),
-                F.least(
-                    F.lit(127).cast("tinyint"),
-                    F.floor(x / scale + F.lit(0.5)).cast("tinyint"),
-                ),
-            )
-        ),
-    )
+        raise ValueError(f"build_ivf_sq8_index: {_EMPTY_TRAINING}")
     # partitionBy(cid) from the input's own task layout: each task
     # contributes one file per cell it touches, so files-per-cell
     # scales with the corpus (a deliberate NON-repartition — one task
     # per cell would serialize a 100 TB build on its biggest cell,
     # and the probe prunes at the directory level either way)
-    rows = assigned.select(
-        "cid",
-        "neighbor_id",
-        scale.alias("scale"),
-        codes.alias("codes"),
-    )
-    import pyarrow as pa
-
-    # the centroids are driver-resident model bytes — a pyarrow
-    # sidecar writes them with zero Spark jobs
-    cdf = pa.table(
-        {
-            "cid": pa.array(range(len(cents)), type=pa.int32()),
-            "centroid": pa.array(
-                [[float(x) for x in c] for c in cents],
-                type=pa.list_(pa.float64()),
-            ),
-        }
-    )
-    sidecars = {_CENTROIDS_SIDECAR: cdf}
-    if _meta is not None:
-        sidecars[_BUILD_META_SIDECAR] = pa.table(
-            {k: [v] for k, v in _meta.items()}
-        )
-    tbl = _ivf_index_table(index_root)
-    tbl.overwrite(rows, partition_by=("cid",), sidecars=sidecars)
-    ver = tbl.current_version()
-    if ver is not None:
-        _CENTROID_CACHE[index_root] = (ver, [list(c) for c in cents])
+    rows = _sq8_rows(corpus, cents, vec_col, id_col)
+    _commit_index(index_root, rows, cents, meta=_meta)
 
 
 def topk_ivf_sq8_index(
@@ -1820,69 +1785,24 @@ def topk_ivf_sq8_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     probes: int = 1,
-    max_collect_queries: int | None = 8192,
 ) -> DataFrame:
-    """Query a :func:`build_ivf_sq8_index` index: assign each query to
-    its nearest persisted centroid(s), read ONLY the probed cells'
-    partitions (the cid list is a literal ``isin`` so partition
-    pruning happens at parquet metadata — cells no query probes are
-    never read, the plan-test-pinned point of persisting), dequantize
-    in the scan expression, and window the asymmetric cosine to the
-    top ``k``.  With ``probes=1``, bit-identical results to
+    """Query a :func:`build_ivf_sq8_index` index (:func:`_probe_index`):
+    the probed cells' int8 codes are dequantized in the scan
+    expression.  With ``probes=1``, bit-identical results to
     :func:`topk_ivf_sq8` run with the same parameters — pinned by the
-    shared oracle.  ``probes > 1`` explodes each query over its
-    nearest cells (:func:`assign_cells_multi`) — the recall lever for
-    queries near a cell boundary, at the cost of reading that many
-    partitions; results are a superset-derived refinement (never worse
-    recall, pinned by test).
-
-    Driver round-trips per probe: the centroid load is cache-first
-    (ZERO jobs when this session built or already probed this index
-    generation — :data:`_CENTROID_CACHE`), and the assigned query
-    batch is collected ONCE when it fits ``max_collect_queries`` — the
-    same rows serve both the probed-cell discovery (the cid list must
-    be a LITERAL for parquet partition pruning) and the scoring join's
-    broadcast side, so the scoring job re-executes no query lineage.
-    Total: one small assignment job + the scoring job.  Assigned query
-    rows EXCEEDING the guard never serialize through the driver: see
-    :func:`_guarded_query_side` — prune literal from model-sized
-    ``distinct cid``, distributed equi-join for scoring; per-call
-    results are identical either way (pytest-pinned).
+    shared oracle.  ``probes > 1`` reads that many partitions per
+    query for recall near a cell boundary; results are a
+    superset-derived refinement (never worse recall, pinned by test).
+    Query batches over :data:`MAX_COLLECT_QUERIES` assigned rows take
+    the distributed lane with identical results (pytest-pinned).
     """
-    cents = _load_index_centroids(spark, index_root)
-    qsel = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    if probes > 1:
-        q = assign_cells_multi(qsel, cents, probes, vec_col="qv")
-    else:
-        q = assign_cells(qsel, cents, vec_col="qv")
-    qside, probed_cells, _big = _guarded_query_side(
-        spark, q, max_collect_queries
-    )
-    idx = (
-        _ivf_index_table(index_root)
-        .read(spark)
-        .filter(F.col("cid").isin(probed_cells))
-    )
-    # rv is DERIVED (dequantized in the scan): no norm precompute —
-    # see topk_bruteforce's precompute_n2 note.
-    rv = F.transform(F.col("codes"), lambda c: c.cast("double") * F.col("scale"))
-    joined = (
-        idx.select("cid", "neighbor_id", rv.alias("rv"))
-        .join(qside, "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    sim = F.round(cosine_similarity(F.col("qv"), F.col("rv")), 6)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        joined.withColumn("cosine", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    return _probe_index(
+        spark, index_root, queries, k, vec_col, id_col, probes,
+        lambda idx, cents, books: idx.select(
+            "cid",
+            "neighbor_id",
+            _sq8_decode(F.col("codes"), F.col("scale")).alias("cv"),
+        ),
     )
 
 
@@ -1910,38 +1830,11 @@ def append_to_ivf_sq8_index(
     degrades only as the data distribution moves, which the recall@k
     evaluation query measures.
     """
-    spark = new_vectors.sparkSession
-    cents = _load_index_centroids(spark, index_root)
-    assigned = assign_cells(
-        new_vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        ),
-        cents,
-        vec_col="cv",
-    )
-    scale = F.array_max(F.transform(F.col("cv"), lambda x: F.abs(x))) / F.lit(127.0)
-    codes = F.transform(
-        F.col("cv"),
-        lambda x: F.when(scale == 0, F.lit(0).cast("tinyint")).otherwise(
-            F.greatest(
-                F.lit(-127).cast("tinyint"),
-                F.least(
-                    F.lit(127).cast("tinyint"),
-                    F.floor(x / scale + F.lit(0.5)).cast("tinyint"),
-                ),
-            )
-        ),
-    )
-    rows = assigned.select(
-        "cid", "neighbor_id", scale.alias("scale"), codes.alias("codes")
-    )
-    tbl = _ivf_index_table(index_root)
+    cents, _ = _load_model(index_root)
+    tbl = _index_table(index_root)
+    rows = _sq8_rows(new_vectors, cents, vec_col, id_col)
     tbl.append_commit(rows, partition_by=("cid",))
-    ver = tbl.current_version()
-    if ver is not None:
-        # same centroids, new generation — keep the cache warm
-        _CENTROID_CACHE[index_root] = (ver, cents)
+    _cache_model(index_root, tbl, cents)
 
 
 # ---------------------------------------------------------------------------
@@ -1952,47 +1845,23 @@ def append_to_ivf_sq8_index(
 # SQ8 index: codes + coarse centroids + per-subspace codebooks +
 # build meta all live in ONE version directory.
 
-# Sidecar holding the per-subspace PQ codebooks (s, cid, centroid).
-_PQ_CODEBOOKS_SIDECAR = "_codebooks"
 
-# Session cache of persisted PQ codebooks, versioned like
-# _CENTROID_CACHE.
-_CODEBOOK_CACHE: dict[str, tuple[str, list[list[list[float]]]]] = {}
-
-
-def _load_index_codebooks(
-    spark: "SparkSession", index_root: str
-) -> list[list[list[float]]]:
-    """PQ codebooks of the CURRENT index generation, cache-first; a
-    cold cache reads the sidecar driver-locally (zero Spark jobs)."""
-    tbl = _ivf_index_table(index_root)
-    ver = tbl.current_version()
-    if ver is None:
-        raise FileNotFoundError(f"no committed index under {index_root}")
-    hit = _CODEBOOK_CACHE.get(index_root)
-    if hit is not None and hit[0] == ver:
-        return hit[1]
-    rows = _read_sidecar_local(tbl, _PQ_CODEBOOKS_SIDECAR).to_pylist()
-    m = 1 + max(r["s"] for r in rows)
-    books: list[list[list[float]]] = [[] for _ in range(m)]
-    for r in sorted(rows, key=lambda r: (r["s"], r["cid"])):
-        books[r["s"]].append(list(r["centroid"]))
-    _CODEBOOK_CACHE[index_root] = (ver, books)
-    return books
-
-
-def _pq_encode_codes(m: int, sub: int) -> Column:
-    """PQ code array for a residual column ``r`` against broadcast
-    ``__books``: ``codes[s] = argmin_dist(r[s·sub+1 : +sub],
-    books[s])`` — the exact argmin :func:`pq_reconstruct` uses, so a
-    probe reconstructing ``books[s][codes[s]]`` is bit-identical to
-    the per-call reconstruction."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: _argmin_dist(
-            F.slice(F.col("r"), s * sub + 1, sub),
-            F.element_at(F.col("__books"), s + 1),
-        ),
+def _pq_rows(t: DataFrame, books: list[list[list[float]]]) -> DataFrame:
+    """``(cid, neighbor_id, codes)`` rows of an IVFPQ index from the
+    assigned residuals ``t`` (:func:`_coarse_residual`): ``codes[s]``
+    is :func:`_pq_code` of the residual — the argmin
+    :func:`pq_reconstruct` uses, so a probe reconstructing
+    ``books[s][codes[s]]`` is bit-identical to the per-call
+    reconstruction."""
+    sub = len(books[0][0])
+    codes = F.transform(
+        F.sequence(F.lit(0), F.lit(len(books) - 1)),
+        lambda s: _pq_code(F.col("r"), s, sub),
+    )
+    return (
+        t.crossJoin(F.broadcast(_model_row(t.sparkSession, books=books)))
+        .withColumn("codes", codes)
+        .select("cid", F.col("nid").alias("neighbor_id"), "codes")
     )
 
 
@@ -2020,92 +1889,14 @@ def build_ivf_pq_index(
     One CAS pointer governs everything: codes (main relation), coarse
     centroids, per-subspace codebooks, and build meta (sidecars inside
     the same version directory), so a probe can never mix quantizer
-    generations.  Deterministic end to end (sampled Lloyd at both
-    levels, first-wins argmin, round-6 means) — the probe path is
-    bit-identical to :func:`topk_ivfpq` with the same parameters,
-    pinned by the shared oracle.
+    generations.  Training is :func:`topk_ivfpq`'s own
+    (:func:`_train_ivfpq`), so the probe path is bit-identical to it
+    with the same parameters, pinned by the shared oracle.
     """
-    import pyarrow as pa
-
-    c = corpus.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).cast("array<double>").alias("v")
+    cents, books, t = _train_ivfpq(
+        corpus, n_clusters, m, k_cb, iters, pq_iters, vec_col, id_col, sample_mod
     )
-    cents = kmeans_centroids(corpus, n_clusters, iters, vec_col, id_col, sample_mod)
-    if not cents:
-        raise ValueError(
-            "build_ivf_pq_index: corpus (or its sample_mod sample) is "
-            "empty — nothing to train the quantizer on"
-        )
-    d = len(cents[0])
-    if d % m:
-        raise ValueError(f"build_ivf_pq_index: dim {d} not divisible by m={m}")
-    sub = d // m
-    spark = corpus.sparkSession
-    cdf = spark.createDataFrame(
-        [([[float(x) for x in cc] for cc in cents],)],
-        "__cents: array<array<double>>",
-    )
-    # assigned+residual relation feeds the m subspace trainings AND the
-    # code encode — materialize once
-    t = (
-        c.crossJoin(F.broadcast(cdf))
-        .withColumn("cid", _argmin_dist(F.col("v"), F.col("__cents")))
-        .withColumn("cc", F.element_at(F.col("__cents"), F.col("cid") + 1))
-        .drop("__cents")
-        .withColumn("r", F.zip_with("v", "cc", lambda a, b: a - b))
-        .localCheckpoint(eager=False)
-    )
-    books = pq_codebooks(
-        t.select(F.col("nid"), F.col("r")),
-        m,
-        k_cb,
-        pq_iters,
-        vec_col="r",
-        id_col="nid",
-        sample_mod=sample_mod,
-    )
-    bdf = spark.createDataFrame(
-        [([[list(map(float, cc)) for cc in b] for b in books],)],
-        "__books: array<array<array<double>>>",
-    )
-    rows = (
-        t.crossJoin(F.broadcast(bdf))
-        .withColumn("codes", _pq_encode_codes(m, sub))
-        .select("cid", F.col("nid").alias("neighbor_id"), "codes")
-    )
-    cent_tbl = pa.table(
-        {
-            "cid": pa.array(range(len(cents)), type=pa.int32()),
-            "centroid": pa.array(
-                [[float(x) for x in cc] for cc in cents],
-                type=pa.list_(pa.float64()),
-            ),
-        }
-    )
-    book_tbl = pa.table(
-        {
-            "s": pa.array(
-                [s for s in range(m) for _ in books[s]], type=pa.int32()
-            ),
-            "cid": pa.array(
-                [i for s in range(m) for i in range(len(books[s]))],
-                type=pa.int32(),
-            ),
-            "centroid": pa.array(
-                [[float(x) for x in cc] for b in books for cc in b],
-                type=pa.list_(pa.float64()),
-            ),
-        }
-    )
-    sidecars = {_CENTROIDS_SIDECAR: cent_tbl, _PQ_CODEBOOKS_SIDECAR: book_tbl}
-    if _meta is not None:
-        sidecars[_BUILD_META_SIDECAR] = pa.table({k: [v] for k, v in _meta.items()})
-    tbl = _ivf_index_table(index_root)
-    tbl.overwrite(rows, partition_by=("cid",), sidecars=sidecars)
-    ver = tbl.current_version()
-    if ver is not None:
-        _CENTROID_CACHE[index_root] = (ver, [list(cc) for cc in cents])
-        _CODEBOOK_CACHE[index_root] = (ver, [[list(cc) for cc in b] for b in books])
+    _commit_index(index_root, _pq_rows(t, books), cents, books, _meta)
 
 
 def topk_ivf_pq_index(
@@ -2116,77 +1907,28 @@ def topk_ivf_pq_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     probes: int = 1,
-    max_collect_queries: int | None = 8192,
 ) -> DataFrame:
-    """Query a :func:`build_ivf_pq_index` index: assign each query to
-    its nearest persisted coarse centroid(s), read ONLY the probed
-    cells' partitions (literal ``isin`` → parquet partition pruning,
-    plan-pinned), reconstruct each stored vector IN the scan
-    expression (``cents[cid] + concat_s books[s][codes[s]]`` — both
-    model levels ride one broadcast data row), and window the
-    asymmetric cosine to the top ``k``.  With ``probes=1``,
-    bit-identical to :func:`topk_ivfpq` run with the same parameters —
-    pinned by the shared oracle.  Same driver-round-trip and
-    size-guard shape as the SQ8 probe: cache-first model load (zero
-    jobs), one assignment job whose collected rows serve both the
-    prune literal and the scoring broadcast when the batch fits
-    ``max_collect_queries``, else the :func:`_guarded_query_side`
-    distributed lane (identical results, pytest-pinned).
+    """Query a :func:`build_ivf_pq_index` index (:func:`_probe_index`):
+    each stored vector is reconstructed IN the scan expression
+    (``cents[cid] + concat_s books[s][codes[s]]`` — both model levels
+    ride one broadcast data row).  With ``probes=1``, bit-identical to
+    :func:`topk_ivfpq` run with the same parameters — pinned by the
+    shared oracle.
     """
-    cents = _load_index_centroids(spark, index_root)
-    books = _load_index_codebooks(spark, index_root)
-    m = len(books)
-    qsel = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    if probes > 1:
-        q = assign_cells_multi(qsel, cents, probes, vec_col="qv")
-    else:
-        q = assign_cells(qsel, cents, vec_col="qv")
-    qside, probed_cells, _big = _guarded_query_side(
-        spark, q, max_collect_queries
-    )
-    idx = (
-        _ivf_index_table(index_root)
-        .read(spark)
-        .filter(F.col("cid").isin(probed_cells))
-    )
-    mdf = spark.createDataFrame(
-        [(
-            [[float(x) for x in cc] for cc in cents],
-            [[list(map(float, cc)) for cc in b] for b in books],
-        )],
-        "__cents: array<array<double>>, __books: array<array<array<double>>>",
-    )
-    cc = F.element_at(F.col("__cents"), F.col("cid") + 1)
-    rres = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda s: F.element_at(
-                F.element_at(F.col("__books"), s + 1),
-                F.element_at(F.col("codes"), s + 1) + 1,
-            ),
+
+    def decode(idx, cents, books):
+        if books is None:
+            raise FileNotFoundError(f"no PQ codebooks under {index_root}")
+        mdf = _model_row(spark, cents, books)
+        cc = F.element_at(F.col("__cents"), F.col("cid") + 1)
+        rres = _pq_concat(len(books), lambda s: F.element_at(F.col("codes"), s + 1))
+        cv = F.zip_with(cc, rres, lambda a, b: a + b)
+        return idx.crossJoin(F.broadcast(mdf)).select(
+            "cid", "neighbor_id", cv.alias("cv")
         )
-    )
-    # cv is DERIVED (codebook lookups + add-back in the scan): no
-    # norm precompute — see topk_bruteforce's precompute_n2 note.
-    cv = F.zip_with(cc, rres, lambda a, b: a + b)
-    joined = (
-        idx.crossJoin(F.broadcast(mdf))
-        .select("cid", "neighbor_id", cv.alias("cv"))
-        .join(qside, "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    sim = F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        joined.withColumn("cosine", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+
+    return _probe_index(
+        spark, index_root, queries, k, vec_col, id_col, probes, decode
     )
 
 
@@ -2202,40 +1944,13 @@ def append_to_ivf_pq_index(
     a versioned commit (``append_commit`` — hardlink copy-on-write,
     never a reader-visible partial batch).  Quantizer drift is the
     documented trade, exactly as for the SQ8 tier."""
-    spark = new_vectors.sparkSession
-    cents = _load_index_centroids(spark, index_root)
-    books = _load_index_codebooks(spark, index_root)
-    m = len(books)
-    sub = len(books[0][0])
-    cdf = spark.createDataFrame(
-        [([[float(x) for x in cc] for cc in cents],)],
-        "__cents: array<array<double>>",
-    )
-    bdf = spark.createDataFrame(
-        [([[list(map(float, cc)) for cc in b] for b in books],)],
-        "__books: array<array<array<double>>>",
-    )
-    rows = (
-        new_vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .crossJoin(F.broadcast(cdf))
-        .withColumn("cid", _argmin_dist(F.col("v"), F.col("__cents")))
-        .withColumn("cc", F.element_at(F.col("__cents"), F.col("cid") + 1))
-        .drop("__cents")
-        .withColumn("r", F.zip_with("v", "cc", lambda a, b: a - b))
-        .crossJoin(F.broadcast(bdf))
-        .withColumn("codes", _pq_encode_codes(m, sub))
-        .select("cid", "neighbor_id", "codes")
-    )
-    tbl = _ivf_index_table(index_root)
-    tbl.append_commit(rows, partition_by=("cid",))
-    ver = tbl.current_version()
-    if ver is not None:
-        # same models, new generation — keep both caches warm
-        _CENTROID_CACHE[index_root] = (ver, cents)
-        _CODEBOOK_CACHE[index_root] = (ver, books)
+    cents, books = _load_model(index_root)
+    if books is None:
+        raise FileNotFoundError(f"no PQ codebooks under {index_root}")
+    t = _coarse_residual(_vectors(new_vectors, id_col, vec_col, "nid", "v"), cents)
+    tbl = _index_table(index_root)
+    tbl.append_commit(_pq_rows(t, books), partition_by=("cid",))
+    _cache_model(index_root, tbl, cents, books)
 
 
 def ensure_ivf_pq_index(

@@ -213,13 +213,19 @@ class Promoter:
     def _staged_rows(self, t: ParquetTable, chunk_ids: list[int]) -> DataFrame | None:
         """The rows staged in ``t`` for ``chunk_ids``; None, with no
         Spark job, when none of their ``apdb_replica_chunk=<id>``
-        partition directories exist."""
+        partition directories exist.  The schema merges those
+        partitions' footers, so a column only a later chunk staged is
+        promoted too."""
         d = t.data_dir()
-        if d is None or not any(
-            os.path.isdir(os.path.join(d, f"{CHUNK_COLUMN}={c}")) for c in chunk_ids
-        ):
+        parts = [
+            p
+            for p in (f"{CHUNK_COLUMN}={c}" for c in chunk_ids)
+            if d is not None and os.path.isdir(os.path.join(d, p))
+        ]
+        if not parts:
             return None
-        return t.read(self.spark).filter(F.col(CHUNK_COLUMN).isin(chunk_ids))
+        rows = read_dir(self.spark, d, parts)
+        return rows.filter(F.col(CHUNK_COLUMN).isin(chunk_ids))
 
     def _validate_constraints(self, chunk_ids: list[int]) -> None:
         """Audit each configured table's STAGED slice of this batch;

@@ -1149,6 +1149,68 @@ def test_two_level_centroids_local_matches_distributed(spark):
     assert local == dist
 
 
+def test_ivfpq_trainer_local_matches_distributed(spark, monkeypatch):
+    """The one IVF-PQ trainer (per-call and persisted tiers) must give
+    the same coarse centroids and residual codebooks from its
+    distributed lane as from its driver-local lane, and topk_ivfpq the
+    same rows."""
+    from dax_ppdb_spark.llm import similarity as sim
+
+    vecs = [
+        (i, [((i * 7 + d * 3) % 11) / 10.0 - 0.5 for d in range(8)])
+        for i in range(40)
+    ]
+    emb = spark.createDataFrame(vecs, "vec_id LONG, embedding ARRAY<FLOAT>")
+    q = emb.filter("vec_id < 4")
+    # n_clusters, m, k_cb, iters, pq_iters, vec_col, id_col, sample_mod
+    args = (4, 2, 4, 2, 2, "embedding", "vec_id", 2)
+    key = lambda r: (r.query_id, r.rank, r.neighbor_id, r.cosine)
+
+    def run():
+        cents, books, _ = sim._train_ivfpq(emb, *args)
+        rows = sim.topk_ivfpq(
+            emb, q, k=3, n_clusters=4, m=2, k_cb=4, iters=2, pq_iters=2,
+            sample_mod=2,
+        ).collect()
+        return cents, books, sorted(map(key, rows))
+
+    local = run()
+    monkeypatch.setattr(sim, "LOCAL_TRAIN_ROWS", 0)  # force distributed
+    dist = run()
+    assert len(local[0]) == 4 and len(local[1]) == 2 and local[2]
+    assert dist == local
+
+
+def test_centroid_model_cold_build_job_budget(spark, tmp_path):
+    """A cold ensure_centroid_model runs the fingerprint aggregate and
+    the training sample collect, and writes its model with no Spark
+    job (the main relation and the sidecar are pyarrow writes); a warm
+    call runs the fingerprint only."""
+    from dax_ppdb_spark.llm.similarity import ensure_centroid_model, kmeans_centroids
+
+    sc = spark.sparkContext
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + d) % 13) - 6.0 for d in range(4)]) for i in range(40)],
+        "vec_id LONG, embedding ARRAY<DOUBLE>",
+    ).coalesce(1)
+
+    def jobs(fn):
+        before = set(sc.statusTracker().getJobIdsForGroup("cm"))
+        sc.setJobGroup("cm", "centroid model")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(set(sc.statusTracker().getJobIdsForGroup("cm")) - before)
+
+    root = str(tmp_path / "model")
+    cold, cold_jobs = jobs(lambda: ensure_centroid_model(emb, root, n_clusters=3))
+    warm, warm_jobs = jobs(lambda: ensure_centroid_model(emb, root, n_clusters=3))
+    train, train_jobs = jobs(lambda: kmeans_centroids(emb, n_clusters=3))
+    assert cold == warm == train
+    assert cold_jobs == warm_jobs + train_jobs == 2
+
+
 def test_ivf_sq8_matches_exact_on_separated_clusters(spark):
     """SQ8 quantization error (<0.8% of max|x|) must not change the
     ranking for well-separated vectors, and zero vectors reconstruct
@@ -1434,18 +1496,14 @@ def test_ann_persisted_index_matches_per_call_chain(spark, tmp_path):
     assert sorted(map(key, again)) == sorted(map(key, want))
 
 
-def test_ann_index_probe_guarded_distributed_lane(spark, tmp_path):
+def test_ann_index_probe_guarded_distributed_lane(spark, tmp_path, monkeypatch):
     """Forcing the query batch over the collect guard must switch both
     persisted-index probes to the distributed lane (query assignments
-    persisted and equi-joined on cid — no driver serialization of the
-    batch) while returning IDENTICAL rows and still pruning the index
-    scan to the probed cid partitions."""
-    from dax_ppdb_spark.llm.similarity import (
-        build_ivf_pq_index,
-        build_ivf_sq8_index,
-        topk_ivf_pq_index,
-        topk_ivf_sq8_index,
-    )
+    local-checkpointed and equi-joined on cid — no driver serialization
+    of the batch) while returning IDENTICAL rows, still pruning the
+    index scan to the probed cid partitions, and leaving nothing
+    pinned in the session's cache manager."""
+    from dax_ppdb_spark.llm import similarity as sim
 
     rows = [
         (i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(8)])
@@ -1456,30 +1514,37 @@ def test_ann_index_probe_guarded_distributed_lane(spark, tmp_path):
     key = lambda r: (r.query_id, r.rank, r.neighbor_id, r.cosine)
 
     sq8_root = str(tmp_path / "sq8")
-    build_ivf_sq8_index(emb, sq8_root, n_clusters=4)
-    fast = topk_ivf_sq8_index(spark, sq8_root, q, k=3)
-    big = topk_ivf_sq8_index(
-        spark, sq8_root, q, k=3, max_collect_queries=0
-    )
-    assert sorted(map(key, big.collect())) == sorted(map(key, fast.collect()))
-    plan = big._jdf.queryExecution().executedPlan().toString()
-    # distributed lane: the assignment survives as a persisted scan,
-    # not a driver-collected LocalTableScan of query rows
-    assert "InMemoryTableScan" in plan
-    assert "PartitionFilters" in plan and "cid" in plan
-
     pq_root = str(tmp_path / "pq")
-    build_ivf_pq_index(emb, pq_root, n_clusters=4, m=4, k_cb=8)
-    fast_pq = topk_ivf_pq_index(spark, pq_root, q, k=3, probes=2)
-    big_pq = topk_ivf_pq_index(
-        spark, pq_root, q, k=3, probes=2, max_collect_queries=0
-    )
+    sim.build_ivf_sq8_index(emb, sq8_root, n_clusters=4)
+    sim.build_ivf_pq_index(emb, pq_root, n_clusters=4, m=4, k_cb=8)
+    fast = sim.topk_ivf_sq8_index(spark, sq8_root, q, k=3)
+    fast_pq = sim.topk_ivf_pq_index(spark, pq_root, q, k=3, probes=2)
+    monkeypatch.setattr(sim, "MAX_COLLECT_QUERIES", 0)
+    big = sim.topk_ivf_sq8_index(spark, sq8_root, q, k=3)
+    big_pq = sim.topk_ivf_pq_index(spark, pq_root, q, k=3, probes=2)
+
+    assert sorted(map(key, big.collect())) == sorted(map(key, fast.collect()))
     assert sorted(map(key, big_pq.collect())) == sorted(
         map(key, fast_pq.collect())
     )
-    plan_pq = big_pq._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan_pq
-    assert "PartitionFilters" in plan_pq
+
+    def checkpointed_scans(df):
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        return sum(
+            1
+            for leaf in (leaves.apply(i) for i in range(leaves.size()))
+            if leaf.nodeName() == "LogicalRDD" and leaf.rdd().isLocallyCheckpointed()
+        )
+
+    for df in (fast, fast_pq):
+        assert checkpointed_scans(df) == 0
+    for df in (big, big_pq):
+        # distributed lane: the query side is the local-checkpointed
+        # assignment, not a relation made of driver-collected rows
+        assert checkpointed_scans(df) == 1
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "PartitionFilters" in plan and "cid" in plan
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_ann_index_incremental_append(spark, tmp_path):

@@ -757,6 +757,47 @@ def _replicate_chunk_3(spark, promoter, uploader):
     assert promoter.promote() == [3]
 
 
+def test_multi_chunk_promote_keeps_a_later_chunks_new_column(spark, tmp_path):
+    """One promote of chunks 1 and 2, where only chunk 2 staged the
+    DiaObject column ``flags``: the staged read merges both chunk
+    partitions' schemas, so ``flags`` reaches internal and public, and
+    chunk 1's rows read it as null."""
+    root = str(tmp_path)
+    promoter = Promoter(spark, root)
+    c1 = store_chunk(
+        spark, root + "/export", 1,
+        {"DiaObject": _obj(spark, [(10, 100.0, None, 45.0, -30.0, 1),
+                                   (20, 100.0, None, 46.0, -31.0, 1)])},
+        ledger=promoter.ledger,
+    )
+    drifted = spark.createDataFrame(
+        [(10, 120.0, None, 45.0, -30.0, 3, 7)],
+        "diaObjectId LONG, validityStartMjdTai DOUBLE, validityEndMjdTai DOUBLE, "
+        "ra DOUBLE, dec DOUBLE, nDiaSources INT, flags INT",
+    )
+    c2 = store_chunk(
+        spark, root + "/export", 2, {"DiaObject": drifted}, ledger=promoter.ledger
+    )
+    promoter.stage_chunk_dirs([(c1, 1), (c2, 2)])
+    assert promoter.promote([1, 2]) == [1, 2]
+
+    objs = promoter.internal["DiaObject"].read(spark)
+    assert "flags" in objs.columns
+    assert {
+        (r.diaObjectId, r.validityStartMjdTai): (r.validityEndMjdTai, r.flags)
+        for r in objs.collect()
+    } == {
+        (10, 100.0): (120.0, None),
+        (10, 120.0): (None, 7),
+        (20, 100.0): (None, None),
+    }
+    pub = promoter.public_diaobject.read(spark)
+    assert sorted((r.diaObjectId, r.flags) for r in pub.collect()) == [
+        (10, 7),
+        (20, None),
+    ]
+
+
 def test_schema_drift_in_step_1_rewrites_with_union_schema(spark, tmp_path):
     """A staged batch whose DiaObject columns differ from internal's
     takes step 1's union-by-name rewrite: older rows read the new
