@@ -23,6 +23,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
 from .similarity import kmeans_centroids
 
 
@@ -119,8 +120,8 @@ def _no_pairs(emb: DataFrame, id_col: str) -> DataFrame:
     """The pair stage's empty result, typed like a real one: an empty
     centroid model (empty training sample) assigns no cells."""
     id_t = emb.schema[id_col].dataType.simpleString()
-    return emb.sparkSession.createDataFrame(
-        [], f"cid int, vec_a {id_t}, vec_b {id_t}, cosine double"
+    return local_df(
+        emb.sparkSession, [], f"cid int, vec_a {id_t}, vec_b {id_t}, cosine double"
     )
 
 
@@ -411,7 +412,8 @@ def embedding_covariance(
     )
     mean = {r["i"]: r["s"] / n for r in means}
     dim = len(mean)
-    mdf = emb.sparkSession.createDataFrame(
+    mdf = local_df(
+        emb.sparkSession,
         [([mean[i] for i in range(dim)],)], "__mean array<double>"
     )
     centered = (
@@ -491,7 +493,8 @@ def pca_whiten(
         if vecs[m, c] < 0:
             vecs[:, c] = -vecs[:, c]
     proj = vecs / np.sqrt(np.maximum(w, eps))  # (dim, k)
-    pdf = emb.sparkSession.createDataFrame(
+    pdf = local_df(
+        emb.sparkSession,
         [([list(map(float, row)) for row in proj],
           [float(x) for x in mean])],
         "__proj array<array<double>>, __mean array<double>",
@@ -575,7 +578,8 @@ def embedding_outlier_ranks(
         ),
         cents,
     )
-    cdf = emb.sparkSession.createDataFrame(
+    cdf = local_df(
+        emb.sparkSession,
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
         "cid INT, __c array<double>",
     )

@@ -27,6 +27,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_df
 from .text import md5_long
 
 # Denominator for rate arithmetic: rates are exact in 1e6ths.
@@ -408,7 +409,7 @@ def sequence_pack(
         )
     else:
         t, bases, _ = _bucket_bases(base, size_col, coarse_buckets)
-        bdf = df.sparkSession.createDataFrame(bases, "__b LONG, __base LONG")
+        bdf = local_df(df.sparkSession, bases, "__b LONG, __base LONG")
         wb = Window.partitionBy("__b").orderBy(
             F.col("__h").asc(), F.col(id_col).asc()
         )
@@ -529,8 +530,8 @@ def weighted_sample_k(
         )
         b = bases[bisect_right(starts, tgt) - 1][0]
         probes.append((j, tgt, b))
-    pdf = spark.createDataFrame(probes, "sample_id LONG, __target LONG, __b LONG")
-    bdf = spark.createDataFrame(bases, "__b LONG, __base LONG")
+    pdf = local_df(spark, probes, "sample_id LONG, __target LONG, __b LONG")
+    bdf = local_df(spark, bases, "__b LONG, __base LONG")
     wb = Window.partitionBy("__b").orderBy(F.col("__h").asc(), F.col(id_col).asc())
     c = (
         t.join(F.broadcast(pdf.select("__b").distinct()), "__b", "left_semi")

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -429,7 +431,7 @@ def _model_row(spark, cents=None, books=None) -> DataFrame:
     if books is not None:
         fields.append("__books: array<array<array<double>>>")
         vals.append([[[float(x) for x in c] for c in b] for b in books])
-    return spark.createDataFrame([tuple(vals)], ", ".join(fields))
+    return local_df(spark, [tuple(vals)], ", ".join(fields))
 
 
 def assign_cells_multi(
@@ -920,7 +922,8 @@ def two_level_centroids(
     c = c.persist()
     try:
         cents1 = kmeans_centroids(c, n_coarse, iters, vec_col="v", id_col="id")
-        c1df = c.sparkSession.createDataFrame(
+        c1df = local_df(
+            c.sparkSession,
             [(i, cent) for i, cent in enumerate(cents1)],
             "cid1 INT, __c1 array<double>",
         )
@@ -1402,6 +1405,12 @@ _CENTROIDS_SIDECAR = "_centroids"
 _PQ_CODEBOOKS_SIDECAR = "_codebooks"
 _BUILD_META_SIDECAR = "_build_meta"
 
+# The format of what the build code writes, recorded in ``_build_meta``
+# beside the corpus fingerprint.  Bump it with any change to the build
+# or encoding code, so an index an older build wrote is rebuilt even
+# when its corpus and parameters still match.
+INDEX_FORMAT = 1
+
 
 def _index_table(index_root: str):
     """The single-pointer table of a persisted index (ANN cells, a
@@ -1538,7 +1547,7 @@ def _guarded_query_side(spark: "SparkSession", q: DataFrame):
         # qv doubles round-trip bit-exactly through collect (Python
         # floats ARE IEEE doubles)
         return (
-            F.broadcast(spark.createDataFrame(qrows, schema=q.schema)),
+            F.broadcast(local_df(spark, qrows, q.schema)),
             sorted({r.cid for r in qrows}),
         )
     big = q.localCheckpoint(eager=False)
@@ -1616,8 +1625,9 @@ def _ensure_index(
     """Build-if-stale core shared by the persisted index tiers:
     rebuild (via ``build(meta)``) only when the corpus fingerprint or
     the build parameters differ from what the current generation
-    records in its ``_build_meta`` sidecar.  Returns True iff a
-    rebuild happened.
+    records in its ``_build_meta`` sidecar, or when that sidecar has
+    no or another :data:`INDEX_FORMAT`.  Returns True iff a rebuild
+    happened.
 
     This is the build-once/query-many contract made literal: a serving
     deployment calls ``ensure`` + probe, paying one fingerprint
@@ -1629,7 +1639,12 @@ def _ensure_index(
     """
     n, h = corpus_fingerprint(corpus, vec_col, id_col)
     # corpus_hash stringified: the summed 64-bit hashes exceed int64
-    meta = {"n_rows": n, "corpus_hash": str(h), **params}
+    meta = {
+        "n_rows": n,
+        "corpus_hash": str(h),
+        "index_format": INDEX_FORMAT,
+        **params,
+    }
     tbl = _index_table(index_root)
     if tbl.current_version() is not None:
         try:

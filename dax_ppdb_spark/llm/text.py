@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 TOKEN_PATTERN = r"\S+"
 
 # Small, fixed English stopword list (order matters only for docs).
@@ -395,14 +397,13 @@ def _bpe_learn_merges_local(
             return out
 
         vocab = [(w_, freq, _apply(s)) for w_, freq, s in vocab]
-    merges = spark.createDataFrame(
+    merges = local_df(
+        spark,
         results[:n_merges],
         "rank LONG, lhs STRING, rhs STRING, merged STRING, pair_count LONG",
     )
     if _with_vocab:
-        vdf = spark.createDataFrame(
-            vocab, "w STRING, freq LONG, s ARRAY<STRING>"
-        )
+        vdf = local_df(spark, vocab, "w STRING, freq LONG, s ARRAY<STRING>")
         return merges, vdf
     return merges
 
@@ -595,7 +596,8 @@ def bpe_learn_merges(
             lambda x: x.isNotNull(),
         )
         w = w.withColumn("s", merged).localCheckpoint(eager=False)
-    merges = spark.createDataFrame(
+    merges = local_df(
+        spark,
         results[:n_merges],
         "rank LONG, lhs STRING, rhs STRING, merged STRING, pair_count LONG",
     )

@@ -38,6 +38,7 @@ from .llm.text import (
     redact_pii,
     repetition_ratio,
 )
+from .session import local_df
 
 def _read_spread(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read + spread across cores.
@@ -48,6 +49,18 @@ def _read_spread(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     costs one tiny shuffle and parallelizes everything downstream; on
     a real corpus the source already has thousands of splits and this
     is a no-op knob.
+
+    Rows whose first stage is vectorized (Arrow/NumPy) or whose first
+    shuffle already spreads the work take the raw :func:`_read`
+    instead: ``semdedup`` and ``semdedup_flat`` (NumPy assignment in
+    ``mapInArrow``; the ``groupBy("cid")`` exchange spreads the pair
+    stage), ``dedup_embedding_banded`` (the banding groupBy) and
+    ``knn_label_noise`` (the cell-key groupBy).  A spread in front of a
+    Python stage fans it out to one Python-worker task per core, each
+    paying the worker's fixed per-task cost (see
+    :func:`dax_ppdb_spark.session.local_df`).  ``ann_topk_ivfpq`` keeps
+    the spread: its corpus pass is interpreted higher-order functions,
+    and the raw read raised its wall time.
     """
     return _read(spark, sf_dir, table).repartition(
         spark.sparkContext.defaultParallelism
@@ -3014,9 +3027,7 @@ def q_url_block_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read_spread(spark, sf_dir, "documents").select(
         "doc_id", "lang", url.alias("url")
     )
-    bl = spark.createDataFrame(
-        [(b,) for b in _BLOCKED_DOMAINS], "domain STRING"
-    )
+    bl = local_df(spark, [(b,) for b in _BLOCKED_DOMAINS], "domain STRING")
     return filter_blocked_domains(docs, bl).select("doc_id", "lang")
 
 
@@ -3089,7 +3100,8 @@ def q_semdedup_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     n = table_rows_meta(sf_dir, "embeddings")
-    emb = _read_spread(spark, sf_dir, "embeddings")
+    # Raw read: see _read_spread
+    emb = _read(spark, sf_dir, "embeddings")
     if n > SEMDEDUP_FLAT_MAX_ROWS:
         k1, k2 = auto_semdedup_levels(n)
         return semdedup_pairs_two_level(emb, k1, k2, threshold=0.3, sample_mod=2)
@@ -3171,8 +3183,9 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n = table_rows_meta(sf_dir, "embeddings")
     k1, k2 = auto_semdedup_levels(n)
+    # Raw read: see _read_spread
     return semdedup_pairs_two_level(
-        _read_spread(spark, sf_dir, "embeddings"),
+        _read(spark, sf_dir, "embeddings"),
         n_coarse=k1,
         n_fine=k2,
         threshold=0.3,

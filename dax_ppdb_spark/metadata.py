@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .io.table import ParquetTable
+from .session import local_df
 
 METADATA_SCHEMA = StructType(
     [
@@ -50,7 +51,7 @@ class Metadata:
         return rows[0].value if rows else default
 
     def set(self, key: str, value: str) -> None:
-        new = self.spark.createDataFrame([(key, str(value))], METADATA_SCHEMA)
+        new = local_df(self.spark, [(key, str(value))], METADATA_SCHEMA)
         if self.table.exists():
             rest = self.table.read(self.spark).filter(F.col("name") != key)
             new = rest.unionByName(new)

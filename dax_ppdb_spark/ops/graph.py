@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 __all__ = ["connected_components"]
 
 
@@ -133,13 +135,12 @@ def _driver_components(spark, pdf, node_type: str) -> DataFrame:
 
     Type-preserving like the star path: node ids may be any orderable
     type (long doc ids, string content hashes) — the output schema
-    mirrors the edge column type and values are never coerced (pandas
-    round-trips longs/strings losslessly, and Python's code-point
-    string order equals Spark's UTF-8 binary order, so the min-id
-    labels match the executor lanes exactly).
+    mirrors the edge column type and values are never coerced (the
+    collected longs/strings go into an Arrow local relation as they
+    are, and Python's code-point string order equals Spark's UTF-8
+    binary order, so the min-id labels match the executor lanes
+    exactly).
     """
-    import pandas as pd
-
     parent: dict = {}
 
     def find(x):
@@ -159,10 +160,10 @@ def _driver_components(spark, pdf, node_type: str) -> DataFrame:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    nodes = sorted(parent)
-    out = pd.DataFrame({"node": nodes, "component": [find(n) for n in nodes]})
-    return spark.createDataFrame(
-        out, schema=f"node {node_type}, component {node_type}"
+    return local_df(
+        spark,
+        [(n, find(n)) for n in sorted(parent)],
+        f"node {node_type}, component {node_type}",
     )
 
 

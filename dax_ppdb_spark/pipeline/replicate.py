@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..ledger import Ledger, can_replicate, consistency_mismatches, replication_diff
 from ..schema.registry import ChunkStatus
+from ..session import local_df
 
 
 @dataclass(frozen=True)
@@ -101,7 +102,8 @@ class Replicator:
         chunks = self.source.list_chunks()
         if not chunks:
             return []
-        src_df = self.spark.createDataFrame(
+        src_df = local_df(
+            self.spark,
             [(c.chunk_id, c.unique_id) for c in chunks],
             "apdb_replica_chunk LONG, unique_id STRING",
         )

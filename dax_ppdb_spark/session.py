@@ -12,7 +12,10 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def get_spark(
@@ -77,6 +80,34 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+
+def local_df(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """A driver-built relation (``rows``: a list of tuples or ``Row`` s)
+    as an Arrow local relation: the rows become a ``pyarrow.Table`` on
+    the driver and ``createDataFrame`` plans it as ``LocalTableScan``,
+    so reading it starts no Python task.
+
+    A Python list handed to ``createDataFrame`` plans instead as
+    ``Scan ExistingRDD`` over a pickled Python RDD, one Python-worker
+    task per slice.  Each such task costs about 0.22 s of worker CPU
+    before any user code runs, even in a reused worker (4-vCPU host,
+    PySpark 4.1, Python 3.11): ``worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()``, after which zipimport re-reads
+    the ``pyspark.zip`` directory 16 times per task.
+
+    Rows and schema are bit-identical to the list-built relation; the
+    conversion is PySpark's own ``LocalDataToArrowConversion``, which
+    takes only non-empty lists, so empty ``rows`` get the schema's
+    empty table.
+    """
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if rows:
+        table = LocalDataToArrowConversion.convert(rows, schema, use_large_var_types=False)
+    else:
+        table = to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table, schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict:

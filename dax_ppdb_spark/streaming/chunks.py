@@ -37,9 +37,17 @@ def _assert_py4j_recovery_surface() -> None:
         ) from e
     from py4j.java_gateway import CallbackServer
 
-    if not hasattr(CallbackServer, "shutdown") or (
-        "server_socket" not in inspect.getsource(CallbackServer)
-    ):
+    try:
+        source = inspect.getsource(CallbackServer)
+    except (OSError, TypeError) as e:
+        # py4j installed without its .py sources (bytecode-only or
+        # zipped): the surface cannot be checked, so say so instead of
+        # failing the import with a bare "could not get source code"
+        raise ImportError(
+            "drain-watchdog recovery surface unverifiable: the source of "
+            "py4j CallbackServer is not available"
+        ) from e
+    if not hasattr(CallbackServer, "shutdown") or "server_socket" not in source:
         raise ImportError(
             "drain-watchdog recovery surface changed: py4j CallbackServer "
             "no longer exposes server_socket/shutdown"

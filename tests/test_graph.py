@@ -221,3 +221,23 @@ def test_driver_lane_handles_coerced_src_dst_types(spark):
         for r in connected_components(df, local_threshold=1 << 40).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+def test_driver_lane_is_a_local_relation_without_arrow_conf(spark):
+    """The driver lane's component map is an Arrow local relation even
+    in a session that leaves pandas/Arrow interchange off (Spark's
+    default): a pandas or list-built relation would plan as a scan
+    over a Python RDD and run Python-worker tasks."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src long, dst long")
+        cc = connected_components(df, local_threshold=1 << 40)
+        plan = cc._jdf.queryExecution().executedPlan().toString()
+        got = {r.node: r.component for r in cc.collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}

@@ -1910,6 +1910,31 @@ def test_ensure_ivf_sq8_index_rebuilds_only_on_change(spark, tmp_path):
     assert 1000 in ids
 
 
+def test_ensure_index_rebuilds_on_format_change(spark, tmp_path, monkeypatch):
+    """An index another build format wrote is stale even when its
+    corpus and parameters match: bumping INDEX_FORMAT rebuilds once,
+    then the new generation is current again."""
+    import os
+
+    from dax_ppdb_spark.io.table import ParquetTable
+    from dax_ppdb_spark.llm import similarity
+
+    emb = spark.createDataFrame(
+        [(i, [float((i * 5 + j) % 7) - 3.0 for j in range(4)]) for i in range(30)],
+        "vec_id LONG, embedding ARRAY<DOUBLE>",
+    )
+    root = str(tmp_path / "idx")
+    t = ParquetTable(os.path.join(root, "index"))
+    assert similarity.ensure_ivf_sq8_index(emb, root, n_clusters=3) is True
+    v1 = t.current_version()
+    assert similarity.ensure_ivf_sq8_index(emb, root, n_clusters=3) is False
+
+    monkeypatch.setattr(similarity, "INDEX_FORMAT", similarity.INDEX_FORMAT + 1)
+    assert similarity.ensure_ivf_sq8_index(emb, root, n_clusters=3) is True
+    assert t.current_version() != v1
+    assert similarity.ensure_ivf_sq8_index(emb, root, n_clusters=3) is False
+
+
 def test_ann_persisted_pq_index_matches_per_call_chain(spark, tmp_path):
     """build_ivf_pq_index + topk_ivf_pq_index must reproduce
     topk_ivfpq bit for bit (same coarse quantizer, residual codebooks,

@@ -7,7 +7,9 @@ Asserts, for the registered driver queries, that:
   probe side);
 - no row-at-a-time Python UDF (``BatchEvalPython``) appears anywhere —
   only Arrow-batched evaluation is acceptable, and only in the
-  explicitly-Pandas multimodal path.
+  explicitly-Pandas multimodal path;
+- no driver-built relation scans a pickled Python RDD: those run
+  Python-worker tasks, where an Arrow local relation runs none.
 
 These are regression guards: a refactor that silently turns a
 broadcast prune into a shuffled join, or drops a pushed filter, fails
@@ -29,10 +31,52 @@ def plan_of(df) -> str:
     )
 
 
+def python_rdd_scans(df) -> list[str]:
+    """The RDD scans of ``df``'s plan (subqueries included) whose
+    lineage holds a ``PythonRDD`` — a list-built ``createDataFrame``
+    or an RDD mapped in Python.  A ``localCheckpoint`` of a JVM plan
+    also scans an RDD, but runs no Python task."""
+    plan = df._jdf.queryExecution().analyzed()
+    plans = [plan]
+    subs = plan.subqueriesAll().iterator()
+    while subs.hasNext():
+        plans.append(subs.next())
+    found = []
+    for p in plans:
+        leaves = p.collectLeaves().iterator()
+        while leaves.hasNext():
+            leaf = leaves.next()
+            if leaf.getClass().getSimpleName() != "LogicalRDD":
+                continue
+            seen, stack = set(), [leaf.rdd()]
+            while stack:
+                rdd = stack.pop()
+                if rdd.id() in seen:
+                    continue
+                seen.add(rdd.id())
+                if rdd.getClass().getSimpleName() == "PythonRDD":
+                    found.append(leaf.simpleString(10))
+                    break
+                deps = rdd.dependencies().iterator()
+                while deps.hasNext():
+                    stack.append(deps.next().rdd())
+    return found
+
+
 @pytest.fixture(scope="module")
 def registry():
     # all_queries: plan pins cover the driver-folded twins too
     return driver_queries.all_queries()
+
+
+@pytest.fixture(scope="module")
+def registry_walk(spark, sf_dir, registry):
+    """Every registry query built once: ``{name: (plan, python_rdd_scans)}``."""
+    walk = {}
+    for name, fn in registry.items():
+        df = fn(spark, sf_dir)
+        walk[name] = (plan_of(df), python_rdd_scans(df))
+    return walk
 
 
 def test_ledger_scan_pushes_range_filter(spark, sf_dir, registry):
@@ -63,9 +107,8 @@ def test_scan_schema_is_pruned(spark, sf_dir, registry):
             assert "o_custkey" in line
 
 
-def test_no_row_python_udfs_anywhere(spark, sf_dir, registry):
-    for name, fn in registry.items():
-        plan = plan_of(fn(spark, sf_dir))
+def test_no_row_python_udfs_anywhere(registry_walk):
+    for name, (plan, _) in registry_walk.items():
         assert "BatchEvalPython" not in plan, f"{name} uses a row-at-a-time Python UDF"
         if "ArrowEvalPython" in plan or "MapInPandas" in plan or "MapInArrow" in plan:
             # Arrow-batched Python is allowed in exactly three places:
@@ -84,6 +127,28 @@ def test_no_row_python_udfs_anywhere(spark, sf_dir, registry):
                 "semdedup",
                 "semdedup_flat",
             ), f"{name} uses Pandas evaluation outside the allowed paths"
+
+
+def test_no_python_rdd_scans_anywhere(registry_walk):
+    """Driver-built relations are Arrow local relations
+    (``session.local_df``): a scan over a Python RDD costs a
+    Python-worker task per slice.  ``localCheckpoint`` scans stay
+    allowed (``lm_score`` and ``column_histograms`` pin theirs)."""
+    bad = {name: scans for name, (_, scans) in registry_walk.items() if scans}
+    assert not bad, f"queries scanning a Python RDD: {bad}"
+    for name in ("ann_topk_ivfpq", "url_block_filter"):
+        assert "LocalTableScan" in registry_walk[name][0], name
+
+
+def test_semdedup_rows_take_the_raw_read(registry_walk):
+    """The SemDeDup Arrow assignment runs on the raw read: a
+    round-robin spread below it would fan it out to one Python-worker
+    task per core; the ``groupBy("cid")`` exchange spreads the pair
+    stage."""
+    for name in ("semdedup", "semdedup_flat"):
+        plan = registry_walk[name][0]
+        assert "MapInArrow" in plan, name
+        assert "RoundRobinPartitioning" not in plan, name
 
 
 def test_validity_fill_single_window_exchange(spark, sf_dir, registry):

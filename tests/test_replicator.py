@@ -238,6 +238,22 @@ def test_py4j_recovery_surface_pin(monkeypatch):
         chunks_mod._assert_py4j_recovery_surface()
 
 
+def test_py4j_recovery_surface_without_sources(monkeypatch):
+    """py4j installed without its .py sources: the surface check
+    raises an ImportError that says so, not a bare OSError from
+    ``inspect.getsource``."""
+    import inspect
+
+    from dax_ppdb_spark.streaming import chunks as chunks_mod
+
+    def _no_source(obj):
+        raise OSError("could not get source code")
+
+    monkeypatch.setattr(inspect, "getsource", _no_source)
+    with pytest.raises(ImportError, match="source of py4j CallbackServer"):
+        chunks_mod._assert_py4j_recovery_surface()
+
+
 def test_windowed_event_counts_batch_semantics(spark):
     t = datetime.datetime(2026, 1, 1, 0, 0, 0)
     rows = [
