@@ -16,7 +16,6 @@ from .dedup import (  # noqa: F401
     exact_dedup,
     incremental_neardup_pairs,
     minhash_lsh_pairs,
-    minhash_signature,
     ngram_jaccard_pairs,
     shingles,
     simhash,

@@ -75,26 +75,221 @@ def shingles(text: Column, n: int = 3) -> Column:
     return grams
 
 
-def _expand_member_pairs(ms_col: str, size_field: str) -> Column:
-    """Expand a sorted per-key member array ``[(doc_id, size), ...]``
-    into all (doc_a < doc_b) pair structs ``(doc_a, doc_b, n_a, n_b)``
-    — the inverted-index pair expansion shared by every shingle/
-    fingerprint join (in place, so the index never shuffles twice)."""
-    return F.explode(
-        F.flatten(
-            F.transform(
-                ms_col,
-                lambda x, i: F.transform(
-                    F.slice(F.col(ms_col), i + 2, F.size(F.col(ms_col))),
-                    lambda y: F.struct(
-                        x["doc_id"].alias("doc_a"),
-                        y["doc_id"].alias("doc_b"),
-                        x[size_field].alias("n_a"),
-                        y[size_field].alias("n_b"),
-                    ),
-                ),
+def _buckets(
+    rows: DataFrame, keys: list[str], member, cap: int | None
+) -> DataFrame:
+    """One row per ``keys`` bucket with its sorted distinct ``member``
+    array ``ids``, buckets of more than ``cap`` members dropped — the
+    one bucket cap of every blocking step (``None`` disables it).
+
+    A degenerate key (a boilerplate shingle, an LSH band key shared by
+    empty documents, the all-zeros sign bucket) would expand
+    O(|bucket|^2) pairs inside ONE task; a free size filter before
+    any expansion drops it outright.
+
+    The cap counts distinct members, ``size(ids)``.  Every caller's
+    member occurs once per key (a doc has one key per band, one row
+    per distinct shingle or fingerprint), so that is also the bucket's
+    row count.  Where a caller's rows and members could differ, the
+    set size is still the count it needs:
+
+    - ``source_overlap_matrix``: the members are SOURCES, and many
+      docs of one source share a shingle, so rows overcount.
+      ``max_sources`` bounds sources per shingle — the fan-out the
+      source-pair expansion pays — which is the set size.
+    - ``embedding_neardup_pairs`` under ``id_pred``: the set holds
+      every member and the sample restriction applies to the capped
+      array afterwards, so the cap is the full-corpus occupancy, the
+      same number as a row count beside a sample-only set.
+    - ``probe_dedup_index``: it groups the index rows that survived
+      the batch-key semi-join.  Every corpus row of a matched key
+      survives it, so the set is the full bucket, the same number as
+      a window count over those rows.
+    """
+    grouped = rows.groupBy(*keys).agg(
+        F.sort_array(F.collect_set(member)).alias("ids")
+    )
+    return grouped if cap is None else grouped.filter(F.size("ids") <= cap)
+
+
+def _bucket_pairs(buckets: DataFrame, *fields: tuple[str, str, str]) -> DataFrame:
+    """Every member pair of each bucket's sorted ``ids`` array (see
+    :func:`_buckets`), lower member first — the one in-bucket pair
+    expansion of every blocking join (inverted index, LSH band, sign
+    bucket, source set), in place so the index never shuffles twice.
+
+    Each ``(src, out_a, out_b)`` field emits the lower member's
+    ``src`` as ``out_a`` and the higher's as ``out_b``; ``src`` is
+    ``""`` when the members are bare ids rather than structs.  The
+    expansion is ONE SQL string: built Column by Column, each nested
+    lambda op is a driver->JVM round trip (the Catalyst tree is the
+    same either way).
+    """
+
+    def ref(v: str, src: str) -> str:
+        return f"{v}.`{src}`" if src else v
+
+    carry = ", ".join(
+        f"{ref('x', s)} AS `{a}`, {ref('y', s)} AS `{b}`" for s, a, b in fields
+    )
+    return (
+        buckets.filter(F.size("ids") > 1)
+        .select(
+            F.expr(
+                "explode(flatten(transform(ids, (x, i) -> transform("
+                f"slice(ids, i + 2, size(ids)), y -> struct({carry}))))) AS p"
             )
         )
+        .select("p.*")
+    )
+
+
+def _batch_candidates(
+    batch_keys: DataFrame, corpus_keys: DataFrame, cap: int | None
+) -> DataFrame:
+    """Distinct ``(new_id, corpus_id)`` candidates of a batch against
+    a corpus: the corpus's ``(band, key, doc_id)`` rows grouped per
+    band key under the one cap (:func:`_buckets`, corpus side only),
+    joined to the batch's ``(new_id, band, key)`` rows.
+
+    The join strategy is left to AQE: the batch is USUALLY the small
+    side, but nothing bounds it (a caller may pass a quarter-corpus
+    "batch"), and an unconditional broadcast of its band-key table is
+    the OOM hazard the embedding variant removed in favor of runtime
+    sizes.
+    """
+    grouped = _buckets(corpus_keys, ["band", "key"], "doc_id", cap)
+    return (
+        batch_keys.join(grouped, ["band", "key"])
+        .select("new_id", F.explode("ids").alias("corpus_id"))
+        .distinct()
+    )
+
+
+def _attach_text(
+    cand: DataFrame, a: str, b: str, left: DataFrame, right: DataFrame
+) -> DataFrame:
+    """The one text-attach step of the text verify tails: each
+    candidate pair ``(a, b)`` gains ``ta`` from ``left`` and ``tb``
+    from ``right`` (two-column ``(id, text)`` relations) through two
+    id-keyed joins.
+
+    Attaching RAW text and computing the measure after the join keeps
+    the verify stage's per-text work O(candidates); the O(corpus)
+    shingle pass runs once, in the discovery lineage (Spark
+    re-executes diverged lineage branches — there is no implicit
+    caching).  The candidate side is small (LSH-pruned and
+    bucket-capped) and carries the EXPLICIT broadcast hint on both
+    joins: left to its own statistics Spark picked BuildRight on the
+    second join — broadcasting the full corpus text table — because
+    the post-agg pair side has no size estimate.  With the hints the
+    corpus is scanned, never shuffled, never broadcast.
+    """
+    return F.broadcast(
+        F.broadcast(cand).join(left.toDF(a, "ta"), a)
+    ).join(right.toDF(b, "tb"), b)
+
+
+def _jaccard(sa: Column, sb: Column) -> Column:
+    """Exact Jaccard of two distinct-element arrays."""
+    inter = F.size(F.array_intersect(sa, sb))
+    return inter.cast("double") / (F.size(sa) + F.size(sb) - inter)
+
+
+def _text_jaccard(
+    cand: DataFrame,
+    a: str,
+    b: str,
+    left: DataFrame,
+    right: DataFrame,
+    n: int,
+    threshold: float,
+) -> DataFrame:
+    """Exact shingle-set Jaccard >= ``threshold`` over candidate pairs
+    whose text :func:`_attach_text` fetched — the verify tail of the
+    LSH discovery paths (self-join, batch, index probe): one code path,
+    one semantics, one oracle."""
+    pair_sh = _attach_text(cand, a, b, left, right).select(
+        a,
+        b,
+        shingles(F.col("ta"), n).alias("shs_a"),
+        shingles(F.col("tb"), n).alias("shs_b"),
+    )
+    return (
+        pair_sh.withColumn("jaccard", _jaccard(F.col("shs_a"), F.col("shs_b")))
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
+
+
+def _shingle_sets(docs: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame:
+    """``(doc_id, shs, n_sh)`` for every doc with at least one shingle —
+    the set relation the prefix-filtered joins rank, index and verify.
+
+    The relation feeds several consumers (df aggregation, rarity
+    ranking, both verification sides); a lazy localCheckpoint
+    materializes the tokenize+shingle pass once instead of replaying
+    it per lineage branch (the unigram_logprob_score pattern).
+    ORDER MATTERS: checkpoint the bare projection and filter the
+    LEAF.  With the filter below the checkpoint, the optimizer
+    substitutes the whole shingle HOF tree into the predicate and
+    the checkpoint's plan-to-RDD step walks it pathologically —
+    measured 3.9 s of driver time per call at sf0.1 vs 0.3 s in
+    this shape (identical rows; the filter applies on read).
+    """
+    return (
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            shingles(F.col(text_col), n).alias("shs"),
+        )
+        .localCheckpoint(eager=False)
+        .filter(F.size("shs") > 0)
+        .withColumn("n_sh", F.size("shs"))
+    )
+
+
+def _doc_freq(sh: DataFrame) -> DataFrame:
+    """``(shingle, df)`` over a :func:`_shingle_sets` relation."""
+    return (
+        sh.select(F.explode("shs").alias("shingle"))
+        .groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+    )
+
+
+def _length_ok(threshold: float) -> Column:
+    """The lossless length filter on a pair's set sizes ``n_a``/``n_b``:
+    Jaccard <= min/max, so a pair needs min >= ceil(t * max)."""
+    return F.least("n_a", "n_b") >= _guarded_ceil(
+        F.greatest("n_a", "n_b") * F.lit(threshold)
+    )
+
+
+def _set_jaccard(
+    cand: DataFrame,
+    a: str,
+    b: str,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """Exact Jaccard >= ``threshold`` over candidate pairs ``(a, b)``,
+    computed from the full shingle sets of two :func:`_shingle_sets`
+    relations — the verify tail of the prefix-filtered joins.
+
+    shuffle_hash: the set sides carry whole shingle ARRAYS — never
+    broadcast them (AQE would happily ship the corpus to the driver
+    when the candidate side looks bigger); candidates hash-join on
+    the doc key instead.
+    """
+    sa = sets_a.select(F.col("doc_id").alias(a), F.col("shs").alias("__sa"))
+    sb = sets_b.select(F.col("doc_id").alias(b), F.col("shs").alias("__sb"))
+    return (
+        cand.join(sa.hint("shuffle_hash"), a)
+        .join(sb.hint("shuffle_hash"), b)
+        .withColumn("jaccard", _jaccard(F.col("__sa"), F.col("__sb")))
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
     )
 
 
@@ -117,15 +312,15 @@ def _guarded_ceil(x) -> "Column":
 
 
 def _rarity_prefix(
-    inv: DataFrame,
+    sh: DataFrame,
     df_tbl: DataFrame,
     threshold: float,
     absent_df: int | None = None,
     with_pos: bool = False,
 ) -> DataFrame:
     """Keep each doc's prefix — its ``n_sh - ceil(t * n_sh) + 1``
-    rarest shingles under the global (df, shingle) order — from an
-    inverted ``(doc_id, n_sh, shingle)`` relation.  ``absent_df`` maps
+    rarest shingles under the global (df, shingle) order — from a
+    :func:`_shingle_sets` relation.  ``absent_df`` maps
     shingles missing from ``df_tbl`` (a new batch probing a standing
     corpus index) to that df; any consistent total order keeps the
     prefix bound lossless.  The guarded ``ceil`` (:func:`_guarded_ceil`)
@@ -140,6 +335,7 @@ def _rarity_prefix(
     """
     from pyspark.sql import Window
 
+    inv = sh.select("doc_id", "n_sh", F.explode("shs").alias("shingle"))
     if absent_df is None:
         ranked = inv.join(df_tbl, "shingle")
     else:
@@ -191,20 +387,9 @@ def ngram_jaccard_pairs(
     # Inverted index grouped per shingle, pairs expanded in-place — a
     # self-join would recompute the shingle explode for both sides and
     # shuffle the index twice.
-    members = (
-        inv.groupBy("shingle")
-        .agg(
-            F.sort_array(
-                F.collect_set(F.struct("doc_id", "n_sh"))
-            ).alias("ms")
-        )
-        .filter(F.size("ms") > 1)
-    )
-    if max_doc_freq is not None:
-        members = members.filter(F.size("ms") <= max_doc_freq)
+    members = _buckets(inv, ["shingle"], F.struct("doc_id", "n_sh"), max_doc_freq)
     inter = (
-        members.select(_expand_member_pairs("ms", "n_sh").alias("p"))
-        .select("p.doc_a", "p.doc_b", "p.n_a", "p.n_b")
+        _bucket_pairs(members, ("doc_id", "doc_a", "doc_b"), ("n_sh", "n_a", "n_b"))
         .groupBy("doc_a", "doc_b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
@@ -264,66 +449,17 @@ def jaccard_prefix_pairs(
     shorten it — at any set size, where a fixed absolute nudge would
     fall below one ulp.
     """
-    # The shingle relation feeds FOUR consumers (df aggregation,
-    # rarity ranking, both verification sides); a lazy localCheckpoint
-    # materializes the tokenize+shingle pass once instead of replaying
-    # it per lineage branch (the unigram_logprob_score pattern).
-    # ORDER MATTERS: checkpoint the bare projection and filter the
-    # LEAF.  With the filter below the checkpoint, the optimizer
-    # substitutes the whole shingle HOF tree into the predicate and
-    # the checkpoint's plan-to-RDD step walks it pathologically —
-    # measured 3.9 s of driver time per call at sf0.1 vs 0.3 s in
-    # this shape (identical rows; the filter applies on read).
-    sh = (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            shingles(F.col(text_col), n).alias("shs"),
-        )
-        .localCheckpoint(eager=False)
-        .filter(F.size("shs") > 0)
-        .withColumn("n_sh", F.size("shs"))
-    )
-    inv = sh.select("doc_id", "n_sh", F.explode("shs").alias("shingle"))
-    df_tbl = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    prefix = _rarity_prefix(inv, df_tbl, threshold, with_pos=True)
-    members = (
-        prefix.groupBy("shingle")
-        .agg(
-            F.sort_array(
-                F.collect_set(F.struct("doc_id", "n_sh", "__pos"))
-            ).alias("ms"),
-        )
-        .filter(F.size("ms") > 1)
-    )
+    sh = _shingle_sets(docs, n, text_col, id_col)
+    prefix = _rarity_prefix(sh, _doc_freq(sh), threshold, with_pos=True)
     # Pair expansion carries both members' prefix ranks, feeding the
     # PPJoin POSITIONAL filter (Xiao et al., WWW 2008) below.
-    expanded = F.explode(
-        F.flatten(
-            F.transform(
-                "ms",
-                lambda x, i: F.transform(
-                    F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                    lambda y: F.struct(
-                        x["doc_id"].alias("doc_a"),
-                        y["doc_id"].alias("doc_b"),
-                        x["n_sh"].alias("n_a"),
-                        y["n_sh"].alias("n_b"),
-                        x["__pos"].alias("pa"),
-                        y["__pos"].alias("pb"),
-                    ),
-                ),
-            )
-        )
-    )
-    pairs = (
-        members.select(expanded.alias("p"))
-        .select("p.*")
-        # length filter: jaccard <= min/max of the set sizes
-        .filter(
-            F.least("n_a", "n_b")
-            >= _guarded_ceil(F.greatest("n_a", "n_b") * F.lit(threshold))
-        )
-    )
+    members = _buckets(prefix, ["shingle"], F.struct("doc_id", "n_sh", "__pos"), None)
+    pairs = _bucket_pairs(
+        members,
+        ("doc_id", "doc_a", "doc_b"),
+        ("n_sh", "n_a", "n_b"),
+        ("__pos", "pa", "pb"),
+    ).filter(_length_ok(threshold))
     # One aggregation plays the old distinct's role AND accumulates the
     # pair's ENTIRE common-prefix evidence (PPJoin's positional filter
     # in its accumulated form).  Every doc lists its shingles in the
@@ -349,8 +485,7 @@ def jaccard_prefix_pairs(
     # four ints per row (the old min-struct carried df + the shingle
     # STRING through the exchange purely to locate the first entry).
     grp = (
-        pairs.select("doc_a", "doc_b", "n_a", "n_b", "pa", "pb")
-        .groupBy("doc_a", "doc_b")
+        pairs.groupBy("doc_a", "doc_b")
         .agg(
             F.count(F.lit(1)).alias("c"),
             F.max("pa").alias("pa_max"),
@@ -369,32 +504,7 @@ def jaccard_prefix_pairs(
         )
         >= alpha
     ).select("doc_a", "doc_b")
-    sa = sh.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shs").alias("__sa"),
-        F.col("n_sh").alias("n_a"),
-    )
-    sb = sh.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shs").alias("__sb"),
-        F.col("n_sh").alias("n_b"),
-    )
-    n_inter = F.size(F.array_intersect("__sa", "__sb"))
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    )
-    # shuffle_hash: the set sides carry whole shingle ARRAYS — never
-    # broadcast them (AQE would happily ship the corpus to the driver
-    # when the candidate side looks bigger); candidates hash-join on
-    # the doc key instead.
-    return (
-        cand.join(sa.hint("shuffle_hash"), "doc_a")
-        .join(sb.hint("shuffle_hash"), "doc_b")
-        .withColumn("n_inter", n_inter)
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _set_jaccard(cand, "doc_a", "doc_b", sh, sh, threshold)
 
 
 def cdc_neardup_pairs(
@@ -435,16 +545,9 @@ def cdc_neardup_pairs(
     inv = cdc_fp_inverted(docs, window, divisor, text_col, id_col).select(
         F.col(id_col).alias("doc_id"), "n_ch", "chunk_fp"
     )
-    members = (
-        inv.groupBy("chunk_fp")
-        .agg(F.sort_array(F.collect_set(F.struct("doc_id", "n_ch"))).alias("ms"))
-        .filter(F.size("ms") > 1)
-    )
-    if max_fp_df is not None:
-        members = members.filter(F.size("ms") <= max_fp_df)
+    members = _buckets(inv, ["chunk_fp"], F.struct("doc_id", "n_ch"), max_fp_df)
     pairs = (
-        members.select(_expand_member_pairs("ms", "n_ch").alias("p"))
-        .select("p.doc_a", "p.doc_b", "p.n_a", "p.n_b")
+        _bucket_pairs(members, ("doc_id", "doc_a", "doc_b"), ("n_ch", "n_a", "n_b"))
         .groupBy("doc_a", "doc_b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
@@ -484,96 +587,26 @@ def incremental_jaccard_prefix(
     Output: (new_id, corpus_id, jaccard >= threshold).
     """
 
-    def _sets(docs: DataFrame) -> DataFrame:
-        # checkpoint-then-filter: see jaccard_prefix_pairs — a filter
-        # below the checkpoint inlines the shingle HOF tree into the
-        # predicate and the plan-to-RDD step walks it pathologically
-        return (
-            docs.select(
-                F.col(id_col).alias("doc_id"),
-                shingles(F.col(text_col), n).alias("shs"),
-            )
-            .localCheckpoint(eager=False)
-            .filter(F.size("shs") > 0)
-            .withColumn("n_sh", F.size("shs"))
-        )
-
-    def _prefix(sh: DataFrame, df_tbl: DataFrame, absent_df: int | None) -> DataFrame:
-        inv = sh.select("doc_id", "n_sh", F.explode("shs").alias("shingle"))
-        return _rarity_prefix(inv, df_tbl, threshold, absent_df)
-
-    sh_new = _sets(new_docs)
-    sh_corp = _sets(corpus)
-    df_tbl = (
-        sh_corp.select(F.explode("shs").alias("shingle"))
-        .groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    pn = _prefix(sh_new, df_tbl, absent_df=0).select(
+    sh_new = _shingle_sets(new_docs, n, text_col, id_col)
+    sh_corp = _shingle_sets(corpus, n, text_col, id_col)
+    df_tbl = _doc_freq(sh_corp)
+    pn = _rarity_prefix(sh_new, df_tbl, threshold, absent_df=0).select(
         F.col("doc_id").alias("new_id"),
         F.col("n_sh").alias("n_a"),
         "shingle",
     )
-    pc = _prefix(sh_corp, df_tbl, absent_df=None).select(
+    pc = _rarity_prefix(sh_corp, df_tbl, threshold).select(
         F.col("doc_id").alias("corpus_id"),
         F.col("n_sh").alias("n_b"),
         "shingle",
     )
     cand = (
         pn.join(pc, "shingle")
-        .filter(
-            F.least("n_a", "n_b")
-            >= _guarded_ceil(F.greatest("n_a", "n_b") * F.lit(threshold))
-        )
+        .filter(_length_ok(threshold))
         .select("new_id", "corpus_id")
         .distinct()
     )
-    sa = sh_new.select(
-        F.col("doc_id").alias("new_id"),
-        F.col("shs").alias("__sa"),
-        F.col("n_sh").alias("n_a"),
-    )
-    sb = sh_corp.select(
-        F.col("doc_id").alias("corpus_id"),
-        F.col("shs").alias("__sb"),
-        F.col("n_sh").alias("n_b"),
-    )
-    n_inter = F.size(F.array_intersect("__sa", "__sb"))
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    )
-    return (
-        cand.join(sa.hint("shuffle_hash"), "new_id")
-        .join(sb.hint("shuffle_hash"), "corpus_id")
-        .withColumn("n_inter", n_inter)
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "corpus_id", "jaccard")
-    )
-
-
-def minhash_signature(sh: Column, k: int = 8) -> Column:
-    """k-element MinHash signature over a shingle-array column.
-
-    One md5 per shingle; hash family i is an integer read from the
-    i-th 8-char window of the digest (``text.hex_window_long``) — so k
-    families cost one digest plus k window parses.  All k mins are
-    carried in a single array fold (one pass over the shingles, not k
-    ``array_min`` scans).  Engine-independent by construction.
-    Requires ``k <= 9`` with the 3-char window stride.
-    """
-    from .text import hex_window_long
-
-    long_max = (1 << 63) - 1
-    return F.aggregate(
-        F.transform(sh, lambda s: F.md5(s)),
-        F.array_repeat(F.lit(long_max).cast("long"), k),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(*[hex_window_long(h, 3 * i) for i in range(k)]),
-            lambda a, b: F.least(a, b),
-        ),
-    )
+    return _set_jaccard(cand, "new_id", "corpus_id", sh_new, sh_corp, threshold)
 
 
 def banded_minhash_keys(
@@ -589,10 +622,17 @@ def banded_minhash_keys(
     The shared discovery primitive: self-join form
     (:func:`minhash_lsh_pairs`) groups it per (band, key); the
     incremental form (:func:`incremental_neardup_pairs`) equi-joins a
-    new batch's keys against a corpus's.  Signature via explode ->
-    flat-column hash -> min-aggregate (see ``minhash_lsh_pairs`` scale
-    notes — this keeps the md5 + window parses inside
-    WholeStageCodegen instead of the interpreted lambda path).
+    new batch's keys against a corpus's.
+
+    Signature via explode -> flat-column hash -> min-aggregate, NOT a
+    higher-order array fold.  Lambda expressions (transform/aggregate/
+    zip_with) are evaluated by Spark's *interpreted* expression path —
+    measured ~500µs/shingle for the k-family fold at sf0.1 (3.9 s for
+    250k shingles on 32 cores) — while the exploded shape keeps every
+    hash inside WholeStageCodegen and the min-agg combines map-side,
+    so the extra shuffle carries only k longs per doc.  Hash family i
+    is an integer read from the i-th 3-char-stride window of one md5
+    per shingle (``text.hex_window_long``), so ``k <= 9``.
     """
     from .text import hex_window_long
 
@@ -642,47 +682,15 @@ def minhash_lsh_pairs(
     distinct (doc_a < doc_b) pairs; feed to ``ngram_jaccard_pairs``
     semantics for exact verification when needed.
     """
-    # Signature via explode -> flat-column hash -> min-aggregate, NOT a
-    # higher-order array fold.  Lambda expressions (transform/aggregate/
-    # zip_with) are evaluated by Spark's *interpreted* expression path —
-    # measured ~500µs/shingle for the k-family fold at sf0.1 (3.9 s for
-    # 250k shingles on 32 cores) — while the exploded shape keeps every
-    # hash inside WholeStageCodegen and the min-agg combines map-side,
-    # so the extra shuffle carries only k longs per doc.  Same values,
-    # same oracle: min over identical per-shingle hash families.
     banded = banded_minhash_keys(docs, k, bands, n, text_col, id_col)
     # One aggregation instead of a self-join: a self-join would
     # recompute the whole signature lineage for both sides (2x the
     # hashing cost) and shuffle twice; grouping to a sorted id array
     # and expanding in-bucket combinations shuffles the tiny banded
-    # rows once.  Bucket fan-out is quadratic per bucket either way —
-    # hot buckets are the skew risk (AQE splits them).
-    return (
-        banded.groupBy("band", "key")
-        .agg(F.sort_array(F.collect_set("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        # Degenerate buckets (a band key shared by thousands of docs —
-        # empty/boilerplate text) would expand O(|bucket|^2) pairs;
-        # cap them out, the docs still pair through their other bands.
-        .filter(F.lit(True) if max_bucket is None else F.size("ids") <= max_bucket)
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ids",
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                            lambda y: F.struct(
-                                x.alias("doc_a"), y.alias("doc_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    # rows once.  A capped degenerate bucket's docs still pair through
+    # their other bands.
+    buckets = _buckets(banded, ["band", "key"], "doc_id", max_bucket)
+    return _bucket_pairs(buckets, ("", "doc_a", "doc_b")).distinct()
 
 
 def incremental_neardup_pairs(
@@ -704,11 +712,11 @@ def incremental_neardup_pairs(
     Discovery is an equi-join of the batch's LSH band keys against the
     corpus's: shuffle O(batch x bands) + one pass banding the corpus
     (at scale the corpus keys are precomputed once and stored, making
-    each batch O(batch)).  ``max_bucket`` drops corpus-side degenerate
-    buckets exactly like the self-join form.  Verification attaches
-    raw text to the (small) candidate set and computes exact
-    shingle-set Jaccard per pair — same two-stage architecture as
-    :func:`verified_neardup_pairs`.
+    each batch O(batch); :func:`probe_dedup_index` is that store).
+    ``max_bucket`` drops corpus-side degenerate buckets with the same
+    cap as the self-join form (:func:`_batch_candidates`).
+    Verification is the exact shingle-set Jaccard tail every LSH
+    discovery path shares (:func:`_text_jaccard`).
 
     Output: (new_id, corpus_id, jaccard >= threshold); new docs absent
     from the output are novel and safe to append.
@@ -717,64 +725,15 @@ def incremental_neardup_pairs(
         F.col("doc_id").alias("new_id"), "band", "key"
     )
     bc = banded_minhash_keys(corpus, k, bands, n, text_col, id_col)
-    grouped = bc.groupBy("band", "key").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("ids")
-    )
-    if max_bucket is not None:
-        grouped = grouped.filter(F.size("ids") <= max_bucket)
-    # Batch-vs-corpus band-key join strategy is left to AQE: the batch
-    # is USUALLY the small side, but nothing bounds it (a caller may
-    # pass a quarter-corpus "batch"), and an unconditional broadcast
-    # of its band-key table is exactly the OOM hazard the embedding
-    # variant removed in favor of runtime sizes.  AQE broadcasts
-    # whichever side is actually small; the corpus bucket table still
-    # streams out of its own aggregation (at scale it is precomputed
-    # and stored, never reshuffled per batch).
-    cand = (
-        bn.join(grouped, ["band", "key"])
-        .select("new_id", F.explode("ids").alias("corpus_id"))
-        .distinct()
-    )
-    return _verify_batch_pairs(cand, new_docs, corpus, n, threshold, text_col, id_col)
-
-
-def _verify_batch_pairs(
-    cand: DataFrame,
-    new_docs: DataFrame,
-    corpus: DataFrame,
-    n: int,
-    threshold: float,
-    text_col: str,
-    id_col: str,
-) -> DataFrame:
-    """Exact shingle-set Jaccard over a (new_id, corpus_id) candidate
-    set — the shared verification tail of the incremental and
-    index-probe discovery paths (one code path = one semantics = one
-    oracle)."""
-    txt_new = new_docs.select(
-        F.col(id_col).alias("new_id"), F.col(text_col).alias("txt_a")
-    )
-    txt_old = corpus.select(
-        F.col(id_col).alias("corpus_id"), F.col(text_col).alias("txt_b")
-    )
-    # Explicit broadcast of the pair side on both joins (see
-    # verified_neardup_pairs): without the hint Spark may broadcast the
-    # corpus text table instead.
-    joined = F.broadcast(F.broadcast(cand).join(txt_new, "new_id")).join(
-        txt_old, "corpus_id"
-    )
-    pair_sh = joined.select(
+    cand = _batch_candidates(bn, bc, max_bucket)
+    return _text_jaccard(
+        cand,
         "new_id",
         "corpus_id",
-        shingles(F.col("txt_a"), n).alias("shs_a"),
-        shingles(F.col("txt_b"), n).alias("shs_b"),
-    )
-    inter = F.size(F.array_intersect("shs_a", "shs_b"))
-    union = F.size("shs_a") + F.size("shs_b") - inter
-    return (
-        pair_sh.withColumn("jaccard", inter.cast("double") / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "corpus_id", "jaccard")
+        new_docs.select(id_col, text_col),
+        corpus.select(id_col, text_col),
+        n,
+        threshold,
     )
 
 
@@ -869,39 +828,8 @@ def verified_neardup_pairs(
         docs, k=k, bands=bands, n=n, text_col=text_col, id_col=id_col,
         max_bucket=max_bucket,
     )
-    # Attach the RAW text to each candidate pair and shingle after the
-    # join, so the O(corpus) shingle computation runs exactly once (in
-    # the LSH discovery lineage) and the verify stage's shingle work is
-    # O(candidates).  The earlier shape — joining two pre-shingled
-    # copies of the corpus — recomputed full-corpus shingles twice more
-    # per run (Spark re-executes diverged lineage branches; there is no
-    # implicit caching).  The candidate side is small (LSH-pruned and
-    # bucket-capped) and carries the EXPLICIT broadcast hint on both
-    # joins: left to its own statistics Spark picked BuildRight on the
-    # second join — broadcasting the full corpus text table — because
-    # the post-agg pair side has no size estimate.  With the hints the
-    # corpus is scanned, never shuffled, never broadcast.
-    txt = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
-    joined = F.broadcast(
-        F.broadcast(cand).join(
-            txt.select(F.col("id").alias("doc_a"), F.col("txt").alias("txt_a")),
-            "doc_a",
-        )
-    ).join(txt.select(F.col("id").alias("doc_b"), F.col("txt").alias("txt_b")), "doc_b")
-    pair_sh = joined.select(
-        "doc_a",
-        "doc_b",
-        shingles(F.col("txt_a"), n).alias("shs_a"),
-        shingles(F.col("txt_b"), n).alias("shs_b"),
-    )
-    inter = F.size(F.array_intersect("shs_a", "shs_b"))
-    union = F.size("shs_a") + F.size("shs_b") - inter
-    jac = inter.cast("double") / union
-    return (
-        pair_sh.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    txt = docs.select(id_col, text_col)
+    return _text_jaccard(cand, "doc_a", "doc_b", txt, txt, n, threshold)
 
 
 def axis_planes(dim: int, n_planes: int) -> tuple[int, ...]:
@@ -1106,9 +1034,9 @@ def embedding_neardup_pairs(
     surviving pair is scored once.  Recall floors vs brute force are
     pinned by test_llm.
 
-    The cap is applied via a broadcast join against the (tiny,
-    one-row-per-(band,)bucket) size table *before* the pair join, so an
-    oversized bucket never materializes its pair expansion.
+    The cap (:func:`_buckets`) filters each bucket's id array by size
+    *before* the pair expansion, so an oversized bucket never
+    materializes its pairs.
 
     ``id_pred`` (a callable mapping the id Column to a boolean Column)
     restricts the OUTPUT pairs to ids satisfying the predicate while
@@ -1167,29 +1095,12 @@ def embedding_neardup_pairs(
     # ``max_bucket`` (a free size filter before the expansion) and
     # corpus-scaled plane counts bound.
     e = emb.select(F.col(id_col).alias("id"), F.posexplode(keys).alias("band", "bucket"))
-    # collect only the PREDICATE-QUALIFYING ids per bucket (collect_set
-    # drops the nulls when() emits) while count(*) sees every member —
-    # the cap stays a full-corpus property under id_pred.  Each id
-    # appears once per (band,bucket) (bands key distinct planes), so
-    # count(*) == full occupancy.
-    member = F.when(id_pred(F.col("id")), F.col("id")) if id_pred is not None else F.col("id")
-    grouped = (
-        e.groupBy("band", "bucket")
-        .agg(
-            F.sort_array(F.collect_set(member)).alias("ids"),
-            F.count(F.lit(1)).alias("__occ"),
-        )
-        .filter(F.size("ids") > 1)
-    )
-    if max_bucket is not None:
-        grouped = grouped.filter(F.col("__occ") <= max_bucket)
-    cand = grouped.select(
-        F.expr(
-            "explode(flatten(transform(ids, (x, i) -> "
-            "transform(slice(ids, i + 2, size(ids)), "
-            "y -> struct(x as id_a, y as id_b))))) as p"
-        )
-    ).select("p.id_a", "p.id_b")
+    grouped = _buckets(e, ["band", "bucket"], "id", max_bucket)
+    if id_pred is not None:
+        # restrict AFTER the cap, so the cap stays a full-corpus
+        # property while only sample ids enter the pair expansion
+        grouped = grouped.withColumn("ids", F.filter("ids", id_pred))
+    cand = _bucket_pairs(grouped, ("", "id_a", "id_b"))
     if len(bands) > 1:
         # OR over bands: a pair is a candidate once per agreeing band.
         cand = cand.distinct()
@@ -1665,15 +1576,8 @@ def edit_verified_pairs(
     ``threshold``.
     """
     cand = minhash_lsh_pairs(docs, k, bands, n, text_col, id_col, max_bucket)
-    txt = docs.select(F.col(id_col).alias("id"),
-                      F.substring(F.col(text_col), 1, prefix).alias("txt"))
-    # Pair side broadcasts (candidate sets are small by construction —
-    # see verified_neardup_pairs); the corpus text table streams.
-    joined = F.broadcast(
-        F.broadcast(cand).join(
-            txt.select(F.col("id").alias("doc_a"), F.col("txt").alias("ta")), "doc_a"
-        )
-    ).join(txt.select(F.col("id").alias("doc_b"), F.col("txt").alias("tb")), "doc_b")
+    txt = docs.select(id_col, F.substring(F.col(text_col), 1, prefix))
+    joined = _attach_text(cand, "doc_a", "doc_b", txt, txt)
     lev = F.levenshtein(F.col("ta"), F.col("tb"))
     sim = F.round(
         F.lit(1.0)
@@ -1721,32 +1625,13 @@ def source_overlap_matrix(
     """
     from .text import md5_wide_long
 
-    srcs = (
-        docs.select(
-            F.col(source_col).alias("source"),
-            F.explode(shingles(F.col(text_col), n)).alias("sh"),
-        )
-        .select("source", md5_wide_long(F.col("sh")).alias("sh"))
-        .groupBy("sh")
-        .agg(F.sort_array(F.collect_set("source")).alias("srcs"))
-    )
-    if max_sources is not None:
-        srcs = srcs.filter(F.size("srcs") <= max_sources)
-    s = F.col("srcs")
-    pairs = F.flatten(
-        F.transform(
-            s,
-            lambda x, i: F.transform(
-                F.slice(s, i + 2, F.size(s)),
-                lambda y: F.struct(
-                    x.alias("source_a"), y.alias("source_b")
-                ),
-            ),
-        )
-    )
+    fps = docs.select(
+        F.col(source_col).alias("source"),
+        F.explode(shingles(F.col(text_col), n)).alias("sh"),
+    ).select("source", md5_wide_long(F.col("sh")).alias("sh"))
+    srcs = _buckets(fps, ["sh"], "source", max_sources)
     return (
-        srcs.select(F.explode(pairs).alias("p"))
-        .select("p.source_a", "p.source_b")
+        _bucket_pairs(srcs, ("", "source_a", "source_b"))
         .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
@@ -1984,20 +1869,18 @@ def probe_dedup_index(
       meta sidecar (a probe cannot band differently from the store);
     - the batch's distinct band keys BROADCAST onto the index scan —
       a map-side hash semi-probe, the corpus keys stream from parquet;
-    - bucket-size capping counts rows per matched key over the matched
-      subset only (every corpus row of a matched key joins, so the
-      count IS the full bucket size — same cap semantics as the
-      per-call form's collect_set size);
+    - the matched index rows then take the per-call form's own
+      candidate step (:func:`_batch_candidates`): every corpus row of
+      a matched key survives the semi-join, so the capped bucket size
+      is the full bucket size;
     - verification fetches candidate text only (``corpus`` supplies
       text — the index stores derived keys, not a copy of the corpus)
-      via the shared exact-Jaccard tail.
+      via the shared exact-Jaccard tail (:func:`_text_jaccard`).
 
     Output: (new_id, corpus_id, jaccard >= threshold); batch docs
     absent from the output are novel and safe to append
     (:func:`append_to_dedup_index`).
     """
-    from pyspark.sql import Window
-
     from .similarity import _index_table
 
     meta = _dedup_index_meta(index_root)
@@ -2008,18 +1891,15 @@ def probe_dedup_index(
     idx = _index_table(index_root).read(spark)
     keys = bn.select("band", "key").distinct()
     matched = idx.join(F.broadcast(keys), ["band", "key"])
-    if max_bucket is not None:
-        bs = F.count(F.lit(1)).over(Window.partitionBy("band", "key"))
-        matched = matched.withColumn("__bs", bs).filter(
-            F.col("__bs") <= max_bucket
-        )
-    cand = (
-        matched.join(bn, ["band", "key"])
-        .select("new_id", F.col("doc_id").alias("corpus_id"))
-        .distinct()
-    )
-    return _verify_batch_pairs(
-        cand, new_docs, corpus, n, threshold, text_col, id_col
+    cand = _batch_candidates(bn, matched, max_bucket)
+    return _text_jaccard(
+        cand,
+        "new_id",
+        "corpus_id",
+        new_docs.select(id_col, text_col),
+        corpus.select(id_col, text_col),
+        n,
+        threshold,
     )
 
 

@@ -507,20 +507,49 @@ def test_unigram_logprob_orders_docs_by_rarity(spark):
     assert math.isclose(out[1], (math.log(5 / 6) + math.log(1 / 6)) / 2, rel_tol=1e-12)
 
 
-def test_skew_caps_degenerate_corpus_completes(spark):
+def test_skew_caps_degenerate_corpus_completes(spark, tmp_path):
     """Default-on skew caps: a corpus where every doc is identical
     boilerplate puts ALL docs in one shingle/band/bucket.  With the cap
     active the degenerate key is dropped outright (O(cap^2) bounded),
     the queries complete, and exact dedup still collapses the corpus.
-    """
+    Every capped discovery path is pinned AT the boundary: a cap of
+    n-1 drops the n-member bucket, a cap of n keeps all of it — for
+    the batch forms the cap counts the CORPUS side of the bucket (the
+    index probe's matched rows included)."""
+    from dax_ppdb_spark.llm.dedup import (
+        build_dedup_index,
+        cdc_neardup_pairs,
+        incremental_neardup_pairs,
+        probe_dedup_index,
+    )
+
     n = 40
-    docs = _docs(spark, ["the same boilerplate text repeated everywhere always"] * n)
+    text = "the same boilerplate text repeated everywhere always"
+    docs = _docs(spark, [text] * n)
+    all_pairs = n * (n - 1) // 2
 
     # cap below the bucket size -> the hot key is dropped, zero pairs
     assert minhash_lsh_pairs(docs, max_bucket=n - 1).count() == 0
     assert ngram_jaccard_pairs(docs, max_doc_freq=n - 1).count() == 0
-    # cap above -> full quadratic expansion within the single bucket
-    assert minhash_lsh_pairs(docs, max_bucket=n).count() == n * (n - 1) // 2
+    assert cdc_neardup_pairs(docs, min_shared=1, max_fp_df=n - 1).count() == 0
+    # cap at the bucket size -> full quadratic expansion within it
+    assert minhash_lsh_pairs(docs, max_bucket=n).count() == all_pairs
+    assert ngram_jaccard_pairs(docs, max_doc_freq=n).count() == all_pairs
+    assert cdc_neardup_pairs(docs, min_shared=1, max_fp_df=n).count() == all_pairs
+
+    # batch forms: m identical new docs against the n-doc corpus
+    m = 3
+    batch = spark.createDataFrame(
+        [(1000 + i, text) for i in range(m)], "doc_id LONG, text STRING"
+    )
+    root = str(tmp_path / "dedup_index")
+    build_dedup_index(docs, root)
+    for cap, want in ((n - 1, 0), (n, m * n)):
+        assert incremental_neardup_pairs(batch, docs, max_bucket=cap).count() == want
+        assert (
+            probe_dedup_index(spark, root, batch, docs, max_bucket=cap).count()
+            == want
+        )
     # exact dedup (the right tool for identical docs) still collapses
     row = exact_dedup(docs).collect()
     assert len(row) == 1 and row[0].n_docs == n

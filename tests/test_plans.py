@@ -340,23 +340,43 @@ def test_neardup_verify_joins_broadcast_pair_side(spark, sf_dir, registry):
     incremental form's batch-vs-corpus band-key DISCOVERY join is
     also optimizer-chosen (an unconditional batch broadcast was an
     OOM hazard for large batches), so only the id-keyed verify joins
-    are pinned here."""
+    are pinned here.  All four text-verified rows share one
+    text-attach step, so all four must show it.
+
+    The index probe's band-key semi-join is pinned too: a broadcast
+    hash join that builds the batch-key side, with the index scan
+    streaming into it unexchanged."""
     verify_keys = ("doc_a", "doc_b", "new_id", "corpus_id")
-    for name in ("dedup_verified", "dedup_incremental"):
+    for name in ("dedup_verified", "dedup_incremental", "dedup_edit", "dedup_index_probe"):
         df = registry[name](spark, sf_dir)
         simple = df._jdf.queryExecution().explainString(
             df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "simple"
             )
         )
+        lines = simple.splitlines()
         pinned = 0
-        for line in simple.splitlines():
+        for line in lines:
             if "BroadcastHashJoin" in line and any(
                 f"[{k}#" in line for k in verify_keys
             ):
                 assert "BuildLeft" in line, f"{name} broadcasts the corpus side: {line}"
                 pinned += 1
         assert pinned >= 2, f"{name} lost its verify-stage broadcast joins"
+        if name != "dedup_index_probe":
+            continue
+        # the index scan is the one Parquet scan reading band keys;
+        # its nearest join ancestor must be the BuildRight band-key
+        # join, with no Exchange on the path between them
+        scan = next(
+            i for i, li in enumerate(lines)
+            if "FileScan parquet" in li and "key#" in li and "band#" in li
+        )
+        above = lines[:scan][::-1]
+        join = next(li for li in above if "Join" in li)
+        assert "BroadcastHashJoin [band#" in join and "BuildRight" in join, join
+        path = above[: above.index(join)]
+        assert not any("Exchange" in li for li in path), path
 
 
 @pytest.mark.parametrize("qname", ["semdedup", "semdedup_flat"])
@@ -684,15 +704,16 @@ def test_dedup_index_probe_corpus_never_shuffles(spark, sf_dir, registry):
     corpus band keys STREAM out of their parquet scan into a broadcast
     hash join against the batch's key set — no cartesian, no nested
     loop, and every hash exchange in the plan is batch-driven (batch
-    signature aggregation, batch key distinct, matched-subset window,
-    candidate distinct), never a re-partition of the full index."""
+    signature aggregation, batch key distinct, matched-bucket
+    grouping, candidate distinct), never a re-partition of the full
+    index."""
     plan = plan_of(registry["dedup_index_probe"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # the index scan is the streamed side of a broadcast join
     assert "BroadcastHashJoin Inner BuildRight" in plan
     # batch-driven exchanges only (sig agg, key distinct, matched
-    # window, candidate distinct — a handful of small relations); the
+    # buckets, candidate distinct — a handful of small relations); the
     # full index is never among them: it streams into the BuildRight
     # join pinned above, and a re-partition of the corpus would add
     # an exchange keyed on the index columns BELOW that join, pushing

@@ -1,5 +1,5 @@
-"""Compute-scaling probe: 8 vs 32 cores on a 10x corpus (round-15,
-verdict item 4).
+"""Compute-scaling probe: a 1:4 core-count pair on a 10x corpus
+(round-15, verdict item 4).
 
 The sf0.1 bench cannot observe core scaling — every headline row is
 fixed-cost bound (plan construction + a handful of driver-job
@@ -9,9 +9,10 @@ gives the 100-TB story a measured leg: it materializes a 10x-row
 corpus for the three compute-heavy operators the round-14 verdict
 named (dedup_jaccard_prefix over documents, semdedup over embeddings,
 column_histograms over lineitem), runs each query through the normal
-registry at 8 and at 32 cores in SEPARATE Spark apps (min-of-N noop,
-bench methodology), and prints ONE JSON line with the per-query
-t8/t32 ratios; the same payload is written to SCALING_r15.json.
+registry at a low and a high core count (default: a quarter of the
+machine's cores, and all of them) in SEPARATE Spark apps (min-of-N
+noop, bench methodology), and prints ONE JSON line with the per-query
+t_lo/t_hi ratios; the same payload is written to SCALING_r15.json.
 
 Corpus construction (deterministic, no RNG state leaks; per-table
 copy counts sized so the post-r15 operators are COMPUTE-bound, not
@@ -32,6 +33,11 @@ embeddings still measured flat across core counts):
     offset by 10M per copy.
   - lineitem x30: rows replicated as-is with l_orderkey offset
     (histograms are distribution work; duplicates are fine).
+Every table is written with at least as many Parquet row groups as the
+highest core count: Spark splits a file's bytes across cores, but a
+split only reads the row groups that start inside it, so a one-group
+file runs its first stage as one task at any core count.  The corpus
+is cached under /tmp, keyed by copy and row-group counts.
 
 Usage:
   python tools/scaling_probe.py [sf_dir] [--repeat N] [--cpus A,B]
@@ -56,12 +62,23 @@ LI_COPIES = 30
 ID_OFFSET = 10_000_000
 
 
-def _build_corpus(sf_dir: str, out_dir: str) -> None:
+def _default_cpus() -> list[int]:
+    """The 1:4 pair the machine can run: a quarter of its cores, and
+    all of them."""
+    hi = len(os.sched_getaffinity(0))
+    return [max(1, hi // 4), hi]
+
+
+def _build_corpus(sf_dir: str, out_dir: str, row_groups: int) -> None:
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     os.makedirs(out_dir, exist_ok=True)
+
+    def write(tbl: pa.Table, name: str) -> None:
+        size = max(1, -(-tbl.num_rows // row_groups))
+        pq.write_table(tbl, os.path.join(out_dir, name), row_group_size=size)
 
     docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
     doc_ids = docs.column("doc_id").to_numpy()
@@ -90,7 +107,7 @@ def _build_corpus(sf_dir: str, out_dir: str) -> None:
                 }
             )
         )
-    pq.write_table(pa.concat_tables(parts), os.path.join(out_dir, "documents.parquet"))
+    write(pa.concat_tables(parts), "documents.parquet")
 
     emb = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
     vec_ids = emb.column("vec_id").to_numpy()
@@ -112,9 +129,7 @@ def _build_corpus(sf_dir: str, out_dir: str) -> None:
                 }
             )
         )
-    pq.write_table(
-        pa.concat_tables(eparts), os.path.join(out_dir, "embeddings.parquet")
-    )
+    write(pa.concat_tables(eparts), "embeddings.parquet")
 
     li = pq.read_table(os.path.join(sf_dir, "lineitem.parquet"))
     okey = li.column("l_orderkey").to_numpy()
@@ -127,7 +142,7 @@ def _build_corpus(sf_dir: str, out_dir: str) -> None:
                 pa.array(okey + k * ID_OFFSET),
             )
         )
-    pq.write_table(pa.concat_tables(lparts), os.path.join(out_dir, "lineitem.parquet"))
+    write(pa.concat_tables(lparts), "lineitem.parquet")
 
 
 def _child(corpus_dir: str, repeat: int) -> None:
@@ -163,15 +178,17 @@ def main() -> int:
     cpus = (
         [int(x) for x in args[args.index("--cpus") + 1].split(",")]
         if "--cpus" in args
-        else [8, 32]
+        else _default_cpus()
     )
+    row_groups = max(cpus)
     corpus = os.path.join(
         "/tmp",
-        "dax_ppdb_scaling_r15_d%d_e%d_l%d" % (DOC_COPIES, EMB_COPIES, LI_COPIES),
+        "dax_ppdb_scaling_d%d_e%d_l%d_g%d"
+        % (DOC_COPIES, EMB_COPIES, LI_COPIES, row_groups),
     )
     marker = os.path.join(corpus, "_COMPLETE")
     if not os.path.exists(marker):
-        _build_corpus(sf_dir, corpus)
+        _build_corpus(sf_dir, corpus, row_groups)
         open(marker, "w").close()
     results = {}
     for c in cpus:
