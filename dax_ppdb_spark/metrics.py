@@ -25,17 +25,40 @@ _LOG = logging.getLogger("dax_ppdb_spark.metrics")
 _RECENT: deque[dict] = deque(maxlen=4096)
 
 
+def _spark_counts() -> dict | None:
+    """The newest status-store job id and the JVM's codegen compile
+    count, or None when no SparkContext is active (never starts one)."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return None
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return {
+        "jobs": int(jobs.apply(0).jobId()) if jobs.size() else -1,
+        "codegen_compiles": int(codegen.METRIC_COMPILATION_TIME().getCount()),
+    }
+
+
 @contextmanager
 def timer(stage: str, **tags):
     """Log wall-clock for a pipeline stage, tagged like the
-    reference's ``Timer(..., tags={...})``."""
+    reference's ``Timer(..., tags={...})``.  While a SparkContext is
+    active the record also carries the step's Spark cost: ``jobs``
+    (status-store job ids issued during the step) and
+    ``codegen_compiles`` (whole-stage and expression classes Janino
+    compiled, ``CodegenMetrics``)."""
     t0 = time.time()
+    before = _spark_counts()
     try:
         yield
     finally:
         dt = time.time() - t0
-        _RECENT.append({"kind": "timer", "stage": stage, "seconds": dt, **tags})
-        tag_s = " ".join(f"{k}={v}" for k, v in tags.items())
+        after = _spark_counts() if before is not None else None
+        cost = {k: after[k] - before[k] for k in after} if after is not None else {}
+        _RECENT.append({"kind": "timer", "stage": stage, "seconds": dt, **cost, **tags})
+        tag_s = " ".join(f"{k}={v}" for k, v in {**cost, **tags}.items())
         _LOG.info("%s took %.3fs %s", stage, dt, tag_s)
 
 

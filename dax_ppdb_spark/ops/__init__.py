@@ -16,11 +16,9 @@ from .graph import connected_components  # noqa: F401
 from .latest import latest_only, latest_only_agg, topk_per_key  # noqa: F401
 from .merge import merge_patch, merge_upsert  # noqa: F401
 from .updates import (  # noqa: F401
-    apply_update_patches,
-    build_patch,
-    expand_updates,
-    latest_updates,
     assert_update_targets,
+    expand_updates,
+    update_patches,
     validate_update_targets,
 )
 from .ranges import point_in_interval_join  # noqa: F401

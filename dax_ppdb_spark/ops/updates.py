@@ -30,21 +30,27 @@ withdraw_diaforcedsource        DiaForcedSource timeWithdrawnMjdTai
                                                 detector)
 =============================== =============== ========================
 
-Everything below is built-in-function only (no Python UDFs): JSON
-parse, higher-order array ops, window, conditional aggregation, and a
-broadcast merge — the whole pipeline stays in whole-stage codegen and
-shuffles once per stage on its natural key.
+One batch's updates are control data, not a table: the reference
+explodes them in Python on the driver before its three MERGEs
+(``bigquery/updates/updates_manager.py:152-179``).  Here the expansion
+stays one Spark projection (:func:`expand_updates` — the JSON parse
+and the id casts are Spark expressions), its rows are collected as
+one Arrow table in one job, and :func:`update_patches` resolves
+last-writer-wins and the pivot on the driver with Arrow compute.
+Values stay strings until the typed patch, a projection of casts over
+a local relation that the optimizer folds on the driver
+(``ConvertToLocalRelation``), so every cast is Spark's own ``Cast``
+and a merge broadcasts the patch without re-planning it.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .latest import latest_only
-from .merge import merge_patch
 
 
 @dataclass(frozen=True)
@@ -111,114 +117,112 @@ def expand_updates(raw: DataFrame) -> DataFrame:
 
     ``raw`` has the UPDATES_RAW schema (chunk, time_ns, order,
     update_type, json_payload).  Output has the EXPANDED_UPDATES
-    schema; one input row yields one row per patched field.
+    schema; one input row yields one row per patched field.  The
+    payload is parsed once, one CASE on ``update_type`` picks the
+    type's field rows (each carrying its table, id and key) and one
+    ``explode`` follows; an unknown or NULL type matches no branch and
+    yields no rows.
     """
-    m = F.from_json(F.col("json_payload"), "map<string,string>")
-    per_type = []
+    m = F.col("__m")
+    rows = None
     for utype, spec in TYPE_SPECS.items():
-        src = raw.filter(F.col("update_type") == utype).withColumn("__m", m)
-        record_id = F.array(
-            *[F.element_at(F.col("__m"), f).cast("long") for f in spec.id_fields]
-        )
-        field_structs = []
-        for fname, always in spec.fields:
-            keep = F.lit(True) if always else F.map_contains_key(F.col("__m"), fname)
-            field_structs.append(
+        record_id = F.array(*[F.element_at(m, f).cast("long") for f in spec.id_fields])
+        record_key = F.concat_ws("-", *[F.element_at(m, f) for f in spec.id_fields])
+        field_rows = F.array(
+            *[
                 F.struct(
+                    F.lit(spec.table_name).alias("table_name"),
+                    record_id.alias("record_id"),
+                    record_key.alias("record_key"),
                     F.lit(fname).alias("field_name"),
-                    F.element_at(F.col("__m"), fname).alias("value_json"),
-                    keep.alias("__keep"),
+                    F.element_at(m, fname).alias("value_json"),
+                    (F.lit(True) if always else F.map_contains_key(m, fname)).alias("__keep"),
                 )
+                for fname, always in spec.fields
+            ]
+        )
+        kept = F.filter(field_rows, lambda s: s["__keep"])
+        is_type = F.col("update_type") == utype
+        rows = F.when(is_type, kept) if rows is None else rows.when(is_type, kept)
+    return (
+        raw.withColumn("__m", F.from_json(F.col("json_payload"), "map<string,string>"))
+        .select("apdb_replica_chunk", F.explode(rows).alias("__f"), "update_order", "update_time_ns")
+        .select(
+            "apdb_replica_chunk",
+            *[
+                F.col(f"__f.{c}").alias(c)
+                for c in ("table_name", "record_id", "record_key", "field_name", "value_json")
+            ],
+            "update_order",
+            "update_time_ns",
+        )
+    )
+
+
+def update_patches(expanded: DataFrame) -> dict[str, DataFrame]:
+    """The typed merge patch of every table the batch updates.
+
+    Collects ``expanded`` as one Arrow table (one job) and, on the
+    driver with Arrow compute:
+
+    - keeps the newest row per ``(table_name, record_key, field_name)``
+      by ``(apdb_replica_chunk, update_time_ns, update_order)`` DESC,
+      NULLs last as in Spark (ties keep an arbitrary row, as the
+      reference's ``ROW_NUMBER`` does);
+    - pivots each table's rows into one row per ``record_id`` key
+      tuple: ``<field>`` is the max value in byte order (Spark's string
+      order; NULLs ignored) and ``<field>__present`` says the field has
+      a row.  Two spellings of one id (``"01"``, ``"1"``) are two
+      record keys but one patch row.
+
+    Values stay strings: each pivot is planned as a local relation
+    (``LocalTableScan``) and the patch is a projection of Spark casts
+    over it, which the optimizer folds on the driver.  A
+    present-but-NULL ``nDiaSources`` keeps the target value
+    (``merge_diaobject_updates.sql:32``): its present flag is cleared.
+    Tables without a patch row are absent from the result.
+    """
+    lww_key = ["table_name", "record_key", "field_name"]
+    order = ["apdb_replica_chunk", "update_time_ns", "update_order"]
+    rows = expanded.select(*lww_key, *order, "record_id", "value_json").toArrow()
+    rows = rows.take(
+        pc.sort_indices(rows, [(c, "descending") for c in order], null_placement="at_end")
+    )
+    rows = rows.append_column("__i", pa.array(range(rows.num_rows), pa.int64()))
+    first = rows.group_by(lww_key, use_threads=False).aggregate([("__i", "first")])
+    newest = rows.take(first["__i_first"])
+    spark = expanded.sparkSession
+    out = {}
+    for table_name, (key_cols, fields) in TABLE_PATCHES.items():
+        mine = newest.filter(
+            pc.and_(
+                pc.equal(newest["table_name"], table_name),
+                pc.is_in(newest["field_name"], pa.array(list(fields))),
             )
-        fields = F.filter(F.array(*field_structs), lambda s: s["__keep"])
-        exploded = src.select(
-            "apdb_replica_chunk",
-            F.lit(spec.table_name).alias("table_name"),
-            record_id.alias("record_id"),
-            F.concat_ws("-", *[F.element_at(F.col("__m"), f) for f in spec.id_fields]).alias(
-                "record_key"
-            ),
-            F.explode(fields).alias("__f"),
-            "update_order",
-            "update_time_ns",
-        ).select(
-            "apdb_replica_chunk",
-            "table_name",
-            "record_id",
-            "record_key",
-            F.col("__f.field_name").alias("field_name"),
-            F.col("__f.value_json").alias("value_json"),
-            "update_order",
-            "update_time_ns",
         )
-        per_type.append(exploded)
-    out = per_type[0]
-    for df in per_type[1:]:
-        out = out.unionByName(df)
-    return out
-
-
-def latest_updates(expanded: DataFrame) -> DataFrame:
-    """W3: keep only the newest patch per (table, record, field)."""
-    return latest_only(
-        expanded,
-        ["table_name", "record_key", "field_name"],
-        ["apdb_replica_chunk", "update_time_ns", "update_order"],
-    )
-
-
-def build_patch(latest: DataFrame, table_name: str) -> DataFrame:
-    """A1: pivot field-level rows into one patch row per record.
-
-    Output: key columns + ``<field>`` (typed value) +
-    ``<field>__present`` per patchable field — the shape consumed by
-    ``ops.merge.merge_patch``.  MAX replaces the reference's ANY_VALUE
-    (each (record, field) is unique after ``latest_updates``, so the
-    value is identical; MAX is deterministic).
-    """
-    key_cols, fields = TABLE_PATCHES[table_name]
-    src = latest.filter(
-        (F.col("table_name") == table_name) & F.col("field_name").isin(*fields.keys())
-    )
-    keys = [
-        F.element_at(F.col("record_id"), i + 1).alias(k) for i, k in enumerate(key_cols)
-    ]
-    aggs = []
-    for fname, ftype in fields.items():
-        cond = F.col("field_name") == fname
-        aggs.append(F.max(F.when(cond, F.col("value_json"))).cast(ftype).alias(fname))
-        aggs.append((F.count(F.when(cond, F.lit(1))) > 0).alias(f"{fname}__present"))
-    return src.groupBy(*keys).agg(*aggs)
-
-
-def table_patch(latest: DataFrame, table_name: str) -> DataFrame:
-    """The merge-ready patch for one table, with the reference's
-    special case applied: a present-but-NULL ``nDiaSources`` keeps the
-    target value (``merge_diaobject_updates.sql:32``), reproduced here
-    by clearing the present flag."""
-    patch = build_patch(latest, table_name)
-    if table_name == "DiaObject":
-        patch = patch.withColumn(
-            "nDiaSources__present",
-            F.col("nDiaSources__present") & F.col("nDiaSources").isNotNull(),
-        )
-    return patch
-
-
-def apply_update_patches(targets: dict[str, DataFrame], latest: DataFrame) -> dict[str, DataFrame]:
-    """J2/J3: merge the latest patches into each target table.
-
-    Returns new snapshots for the tables that have patches; untouched
-    tables pass through unchanged.  NULL patch values overwrite only
-    via their ``__present`` flag (see :func:`table_patch`).
-    """
-    out = dict(targets)
-    for table_name, (key_cols, _fields) in TABLE_PATCHES.items():
-        if table_name not in targets:
+        if mine.num_rows == 0:
             continue
-        out[table_name] = merge_patch(
-            targets[table_name], table_patch(latest, table_name), key_cols
+        cols = {k: pc.list_element(mine["record_id"], i) for i, k in enumerate(key_cols)}
+        for f in fields:
+            has = pc.equal(mine["field_name"], f)
+            cols[f] = pc.if_else(has, mine["value_json"], pa.scalar(None, pa.string()))
+            cols[f"{f}__present"] = has
+        pivot = pa.table(cols).group_by(list(key_cols)).aggregate(
+            [(f, "max") for f in fields] + [(f"{f}__present", "any") for f in fields]
         )
+        typed = [F.col(k) for k in key_cols]
+        for f, ftype in fields.items():
+            typed += [
+                F.col(f"{f}_max").cast(ftype).alias(f),
+                F.col(f"{f}__present_any").alias(f"{f}__present"),
+            ]
+        patch = spark.createDataFrame(pivot).select(*typed)
+        if table_name == "DiaObject":
+            patch = patch.withColumn(
+                "nDiaSources__present",
+                F.col("nDiaSources__present") & F.col("nDiaSources").isNotNull(),
+            )
+        out[table_name] = patch
     return out
 
 

@@ -9,8 +9,12 @@ ordered steps with cleanup in ``finally``:
    ids to it, computing ``geo_point`` (S10/P10),
 2. fill DiaObject validity ends, semi-join-pruned to staged objects
    (W2/P8/J4),
-3. apply retroactive updates (expand -> latest-only -> per-table MERGE,
-   ``bigquery/updates/updates_manager.py:106-150``),
+3. apply retroactive updates (``bigquery/updates/updates_manager.py:
+   106-150``): one Spark projection expands the batch's update events
+   into field rows and one job collects them; last-writer-wins and the
+   per-table pivot run on the driver, as the reference explodes its
+   updates in Python (``:152-179``), and each table's patch, a local
+   relation, is broadcast into a bucket-pruned MERGE,
 4. commit the drafts: one CAS pointer flip per internal table (D9),
 5. re-materialize the public latest snapshot, clustered by geo_point
    (D10),
@@ -51,11 +55,14 @@ Scale notes — every step is O(batch), never O(table):
   under FIFO, and carrying the caller's job group) — a cluster
   promotes DiaObject/DiaSource/DiaForcedSource in parallel instead of
   serializing three half-idle jobs;
-- every promote decision costs at most one driver round trip: which
-  chunks have staged rows comes from the ``apdb_replica_chunk=<id>``
-  partition directories (no job), the bucket collect of a MERGE is
-  also its emptiness probe, and steps 2-3 hand step 5 the buckets and
-  the checkpointed latest updates they already computed.
+- a batch's control data is collected once and handed on as local
+  relations (``session.local_df``), never re-planned: which chunks
+  have staged rows comes from the ``apdb_replica_chunk=<id>``
+  partition directories (no job); step 2 collects the staged
+  DiaObject ids and step 3 the expanded updates, one job each; the
+  buckets of either, and the emptiness of a patch, are read off those
+  local relations with no job; and steps 2-3 hand step 5 the buckets
+  and the touched DiaObject ids they already hold.
 
 The public snapshot is range-partitioned + sorted on ``geo_point`` so
 row-group min/max stats prune sky-region queries (the BigQuery
@@ -77,9 +84,10 @@ from ..ledger import Ledger
 from ..metrics import flush_observations, log_job, observe, timer
 from ..ops.merge import merge_patch
 from ..ops.spatial import with_geo_point
-from ..ops.updates import TABLE_PATCHES, expand_updates, latest_updates, table_patch
+from ..ops.updates import TABLE_PATCHES, expand_updates, update_patches
 from ..ops.validity import fill_validity_end
 from ..schema.registry import CHUNK_COLUMN, ChunkStatus, validity_columns
+from ..session import local_df
 
 _LOG = logging.getLogger("dax_ppdb_spark.promote")
 
@@ -160,15 +168,16 @@ class Promoter:
         return df.sortWithinPartitions(OBJ_BUCKET, BUCKET_KEYS[table])
 
     def _buckets_of(self, keys: DataFrame, key_col: str) -> list[int]:
-        """Distinct buckets hit by a batch's keys — driver-side control
-        data, one long per touched id range.  Also the batch's
-        emptiness probe: no keys, no buckets."""
-        rows = (
-            keys.select(self._bucket_expr(F.col(key_col)).alias("b"))
-            .distinct()
-            .collect()
-        )
-        return [r.b for r in rows]
+        """Distinct buckets hit by a batch's keys — a local relation, so
+        the projection folds on the driver and the collect runs no job.
+        ``_bucket_expr`` keeps Spark's ``floor(id / width)`` double
+        arithmetic (ids above 2^53 round as they do in the writes)."""
+        rows = keys.select(self._bucket_expr(F.col(key_col)).alias("b")).collect()
+        return list(dict.fromkeys(r.b for r in rows))
+
+    def _ids_relation(self, ids) -> DataFrame:
+        """A batch's DiaObject ids as a local relation."""
+        return local_df(self.spark, [(i,) for i in dict.fromkeys(ids)], "diaObjectId LONG")
 
     # -- staging (the external-Dataflow-job analog) -------------------------
 
@@ -269,17 +278,16 @@ class Promoter:
             with timer("copy_staging_to_promotion", chunks=chunk_ids):
                 self._copy_staging_to_drafts(chunk_ids)
             with timer("fill_validity_end", chunks=chunk_ids):
-                filled = self._fill_validity_end(chunk_ids)
+                staged_ids, filled = self._fill_validity_end(chunk_ids)
             with timer("apply_updates", chunks=chunk_ids):
-                latest, patched = self._apply_updates(chunk_ids)
+                patched_ids, patched = self._apply_updates(chunk_ids)
             with timer("swap_promotion_to_internal", chunks=chunk_ids):
                 for t in DIA_TABLES:
                     if t in self._drafts:
                         self._drafts[t].commit()
             with timer("create_public_snapshot", chunks=chunk_ids):
                 self._update_public_snapshot(
-                    chunk_ids,
-                    latest,
+                    staged_ids + patched_ids,
                     sorted(set(filled) | set(patched.get("DiaObject", []))),
                 )
             if self.delta_export and self.public_diaobject.exists():
@@ -387,23 +395,25 @@ class Promoter:
             ]
             d.replace_partitions(self._id_sorted(combined, t), OBJ_BUCKET, buckets)
 
-    def _fill_validity_end(self, chunk_ids: list[int]) -> list[int]:
+    def _fill_validity_end(self, chunk_ids: list[int]) -> tuple[list[int], list[int]]:
         """Step 2: close open DiaObject intervals — touched buckets only.
 
-        The staged id set names a handful of id-range buckets; only
-        those partitions are read (partition-pruned scan) and
-        rewritten (``replace_partitions`` hardlinks the rest), matching
-        the reference MERGE's touched-rows-only IO
-        (``fill_diaobject_validity_end.sql:25-40``).  Returns the
-        buckets (step 5 rewrites the public cells of the same objects).
+        The staged ids (one collect) name a handful of id-range
+        buckets; only those partitions are read (partition-pruned
+        scan) and rewritten (``replace_partitions`` hardlinks the
+        rest), matching the reference MERGE's touched-rows-only IO
+        (``fill_diaobject_validity_end.sql:25-40``).  Returns the ids
+        and the buckets (step 5 rewrites the public cells of the same
+        objects).
         """
         staged = self._staged("DiaObject", chunk_ids)
         if staged is None:
-            return []
-        ids = staged.select("diaObjectId").distinct()
+            return [], []
+        staged_ids = [r[0] for r in staged.select("diaObjectId").collect()]
+        ids = self._ids_relation(staged_ids)
         buckets = self._buckets_of(ids, "diaObjectId")
         if not buckets:
-            return []
+            return [], []
         draft = self._drafts["DiaObject"]
         target = draft.read(self.spark)
         start_col, end_col = validity_columns(target.columns)
@@ -419,49 +429,47 @@ class Promoter:
             self._id_sorted(filled, "DiaObject"), OBJ_BUCKET, buckets
         )
         self.last_dml.extend(flush_observations())
-        return buckets
+        return staged_ids, buckets
 
     def _apply_updates(
         self, chunk_ids: list[int]
-    ) -> tuple[DataFrame | None, dict[str, list[int]]]:
-        """Step 3: expand -> latest-only -> per-table bucket-pruned merge.
+    ) -> tuple[list[int], dict[str, list[int]]]:
+        """Step 3: expand -> collect -> resolve on the driver ->
+        per-table bucket-pruned merge.
 
-        Each table's patch keys map to a handful of id-range buckets; the
-        MERGE reads and rewrites only those partitions.  Returns the
-        checkpointed latest updates (None when nothing is staged) and
-        each merged table's buckets, for step 5.
+        ``update_patches`` collects the batch's field rows once and
+        returns each updated table's patch as a local relation; its
+        keys map to a handful of id-range buckets, and the MERGE reads
+        and rewrites only those partitions.  Returns the patched
+        DiaObject ids and each merged table's buckets, for step 5.
         """
         raw = self._staged_rows(self.staging_updates, chunk_ids)
         if raw is None:
-            return None, {}
-        latest = latest_updates(expand_updates(raw)).localCheckpoint()
-        # The per-table merges are independent (distinct drafts, patch
-        # slices of the shared checkpointed `latest`) — submit them
-        # concurrently; observations resolve after the pool joins (each
-        # entry is stage-tagged, so attribution survives the
-        # interleave).
+            return [], {}
+        patches = update_patches(expand_updates(raw))
+        # The per-table merges are independent (distinct drafts and
+        # patches) — submit them concurrently; observations resolve
+        # after the pool joins (each entry is stage-tagged, so
+        # attribution survives the interleave).
         buckets: dict[str, list[int]] = {}
 
         def merge(t, key_cols):
-            buckets[t] = self._merge_one_table(t, key_cols, latest)
+            buckets[t] = self._merge_one_table(t, key_cols, patches[t])
 
         self._concurrent(
             (lambda t=t, kc=key_cols: merge(t, kc))
             for t, (key_cols, _fields) in TABLE_PATCHES.items()
+            if t in patches and t in self._drafts
         )
         self.last_dml.extend(flush_observations())
-        return latest, buckets
+        obj = patches.get("DiaObject")
+        ids = [r[0] for r in obj.select("diaObjectId").collect()] if obj is not None else []
+        return ids, buckets
 
-    def _merge_one_table(self, t: str, key_cols, latest: DataFrame) -> list[int]:
-        """Merge ``t``'s patch; returns the rewritten buckets (none
-        when the patch is empty — the bucket collect is the probe)."""
-        draft = self._drafts.get(t)
-        if draft is None:
-            return []
-        patch = table_patch(latest, t)
+    def _merge_one_table(self, t: str, key_cols, patch: DataFrame) -> list[int]:
+        """Merge ``t``'s local patch; returns the rewritten buckets."""
+        draft = self._drafts[t]
         buckets = self._buckets_of(patch, key_cols[0])
-        if not buckets:
-            return []
         target = draft.read(self.spark)
         touched = target.filter(F.col(OBJ_BUCKET).isin(buckets))
         # observe_as rides the write job below: per-MERGE scanned/
@@ -473,9 +481,7 @@ class Promoter:
 
     GEO_LEVEL = 4  # coarse cell for partitioning: at most 256 directories
 
-    def _update_public_snapshot(
-        self, chunk_ids: list[int], latest: DataFrame | None, buckets: list[int]
-    ) -> None:
+    def _update_public_snapshot(self, touched_ids: list[int], buckets: list[int]) -> None:
         """Step 5: public DiaObject = current rows only, without
         validityEndMjdTai, clustered by geo_point (D10/P3/P4).
 
@@ -496,8 +502,8 @@ class Promoter:
         columns (step 1's schema-drift rewrite).  Equivalence with the
         full recompute is pinned by test_pipeline.
 
-        ``latest`` and ``buckets`` come from steps 2-3: the checkpointed
-        latest updates and the DiaObject buckets the batch touched.
+        ``touched_ids`` and ``buckets`` come from steps 2-3: the
+        DiaObject ids the batch inserted or patched and their buckets.
         """
         if not self.internal["DiaObject"].exists():
             return
@@ -506,9 +512,7 @@ class Promoter:
             return
         if not buckets:
             return
-        self._update_public_snapshot_incremental(
-            self._touched_object_ids(chunk_ids, latest), buckets
-        )
+        self._update_public_snapshot_incremental(self._ids_relation(touched_ids), buckets)
 
     def _public_rows(self, versions: DataFrame) -> DataFrame:
         """The public rows of internal DiaObject ``versions``: the open
@@ -529,21 +533,6 @@ class Promoter:
             "geo_point"
         )
         self.public_diaobject.overwrite(clustered, partition_by=("geo_cell",))
-
-    def _touched_object_ids(
-        self, chunk_ids: list[int], latest: DataFrame | None
-    ) -> DataFrame:
-        """DiaObject ids this batch inserted or patched (batch-sized)."""
-        parts = []
-        staged = self._staged("DiaObject", chunk_ids)
-        if staged is not None:
-            parts.append(staged.select("diaObjectId"))
-        if latest is not None:
-            parts.append(table_patch(latest, "DiaObject").select("diaObjectId"))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.distinct()
 
     def _update_public_snapshot_incremental(
         self, touched_ids: DataFrame, buckets: list[int]

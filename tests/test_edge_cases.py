@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from dax_ppdb_spark.ops.latest import latest_only
 from dax_ppdb_spark.ops.merge import merge_patch, merge_upsert
-from dax_ppdb_spark.ops.updates import expand_updates, latest_updates
+from dax_ppdb_spark.ops.updates import expand_updates, update_patches
 from dax_ppdb_spark.ops.validity import fill_validity_end
 from dax_ppdb_spark.schema.registry import UPDATES_RAW
 
@@ -68,7 +68,7 @@ def test_expand_updates_empty(spark):
     raw = spark.createDataFrame([], UPDATES_RAW)
     expanded = expand_updates(raw)
     assert expanded.count() == 0
-    assert latest_updates(expanded).count() == 0
+    assert update_patches(expanded) == {}
 
 
 def test_expand_updates_unknown_type_dropped(spark):

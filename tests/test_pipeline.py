@@ -656,7 +656,8 @@ def _jobs_after(spark, job_id: int) -> list[tuple[int, str, str, frozenset]]:
 # (store -> upload -> stage -> promote).  It runs exactly this many;
 # with the ledger on Spark, emptiness probes and schema-inference
 # reads it ran 122.  Any job added back to the lifecycle trips it.
-CHUNK_JOB_CEILING = 41
+CHUNK_JOB_CEILING = 28
+APPLY_UPDATES_JOBS = 5
 
 
 def test_one_chunk_job_budget(spark, promoted, monkeypatch):
@@ -712,6 +713,11 @@ def test_one_chunk_job_budget(spark, promoted, monkeypatch):
     assert {j[2] for j in jobs} == {"chunk-3"}
     assert all("replicate" in j[3] for j in jobs)
     assert len(jobs) <= CHUNK_JOB_CEILING, len(jobs)
+    # step 3 collects the expanded updates once, then broadcasts the
+    # local patch and writes the merge of each updated table (DiaObject,
+    # DiaSource): 1 + 2 * 2 jobs
+    (step3,) = metrics.recent("apply_updates", kind="timer")
+    assert step3["jobs"] == APPLY_UPDATES_JOBS, step3
     # the chunk really went through every step
     pub = {r.diaObjectId: r.nDiaSources for r in promoter.public_diaobject.read(spark).collect()}
     assert pub == {10: 9, 20: 2, 30: 1}
