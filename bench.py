@@ -10,6 +10,13 @@ timings on a shared 32-thread JVM flagged two phantom 1.3-3.1x
 "regressions" in round 6 (latest_only, text_stats) that a same-day
 rerun contradicted; min-of-N is the standard noise floor for
 wall-clock microbenches.
+
+The detail file also splits each query's fastest repeat into layers:
+``build_s`` is the query call (plan construction, eager analysis, and
+any driver-side training, collect or lazy-checkpoint planning the
+operator does) and ``exec_s`` is the noop write of the returned
+DataFrame.  A row whose build dominates is a driver problem (plan
+size, py4j chatter, per-call training), not a shuffle-plan one.
 """
 
 from __future__ import annotations
@@ -176,16 +183,19 @@ def main() -> None:
     # cone_search_sorted benches the READ path against it.
     driver_queries.ensure_sky_sorted(spark, sf_dir)
     timings: dict[str, float] = {}
+    layers: dict[str, dict[str, float]] = {}
     for name in names:
         best = None
         for _ in range(repeat):
             t0 = time.time()
-            registry[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
+            df = registry[name](spark, sf_dir)
+            t1 = time.time()
+            df.write.mode("overwrite").format("noop").save()
+            t2 = time.time()
+            if best is None or t2 - t0 < best[0]:
+                best = (t2 - t0, t1 - t0, t2 - t1)
+        timings[name] = round(best[0], 3)
+        layers[name] = {"build_s": round(best[1], 4), "exec_s": round(best[2], 4)}
     total = round(sum(timings.values()), 3)
     # The driver captures only the tail of stdout; with 86 per-query
     # floats the full map outgrew that capture and BENCH_r06/r07 recorded
@@ -218,6 +228,7 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
+                "layers": layers,
                 "sf": sf,
                 "repeat": repeat,
                 "notes": (

@@ -1,4 +1,4 @@
-from .parquet_io import read_excluding, write_manifest, write_parquet  # noqa: F401
+from .parquet_io import write_manifest, write_parquet  # noqa: F401
 from .table import ParquetTable  # noqa: F401
 from .pg_copy import pg_copy_tuples, read_pg_copy, write_pg_copy  # noqa: F401
 from .bucketed import (  # noqa: F401

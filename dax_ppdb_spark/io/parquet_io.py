@@ -18,7 +18,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 MANIFEST_NAME = "manifest.json"
 MANIFEST_VERSION = 1
@@ -78,14 +78,6 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def read_excluding(
-    spark: SparkSession, path: str, exclude: tuple[str, ...] = ()
-) -> DataFrame:
-    """S6: parquet source with projection pushdown via drop."""
-    df = spark.read.parquet(path)
-    return df.drop(*[c for c in exclude if c in df.columns])
 
 
 def _sha256(path: str) -> str:

@@ -492,33 +492,3 @@ class ParquetTable:
             return
         for v in values:
             shutil.rmtree(os.path.join(d, f"{partition_col}={v}"), ignore_errors=True)
-
-
-def save_bucketed_table(
-    df: DataFrame,
-    name: str,
-    key: str,
-    buckets: int = 32,
-    single_file_buckets: bool = True,
-) -> None:
-    """Persist a catalog table hash-bucketed (and in-bucket sorted) on
-    its join key.
-
-    Bucketing is the co-located-join primitive for the big fact-to-fact
-    joins that broadcast can't cover: two tables bucketed the same way
-    on the same key join with NO exchange on either side — the shuffle
-    happened once, at write time, instead of on every query.  (The
-    range-bucketed internal tables in ``pipeline.promote`` serve point
-    MERGEs; this serves repeated large equi-joins, e.g. a permanent
-    sources-to-objects attribution table.)  Plan behavior is pinned by
-    ``tests/test_plans.py::test_bucketed_join_has_no_exchange``.
-
-    Thin single-key wrapper over :func:`dax_ppdb_spark.io.bucketed.
-    write_bucketed` — the full layout toolkit (multi-key, external
-    path, catalog introspection, bucket-pruned point lookup) lives
-    there.  ``single_file_buckets`` passes through: keep the default
-    unless one bucket exceeds a single write task's disk/memory.
-    """
-    from .bucketed import write_bucketed
-
-    write_bucketed(df, name, key, buckets, single_file_buckets=single_file_buckets)

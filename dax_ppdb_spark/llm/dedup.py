@@ -1273,11 +1273,15 @@ def duplicated_span_stats(
 # it, per-offset substring(txt, i, L) — whose O(i) per-call char scan
 # is quadratic per doc but with a constant so small it wins outright
 # on short docs; at/above it, the split-once char-array path whose
-# O(1)-positioned slices stay linear to MB-scale docs.  Measured
-# crossover ~1.5-2k chars on BOTH ascii and mixed-UTF-8 corpora
-# (constant 2M-char corpora, min-of-2 noop writes: at 1k chars
-# substring wins 0.69 vs 0.80 s; at 2k the array path wins 0.61 vs
-# 0.73 s; at 16k it wins 0.73 vs 5.59 s and keeps flat).
+# O(1)-positioned slices stay linear to MB-scale docs.  Measured at
+# a7170d3 on a 4-vCPU host, local[4], 5 alternating pairs at sf0.1,
+# where every document is shorter than the bound (44-577 chars; the
+# 10x corpus reaches 676): forcing the char-array lane on every row
+# moves `dup_substrings` from a median 3.55 s (IQR 0.95) to 4.96 s,
+# slower beyond the IQR in 4 of 5 pairs, and `substring_span_removal`
+# from 3.22 s (IQR 0.05) to 4.93 s, 5 of 5.  The round-14 measurement
+# on constant 2M-char corpora put the crossover at 1.5-2k chars (at
+# 16k chars the array lane took 0.73 s against 5.59 s and stayed flat).
 _CHAR_ARRAY_CUTOFF = 1024
 
 
@@ -1301,6 +1305,14 @@ def _char_window_fps(rel: DataFrame, min_len: int, keep_text: bool = False) -> D
     reason).  Both lanes emit the SAME window strings, so the md5
     fingerprints and every downstream row are bit-identical whichever
     lane a doc takes.
+
+    Cost law, measured at a7170d3 on a 4-vCPU host, local[4], min of 2
+    noop writes over 4 mixed-UTF-8 documents with ~20% duplicated mass
+    (200-char runs), ``min_len`` 30: as documents grow 16x from 12.5k
+    to 200k chars, ``duplicate_substring_spans`` takes 3.38 s -> 3.21 s
+    and ``remove_duplicate_substrings`` 2.58 s -> 2.40 s, so the
+    per-Mchar cost falls (67.7 -> 4.0 s and 51.5 -> 3.0 s) where a
+    quadratic build would grow it 16x.
 
     Plan-shape note: ``__ch`` is deliberately referenced more than
     once in the consuming projection (sequence bound + slice), so

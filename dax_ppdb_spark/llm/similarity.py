@@ -567,9 +567,13 @@ def _lloyd_local(X: "np.ndarray", n_clusters: int, iters: int) -> list[list[floa
 # Below this many training rows the Lloyd loop runs driver-local on
 # the collected sample: each distributed iteration is 2+ Spark jobs
 # re-executing the sample's lineage, pure scheduling overhead once the
-# sample fits in driver memory.  Same metadata-driven decision as
-# ops/graph.py's single-task union-find: the threshold is checked
-# against a MEASURED count, big samples keep the distributed loop.
+# sample fits in driver memory.  Big samples keep the distributed loop.
+# Measured at a7170d3 on a 4-vCPU host, local[4], 5 alternating pairs
+# of the `semdedup` row at sf0.1 (2,000 embeddings, 1,000-row sample;
+# both levels train here): driver lane median 1.11 s (IQR 0.09),
+# distributed lane 3.94 s, slower in 5 of 5 pairs.  sf0.01 (250-row
+# sample) and the 10x corpus (100k embeddings, 50k-row sample) also
+# take the driver lane.
 LOCAL_TRAIN_ROWS = 100_000
 
 
@@ -1520,7 +1524,11 @@ def _cache_model(index_root: str, tbl, cents, books=None) -> None:
 
 # Assigned query rows up to this count are collected to the driver by
 # the persisted-index probes (see :func:`_guarded_query_side`); a
-# bigger batch takes the distributed lane.
+# bigger batch takes the distributed lane.  Measured at a7170d3 on a
+# 4-vCPU host, local[4], 5 alternating pairs at sf0.1 (a 10-query
+# batch, as at every scale): `ann_index_pq` collect lane median 1.03 s
+# (IQR 0.03) vs distributed 1.40 s, slower in 5 of 5 pairs;
+# `ann_index_persisted` 0.93 s (IQR 0.10) vs 1.17 s, slower in 3 of 5.
 MAX_COLLECT_QUERIES = 8192
 
 

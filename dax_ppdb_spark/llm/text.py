@@ -339,6 +339,13 @@ def doc_fingerprint(text: Column) -> Column:
     return total % HASH_PRIME
 
 
+# Vocabularies up to this many distinct words train on the driver
+# (:func:`_bpe_learn_merges_local`); bigger ones run one Spark round
+# per merge batch.  Measured at a7170d3 on a 4-vCPU host, local[4], 5
+# alternating pairs at sf0.1 (5,000 documents, 31 distinct words; the
+# 10x corpus has 310): `bpe_merges` driver lane median 0.76 s (IQR
+# 0.05) vs 5.34 s for the Spark rounds, `bpe_merges_batched` 0.52 s
+# (IQR 0.35) vs 2.06 s, slower in 5 of 5 pairs each.
 BPE_LOCAL_VOCAB_ROWS = 100_000
 
 

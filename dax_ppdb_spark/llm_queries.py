@@ -3034,24 +3034,25 @@ def q_url_block_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Corpus size above which `semdedup_flat` routes to the two-level
 # quantizer: the flat lane's N*sqrt(N) assignment law is the worst
 # growth row in the 10x scale study (7.3x), so a naive caller must
-# not get it by default on a large corpus.  Pinned by a measured
-# same-box sweep (tools/semdedup_sweep.py, identical replicated
-# corpora, both lanes per size):
-#   N= 4000  flat  16.0s  two-level 18.0s
-#   N= 8000  flat  32.8s  two-level 35.5s
-#   N=16000  flat 137.8s  two-level 74.3s
-#   N=20000  flat 138.3s  two-level 88.2s
-# Two-level overtakes between 8k and 16k rows; 10k splits the gap
-# with margin before flat's blow-up.  Same exact/approx split shape
-# as column_histograms: small corpora keep the flat lane (simplest,
-# oracle-bit-exact at driver scales), large corpora get the
+# not get it by default on a large corpus.  Measured at a7170d3 on a
+# 4-vCPU host, local[4]: the sf0.1 embeddings replicated R-fold (ids
+# shifted, one coordinate nudged per replica), both lanes on the
+# grouped Arrow pair stage, median of 3 alternating noop writes:
+#   N= 2000  flat 1.31s  two-level 1.44s
+#   N= 4000  flat 1.58s  two-level 1.76s
+#   N= 8000  flat 2.57s  two-level 2.71s
+#   N=10000  flat 3.56s  two-level 3.68s
+#   N=12000  flat 5.44s  two-level 5.31s
+#   N=14000  flat 5.42s  two-level 4.02s
+#   N=16000  flat 5.99s  two-level 4.20s
+#   N=20000  flat 8.25s  two-level 6.14s
+# Flat is ahead up to 8k rows, the lanes tie within their spread at
+# 10k-12k, and two-level is ahead from 14k.  Same exact/approx split
+# shape as column_histograms: small corpora keep the flat lane
+# (simplest, oracle-bit-exact at driver scales), large corpora get the
 # O(N^(4/3)) tier — and the lazily-resolved ORACLE switches on the
 # same row count, so both lanes stay oracle-green.
-# The sweep passes no corpus_count, so these timings were taken on the
-# since-deleted re-scan pair shape (a broadcast cell-count filter
-# feeding a cell self-join), not on today's grouped Arrow pair stage;
-# the crossover has not been re-measured on the current shape.
-SEMDEDUP_FLAT_MAX_ROWS = 10_000
+SEMDEDUP_FLAT_MAX_ROWS = 12_000
 
 
 def _semdedup_flat_sql() -> str:
@@ -3998,16 +3999,6 @@ FROM deduped
 """
 
 
-# Row bound under which the audit capstone may localCheckpoint the
-# shared embeddings relation: the checkpoint lands on NON-reliable
-# executor-local disk, so it must provably fit (at ~0.5 KB/row for a
-# 64-dim double embedding + label this is ~25 GB) and the job must
-# tolerate its loss-on-executor-failure blast radius.  Above the bound
-# the two audit consumers re-scan the columnar source instead —
-# strictly safer, and only one extra parquet scan.
-_AUDIT_CHECKPOINT_ROWS = 50_000_000
-
-
 @register("audit_quarantine_curate", _audit_quarantine_curate_sql)
 def q_audit_quarantine_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capstone: the audit family wired into the curation chain as a
@@ -4048,18 +4039,12 @@ def q_audit_quarantine_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read_spread(spark, sf_dir, "documents")
     n_emb = table_rows_meta(sf_dir, "embeddings")
-    # Both embedding audits (kNN label noise, centroid outliers)
-    # consume the same (vec_id, label, v) relation; a lazy checkpoint
-    # materializes the scan once for the pair (the
-    # jaccard_prefix_pairs shared-scan pattern).  The checkpoint is
-    # corpus-sized and lives on NON-reliable executor-local disk, so
-    # it is gated on footer metadata like every other adaptive choice:
-    # above the bound the audits simply re-scan the source (columnar
-    # parquet reads twice beat one local-disk spill that may not fit
-    # and dies with any executor).
+    # Both embedding audits (kNN label noise, centroid outliers) scan
+    # the columnar source each.  Sharing one local checkpoint of it did
+    # not pay: 5 alternating pairs at sf0.1 (a7170d3, 4-vCPU host,
+    # local[4]) took a median 6.54 s with the checkpoint (IQR 0.69)
+    # and 5.88 s with the two scans.
     emb = _read_spread(spark, sf_dir, "embeddings")
-    if n_emb <= _AUDIT_CHECKPOINT_ROWS:
-        emb = emb.localCheckpoint(eager=False)
 
     # The outlier audit's coarse quantizer is a PERSISTED model (the
     # ann_index_persisted ensure-gate): the ~N/2-sample Lloyd training

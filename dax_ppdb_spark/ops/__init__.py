@@ -13,7 +13,7 @@ from .constraints import (  # noqa: F401
     enforce_constraints,
 )
 from .graph import connected_components  # noqa: F401
-from .latest import latest_only, latest_only_agg, topk_per_key  # noqa: F401
+from .latest import latest_only, topk_per_key  # noqa: F401
 from .merge import merge_patch, merge_upsert  # noqa: F401
 from .updates import (  # noqa: F401
     assert_update_targets,

@@ -167,12 +167,17 @@ def _driver_components(spark, pdf, node_type: str) -> DataFrame:
     )
 
 
+# Deduped edge counts up to this bound label components on the driver
+# (:func:`_driver_components`); bigger graphs run the star rounds.  The
+# measurements that pin it are in :func:`connected_components`.
+LOCAL_COMPONENT_EDGES = 1_000_000
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 30,
-    local_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Component assignment for every node appearing in ``edges``.
 
@@ -183,17 +188,20 @@ def connected_components(
 
     Hybrid execution: the deduped edge count (the one-job fingerprint
     probe the star loop needs anyway) picks the strategy — at or below
-    ``local_threshold`` edges the materialized blocks collect to the
-    driver and a union-find labels them there
+    :data:`LOCAL_COMPONENT_EDGES` the materialized blocks collect to
+    the driver and a union-find labels them there
     (:func:`_driver_components`); above it, the large-star/small-star
     rounds.  Both produce identical output.
-    The 1M default is pinned by a measured sweep
-    (tools/graph_bench.py, BASELINE.md "connected_components
-    local-vs-star sweep"): local wins 4-10x up to 1M edges and the
-    time crossover extrapolates to ~8-10M, but a 1M-edge task's
-    union-find dict is already ~200-400 MB of Python heap (now on the
-    DRIVER, plus the ~16 MB probe collect), so the pin leaves memory
-    headroom rather than chasing the last measured factor.
+
+    Measured at a7170d3 on a 4-vCPU host, local[4], min of 2 runs on
+    synthetic graphs of 8-node chains plus one 1,000-link chain: the
+    driver lane takes 1.56 s at 10k edges (star rounds 18.49 s), 2.04 s
+    at 100k (19.93 s) and 14.30 s at 1M (78.13 s).  On the registry's
+    ``dedup_clusters`` at sf0.1, 5 alternating pairs: driver lane
+    median 5.98 s (IQR 1.55), star rounds 8.29 s, slower in 5 of 5.
+    The bound stays at 1M although the star rounds are still 5x slower
+    there: a 1M-edge union-find dict is already some 200-400 MB of
+    Python heap on the driver.
 
     Deterministic: output depends only on the edge *set*.  Raises if
     the star rounds have not converged after ``max_iterations`` (at
@@ -246,7 +254,7 @@ def connected_components(
         return cur.select(
             F.col("src").alias("node"), F.col("dst").alias("component")
         )
-    if cur_fp[0] <= local_threshold:
+    if cur_fp[0] <= LOCAL_COMPONENT_EDGES:
         # The fingerprint already materialized the checkpoint blocks,
         # so this collect is a cheap cached read (~16 MB of (src, dst)
         # pairs at the 1M bound — model-sized, like every trainer

@@ -40,36 +40,6 @@ def latest_only(
     return df.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) == 1).drop(rn)
 
 
-def latest_only_agg(
-    df: DataFrame,
-    partition_cols: Sequence[str],
-    order_cols: Sequence[str],
-) -> DataFrame:
-    """``max_by`` variant of :func:`latest_only` — same winner when the
-    ordering tuple is unique per key (it is: ``update_order``
-    disambiguates), but expressed as an aggregation, so Spark applies
-    map-side partial aggregation: each input partition pre-reduces to
-    one candidate row per key before the shuffle, moving O(keys)
-    instead of O(rows).  Prefer this at scale; ``latest_only`` remains
-    the literal reference-parity form (and the one to use if exact
-    duplicate ordering tuples need a pinned winner).
-
-    The whole winning row rides one packed struct so every output
-    column comes from the same row (per-column ``max_by`` could mix
-    rows on ties).
-    """
-    partition_cols = list(partition_cols)
-    others = [c for c in df.columns if c not in partition_cols]
-    ordk = F.struct(*[F.col(c) for c in order_cols])
-    winner = F.max_by(F.struct(*[F.col(c) for c in others]), ordk).alias("__w")
-    return (
-        df.groupBy(*partition_cols)
-        .agg(winner)
-        .select(*partition_cols, *[F.col(f"__w.{c}").alias(c) for c in others])
-        .select(*df.columns)
-    )
-
-
 def topk_per_key(
     df: DataFrame,
     partition_cols: Sequence[str],

@@ -45,6 +45,7 @@ and a merge broadcasts the patch without re-planning it.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 import pyarrow as pa
@@ -173,7 +174,9 @@ def update_patches(expanded: DataFrame) -> dict[str, DataFrame]:
       tuple: ``<field>`` is the max value in byte order (Spark's string
       order; NULLs ignored) and ``<field>__present`` says the field has
       a row.  Two spellings of one id (``"01"``, ``"1"``) are two
-      record keys but one patch row.
+      record keys but one patch row.  A row with a NULL key column (a
+      payload without the id, or one that does not parse) is dropped:
+      it could match no target row.
 
     Values stay strings: each pivot is planned as a local relation
     (``LocalTableScan``) and the patch is a projection of Spark casts
@@ -200,6 +203,8 @@ def update_patches(expanded: DataFrame) -> dict[str, DataFrame]:
                 pc.is_in(newest["field_name"], pa.array(list(fields))),
             )
         )
+        keyed = [pc.is_valid(pc.list_element(mine["record_id"], i)) for i in range(len(key_cols))]
+        mine = mine.filter(functools.reduce(pc.and_, keyed))
         if mine.num_rows == 0:
             continue
         cols = {k: pc.list_element(mine["record_id"], i) for i, k in enumerate(key_cols)}

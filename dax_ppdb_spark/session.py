@@ -108,8 +108,3 @@ def local_df(spark: SparkSession, rows: list, schema: StructType | str) -> DataF
     else:
         table = to_arrow_schema(schema).empty_table()
     return spark.createDataFrame(table, schema)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict:
-    """Read the driver-provided parquet tables as DataFrames."""
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}

@@ -7,7 +7,15 @@ from __future__ import annotations
 
 import random
 
+from dax_ppdb_spark.ops import graph
 from dax_ppdb_spark.ops.graph import connected_components
+
+
+def _cc(monkeypatch, df, local_edges):
+    """``connected_components`` with the driver-lane bound set to
+    ``local_edges`` (0 forces the star rounds)."""
+    monkeypatch.setattr(graph, "LOCAL_COMPONENT_EDGES", local_edges)
+    return connected_components(df)
 
 
 def _union_find(edges):
@@ -62,10 +70,10 @@ def test_connected_components_deterministic_under_shuffle(spark):
     assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7, 9: 7}
 
 
-def test_star_rounds_match_local_union_find(spark):
+def test_star_rounds_match_local_union_find(spark, monkeypatch):
     """Both execution strategies — the single-task union-find fast
     path (default for small graphs) and the large/small-star rounds
-    (local_threshold=0 forces them) — must produce identical
+    (``LOCAL_COMPONENT_EDGES`` = 0 forces them) — must produce identical
     components on the same adversarial graph."""
     random.seed(11)
     edges = [(i, i + 1) for i in range(80)]
@@ -77,12 +85,12 @@ def test_star_rounds_match_local_union_find(spark):
     local = {r["node"]: r["component"] for r in connected_components(df).collect()}
     stars = {
         r["node"]: r["component"]
-        for r in connected_components(df, local_threshold=0).collect()
+        for r in _cc(monkeypatch, df, 0).collect()
     }
     assert local == stars == _union_find(edges)
 
 
-def test_connected_components_string_ids(spark):
+def test_connected_components_string_ids(spark, monkeypatch):
     """Both strategies must handle non-integer node ids (content-hash
     ids are common in dedup graphs); output schema mirrors the input
     type."""
@@ -91,13 +99,13 @@ def test_connected_components_string_ids(spark):
     local = {r["node"]: r["component"] for r in connected_components(df).collect()}
     stars = {
         r["node"]: r["component"]
-        for r in connected_components(df, local_threshold=0).collect()
+        for r in _cc(monkeypatch, df, 0).collect()
     }
     expect = {"h1": "h1", "h2": "h1", "h3": "h1", "zy": "zy", "zz": "zy"}
     assert local == stars == expect
 
 
-def test_interleaved_cc_calls_leave_session_conf_untouched(spark):
+def test_interleaved_cc_calls_leave_session_conf_untouched(spark, monkeypatch):
     """The star loop's narrowed shuffle sizing must live in a CLONED
     session: two interleaved calls with different thresholds (one
     narrowed star loop, one local) never mutate the caller's session
@@ -110,9 +118,9 @@ def test_interleaved_cc_calls_leave_session_conf_untouched(spark):
     )
     e2 = spark.createDataFrame([(100, 101), (101, 102)], "src long, dst long")
     # interleave: build both lazy results before evaluating either
-    r1 = connected_components(e1, local_threshold=0)  # star path, narrowed
+    r1 = _cc(monkeypatch, e1, 0)  # star path, narrowed
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    r2 = connected_components(e2)  # local path
+    r2 = _cc(monkeypatch, e2, 1 << 40)  # local path
     got2 = {r["node"]: r["component"] for r in r2.collect()}
     got1 = {r["node"]: r["component"] for r in r1.collect()}
     assert got1 == {i: 0 for i in range(51)}
@@ -130,7 +138,7 @@ def test_interleaved_cc_calls_leave_session_conf_untouched(spark):
     assert leftovers == []
 
 
-def test_probe_boundary_picks_the_same_lanes(spark):
+def test_probe_boundary_picks_the_same_lanes(spark, monkeypatch):
     """The limit(threshold+1) probe must reproduce the old count-based
     lane decision EXACTLY at the boundary: threshold == n_edges takes
     the driver lane, threshold == n_edges - 1 takes the star loop, and
@@ -141,17 +149,17 @@ def test_probe_boundary_picks_the_same_lanes(spark):
     expect = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     at = {
         r.node: r.component
-        for r in connected_components(df, local_threshold=3).collect()
+        for r in _cc(monkeypatch, df, 3).collect()
     }
     below = {
         r.node: r.component
-        for r in connected_components(df, local_threshold=2).collect()
+        for r in _cc(monkeypatch, df, 2).collect()
     }
     assert at == below == expect
 
 
 # --- property: both strategies equal a reference union-find on random
-# graphs (round 12 — the local_threshold re-pin to 1M makes path
+# graphs (round 12 — the driver-lane bound's re-pin to 1M makes path
 # equivalence THE invariant: whichever side of the threshold a corpus
 # lands on, the component map must be identical) -----------------------
 
@@ -191,18 +199,18 @@ def _ref_components(edges):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.lists(edge, min_size=1, max_size=40))
-def test_both_paths_match_reference_union_find(spark, edges):
+def test_both_paths_match_reference_union_find(spark, monkeypatch, edges):
     df = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "src long, dst long"
     )
     expect = _ref_components(edges)
     got_local = {
         r.node: r.component
-        for r in connected_components(df, local_threshold=1 << 40).collect()
+        for r in _cc(monkeypatch, df, 1 << 40).collect()
     }
     got_star = {
         r.node: r.component
-        for r in connected_components(df, local_threshold=0).collect()
+        for r in _cc(monkeypatch, df, 0).collect()
     }
     assert got_local == expect
     assert got_star == expect
@@ -216,10 +224,7 @@ def test_driver_lane_handles_coerced_src_dst_types(spark):
     df = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "src int, dst long"
     )
-    got = {
-        r.node: r.component
-        for r in connected_components(df, local_threshold=1 << 40).collect()
-    }
+    got = {r.node: r.component for r in connected_components(df).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
@@ -233,7 +238,7 @@ def test_driver_lane_is_a_local_relation_without_arrow_conf(spark):
     spark.conf.set(key, "false")
     try:
         df = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src long, dst long")
-        cc = connected_components(df, local_threshold=1 << 40)
+        cc = connected_components(df)
         plan = cc._jdf.queryExecution().executedPlan().toString()
         got = {r.node: r.component for r in cc.collect()}
     finally:

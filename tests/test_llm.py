@@ -810,6 +810,7 @@ def test_semdedup_flat_default_swaps_to_two_level(spark, monkeypatch):
     from dax_ppdb_spark import driver_queries
 
     sf = "/root/testdata/sf0.001"
+    bound = lq.SEMDEDUP_FLAT_MAX_ROWS
     monkeypatch.setattr(lq, "SEMDEDUP_FLAT_MAX_ROWS", 1)
     monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", sf)
     qs = driver_queries.all_queries()
@@ -819,7 +820,7 @@ def test_semdedup_flat_default_swaps_to_two_level(spark, monkeypatch):
     assert flat.exceptAll(two).isEmpty() and two.exceptAll(flat).isEmpty()
     assert lq._semdedup_flat_sql() == lq._semdedup_sql()
     # below the bound the flat lane (and its flat oracle) stay put
-    monkeypatch.setattr(lq, "SEMDEDUP_FLAT_MAX_ROWS", 10_000)
+    monkeypatch.setattr(lq, "SEMDEDUP_FLAT_MAX_ROWS", bound)
     assert qs["semdedup_flat"](spark, sf).columns == ["vec_a", "vec_b", "cosine"]
     assert lq._semdedup_flat_sql() != lq._semdedup_sql()
 

@@ -196,7 +196,8 @@ def test_exactsubstr_multibyte_chars(spark, data, min_len):
     """Both ExactSubstr operators stay code-point exact on multi-byte
     UTF-8 (2-byte é, 4-byte 𝄞): offsets/lengths count characters, the
     rebuild is char-lossless outside cut spans — the long/non-ASCII
-    hardening's semantic pin (cost pin: tools/substr_longdoc_bench)."""
+    hardening's semantic pin (its cost law is quoted in
+    ``_char_window_fps``' docstring)."""
     from dax_ppdb_spark.llm.dedup import (
         duplicate_substring_spans,
         remove_duplicate_substrings,

@@ -847,3 +847,49 @@ def test_schema_drift_in_step_1_rewrites_with_union_schema(spark, tmp_path):
         (20, 100.0, None),
     ]
     assert _orphan_versions(root) == []
+
+
+def _promote_one_chunk_with_updates(spark, root, updates):
+    """Store, stage and promote one chunk carrying ``updates``; return
+    the internal DiaObject and DiaSource rows and the public rows."""
+    promoter = Promoter(spark, root)
+    c1 = store_chunk(
+        spark,
+        root + "/export",
+        1,
+        {
+            "DiaObject": _obj(
+                spark,
+                [(10, 100.0, None, 45.0, -30.0, 1), (20, 100.0, None, 46.0, -31.0, 1)],
+            ),
+            "DiaSource": _src(spark, [(1001, 10, None, 45.0, -30.0, 100.0, None, None)]),
+        },
+        updates=_updates(spark, updates),
+        ledger=promoter.ledger,
+    )
+    promoter.stage_chunk_dir(c1, 1)
+    assert promoter.promote() == [1]
+    return tuple(
+        sorted(t.read(spark).drop("obj_bucket").collect())
+        for t in (
+            promoter.internal["DiaObject"],
+            promoter.internal["DiaSource"],
+            promoter.public_diaobject,
+        )
+    )
+
+
+def test_promote_skips_updates_without_a_record_key(spark, tmp_path):
+    """An update whose payload carries no ``diaObjectId`` (an empty
+    object, or JSON that does not parse) names no record: promote
+    succeeds and applies only the valid updates, exactly as if the two
+    bad records were never staged."""
+    valid = (T0, 2, "update_ndiasources", json.dumps({"diaObjectId": 10, "nDiaSources": 9}))
+    bad = [
+        (T0, 0, "update_ndiasources", "{}"),
+        (T0, 1, "update_ndiasources", '{"diaObjectId": 10, "nDiaSources"'),
+    ]
+    got = _promote_one_chunk_with_updates(spark, str(tmp_path / "bad"), bad + [valid])
+    want = _promote_one_chunk_with_updates(spark, str(tmp_path / "clean"), [valid])
+    assert got == want
+    assert {r.diaObjectId: r.nDiaSources for r in want[0]}[10] == 9

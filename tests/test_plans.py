@@ -225,12 +225,12 @@ def test_bucketed_join_has_no_exchange(spark):
     """Two tables bucketed on the join key must sort-merge join with
     zero Exchange nodes — the write-once-shuffle-never contract that
     makes repeated fact-to-fact joins viable at 100 TB."""
-    from dax_ppdb_spark.io.table import save_bucketed_table
+    from dax_ppdb_spark.io.bucketed import write_bucketed
 
     a = spark.range(0, 10_000).selectExpr("id AS k", "id * 2 AS va")
     b = spark.range(0, 10_000).selectExpr("id AS k", "id * 3 AS vb")
-    save_bucketed_table(a, "t_bucket_a", "k", buckets=8)
-    save_bucketed_table(b, "t_bucket_b", "k", buckets=8)
+    write_bucketed(a, "t_bucket_a", "k", 8)
+    write_bucketed(b, "t_bucket_b", "k", 8)
     try:
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

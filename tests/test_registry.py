@@ -55,3 +55,24 @@ def test_no_session_conf_mutation_in_query_bodies():
     # session named anything but `spark`) is out of scope here by
     # design — the pin targets the shared handle the driver passes in
     assert not offenders, offenders
+
+
+def test_cited_tools_exist():
+    """Every ``tools/<name>.py`` that the code, the tests, the Makefile,
+    README.md or COVERAGE.md cite is a file in ``tools/``: a retired
+    tool must take its citations with it.  The historical records
+    (BASELINE.md, the round reports, CHANGES.md, ROADMAP.md) keep the
+    names they had when written and are not scanned."""
+    import pathlib
+    import re
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    sources = [*(repo / "dax_ppdb_spark").rglob("*.py"), *(repo / "tests").rglob("*.py")]
+    sources += [repo / n for n in ("Makefile", "README.md", "COVERAGE.md")]
+    missing = sorted(
+        (str(p.relative_to(repo)), name)
+        for p in sources
+        for name in set(re.findall(r"tools/(\w+)\.py", p.read_text()))
+        if not (repo / "tools" / f"{name}.py").is_file()
+    )
+    assert not missing, missing
