@@ -11,8 +11,10 @@ names the live version — readers resolve the pointer then read one
 immutable directory, so swap is one small-file replace (the same
 pointer-commit idea as Delta's ``_delta_log``, minus the log).  On a
 real object store the pointer write is the only operation that needs
-read-after-write consistency.  Chunk-partitioned tables write with
-``partitionBy`` so DELETE-by-chunk is partition pruning, not a rewrite.
+read-after-write consistency.  Chunk-partitioned tables keep one
+directory per chunk (:meth:`ParquetTable.link_partition` hardlinks a
+chunk's files into it), so DELETE-by-chunk is a partition drop, not a
+rewrite.
 
 Every versioned write goes through one lifecycle: :meth:`ParquetTable.
 draft` opens an uncommitted version (a :class:`Draft`: hardlinks of
@@ -39,6 +41,7 @@ version still raises exactly as before.
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 import shutil
@@ -225,7 +228,7 @@ class ParquetTable:
     commit.  The lock is ``flock`` on a sibling file — right for the
     local/POSIX filesystems this runs on; an object-store deployment
     swaps the CAS for a conditional PUT (same contract, the pointer
-    write is the only operation needing it).  ``append`` and
+    write is the only operation needing it).  ``link_partition`` and
     ``delete_partitions`` change the current version in place: the
     single-writer staging lane, outside the draft lifecycle.
     """
@@ -380,20 +383,6 @@ class ParquetTable:
             raise FileNotFoundError(f"table has no committed version: {self.path}")
         return spark.read.parquet(os.path.join(d, name))
 
-    def append(self, df: DataFrame, partition_by: tuple[str, ...] = ()) -> None:
-        """S7-style append into the current version directory.
-
-        NOT atomic for readers: files land in the live version dir, so
-        a concurrent scan can list a partial batch.  Right for the
-        single-writer staging tables it serves; use
-        :meth:`append_commit` when readers need batch atomicity.
-        """
-        d = self.data_dir()
-        if d is None:
-            self.overwrite(df, partition_by)
-            return
-        _write_files(df, d, partition_by, "append")
-
     def append_commit(self, df: DataFrame, partition_by: tuple[str, ...] = ()) -> None:
         """Atomic append: the batch lands in a draft of the current
         version and commits with it.  Readers see the old generation
@@ -492,3 +481,34 @@ class ParquetTable:
             return
         for v in values:
             shutil.rmtree(os.path.join(d, f"{partition_col}={v}"), ignore_errors=True)
+
+    def link_partition(self, partition_col: str, value, files: list[str]) -> None:
+        """Replace partition ``partition_col=value`` of the current
+        version with hardlinks of ``files`` (O(file count), zero bytes
+        copied; a copy where the filesystem refuses the link across
+        devices).  The partition is built aside and renamed in, so
+        linking the same files twice leaves it as linking them once;
+        with no ``files`` it is dropped.  A table with no version gets
+        an empty one first.  Files that carry ``partition_col`` as a
+        data column read with the directory's value."""
+        if self.data_dir() is None:
+            with self.draft(empty=True):
+                pass
+        d = self.data_dir()
+        part = os.path.join(d, f"{partition_col}={value}")
+        tmp = os.path.join(d, f"_tmp{uuid.uuid4().hex}")
+        os.makedirs(tmp)
+        try:
+            for f in files:
+                dest = os.path.join(tmp, os.path.basename(f))
+                try:
+                    os.link(f, dest)
+                except OSError as e:
+                    if e.errno != errno.EXDEV:
+                        raise
+                    shutil.copy2(f, dest)
+            shutil.rmtree(part, ignore_errors=True)
+            if files:
+                os.rename(tmp, part)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)

@@ -54,8 +54,9 @@ def fill_validity_end(
 ) -> DataFrame:
     """W2/J4/P8: close open validity intervals from the next version's start.
 
-    ``staged_ids`` (any DataFrame containing ``id_col``) prunes the
-    recompute to touched objects; pass None to process the whole table.
+    ``staged_ids`` (any DataFrame containing ``id_col``, duplicates
+    allowed) prunes the recompute to touched objects; pass None to
+    process the whole table.
     ``tiebreak_cols`` extend the window ordering when ``start_col``
     alone is not unique per object (the reference's PK guarantees
     uniqueness; generic inputs may not).  Column order of ``target``
@@ -66,7 +67,9 @@ def fill_validity_end(
     with ``metrics.flush_observations``.
     """
     if staged_ids is not None:
-        ids = F.broadcast(staged_ids.select(id_col).distinct())
+        # no distinct: a semi or anti join keeps the same target rows
+        # whether or not the id side repeats an id
+        ids = F.broadcast(staged_ids.select(id_col))
         touched = target.join(ids, id_col, "left_semi").withColumn(
             "__touched", F.lit(True)
         )

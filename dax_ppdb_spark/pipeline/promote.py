@@ -6,15 +6,22 @@ ordered steps with cleanup in ``finally``:
 
 1. open one draft per internal table (an uncommitted version,
    ``ParquetTable.draft``) and append the staging rows for the chunk
-   ids to it, computing ``geo_point`` (S10/P10),
-2. fill DiaObject validity ends, semi-join-pruned to staged objects
-   (W2/P8/J4),
+   ids to it, computing ``geo_point`` (S10/P10); DiaObject's rows are
+   held back for step 3 once internal has a version of the same
+   columns,
+2. collect the staged DiaObject ids, whose buckets the validity fill
+   (W2/P8/J4) closes open intervals in,
 3. apply retroactive updates (``bigquery/updates/updates_manager.py:
    106-150``): one Spark projection expands the batch's update events
    into field rows and one job collects them; last-writer-wins and the
    per-table pivot run on the driver, as the reference explodes its
    updates in Python (``:152-179``), and each table's patch, a local
-   relation, is broadcast into a bucket-pruned MERGE,
+   relation, is broadcast into a bucket-pruned MERGE.  DiaObject's
+   buckets (the staged ids' and the patch keys') are rewritten once,
+   as ``merge_patch(fill_validity_end(touched ∪ staged))`` — the
+   reference's insert, fill and MERGE in one write.  The first
+   promotion and a batch whose DiaObject columns drift append in step
+   1 and rewrite the staged ids' buckets with the fill in step 2,
 4. commit the drafts: one CAS pointer flip per internal table (D9),
 5. re-materialize the public latest snapshot, clustered by geo_point
    (D10),
@@ -29,7 +36,8 @@ Scale notes — every step is O(batch), never O(table):
 
 - staging tables are partitioned by ``apdb_replica_chunk`` so step 1
   reads only the promoted chunks (partition pruning) and step 6 is a
-  metadata-only partition drop;
+  metadata-only partition drop; staging a chunk is O(files) with no
+  byte copied: each partition is the uploaded files, hardlinked;
 - step 1's draft hardlinks internal's current version (zero bytes
   copied) and appends just the staged rows, like the reference's
   CLONE + INSERT-SELECT (``chunk_promoter.py:199-227``).  The
@@ -59,7 +67,8 @@ Scale notes — every step is O(batch), never O(table):
   relations (``session.local_df``), never re-planned: which chunks
   have staged rows comes from the ``apdb_replica_chunk=<id>``
   partition directories (no job); step 2 collects the staged
-  DiaObject ids and step 3 the expanded updates, one job each; the
+  DiaObject ids and step 3 the expanded updates, one job each, and
+  step 5 dedupes the touched versions' cells on the driver; the
   buckets of either, and the emptiness of a patch, are read off those
   local relations with no job; and steps 2-3 hand step 5 the buckets
   and the touched DiaObject ids they already hold.
@@ -112,6 +121,16 @@ BUCKET_KEYS = {
 }
 
 
+def _rows_files(d: str) -> list[str]:
+    """The data files of a written directory (Spark's reader skips
+    ``_``/``.`` names) that hold at least one row."""
+    import pyarrow.parquet as pq
+
+    names = sorted(n for n in os.listdir(d) if not n.startswith(("_", ".")))
+    paths = [os.path.join(d, n) for n in names]
+    return [p for p in paths if os.path.isfile(p) and pq.read_metadata(p).num_rows > 0]
+
+
 class Promoter:
     def __init__(
         self,
@@ -147,6 +166,10 @@ class Promoter:
         # The uncommitted internal versions of the running promote(),
         # by table: opened in step 1, committed in step 4.
         self._drafts: dict[str, Draft] = {}
+        # DiaObject's staged rows, held back by step 1 for step 3's
+        # one rewrite, and step 2's (ids, buckets) to fill them over.
+        self._new_objects: DataFrame | None = None
+        self._object_fill: tuple[DataFrame, list[int]] | None = None
         self.public_diaobject = ParquetTable(os.path.join(root, "public", "DiaObject"))
         self.ledger = Ledger(spark, os.path.join(root, "ledger"))
 
@@ -194,24 +217,24 @@ class Promoter:
         """Land k exported chunks into the staging tables and flip all
         their ledger rows to STAGED in ONE event-log commit
         (``ledger.update_chunks``) — the same batching rule promotion
-        applies at its PROMOTED transition; per-chunk commits in a
-        loop were the one remaining O(k)-commit stager path.  Each
-        exported table is read with its footer schema (no inference
-        job)."""
+        applies at its PROMOTED transition.
+
+        Each exported table's data files become the staging table's
+        ``apdb_replica_chunk=<id>`` partition by hardlink
+        (``ParquetTable.link_partition``): no Spark job, no byte
+        copied.  The partition is replaced, so staging a chunk again
+        (a retry after a crash before the ledger commit) stages it
+        once.  Files whose footer says 0 rows are left out, so an
+        empty table stages no partition, as a Spark write of it would.
+        """
         if not chunks:
             return
-        for chunk_dir, _ in chunks:
-            for t in DIA_TABLES:
-                path = os.path.join(chunk_dir, t)
+        tables = {**self.staging, "updates": self.staging_updates}
+        for chunk_dir, cid in chunks:
+            for name, table in tables.items():
+                path = os.path.join(chunk_dir, name)
                 if os.path.exists(path):
-                    self.staging[t].append(
-                        read_dir(self.spark, path), partition_by=(CHUNK_COLUMN,)
-                    )
-            upd = os.path.join(chunk_dir, "updates")
-            if os.path.exists(upd):
-                self.staging_updates.append(
-                    read_dir(self.spark, upd), partition_by=(CHUNK_COLUMN,)
-                )
+                    table.link_partition(CHUNK_COLUMN, cid, _rows_files(path))
         self.ledger.update_chunks(
             [cid for _, cid in chunks], status=ChunkStatus.STAGED
         )
@@ -369,7 +392,13 @@ class Promoter:
         INTO ... SELECT): the draft is hardlinks (O(files)), the insert
         writes one batch — promotion IO is O(batch), never O(table).
         The three tables' copies are independent jobs, submitted
-        concurrently (:meth:`_concurrent`)."""
+        concurrently (:meth:`_concurrent`).  DiaObject's staged rows
+        are kept as a DataFrame when internal has a version of the same
+        columns: step 3 writes them with the one rewrite of their
+        buckets.  DiaSource and DiaForcedSource keep the append: their
+        MERGE rewrites only the patch's buckets, and rewriting whole
+        buckets to add a batch's rows would cost more IO at production
+        bucket sizes."""
         self._concurrent(
             (lambda t=t: self._copy_one_table(t, chunk_ids)) for t in DIA_TABLES
         )
@@ -382,8 +411,14 @@ class Promoter:
         if staged is None:
             return
         add = self._with_bucket(with_geo_point(staged.drop(CHUNK_COLUMN)), t)
-        if d.base is None or set(add.columns) == set(d.read(self.spark).columns):
+        if d.base is None:
             d.append(self._id_sorted(add, t), partition_by=(OBJ_BUCKET,))
+        elif set(add.columns) == set(d.read(self.spark).columns):
+            if t == "DiaObject":
+                # written by step 3's one rewrite of the touched buckets
+                self._new_objects = add
+            else:
+                d.append(self._id_sorted(add, t), partition_by=(OBJ_BUCKET,))
         else:
             # Schema drift (new/dropped columns in a batch): rewrite
             # every bucket with the union schema — rare by design.
@@ -402,9 +437,10 @@ class Promoter:
         buckets; only those partitions are read (partition-pruned
         scan) and rewritten (``replace_partitions`` hardlinks the
         rest), matching the reference MERGE's touched-rows-only IO
-        (``fill_diaobject_validity_end.sql:25-40``).  Returns the ids
-        and the buckets (step 5 rewrites the public cells of the same
-        objects).
+        (``fill_diaobject_validity_end.sql:25-40``).  When step 1 held
+        the staged rows back, the fill is left to step 3's rewrite of
+        the same buckets.  Returns the ids and the buckets (step 5
+        rewrites the public cells of the same objects).
         """
         staged = self._staged("DiaObject", chunk_ids)
         if staged is None:
@@ -414,22 +450,27 @@ class Promoter:
         buckets = self._buckets_of(ids, "diaObjectId")
         if not buckets:
             return [], []
+        if self._new_objects is not None:
+            self._object_fill = (ids, buckets)
+            return staged_ids, buckets
         draft = self._drafts["DiaObject"]
-        target = draft.read(self.spark)
-        start_col, end_col = validity_columns(target.columns)
-        touched = target.filter(F.col(OBJ_BUCKET).isin(buckets))
-        filled = fill_validity_end(
-            touched,
+        touched = draft.read(self.spark).filter(F.col(OBJ_BUCKET).isin(buckets))
+        draft.replace_partitions(
+            self._id_sorted(self._filled(touched, ids), "DiaObject"), OBJ_BUCKET, buckets
+        )
+        self.last_dml.extend(flush_observations())
+        return staged_ids, buckets
+
+    def _filled(self, objects: DataFrame, ids: DataFrame) -> DataFrame:
+        """``objects`` with the open intervals of ``ids`` closed."""
+        start_col, end_col = validity_columns(objects.columns)
+        return fill_validity_end(
+            objects,
             ids,
             start_col=start_col,
             end_col=end_col,
             observe_as="fill_validity_end_DiaObject",
         )
-        draft.replace_partitions(
-            self._id_sorted(filled, "DiaObject"), OBJ_BUCKET, buckets
-        )
-        self.last_dml.extend(flush_observations())
-        return staged_ids, buckets
 
     def _apply_updates(
         self, chunk_ids: list[int]
@@ -440,13 +481,15 @@ class Promoter:
         ``update_patches`` collects the batch's field rows once and
         returns each updated table's patch as a local relation; its
         keys map to a handful of id-range buckets, and the MERGE reads
-        and rewrites only those partitions.  Returns the patched
-        DiaObject ids and each merged table's buckets, for step 5.
+        and rewrites only those partitions.  DiaObject's staged rows,
+        when step 1 held them back, land in the same rewrite: its
+        buckets are the staged ids' and the patch keys', written once
+        as ``merge_patch(fill_validity_end(touched ∪ staged))``.
+        Returns the patched DiaObject ids and each rewritten table's
+        buckets, for step 5.
         """
         raw = self._staged_rows(self.staging_updates, chunk_ids)
-        if raw is None:
-            return [], {}
-        patches = update_patches(expand_updates(raw))
+        patches = update_patches(expand_updates(raw)) if raw is not None else {}
         # The per-table merges are independent (distinct drafts and
         # patches) — submit them concurrently; observations resolve
         # after the pool joins (each entry is stage-tagged, so
@@ -454,29 +497,39 @@ class Promoter:
         buckets: dict[str, list[int]] = {}
 
         def merge(t, key_cols):
-            buckets[t] = self._merge_one_table(t, key_cols, patches[t])
+            buckets[t] = self._merge_one_table(t, key_cols, patches.get(t))
 
         self._concurrent(
             (lambda t=t, kc=key_cols: merge(t, kc))
             for t, (key_cols, _fields) in TABLE_PATCHES.items()
-            if t in patches and t in self._drafts
+            if t in self._drafts
+            and (t in patches or (t == "DiaObject" and self._object_fill is not None))
         )
         self.last_dml.extend(flush_observations())
         obj = patches.get("DiaObject")
         ids = [r[0] for r in obj.select("diaObjectId").collect()] if obj is not None else []
         return ids, buckets
 
-    def _merge_one_table(self, t: str, key_cols, patch: DataFrame) -> list[int]:
-        """Merge ``t``'s local patch; returns the rewritten buckets."""
+    def _merge_one_table(
+        self, t: str, key_cols, patch: DataFrame | None
+    ) -> list[int]:
+        """Merge ``t``'s local patch, and for DiaObject the staged rows
+        step 1 held back with their validity fill; returns the
+        rewritten buckets."""
         draft = self._drafts[t]
-        buckets = self._buckets_of(patch, key_cols[0])
-        target = draft.read(self.spark)
-        touched = target.filter(F.col(OBJ_BUCKET).isin(buckets))
-        # observe_as rides the write job below: per-MERGE scanned/
-        # updated row counts land in the metrics log, the analog of
-        # the reference's DML stats (updates_manager.py:242-271).
-        merged = merge_patch(touched, patch, key_cols, observe_as=f"merge_{t}")
-        draft.replace_partitions(self._id_sorted(merged, t), OBJ_BUCKET, buckets)
+        buckets = self._buckets_of(patch, key_cols[0]) if patch is not None else []
+        fill = self._object_fill if t == "DiaObject" else None
+        if fill is not None:
+            buckets = list(dict.fromkeys(fill[1] + buckets))
+        touched = draft.read(self.spark).filter(F.col(OBJ_BUCKET).isin(buckets))
+        if fill is not None:
+            touched = self._filled(touched.unionByName(self._new_objects), fill[0])
+        if patch is not None:
+            # observe_as rides the write job below: per-MERGE scanned/
+            # updated row counts land in the metrics log, the analog of
+            # the reference's DML stats (updates_manager.py:242-271).
+            touched = merge_patch(touched, patch, key_cols, observe_as=f"merge_{t}")
+        draft.replace_partitions(self._id_sorted(touched, t), OBJ_BUCKET, buckets)
         return buckets
 
     GEO_LEVEL = 4  # coarse cell for partitioning: at most 256 directories
@@ -556,14 +609,16 @@ class Promoter:
         versions = internal.filter(F.col(OBJ_BUCKET).isin(buckets)).join(
             ids, "diaObjectId", "left_semi"
         )
-        cells = [
-            r.c
-            for r in versions.select(
-                zorder_cell(F.col("geo_point"), self.GEO_LEVEL).alias("c")
+        # a batch's versions are few: dedupe their cells on the driver
+        # rather than shuffle them through a distinct
+        cells = list(
+            dict.fromkeys(
+                r.c
+                for r in versions.select(
+                    zorder_cell(F.col("geo_point"), self.GEO_LEVEL).alias("c")
+                ).collect()
             )
-            .distinct()
-            .collect()
-        ]
+        )
         if not cells:
             return
         new_rows = self._public_rows(versions)
@@ -610,4 +665,5 @@ class Promoter:
         for d in self._drafts.values():
             d.abort()
         self._drafts = {}
+        self._new_objects = self._object_fill = None
         drop_pending()

@@ -12,8 +12,9 @@ errors don't stop the loop unless ``exit_on_error``.
 The object store is modelled as a filesystem prefix — on a cluster this
 is the mounted/`hadoop fs` object-store path; the protocol (copy, verify,
 commit-last, delete-on-failure) is storage-agnostic.  The staging
-trigger is a plain callable because Spark does its own staging
-(``Promoter.stage_chunk_dir``), no external job needed (SURVEY §2.9).
+trigger is a plain callable: staging (``Promoter.stage_chunk_dir``)
+hardlinks the uploaded files into the staging tables' chunk
+partitions, no external job needed (SURVEY §2.9).
 """
 
 from __future__ import annotations

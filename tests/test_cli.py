@@ -224,7 +224,7 @@ def test_compact_command(spark, tmp_path):
         partition_by=("k",),
     )
     for i in range(5):
-        t.append(
+        t.append_commit(
             spark.createDataFrame([(1, f"x{i}")], "k INT, v STRING").repartition(1),
             partition_by=("k",),
         )

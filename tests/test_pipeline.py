@@ -656,8 +656,8 @@ def _jobs_after(spark, job_id: int) -> list[tuple[int, str, str, frozenset]]:
 # (store -> upload -> stage -> promote).  It runs exactly this many;
 # with the ledger on Spark, emptiness probes and schema-inference
 # reads it ran 122.  Any job added back to the lifecycle trips it.
-CHUNK_JOB_CEILING = 28
-APPLY_UPDATES_JOBS = 5
+CHUNK_JOB_CEILING = 20
+APPLY_UPDATES_JOBS = 7
 
 
 def test_one_chunk_job_budget(spark, promoted, monkeypatch):
@@ -665,8 +665,8 @@ def test_one_chunk_job_budget(spark, promoted, monkeypatch):
     budget, no job fails (a swallowed failing job once hid in every
     incremental promotion), every job — those promote submits from its
     thread pool too — carries the caller's job group and job tag, and
-    the ledger's bookkeeping runs no Spark job at all: it is
-    driver-local."""
+    neither the ledger's bookkeeping nor staging runs a Spark job at
+    all: both are driver-local."""
     from dax_ppdb_spark import metrics
     from dax_ppdb_spark.ledger import Ledger
     from dax_ppdb_spark.pipeline.upload import ChunkUploader
@@ -694,7 +694,7 @@ def test_one_chunk_job_budget(spark, promoted, monkeypatch):
         promoter.ledger,
         root + "/export",
         root + "/bucket",
-        stage_trigger=promoter.stage_chunk_dir,
+        stage_trigger=counted("stage", promoter.stage_chunk_dir),
         exit_on_error=True,
     )
     metrics.clear()
@@ -713,9 +713,14 @@ def test_one_chunk_job_budget(spark, promoted, monkeypatch):
     assert {j[2] for j in jobs} == {"chunk-3"}
     assert all("replicate" in j[3] for j in jobs)
     assert len(jobs) <= CHUNK_JOB_CEILING, len(jobs)
-    # step 3 collects the expanded updates once, then broadcasts the
-    # local patch and writes the merge of each updated table (DiaObject,
-    # DiaSource): 1 + 2 * 2 jobs
+    # staging hardlinks the uploaded files: no job
+    assert ledger_jobs["stage"] == 0
+    # step 2 only collects the staged ids; step 3 collects the expanded
+    # updates once, then writes DiaObject's one rewrite (staged rows,
+    # validity fill and patch: 4 jobs, the fill's window shuffles) and
+    # DiaSource's merge (2 jobs): 1 + 4 + 2
+    (step2,) = metrics.recent("fill_validity_end", kind="timer")
+    assert step2["jobs"] == 1, step2
     (step3,) = metrics.recent("apply_updates", kind="timer")
     assert step3["jobs"] == APPLY_UPDATES_JOBS, step3
     # the chunk really went through every step
@@ -893,3 +898,335 @@ def test_promote_skips_updates_without_a_record_key(spark, tmp_path):
     want = _promote_one_chunk_with_updates(spark, str(tmp_path / "clean"), [valid])
     assert got == want
     assert {r.diaObjectId: r.nDiaSources for r in want[0]}[10] == 9
+
+
+# -- staging: the uploaded files, hardlinked --------------------------------
+
+
+def _staged_files(promoter, table, chunk_id):
+    d = os.path.join(promoter.staging[table].data_dir(), f"apdb_replica_chunk={chunk_id}")
+    return sorted(os.path.join(d, f) for f in os.listdir(d)) if os.path.isdir(d) else []
+
+
+def test_staging_a_chunk_twice_stages_it_once(spark, tmp_path):
+    """Staging replaces the chunk's partition: a retry of staging (a
+    crash before the STAGED ledger commit) promotes the chunk's rows
+    once, not twice."""
+    root = str(tmp_path)
+    promoter = Promoter(spark, root)
+    c1 = store_chunk(
+        spark, root + "/export", 1,
+        {"DiaObject": _obj(spark, [(10, 100.0, None, 45.0, -30.0, 1),
+                                   (20, 100.0, None, 46.0, -31.0, 1)])},
+        ledger=promoter.ledger,
+    )
+    promoter.stage_chunk_dir(c1, 1)
+    promoter.stage_chunk_dir(c1, 1)
+    assert promoter.promote() == [1]
+    assert promoter.internal["DiaObject"].read(spark).count() == 2
+    assert _orphan_versions(root) == []
+
+
+def test_staging_links_the_uploaded_files(spark, tmp_path):
+    """Staging runs no Spark write: each staged data file is the
+    uploaded file under a second name (one inode), and a table the
+    chunk exported with 0 rows stages no partition directory."""
+    from dax_ppdb_spark.pipeline.upload import ChunkUploader
+
+    root = str(tmp_path)
+    promoter = Promoter(spark, root)
+    store_chunk(
+        spark, root + "/export", 1,
+        {
+            "DiaObject": _obj(spark, [(10, 100.0, None, 45.0, -30.0, 1)]),
+            "DiaForcedSource": spark.createDataFrame(
+                [], "diaForcedSourceId LONG, diaObjectId LONG, midpointMjdTai DOUBLE"
+            ),
+        },
+        ledger=promoter.ledger,
+    )
+    uploader = ChunkUploader(
+        promoter.ledger, root + "/export", root + "/bucket",
+        stage_trigger=promoter.stage_chunk_dir, exit_on_error=True,
+    )
+    assert uploader.run_once() == [1]
+    uploaded = os.path.join(root, "bucket", "chunk_1", "DiaObject")
+    up_inodes = {
+        os.stat(os.path.join(uploaded, f)).st_ino
+        for f in os.listdir(uploaded)
+        if f.endswith(".parquet")
+    }
+    staged = _staged_files(promoter, "DiaObject", 1)
+    assert staged and {os.stat(f).st_ino for f in staged} <= up_inodes
+    assert promoter.staging["DiaForcedSource"].exists()
+    assert not os.path.isdir(
+        os.path.join(promoter.staging["DiaForcedSource"].data_dir(), "apdb_replica_chunk=1")
+    )
+    assert promoter.promote() == [1]
+    assert [(r.diaObjectId, r.nDiaSources) for r in
+            promoter.internal["DiaObject"].read(spark).collect()] == [(10, 1)]
+    assert not promoter.internal["DiaForcedSource"].exists()
+
+
+def test_staging_copies_where_links_cross_devices(spark, tmp_path, monkeypatch):
+    """Where the filesystem refuses a hardlink across devices, staging
+    copies the file and promotes the same rows."""
+    import errno
+
+    root = str(tmp_path)
+    promoter = Promoter(spark, root)
+    c1 = store_chunk(
+        spark, root + "/export", 1,
+        {"DiaObject": _obj(spark, [(10, 100.0, None, 45.0, -30.0, 1),
+                                   (10, 110.0, None, 45.0, -30.0, 2)])},
+        ledger=promoter.ledger,
+    )
+
+    link = os.link
+
+    def cross_device(src, dst, *a, **k):
+        # the export lives on another device than the PPDB tables
+        if str(src).startswith(c1):
+            raise OSError(errno.EXDEV, "Invalid cross-device link", src)
+        return link(src, dst, *a, **k)
+
+    monkeypatch.setattr(os, "link", cross_device)
+    promoter.stage_chunk_dir(c1, 1)
+    staged = _staged_files(promoter, "DiaObject", 1)
+    assert staged and all(os.stat(f).st_nlink == 1 for f in staged)
+    assert promoter.promote() == [1]
+    rows = {
+        (r.diaObjectId, r.validityStartMjdTai): r.validityEndMjdTai
+        for r in promoter.internal["DiaObject"].read(spark).collect()
+    }
+    assert rows == {(10, 100.0): 110.0, (10, 110.0): None}
+
+
+def test_pyarrow_written_chunk_promotes_like_a_spark_written_one(spark, tmp_path):
+    """A chunk whose files a non-Spark exporter wrote (no Spark schema
+    in the footer, no ``apdb_replica_chunk`` column) stages by link and
+    promotes to the same rows as the chunk ``store_chunk`` writes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    obj_rows = [(10, 100.0, None, 45.0, -30.0, 1), (10, 110.0, None, 45.0, -30.0, 2),
+                (20, 100.0, None, 46.0, -31.0, 1)]
+    src_rows = [(1001, 10, None, 45.0, -30.0, 100.0, None, None)]
+
+    def promote(root, write):
+        promoter = Promoter(spark, root)
+        chunk_dir = write(promoter)
+        promoter.stage_chunk_dir(chunk_dir, 1)
+        assert promoter.promote() == [1]
+        return [
+            sorted(t.read(spark).collect(), key=str)
+            for t in (*promoter.internal.values(), promoter.public_diaobject)
+            if t.exists()
+        ]
+
+    def with_spark(promoter):
+        return store_chunk(
+            spark, promoter.root + "/export", 1,
+            {"DiaObject": _obj(spark, obj_rows), "DiaSource": _src(spark, src_rows)},
+            ledger=promoter.ledger,
+        )
+
+    def with_pyarrow(promoter):
+        chunk_dir = os.path.join(promoter.root, "export", "chunk_1")
+        f64, i64 = pa.float64(), pa.int64()
+        for name, rows, types in (
+            ("DiaObject", obj_rows, [i64, f64, f64, f64, f64, pa.int32()]),
+            ("DiaSource", src_rows, [i64, i64, i64, f64, f64, f64, f64, f64]),
+        ):
+            cols = (_obj if name == "DiaObject" else _src)(spark, []).columns
+            os.makedirs(os.path.join(chunk_dir, name))
+            pq.write_table(
+                pa.Table.from_pylist(
+                    [dict(zip(cols, r)) for r in rows], pa.schema(list(zip(cols, types)))
+                ),
+                os.path.join(chunk_dir, name, "part-0.parquet"),
+            )
+        promoter.ledger.insert_chunks(
+            [{"apdb_replica_chunk": 1, "status": ChunkStatus.EXPORTED, "update_count": 0}]
+        )
+        return chunk_dir
+
+    got = promote(str(tmp_path / "arrow"), with_pyarrow)
+    want = promote(str(tmp_path / "spark"), with_spark)
+    assert len(want) == 3 and got == want
+
+
+# -- the fused DiaObject rewrite against the three-write sequence ----------
+
+
+class _ThreeWritePromoter(Promoter):
+    """Steps 1-3 as they were before DiaObject's rewrites were fused:
+    step 1 appends the staged rows to every draft, step 2 rewrites the
+    staged ids' buckets with the validity fill, step 3 rewrites each
+    patched table's buckets with its merge."""
+
+    def _copy_one_table(self, t, chunk_ids):
+        from dax_ppdb_spark.ops.spatial import with_geo_point
+        from dax_ppdb_spark.pipeline.promote import OBJ_BUCKET
+
+        staged = self._staged(t, chunk_ids)
+        if staged is None and not self.internal[t].exists():
+            return
+        d = self._drafts[t] = self.internal[t].draft()
+        if staged is None:
+            return
+        add = self._with_bucket(with_geo_point(staged.drop("apdb_replica_chunk")), t)
+        if d.base is None or set(add.columns) == set(d.read(self.spark).columns):
+            d.append(self._id_sorted(add, t), partition_by=(OBJ_BUCKET,))
+        else:
+            combined = d.read(self.spark).unionByName(add, allowMissingColumns=True)
+            buckets = [
+                n.split("=", 1)[1] for n in os.listdir(d.path) if n.startswith(f"{OBJ_BUCKET}=")
+            ]
+            d.replace_partitions(self._id_sorted(combined, t), OBJ_BUCKET, buckets)
+
+    def _fill_validity_end(self, chunk_ids):
+        from dax_ppdb_spark.ops.validity import fill_validity_end
+        from dax_ppdb_spark.pipeline.promote import OBJ_BUCKET
+        from dax_ppdb_spark.schema.registry import validity_columns
+
+        staged = self._staged("DiaObject", chunk_ids)
+        if staged is None:
+            return [], []
+        staged_ids = [r[0] for r in staged.select("diaObjectId").collect()]
+        ids = self._ids_relation(staged_ids)
+        buckets = self._buckets_of(ids, "diaObjectId")
+        if not buckets:
+            return [], []
+        draft = self._drafts["DiaObject"]
+        target = draft.read(self.spark)
+        start_col, end_col = validity_columns(target.columns)
+        touched = target.filter(F.col(OBJ_BUCKET).isin(buckets))
+        filled = fill_validity_end(touched, ids, start_col=start_col, end_col=end_col)
+        draft.replace_partitions(self._id_sorted(filled, "DiaObject"), OBJ_BUCKET, buckets)
+        return staged_ids, buckets
+
+    def _apply_updates(self, chunk_ids):
+        from dax_ppdb_spark.ops.merge import merge_patch
+        from dax_ppdb_spark.ops.updates import TABLE_PATCHES, expand_updates, update_patches
+        from dax_ppdb_spark.pipeline.promote import OBJ_BUCKET
+
+        raw = self._staged_rows(self.staging_updates, chunk_ids)
+        if raw is None:
+            return [], {}
+        patches = update_patches(expand_updates(raw))
+        buckets = {}
+        for t, (key_cols, _fields) in TABLE_PATCHES.items():
+            if t in patches and t in self._drafts:
+                draft = self._drafts[t]
+                buckets[t] = self._buckets_of(patches[t], key_cols[0])
+                touched = draft.read(self.spark).filter(F.col(OBJ_BUCKET).isin(buckets[t]))
+                merged = merge_patch(touched, patches[t], key_cols)
+                draft.replace_partitions(self._id_sorted(merged, t), OBJ_BUCKET, buckets[t])
+        obj = patches.get("DiaObject")
+        ids = [r[0] for r in obj.select("diaObjectId").collect()] if obj is not None else []
+        return ids, buckets
+
+
+def _fs(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "diaForcedSourceId LONG, diaObjectId LONG, midpointMjdTai DOUBLE, "
+        "visit LONG, detector INT, ra DOUBLE, dec DOUBLE, timeWithdrawnMjdTai DOUBLE",
+    )
+
+
+def _upd(kind, order, **payload):
+    return (T0 + 10, order, kind, json.dumps(payload))
+
+
+# History (chunk 1), bucket width 10: objects 5, 15, 25 and 35 open in
+# buckets 0-3, with sources and forced sources.
+_HISTORY = {
+    "DiaObject": [(5, 100.0, None, 10.0, 1.0, 1), (15, 100.0, None, 20.0, 2.0, 1),
+                  (25, 100.0, None, 30.0, 3.0, 1), (35, 100.0, None, 40.0, 4.0, 1)],
+    "DiaSource": [(1001, 5, None, 10.0, 1.0, 100.0, None, None),
+                  (1002, 15, None, 20.0, 2.0, 100.0, None, None)],
+    "DiaForcedSource": [(5001, 5, 100.0, 1, 2, 10.0, 1.0, None)],
+}
+
+FUSED_CASES = {
+    # two versions of 15 in one chunk; 45 staged and closed by an update
+    # in the same chunk; a patch on 5, whose bucket stages no rows; 35
+    # staged in a bucket no patch touches
+    "mixed": {
+        "DiaObject": [(15, 110.0, None, 20.0, 2.0, 2), (15, 120.0, None, 20.0, 2.0, 3),
+                      (45, 110.0, None, 50.0, 5.0, 1), (35, 110.0, None, 40.0, 4.0, 2)],
+        "DiaSource": [(1003, 45, None, 50.0, 5.0, 110.0, None, None)],
+        "DiaForcedSource": [(5002, 45, 110.0, 1, 3, 50.0, 5.0, None)],
+        "updates": [
+            _upd("close_diaobject_validity", 0, diaObjectId=45, validityEndMjdTai=130.0),
+            _upd("update_ndiasources", 1, diaObjectId=5, nDiaSources=9),
+            _upd("withdraw_diasource", 2, diaSourceId=1001, timeWithdrawnMjdTai=140.0),
+            _upd("withdraw_diaforcedsource", 3, diaObjectId=5, visit=1, detector=2,
+                 timeWithdrawnMjdTai=140.0),
+        ],
+    },
+    "objects_without_updates": {
+        "DiaObject": [(25, 110.0, None, 30.0, 3.0, 2), (55, 100.0, None, 60.0, 6.0, 1)],
+    },
+    "updates_without_objects": {
+        "DiaSource": [(1004, 25, None, 30.0, 3.0, 110.0, None, None)],
+        "updates": [
+            _upd("update_ndiasources", 0, diaObjectId=25, nDiaSources=4),
+            _upd("close_diaobject_validity", 1, diaObjectId=35, validityEndMjdTai=105.0),
+        ],
+    },
+    "drift": {
+        "DiaObject+flags": [(15, 110.0, None, 20.0, 2.0, 2, 7), (65, 100.0, None, 70.0, 7.0, 1, 8)],
+        "updates": [_upd("update_ndiasources", 0, diaObjectId=5, nDiaSources=3)],
+    },
+}
+
+
+def _chunk_tables(spark, spec):
+    tables = {}
+    for name, rows in spec.items():
+        if name == "DiaObject":
+            tables[name] = _obj(spark, rows)
+        elif name == "DiaObject+flags":
+            tables["DiaObject"] = spark.createDataFrame(
+                rows,
+                "diaObjectId LONG, validityStartMjdTai DOUBLE, validityEndMjdTai DOUBLE, "
+                "ra DOUBLE, dec DOUBLE, nDiaSources INT, flags INT",
+            )
+        elif name == "DiaSource":
+            tables[name] = _src(spark, rows)
+        elif name == "DiaForcedSource":
+            tables[name] = _fs(spark, rows)
+    updates = _updates(spark, spec["updates"]) if "updates" in spec else None
+    return tables, updates
+
+
+def _promote_history_then(spark, root, cls, spec):
+    promoter = cls(spark, root, bucket_width=10)
+    for cid, chunk in ((1, _HISTORY), (2, spec)):
+        tables, updates = _chunk_tables(spark, chunk)
+        d = store_chunk(spark, root + "/export", cid, tables, updates=updates,
+                        ledger=promoter.ledger)
+        promoter.stage_chunk_dir(d, cid)
+        assert promoter.promote() == [cid]
+    out = {}
+    for name, t in (*promoter.internal.items(), ("public", promoter.public_diaobject)):
+        out[name] = sorted(
+            (tuple(sorted(r.asDict().items())) for r in t.read(spark).collect()), key=repr
+        )
+    return out
+
+
+@pytest.mark.parametrize("case", sorted(FUSED_CASES))
+def test_fused_diaobject_rewrite_matches_three_writes(spark, tmp_path, case):
+    """One rewrite of a batch's DiaObject buckets —
+    ``merge_patch(fill_validity_end(touched ∪ staged))`` — leaves
+    internal and public row for row as the append, the fill rewrite
+    and the merge rewrite did one after the other."""
+    spec = FUSED_CASES[case]
+    got = _promote_history_then(spark, str(tmp_path / "fused"), Promoter, spec)
+    want = _promote_history_then(spark, str(tmp_path / "three"), _ThreeWritePromoter, spec)
+    assert got == want
+    assert got["DiaObject"] and got["public"]

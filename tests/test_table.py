@@ -177,7 +177,7 @@ def test_compact_rewrites_only_fragmented_partitions(spark, tmp_path):
     t.overwrite(base.repartition(1), partition_by=("k",))
     # five tiny appends into partition k=1 only
     for i in range(1, 6):
-        t.append(
+        t.append_commit(
             spark.createDataFrame([(1, f"b{i}")], "k INT, v STRING").repartition(1),
             partition_by=("k",),
         )
@@ -379,14 +379,14 @@ def test_footer_schema_read_equals_inferred_read(spark, tmp_path):
     assert got.columns == ["v", "x", "k"]  # partition columns last
     assert got.schema["k"].dataType == IntegerType()
 
-    t.append(spark.createDataFrame([(1, "b2", 2.5)], rows), partition_by=("k",))
+    t.append_commit(spark.createDataFrame([(1, "b2", 2.5)], rows), partition_by=("k",))
     _assert_footer_read_matches_inferred(spark, t)
     t.append_commit(spark.createDataFrame([(2, "c", 3.0)], rows), partition_by=("k",))
     _assert_footer_read_matches_inferred(spark, t)
     t.replace_partitions(spark.createDataFrame([(1, "B", 9.0)], rows), "k", [1])
     _assert_footer_read_matches_inferred(spark, t)
     for i in range(5):
-        t.append(spark.createDataFrame([(2, f"c{i}", 0.0)], rows), partition_by=("k",))
+        t.append_commit(spark.createDataFrame([(2, f"c{i}", 0.0)], rows), partition_by=("k",))
     assert t.compact(spark, "k", max_files_per_partition=4) == ["2"]
     _assert_footer_read_matches_inferred(spark, t)
 

@@ -152,3 +152,22 @@ def test_legacy_schema_name_switch(spark):
     )
     got = sorted((r.diaObjectId, r.validityStart, r.validityEnd) for r in out.collect())
     assert got == [(1, t(1), t(2)), (1, t(2), t(3)), (1, t(3), None)]
+
+
+def test_duplicate_staged_ids_fill_like_distinct_ids(spark):
+    """The staged-id side is not deduplicated: a semi or anti join
+    keeps the same target rows whether or not an id repeats, so a
+    staged set listing an object twice fills exactly as listing it
+    once."""
+    df = _mk(
+        spark,
+        [(1, 100.0, None), (1, 110.0, None), (2, 100.0, None), (2, 105.0, None),
+         (3, 100.0, None), (3, 120.0, None)],
+    )
+    once = fill_validity_end(df, _ids(spark, [1, 3]))
+    twice = fill_validity_end(df, _ids(spark, [1, 3, 1, 1, 3]))
+    assert _collect(twice) == _collect(once)
+    assert _collect(once) == [
+        (1, 100.0, 110.0), (1, 110.0, None), (2, 100.0, None), (2, 105.0, None),
+        (3, 100.0, 120.0), (3, 120.0, None),
+    ]
